@@ -150,6 +150,7 @@ def main() -> None:
     # per-pass canaries from every child (child 1 carries cold/warm/
     # nocache/end; warm-skipping children carry cold/end)
     result["pass_canaries_runs"] = [s.get("pass_canaries") for s in samples]
+    result.pop("pass_canaries", None)  # child 1's only; the runs list supersedes it
     print(json.dumps(result))
 
 

@@ -35,7 +35,7 @@ from disq_spark.formats import bgzf
 from disq_spark.formats import sbi as sbimod
 from disq_spark.headers import SamHeader
 from disq_spark.schemas import READS_COLUMNS, READS_SCHEMA, READS_SCHEMA_RAW_TAGS
-from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, resolve_paths
+from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, plan_frame, resolve_paths
 
 BAM_EXTENSIONS = (".bam",)
 READS_TO_CHECK = 10  # BamRecordGuesser.java:42
@@ -464,45 +464,32 @@ def build_sbi(
 
     header, refs, first_voff = read_bam_header(path)
     chunks = plan_bam_chunks(path, split_size, refs, first_voff)
-    plan_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(path, vs, ve) for vs, ve in chunks], max(len(chunks), 1)
-        ),
-        "path string, v_start long, v_end long",
-    )
-    refs_b = refs
     gran = granularity
     parts_dir = path + ".sbi.parts"
     _dfs.makedirs(parts_dir)
 
-    def scan(batches):
+    def scan(p, v_start, v_end):
         # One OUTPUT ROW PER CHUNK, not per record: each task subsamples
         # its own offsets at `granularity` (phase restarting per chunk —
         # the same semantics the write-side per-part fragment merge
         # produces, sinks/bam.py) and writes them to an attempt-unique
         # fragment file (speculation/retry-safe). Driver traffic is one
         # row per chunk; the offset bytes stay on the filesystem.
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                voffs = scan_record_voffs(r["path"], refs_b, int(r["v_start"]), int(r["v_end"]))
-                packed = _np.asarray(voffs[::gran], dtype="<i8").tobytes()
-                frag = ""
-                if packed:
-                    frag = _merge.attempt_part_path(parts_dir, prefix="frag")
-                    with _dfs.open_output(frag) as f:
-                        f.write(packed)
-                yield pd_.DataFrame(
-                    {
-                        "chunk": [int(r["v_start"])],
-                        "n": [len(voffs)],
-                        "frag": [frag],
-                        "n_offsets": [len(packed) // 8],
-                    }
-                )
+        voffs = scan_record_voffs(p, refs, v_start, v_end)
+        packed = _np.asarray(voffs[::gran], dtype="<i8").tobytes()
+        frag = ""
+        if packed:
+            frag = _merge.attempt_part_path(parts_dir, prefix="frag")
+            with _dfs.open_output(frag) as f:
+                f.write(packed)
+        yield pd_.DataFrame(
+            {"chunk": [v_start], "n": [len(voffs)], "frag": [frag], "n_offsets": [len(packed) // 8]}
+        )
 
     try:
-        rows = plan_df.mapInPandas(
-            scan, "chunk long, n long, frag string, n_offsets long"
+        rows = plan_frame(
+            spark, [(path, vs, ve) for vs, ve in chunks], scan,
+            "chunk long, n long, frag string, n_offsets long",
         ).collect()
         rows.sort(key=lambda r: r.chunk)  # chunks are disjoint & ordered -> no global sort
         total = sum(r.n for r in rows)
@@ -566,81 +553,70 @@ def build_bai(
     _dfs.makedirs(parts_dir)
     ref_index = {name: i for i, (name, _l) in enumerate(refs)}
     n_ref = len(refs)
-    refs_b = refs
 
-    plan_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(path, i, vs, ve) for i, (vs, ve) in enumerate(chunks)],
-            max(len(chunks), 1),
-        ),
-        "path string, idx long, v_start long, v_end long",
-    )
+    def scan(p, vs, ve):
+        # write-side parity: the file's final end voff is the
+        # end-of-data position (pre-EOF-block), like the write
+        # path's dangling-end patch target
+        ve_eff = min(ve, end_of_data_voff)
+        voffs = scan_record_voffs(p, refs, vs, ve)
+        n = len(voffs)
+        base = ""
+        if n:
+            cols = decode_chunk_cols(
+                p, refs, vs, ve,
+                with_seq=False, with_qual=False, with_tags=False,
+            )
+            b = baimod.BaiBuilder(n_ref)
+            ends_v = voffs[1:] + [ve_eff]
+            first_key = last_key = None
+            unplaced = False
+            for i in range(n):
+                contig, start = cols["contig"][i], cols["start"][i]
+                if contig is None or start is None or pd_.isna(start):
+                    b.add(-1, -1, -1, 0, voffs[i], ends_v[i], False)
+                    unplaced = True
+                else:
+                    if unplaced:
+                        raise ValueError(
+                            "build_bai requires coordinate-sorted "
+                            "records: placed record after unplaced"
+                        )
+                    pos0 = int(start) - 1
+                    e = cols["end"][i]
+                    end0 = int(e) if e is not None and not pd_.isna(e) else pos0 + 1
+                    b.add(
+                        ref_index[contig], pos0, end0,
+                        _reg2bin(pos0, max(end0, pos0 + 1)),
+                        voffs[i], ends_v[i],
+                        int(cols["flags"][i]) & FLAG_UNMAPPED == 0,
+                    )
+                    last_key = (ref_index[contig], pos0)
+                    if first_key is None:
+                        first_key = last_key
+            # attempt-unique base (uuid8): a speculative/zombie
+            # retry of this chunk stages to a DIFFERENT name, so
+            # it can never re-truncate a fragment the driver is
+            # reading during merge; the driver merges only the
+            # bases reported by collected (winning) tasks. The
+            # zero-padded v_start prefix keeps lexicographic sort
+            # == chunk order. Same scheme as build_sbi / the sinks.
+            import uuid as _uuid
 
-    def scan(batches):
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                p, idx = r["path"], int(r["idx"])
-                vs, ve = int(r["v_start"]), int(r["v_end"])
-                # write-side parity: the file's final end voff is the
-                # end-of-data position (pre-EOF-block), like the write
-                # path's dangling-end patch target
-                ve_eff = min(ve, end_of_data_voff)
-                voffs = scan_record_voffs(p, refs_b, vs, ve)
-                n = len(voffs)
-                base = ""
-                if n:
-                    cols = decode_chunk_cols(
-                        p, refs_b, vs, ve,
-                        with_seq=False, with_qual=False, with_tags=False,
-                    )
-                    b = baimod.BaiBuilder(n_ref)
-                    ends_v = voffs[1:] + [ve_eff]
-                    first_key = last_key = None
-                    unplaced = False
-                    for i in range(n):
-                        contig, start = cols["contig"][i], cols["start"][i]
-                        if contig is None or start is None or pd_.isna(start):
-                            b.add(-1, -1, -1, 0, voffs[i], ends_v[i], False)
-                            unplaced = True
-                        else:
-                            if unplaced:
-                                raise ValueError(
-                                    "build_bai requires coordinate-sorted "
-                                    "records: placed record after unplaced"
-                                )
-                            pos0 = int(start) - 1
-                            e = cols["end"][i]
-                            end0 = int(e) if e is not None and not pd_.isna(e) else pos0 + 1
-                            b.add(
-                                ref_index[contig], pos0, end0,
-                                _reg2bin(pos0, max(end0, pos0 + 1)),
-                                voffs[i], ends_v[i],
-                                int(cols["flags"][i]) & FLAG_UNMAPPED == 0,
-                            )
-                            last_key = (ref_index[contig], pos0)
-                            if first_key is None:
-                                first_key = last_key
-                    # attempt-unique base (uuid8): a speculative/zombie
-                    # retry of this chunk stages to a DIFFERENT name, so
-                    # it can never re-truncate a fragment the driver is
-                    # reading during merge; the driver merges only the
-                    # bases reported by collected (winning) tasks. The
-                    # zero-padded idx prefix keeps lexicographic sort ==
-                    # chunk order. Same scheme as build_sbi / the sinks.
-                    import uuid as _uuid
-
-                    base = f"part-{idx:05d}-{_uuid.uuid4().hex[:8]}"
-                    baimod.write_bai(
-                        os.path.join(parts_dir, f".{base}.bai"), b.build(), fragment=True
-                    )
-                    _merge.write_order_sidecar(
-                        parts_dir, base,
-                        {"first": first_key, "last": last_key, "unplaced": unplaced},
-                    )
-                yield pd_.DataFrame({"part": [base], "n": [n]})
+            base = f"part-{vs:020d}-{_uuid.uuid4().hex[:8]}"
+            baimod.write_bai(
+                os.path.join(parts_dir, f".{base}.bai"), b.build(), fragment=True
+            )
+            _merge.write_order_sidecar(
+                parts_dir, base,
+                {"first": first_key, "last": last_key, "unplaced": unplaced},
+            )
+        yield pd_.DataFrame({"part": [base], "n": [n]})
 
     try:
-        rows = plan_df.mapInPandas(scan, "part string, n long").collect()
+        rows = plan_frame(
+            spark, [(path, vs, ve) for vs, ve in chunks], scan, "part string, n long"
+        ).collect()
         bases = sorted(r.part for r in rows if r.part)
         _check_cross_part_order(parts_dir, bases)
         frags = [
@@ -773,35 +749,19 @@ def _read_bam_all(
         for v_start, v_end in p_chunks:
             plan.append((p, v_start, v_end))
 
-    if not plan:
-        return spark.createDataFrame([], schema), header
-
-    # one plan row per partition, partition index == plan index: parallelize
-    # slices preserve order (repartition would round-robin arbitrarily,
-    # breaking the file-order guarantee single-file sinks rely on —
-    # README.md:152-156 record-ordering semantics)
-    plan_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(plan, len(plan)),
-        "path string, v_start long, v_end long",
-    )
-    refs_b = refs
-
     w_seq = columns is None or "seq" in columns
     w_qual = columns is None or "qual" in columns
     w_tags = columns is None or "tags" in columns or "read_group" in (columns or [])
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                cols = decode_chunk_cols(
-                    r["path"], refs_b, int(r["v_start"]), int(r["v_end"]),
-                    with_seq=w_seq, with_qual=w_qual, with_tags=w_tags,
-                    raw_tags=raw_tags,
-                )
-                if cols and cols["flags"]:
-                    yield pd.DataFrame(cols, columns=READS_COLUMNS)
+    def decode(p: str, v_start: int, v_end: int) -> Iterator[pd.DataFrame]:
+        cols = decode_chunk_cols(
+            p, refs, v_start, v_end,
+            with_seq=w_seq, with_qual=w_qual, with_tags=w_tags, raw_tags=raw_tags,
+        )
+        if cols and cols["flags"]:
+            yield pd.DataFrame(cols, columns=READS_COLUMNS)
 
-    return plan_df.mapInPandas(decode, schema), header
+    return plan_frame(spark, plan, decode, schema), header
 
 
 def check_record_guesser(
@@ -826,11 +786,6 @@ def check_record_guesser(
 
     header, refs, first_voff = read_bam_header(path)
     chunks = plan_bam_chunks(path, split_size, refs, first_voff)
-    if not chunks:
-        return spark.createDataFrame([], "voff long, kind string")
-    plan_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(chunks, len(chunks)), "v_start long, v_end long"
-    )
     n_ref = len(refs)
     ref_lens = [l for _n, l in refs]
 
@@ -846,49 +801,48 @@ def check_record_guesser(
             validated += 1
         return True
 
-    def scan(batches):
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                v_start, v_end = int(r["v_start"]), int(r["v_end"])
-                c_start, u_start = v_start >> 16, v_start & 0xFFFF
-                buf = _BlockBuffer(path, c_start, 1 << 22)
-                off = buf.buf_offset(c_start, u_start)
-                if off is None:
-                    continue
-                bad: list[tuple[int, str]] = []
-                bi = 0
-                while True:
-                    if off + 4 > len(buf.data) and not buf.extend(1 << 22):
-                        break
-                    while bi < len(buf.blocks) and off >= buf.blocks[bi][1] + buf.blocks[bi][2]:
-                        bi += 1
-                    if bi >= len(buf.blocks):
-                        break
-                    c_pos, b_start, _u = buf.blocks[bi]
-                    voff = (c_pos << 16) | (off - b_start)
-                    if voff >= v_end:
-                        break
-                    while off + 4 > len(buf.data) or off + 4 + _struct.unpack_from(
-                        "<i", buf.data, off
-                    )[0] > len(buf.data):
-                        if not buf.extend(1 << 22):
-                            break
-                    if off + 4 > len(buf.data) or off + 4 + _struct.unpack_from(
-                        "<i", buf.data, off
-                    )[0] > len(buf.data):
-                        break
-                    if not chain_ok(buf.data, off):
-                        bad.append((voff, "FALSE_NEGATIVE"))
-                    for d in range(1, neighborhood + 1):
-                        if off + d + 36 <= len(buf.data) and chain_ok(buf.data, off + d):
-                            bad.append((voff + d, "FALSE_POSITIVE"))
-                    off += 4 + _struct.unpack_from("<i", buf.data, off)[0]
-                    if off >= len(buf.data) and not buf.extend(1 << 22):
-                        break
-                if bad:
-                    yield pd_.DataFrame(bad, columns=["voff", "kind"])
+    def scan(p, v_start, v_end):
+        c_start, u_start = v_start >> 16, v_start & 0xFFFF
+        buf = _BlockBuffer(p, c_start, 1 << 22)
+        off = buf.buf_offset(c_start, u_start)
+        if off is None:
+            return
+        bad: list[tuple[int, str]] = []
+        bi = 0
+        while True:
+            if off + 4 > len(buf.data) and not buf.extend(1 << 22):
+                break
+            while bi < len(buf.blocks) and off >= buf.blocks[bi][1] + buf.blocks[bi][2]:
+                bi += 1
+            if bi >= len(buf.blocks):
+                break
+            c_pos, b_start, _u = buf.blocks[bi]
+            voff = (c_pos << 16) | (off - b_start)
+            if voff >= v_end:
+                break
+            while off + 4 > len(buf.data) or off + 4 + _struct.unpack_from(
+                "<i", buf.data, off
+            )[0] > len(buf.data):
+                if not buf.extend(1 << 22):
+                    break
+            if off + 4 > len(buf.data) or off + 4 + _struct.unpack_from(
+                "<i", buf.data, off
+            )[0] > len(buf.data):
+                break
+            if not chain_ok(buf.data, off):
+                bad.append((voff, "FALSE_NEGATIVE"))
+            for d in range(1, neighborhood + 1):
+                if off + d + 36 <= len(buf.data) and chain_ok(buf.data, off + d):
+                    bad.append((voff + d, "FALSE_POSITIVE"))
+            off += 4 + _struct.unpack_from("<i", buf.data, off)[0]
+            if off >= len(buf.data) and not buf.extend(1 << 22):
+                break
+        if bad:
+            yield pd_.DataFrame(bad, columns=["voff", "kind"])
 
-    return plan_df.mapInPandas(scan, "voff long, kind string")
+    return plan_frame(
+        spark, [(path, vs, ve) for vs, ve in chunks], scan, "voff long, kind string"
+    )
 
 
 def bam_idxstats(spark: SparkSession, path: str) -> DataFrame:

@@ -32,7 +32,7 @@ from disq_spark.formats.cram import plan_cram_containers, read_crai
 from disq_spark.formats.cram_decode import decode_cram_range, read_cram_header
 from disq_spark.headers import SamHeader
 from disq_spark.schemas import READS_COLUMNS, READS_SCHEMA
-from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, resolve_paths
+from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, plan_frame, resolve_paths
 
 CRAM_EXTENSIONS = (".cram",)
 
@@ -114,28 +114,14 @@ def read_cram(
             )
         )
 
-    if not plan:
-        return spark.createDataFrame([], READS_SCHEMA), header
+    def decode(p: str, start: int, end: int) -> Iterator[pd.DataFrame]:
+        rows = decode_cram_range(
+            p, start, end, refs, reference_path, missing_ref_as_n=missing_ref_as_n
+        )
+        if rows:
+            yield pd.DataFrame(rows, columns=READS_COLUMNS)
 
-    plan_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(plan, len(plan)),
-        "path string, start long, end long",
-    )
-    refs_b = refs
-    ref_path = reference_path
-    as_n = missing_ref_as_n
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                rows = decode_cram_range(
-                    r["path"], int(r["start"]), int(r["end"]), refs_b, ref_path,
-                    missing_ref_as_n=as_n,
-                )
-                if rows:
-                    yield pd.DataFrame(rows, columns=READS_COLUMNS)
-
-    df = plan_df.mapInPandas(decode, READS_SCHEMA)
+    df = plan_frame(spark, plan, decode, READS_SCHEMA)
     if intervals is not None or traverse_unplaced_unmapped:
         from disq_spark.functions.intervals import filter_intervals
 

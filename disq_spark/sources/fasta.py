@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from disq_spark.formats.gzi import open_indexed_reference, read_fai
+from disq_spark.sources.plan import plan_frame
 
 FASTA_WINDOW_SCHEMA = T.StructType(
     [
@@ -48,19 +49,9 @@ def read_fasta_windows(
             plan.append((name, s, min(s + window - 1, e.length)))
             s += window
 
-    sc = spark.sparkContext
-    plan_df = spark.createDataFrame(
-        sc.parallelize(plan, max(len(plan), 1)), "contig string, start long, end long"
-    )
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fetch(c: str, s: int, e: int) -> Iterator[pd.DataFrame]:
         ref = open_indexed_reference(path)
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                c, s, e = r["contig"], int(r["start"]), int(r["end"])
-                seq = ref.get(c, s, min(e + overlap, ref.fai[c].length))
-                rows.append((c, s, e, seq))
-            yield pd.DataFrame(rows, columns=["contig", "start", "end", "seq"])
+        seq = ref.get(c, s, min(e + overlap, ref.fai[c].length))
+        yield pd.DataFrame({"contig": [c], "start": [s], "end": [e], "seq": [seq]})
 
-    return plan_df.mapInPandas(fetch, FASTA_WINDOW_SCHEMA)
+    return plan_frame(spark, plan, fetch, FASTA_WINDOW_SCHEMA)

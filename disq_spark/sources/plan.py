@@ -2,13 +2,19 @@
 
 The reference plans splits with Spark jobs over ``PathSplit``/``BgzfBlock``
 RDDs (PathSplitSource.java:68-113, BgzfBlockSource.java:59-74). We plan
-driver-side (pure metadata: file lengths + optional indexes) and ship the
-plan as a tiny DataFrame of byte ranges — one Spark job total, and the
-planner itself costs milliseconds even for thousands of files.
+driver-side (pure metadata: file lengths + optional indexes) and decode
+through ``plan_frame``: ``spark.range(n)`` in n partitions, so partition
+i is plan row i, mapped by one ``mapInPandas`` worker per task. The plan
+itself rides in the UDF closure as three numpy columns (key index,
+start, end) plus the distinct keys — no plan DataFrame and no
+PythonRDD in front of the decode, so each task runs one Python worker,
+not two.
 
-At 100 TB the plan is ~#files x (size/split) rows of (path, start, end)
-— a few million rows at most, trivially broadcastable; decode parallelism
-then scales with the cluster, not the driver.
+At 100 TB the plan is ~#files x (size/split) rows. At 10^6 chunks the
+pickled closure is 20 B per chunk (int32 key index + two int64 offsets)
+plus the distinct paths — ~20 MB, broadcast once by pyspark and
+unpickled in ~16 ms per task; decode parallelism then scales with the
+cluster, not the driver.
 """
 
 from __future__ import annotations
@@ -18,6 +24,10 @@ from disq_spark import fs as _dfs
 import glob
 import os
 from dataclasses import dataclass
+from typing import Callable, Iterable, Sequence
+
+import numpy as np
+import pandas as pd
 
 DEFAULT_SPLIT_SIZE = 128 * 1024 * 1024  # PathSplitSource.java:47 default
 
@@ -78,3 +88,43 @@ def plan_ranges(paths: list[str], split_size: int = DEFAULT_SPLIT_SIZE) -> list[
             out.append(PathRange(p, start, min(start + split_size, size)))
             start += split_size
     return out
+
+
+def plan_frame(
+    spark,
+    plan: Sequence[tuple[str, int, int]],
+    fn: Callable[[str, int, int], Iterable[pd.DataFrame]],
+    schema,
+):
+    """DataFrame of ``fn(key, start, end)`` over every ``plan`` row, one
+    partition per row in plan order — the file-order guarantee
+    single-file sinks rely on (README.md:152-156); a repartition would
+    round-robin arbitrarily. ``key`` is usually a path (a contig name
+    for FASTA windows); ``fn`` runs on the executor and yields pandas
+    frames in ``schema``."""
+    if not plan:
+        return spark.createDataFrame([], schema)
+    n = len(plan)
+    return spark.range(0, n, 1, n).mapInPandas(_plan_runner(plan, fn), schema)
+
+
+def _plan_runner(plan, fn):
+    """The ``mapInPandas`` function ``plan_frame`` ships: maps each
+    ``spark.range`` id to its plan row. The plan is held as numpy
+    columns plus the distinct keys, never as a list of tuples — at 10^6
+    rows both pickle to ~20 MB, but the tuple list takes ~0.37 s to load
+    in every task against ~0.016 s for the columns (one core of a 4-core
+    x86 host)."""
+    n = len(plan)
+    keys = list(dict.fromkeys(k for k, _s, _e in plan))
+    slot = {k: i for i, k in enumerate(keys)}
+    key_ix = np.fromiter((slot[k] for k, _s, _e in plan), dtype=np.int32, count=n)
+    starts = np.fromiter((s for _k, s, _e in plan), dtype=np.int64, count=n)
+    ends = np.fromiter((e for _k, _s, e in plan), dtype=np.int64, count=n)
+
+    def run(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
+        for pdf in batches:
+            for i in pdf["id"].to_numpy():
+                yield from fn(keys[key_ix[i]], int(starts[i]), int(ends[i]))
+
+    return run

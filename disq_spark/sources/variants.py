@@ -8,11 +8,14 @@ lines after dropping '#' (VcfSource.java:133-149).
 Spark-first shape:
 - plain .vcf  -> ``spark.read.text`` (natively splittable) + mapInPandas
   batch parse.
-- .bgz / BGZF-content .gz -> driver plans block-aligned byte ranges, a
-  tiny plan-DataFrame is exploded via mapInPandas into decompressed
-  lines; split ownership follows text-split semantics (a partition owns
-  lines that *start* after its first newline, reading past its end to
-  finish the last line) so every record is decoded exactly once.
+- .bgz / BGZF-content .gz -> driver plans block-aligned byte ranges and
+  ``sources.plan.plan_frame`` decodes one range per task: the plan rides
+  in the UDF closure as numpy columns (20 B per range at 10^6 ranges,
+  plus the distinct paths), with no plan DataFrame or PythonRDD in front
+  of the decode. Split ownership follows text-split semantics (a
+  partition owns lines that *start* after its first newline, reading
+  past its end to finish the last line) so every record is decoded
+  exactly once.
 - plain-gzip .gz -> unsplittable, one range covering the file
   (BGZFEnhancedGzipCodec.java:66-101 sniffing decides which).
 """
@@ -32,7 +35,7 @@ from disq_spark.formats import bgzf
 from disq_spark.formats.vcf import parse_vcf_lines
 from disq_spark.headers import VcfHeader
 from disq_spark.schemas import VARIANTS_SCHEMA
-from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, plan_ranges, resolve_paths
+from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, plan_frame, plan_ranges, resolve_paths
 
 VCF_EXTENSIONS = (".vcf", ".vcf.gz", ".vcf.bgz", ".vcf.bgzf.gz")
 
@@ -148,22 +151,12 @@ def _read_vcf_all(
         else:
             ranges.append((p, 0, _dfs.getsize(p)))
 
-    # parallelize slices: partition i == plan row i, preserving file order
-    # through the scan (single-file sinks depend on it; repartition would
-    # round-robin arbitrarily)
-    plan_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(ranges, max(len(ranges), 1)),
-        "path string, start long, end long",
-    )
+    def decode_range(p: str, start: int, end: int) -> Iterator[pd.DataFrame]:
+        lines = _range_lines(p, start, end)
+        if lines:
+            yield parse_vcf_lines(pd.Series(lines, dtype="object"), samples, mode, with_genotypes)
 
-    def decode_ranges(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                lines = _range_lines(row["path"], int(row["start"]), int(row["end"]))
-                if lines:
-                    yield parse_vcf_lines(pd.Series(lines, dtype="object"), samples, mode, with_genotypes)
-
-    return plan_df.mapInPandas(decode_ranges, VARIANTS_SCHEMA), header
+    return plan_frame(spark, ranges, decode_range, VARIANTS_SCHEMA), header
 
 
 def _range_lines(path: str, start: int, end: int) -> list[str]:
@@ -288,39 +281,25 @@ def build_tbi(
     from disq_spark.formats import tabix as tbimod
 
     ranges = [(r.path, r.start, r.end) for r in plan_ranges([path], split_size)]
-    plan_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(ranges, max(len(ranges), 1)),
-        "path string, start long, end long",
-    )
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                b = tbimod.TbiBuilder()
-                for line, vs, ve in _range_records_voff(
-                    row["path"], int(row["start"]), int(row["end"])
-                ):
-                    if line.startswith("#") or not line:
-                        continue
-                    fl = line.split("\t", 8)
-                    contig, pos, ref = fl[0], int(fl[1]), fl[3]
-                    end_pos = pos + len(ref) - 1
-                    if len(fl) > 7 and "END=" in fl[7]:
-                        for kv in fl[7].split(";"):
-                            if kv.startswith("END="):
-                                end_pos = int(kv[4:])
-                                break
-                    b.add(contig, pos, end_pos, vs, ve)
-                yield pd.DataFrame(
-                    {
-                        "start": [int(row["start"])],
-                        "frag": [
-                            pickle.dumps((b.names, b.bins, b.linear, b.stats))
-                        ],
-                    }
-                )
+    def scan(p: str, start: int, end: int) -> Iterator[pd.DataFrame]:
+        b = tbimod.TbiBuilder()
+        for line, vs, ve in _range_records_voff(p, start, end):
+            if line.startswith("#") or not line:
+                continue
+            fl = line.split("\t", 8)
+            contig, pos, ref = fl[0], int(fl[1]), fl[3]
+            end_pos = pos + len(ref) - 1
+            if len(fl) > 7 and "END=" in fl[7]:
+                for kv in fl[7].split(";"):
+                    if kv.startswith("END="):
+                        end_pos = int(kv[4:])
+                        break
+            b.add(contig, pos, end_pos, vs, ve)
+        frag = pickle.dumps((b.names, b.bins, b.linear, b.stats))
+        yield pd.DataFrame({"start": [start], "frag": [frag]})
 
-    rows = plan_df.mapInPandas(scan, "start long, frag binary").collect()
+    rows = plan_frame(spark, ranges, scan, "start long, frag binary").collect()
     rows.sort(key=lambda r: r.start)
     parts = []
     for r in rows:
@@ -367,29 +346,21 @@ def _read_plain_pruned(
             e = min(s + split_size, size)
             if split_overlaps_intervals(tidx, s, e, triples):
                 ranges.append((p, s, e))
-    if not ranges:
-        return spark.createDataFrame([], VARIANTS_SCHEMA)
-    plan_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(ranges, len(ranges)),
-        "path string, start long, end long",
-    )
 
-    def parse_range(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                lines: list[str] = []
-                with _dfs.open_input(r["path"]) as f:
-                    if int(r["start"]) > 0:
-                        f.seek(int(r["start"]) - 1)
-                        f.readline()  # straddling line belongs to prior split
-                    while f.tell() < int(r["end"]):
-                        raw = f.readline()
-                        if not raw:
-                            break
-                        text = raw.decode("utf-8").rstrip("\n")
-                        if text and not text.startswith("#"):
-                            lines.append(text)
-                if lines:
-                    yield parse_vcf_lines(pd.Series(lines, dtype="object"), samples, mode, with_genotypes)
+    def parse_range(p: str, start: int, end: int) -> Iterator[pd.DataFrame]:
+        lines: list[str] = []
+        with _dfs.open_input(p) as f:
+            if start > 0:
+                f.seek(start - 1)
+                f.readline()  # straddling line belongs to prior split
+            while f.tell() < end:
+                raw = f.readline()
+                if not raw:
+                    break
+                text = raw.decode("utf-8").rstrip("\n")
+                if text and not text.startswith("#"):
+                    lines.append(text)
+        if lines:
+            yield parse_vcf_lines(pd.Series(lines, dtype="object"), samples, mode, with_genotypes)
 
-    return plan_df.mapInPandas(parse_range, VARIANTS_SCHEMA)
+    return plan_frame(spark, ranges, parse_range, VARIANTS_SCHEMA)

@@ -5152,6 +5152,23 @@ def test_fan_out_partition_count_is_memoized(spark):
     dispatch._NPART_MEMO.clear()
 
 
+def test_fan_out_memo_misses_entries_of_another_application(spark):
+    """The memo key carries the application id, not the id() of a py4j
+    session wrapper (which a later session can reuse after GC): an entry
+    left by an earlier application for the same plan is never served."""
+    from disq_spark.operators import dispatch
+
+    dispatch._NPART_MEMO.clear()
+    base = spark.range(64).coalesce(1)
+    # a stale "wide" entry from a stopped application, same semantic hash
+    dispatch._NPART_MEMO[("app-stopped-earlier", base.semanticHash())] = (
+        spark.sparkContext.defaultParallelism
+    )
+    assert dispatch.fan_out(base, "id") is not base
+    assert (spark.sparkContext.applicationId, base.semanticHash()) in dispatch._NPART_MEMO
+    dispatch._NPART_MEMO.clear()
+
+
 def test_ngram_and_dsir_stages_fan_out_on_narrow_source(spark):
     """r11 stage-sweep fix: the per-byte-heavy gram/feature explodes in
     substring_dup_rate and dsir_weights repartition a narrow source by

@@ -634,3 +634,50 @@ def test_pq_stored_codes_search_never_scans_embeddings(spark):
     assert "embeddings" not in iplan, iplan[:1200]
     assert "CartesianProduct" not in iplan
     assert "SortMergeJoin" not in iplan, iplan[:800]
+
+
+def test_planned_sources_scan_a_range_not_an_existing_rdd(spark, planned_inputs):
+    """Split-planned reads build their frame as ``spark.range`` ->
+    ``MapInPandas`` (sources/plan.py::plan_frame). A ``Scan ExistingRDD``
+    leaf (the marker above) would mean a plan shipped through
+    ``sc.parallelize``: a PythonRDD, and a second Python worker per
+    decode task just to pickle one plan row into the JVM."""
+    import os
+
+    from disq_spark.sources.bam_source import read_bam
+    from disq_spark.sources.fasta import read_fasta_windows
+    from disq_spark.sources.fastq import read_fastq
+    from disq_spark.sources.variants import read_vcf
+
+    fx = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures")
+    frames = {
+        "read_bam": read_bam(spark, planned_inputs["bam"], planned_inputs["bam_split"])[0],
+        "read_vcf": read_vcf(spark, planned_inputs["vcf"], planned_inputs["vcf_split"])[0],
+        "read_fastq": read_fastq(spark, os.path.join(fx, "sample.fastq"), 16 * 1024),
+        "read_fasta_windows": read_fasta_windows(spark, os.path.join(fx, "ref.fa"), 10_000),
+    }
+    for name, df in frames.items():
+        assert df.collect(), name
+        plan = plan_of(df)
+        assert "MapInPandas" in plan and "Range" in plan, (name, plan[:800])
+        assert "Scan ExistingRDD" not in plan, (name, plan[:800])
+        assert df.rdd.getNumPartitions() > 1, name
+
+
+def test_plan_ships_as_numpy_columns():
+    """The plan rides in the pickled UDF closure: at 10^6 chunks it must
+    cost at most ~24 B per chunk plus the distinct paths (it is 20 B:
+    int32 path index + int64 start + int64 end)."""
+    from pyspark.serializers import CloudPickleSerializer
+
+    from disq_spark.sources.plan import _plan_runner
+
+    n = 10**6
+    paths = [f"/data/cohort/sample{i:03d}.bam" for i in range(8)]
+    plan = [(paths[i % 8], i << 27, (i + 1) << 27) for i in range(n)]
+
+    def decode(path, start, end):
+        yield from ()
+
+    size = len(CloudPickleSerializer().dumps(_plan_runner(plan, decode)))
+    assert size <= 24 * n + sum(len(p) for p in paths) + 64 * 1024, size
