@@ -244,7 +244,7 @@ def child_main() -> None:
         df.unpersist(blocking=False)
     del _dd._TRACKED[n_tracked_before:]
     # _N_DOCS_CACHE keys are tables._table_key tuples:
-    # (session id, sf_dir, table, mtime_ns, size)
+    # (application id, sf_dir, table, mtime_ns, size)
     max_df_memoized = any(
         k and k[1] == sf_dir and k[2] == "documents" for k in _N_DOCS_CACHE
     )

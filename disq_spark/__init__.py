@@ -31,7 +31,7 @@ Or through the Spark DataSource registry (Spark 4 Python sources)::
 """
 
 from disq_spark.functions.intervals import Interval, filter_intervals, overlaps
-from disq_spark.session import get_session
+from disq_spark.session import get_session, skip_unchanged_zip_rereads
 from disq_spark.sinks.bam import write_bam
 from disq_spark.sinks.cram import write_cram
 from disq_spark.sinks.materialize import materialize_reads, materialize_variants, read_materialized
@@ -45,6 +45,8 @@ from disq_spark.sources.reads import read_sam
 from disq_spark.sources.variants import build_tbi, read_vcf
 
 __version__ = "0.1.0"
+
+skip_unchanged_zip_rereads()
 
 __all__ = [
     "Interval",

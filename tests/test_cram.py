@@ -535,7 +535,7 @@ def test_cram_samtools_cross_validation(spark):
         _pt.skip("samtools not on PATH — xval recipe ready in tools/xval_cram.py")
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
     from xval_cram import run_xval
 
     msg = run_xval(spark)

@@ -7,6 +7,8 @@ import pytest
 
 from disq_spark.sources.datasource import register_datasources
 
+REF_FA = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures", "ref.fa")
+
 
 @pytest.fixture(scope="module", autouse=True)
 def _register(spark):
@@ -257,7 +259,7 @@ def test_fasta_datasource_matches_functional(spark):
     from disq_spark.sources.fasta import read_fasta_windows
 
     register_datasources(spark)
-    path = "/root/repo/fixtures/ref.fa"
+    path = REF_FA
     via_fmt = (
         spark.read.format("fasta")
         .option("window", 7000)

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import gzip
+import os
 import random
 
 import pytest
@@ -11,6 +12,8 @@ from pyspark.sql import functions as F
 
 from disq_spark.formats import fastq as fq
 from disq_spark.sources.fastq import read_fastq, write_fastq
+
+REF_FA = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures", "ref.fa")
 
 
 def _mk_fastq(n: int, seed: int = 7, trailing_newline: bool = True) -> str:
@@ -163,7 +166,7 @@ def test_fasta_windows_tile_exactly(spark):
     from disq_spark.formats.gzi import read_fai
     from disq_spark.sources.fasta import read_fasta_windows
 
-    path = "/root/repo/fixtures/ref.fa"
+    path = REF_FA
     fai = read_fai(path + ".fai")
     rows = read_fasta_windows(spark, path, window=7000).collect()
     by_contig = {}
@@ -192,7 +195,7 @@ def test_fasta_windows_tile_exactly(spark):
 def test_fasta_windows_overlap_for_kmers(spark):
     from disq_spark.sources.fasta import read_fasta_windows
 
-    path = "/root/repo/fixtures/ref.fa"
+    path = REF_FA
     k = 5
     rows = read_fasta_windows(spark, path, window=7000, overlap=k - 1).collect()
     whole = {

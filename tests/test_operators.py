@@ -5045,7 +5045,7 @@ def test_max_df_caches_only_regular_file_corpora(spark, tmp_path):
 
     # single-file corpus: cached, and the cached path does NOT re-count.
     # Since r11 the memo lives in tables._COUNT_CACHE with
-    # tables._table_key keys: (session id, sf_dir, table, mtime_ns, size).
+    # tables._table_key keys: (application id, sf_dir, table, mtime_ns, size).
     fdir = tmp_path / "filesf"
     fdir.mkdir()
     pq.write_table(
@@ -5113,6 +5113,39 @@ def test_load_memo_invalidates_on_rewrite(spark, tmp_path):
     e1 = tables.load(spark, str(ddir), "documents")
     e2 = tables.load(spark, str(ddir), "documents")
     assert e1 is not e2, "directory corpus must not be memoized"
+
+
+def test_table_memos_miss_entries_of_another_application(spark, tmp_path):
+    """tables' DataFrame and row-count memos key on the application id,
+    not the id() of a py4j session wrapper (which a later session can
+    reuse after GC): entries an earlier application left for the same
+    file identity are never served."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from disq_spark.queries import tables
+
+    fdir = tmp_path / "appsf"
+    fdir.mkdir()
+    path = str(fdir / "documents.parquet")
+    pq.write_table(pa.table({"doc_id": [1, 2, 3], "text": ["a", "b", "c"]}), path)
+    st = os.stat(path)
+    foreign = ("app-stopped-earlier", str(fdir), "documents", st.st_mtime_ns, st.st_size)
+    stale = spark.range(0)
+    tables._DF_CACHE[foreign] = stale
+    tables._COUNT_CACHE[foreign] = 99
+    try:
+        own = tables._table_key(spark, str(fdir), "documents")
+        assert own[0] == spark.sparkContext.applicationId
+        assert tables.load(spark, str(fdir), "documents") is not stale
+        assert tables.table_count(spark, str(fdir), "documents") == 3
+        assert tables._COUNT_CACHE[own] == 3
+    finally:
+        for memo in (tables._DF_CACHE, tables._COUNT_CACHE):
+            for k in [k for k in memo if k[1] == str(fdir)]:
+                del memo[k]
 
 
 def test_fan_out_branches_on_source_width(spark):

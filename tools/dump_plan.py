@@ -1,9 +1,9 @@
 """Dump the formatted physical plan of registered gates to files.
 
-Worktree-safe twin of tools/explain.py: resolves the repo root from this
-file's location (explain.py hard-codes /root/repo, which silently imports
-HEAD code when run from a historical worktree — exactly the mistake a
-before/after plan comparison cannot afford).
+Twin of tools/explain.py that writes plans to files. Both resolve the
+repo root from their own location, so a historical worktree imports its
+own code, not HEAD's — the mistake a before/after plan comparison cannot
+afford.
 
 Usage:
     python tools/dump_plan.py --sf DIR --out-dir plans/r11 --suffix _after \

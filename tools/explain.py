@@ -12,9 +12,10 @@ and whole-stage-codegen coverage.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def plan_of(df, mode: str) -> str:

@@ -236,7 +236,7 @@ def write_zipf_documents(
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--src", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default="/root/repo/.scratch/sf1")
+    ap.add_argument("--out", default=os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch", "sf1"))
     ap.add_argument("--factor", type=int, default=10)
     ap.add_argument(
         "--unique-docs",
