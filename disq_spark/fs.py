@@ -268,50 +268,6 @@ def rename(src: str, dst: str) -> None:
     get_fs(src).rename(strip_file_scheme(src), strip_file_scheme(dst))
 
 
-# -- locality --------------------------------------------------------------
-
-
-def block_locations(path: str, start: int = 0, length: int | None = None) -> list[str]:
-    """Best-effort datanode host hints for a byte range — the analog of
-    Hadoop FileInputFormat's locality the reference inherits
-    (PathSplitSource.java:89-112). Registered filesystems may implement
-    ``block_locations``; HDFS-family schemes are queried through the
-    driver's JVM; everything else (local, object stores) returns [] —
-    locality is meaningless there. Planner-attached hosts are currently
-    informational: the Python DataSource API does not yet forward
-    preferred locations to the scheduler."""
-    impl = getattr(get_fs(path), "block_locations", None)
-    if impl is not None:
-        return impl(strip_file_scheme(path), start, length)
-    if split_scheme(path)[0] in ("hdfs", "webhdfs", "viewfs"):
-        return _hadoop_block_locations(path, start, length) or []
-    return []
-
-
-def _hadoop_block_locations(path: str, start: int, length: int | None) -> list[str] | None:
-    try:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            return None
-        jvm = spark._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        hfs = jpath.getFileSystem(hconf)
-        status = hfs.getFileStatus(jpath)
-        if length is None:
-            length = status.getLen() - start
-        hosts: list[str] = []
-        for bl in hfs.getFileBlockLocations(status, start, length):
-            for h in bl.getHosts():
-                if h not in hosts:
-                    hosts.append(h)
-        return hosts
-    except Exception:
-        return None
-
-
 # -- concat ----------------------------------------------------------------
 
 

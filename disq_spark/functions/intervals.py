@@ -86,6 +86,27 @@ def filter_intervals(
     return df.filter(pred)
 
 
+def overlap_mask(
+    pdf, intervals: list[Interval] | None, traverse_unplaced_unmapped: bool = False
+):
+    """The rows of a decoded pandas frame that ``filter_intervals`` keeps,
+    as a boolean numpy mask (``intervals`` alone: the rows ``overlaps``
+    keeps). A null contig/start/end never overlaps, as in SQL."""
+    import numpy as np
+    import pandas as pd
+
+    start = pd.to_numeric(pdf["start"])
+    keep = np.zeros(len(pdf), dtype=bool)
+    if intervals is not None:
+        end = pd.to_numeric(pdf["end"])
+        for iv in intervals:
+            hit = (pdf["contig"] == iv.contig) & (start <= iv.end) & (end >= iv.start)
+            keep |= hit.to_numpy(dtype=bool, na_value=False)
+    if traverse_unplaced_unmapped:
+        keep |= ((pdf["flags"].to_numpy() & FLAG_UNMAPPED) != 0) & start.isna().to_numpy()
+    return keep
+
+
 def parse_intervals(spec: str) -> list[Interval]:
     """'chr1:100-200,chrX:5-10' -> [Interval] (1-based closed, the
     samtools region-string convention) — the option format the

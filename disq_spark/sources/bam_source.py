@@ -35,7 +35,7 @@ from disq_spark.formats import bgzf
 from disq_spark.formats import sbi as sbimod
 from disq_spark.headers import SamHeader
 from disq_spark.schemas import READS_COLUMNS, READS_SCHEMA, READS_SCHEMA_RAW_TAGS
-from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, plan_frame, resolve_paths
+from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, Scan, plan_frame, resolve_paths
 
 BAM_EXTENSIONS = (".bam",)
 READS_TO_CHECK = 10  # BamRecordGuesser.java:42
@@ -673,16 +673,11 @@ def read_bam(
     """
     if tags not in ("parsed", "raw"):
         raise ValueError(f"tags must be 'parsed' or 'raw', got {tags!r}")
-    df, header = _read_bam_all(
-        spark,
-        path,
-        split_size,
-        intervals,
-        traverse_unplaced_unmapped,
-        pair_atomic,
-        columns,
+    scan = scan_bam(
+        path, split_size, intervals, traverse_unplaced_unmapped, pair_atomic, columns,
         raw_tags=(tags == "raw"),
     )
+    df, header = scan.frame(spark), scan.header
     if intervals is not None or traverse_unplaced_unmapped:
         from disq_spark.functions.intervals import filter_intervals
 
@@ -722,8 +717,7 @@ def _chunk_may_match(
     return out
 
 
-def _read_bam_all(
-    spark: SparkSession,
+def scan_bam(
     path: str,
     split_size: int = DEFAULT_SPLIT_SIZE,
     intervals: list | None = None,
@@ -731,23 +725,26 @@ def _read_bam_all(
     pair_atomic: bool = False,
     columns: list[str] | None = None,
     raw_tags: bool = False,
-) -> tuple[DataFrame, SamHeader]:
+) -> Scan:
+    """The BAM scan: ``.sbi``/guesser chunk plan, pruned through the
+    ``.bai`` when ``intervals``/``traverse_unplaced_unmapped`` are set,
+    and a column-pruned decode of each virtual-offset chunk."""
     paths = resolve_paths(path, BAM_EXTENSIONS)
     header, refs, first_voff = read_bam_header(paths[0])
-    schema = READS_SCHEMA_RAW_TAGS if raw_tags else READS_SCHEMA
 
-    plan: list[tuple[str, int, int]] = []
-    for p in paths:
-        _h, p_refs, p_voff = (header, refs, first_voff) if p == paths[0] else read_bam_header(p)
-        p_chunks = plan_bam_chunks(p, split_size, p_refs, p_voff)
-        if pair_atomic:
-            p_chunks = adjust_chunks_for_queryname_groups(p, p_chunks)
-        if (intervals is not None or traverse_unplaced_unmapped) and _dfs.exists(p + ".bai"):
-            p_chunks = _chunk_may_match(
-                p + ".bai", p_refs, p_chunks, intervals, traverse_unplaced_unmapped
-            )
-        for v_start, v_end in p_chunks:
-            plan.append((p, v_start, v_end))
+    def plan() -> list[tuple[str, int, int]]:
+        out: list[tuple[str, int, int]] = []
+        for p in paths:
+            _h, p_refs, p_voff = (header, refs, first_voff) if p == paths[0] else read_bam_header(p)
+            p_chunks = plan_bam_chunks(p, split_size, p_refs, p_voff)
+            if pair_atomic:
+                p_chunks = adjust_chunks_for_queryname_groups(p, p_chunks)
+            if (intervals is not None or traverse_unplaced_unmapped) and _dfs.exists(p + ".bai"):
+                p_chunks = _chunk_may_match(
+                    p + ".bai", p_refs, p_chunks, intervals, traverse_unplaced_unmapped
+                )
+            out.extend((p, v_start, v_end) for v_start, v_end in p_chunks)
+        return out
 
     w_seq = columns is None or "seq" in columns
     w_qual = columns is None or "qual" in columns
@@ -761,7 +758,8 @@ def _read_bam_all(
         if cols and cols["flags"]:
             yield pd.DataFrame(cols, columns=READS_COLUMNS)
 
-    return plan_frame(spark, plan, decode, schema), header
+    schema = READS_SCHEMA_RAW_TAGS if raw_tags else READS_SCHEMA
+    return Scan(schema, header, decode, plan)
 
 
 def check_record_guesser(

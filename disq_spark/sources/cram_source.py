@@ -22,7 +22,6 @@ from __future__ import annotations
 
 from disq_spark import fs as _dfs
 
-import os
 from typing import Iterator
 
 import pandas as pd
@@ -32,7 +31,7 @@ from disq_spark.formats.cram import plan_cram_containers, read_crai
 from disq_spark.formats.cram_decode import decode_cram_range, read_cram_header
 from disq_spark.headers import SamHeader
 from disq_spark.schemas import READS_COLUMNS, READS_SCHEMA
-from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, plan_frame, resolve_paths
+from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, Scan, resolve_paths
 
 CRAM_EXTENSIONS = (".cram",)
 
@@ -98,21 +97,40 @@ def read_cram(
     missing_ref_as_n: bool = False,
 ) -> tuple[DataFrame, SamHeader]:
     """Load CRAM (file, dir, or glob) as a reads DataFrame + header."""
+    scan = scan_cram(
+        path, reference_path, split_size, intervals, traverse_unplaced_unmapped, missing_ref_as_n
+    )
+    df = scan.frame(spark)
+    if intervals is not None or traverse_unplaced_unmapped:
+        from disq_spark.functions.intervals import filter_intervals
+
+        df = filter_intervals(df, intervals, traverse_unplaced_unmapped)
+    return df, scan.header
+
+
+def scan_cram(
+    path: str,
+    reference_path: str | None = None,
+    split_size: int = DEFAULT_SPLIT_SIZE,
+    intervals: list | None = None,
+    traverse_unplaced_unmapped: bool = False,
+    missing_ref_as_n: bool = False,
+) -> Scan:
+    """The CRAM scan: container-aligned ranges (``.crai`` pruned), each
+    decoded against ``reference_path``."""
     paths = resolve_paths(path, CRAM_EXTENSIONS)
     text, refs = read_cram_header(paths[0])
     header = SamHeader(text=text if text.endswith("\n") else text + "\n")
 
-    plan: list[tuple[str, int, int]] = []
-    for p in paths:
-        plan.extend(
-            plan_cram(
-                p,
-                split_size,
-                intervals=intervals,
-                refs=refs,
+    def plan() -> list[tuple[str, int, int]]:
+        return [
+            row
+            for p in paths
+            for row in plan_cram(
+                p, split_size, intervals=intervals, refs=refs,
                 include_unmapped=traverse_unplaced_unmapped,
             )
-        )
+        ]
 
     def decode(p: str, start: int, end: int) -> Iterator[pd.DataFrame]:
         rows = decode_cram_range(
@@ -121,12 +139,7 @@ def read_cram(
         if rows:
             yield pd.DataFrame(rows, columns=READS_COLUMNS)
 
-    df = plan_frame(spark, plan, decode, READS_SCHEMA)
-    if intervals is not None or traverse_unplaced_unmapped:
-        from disq_spark.functions.intervals import filter_intervals
-
-        df = filter_intervals(df, intervals, traverse_unplaced_unmapped)
-    return df, header
+    return Scan(READS_SCHEMA, header, decode, plan)
 
 
 def build_crai(path: str, out: str | None = None) -> str:

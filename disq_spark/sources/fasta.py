@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from disq_spark.formats.gzi import open_indexed_reference, read_fai
-from disq_spark.sources.plan import plan_frame
+from disq_spark.sources.plan import Scan
 
 FASTA_WINDOW_SCHEMA = T.StructType(
     [
@@ -41,17 +41,25 @@ def read_fasta_windows(
     window of each contig is shorter); ``overlap`` extra bases are
     appended to ``seq`` (end stays the body end) for boundary-spanning
     k-mer ownership."""
-    fai = read_fai(path + ".fai")
-    plan: list[tuple[str, int, int]] = []
-    for name, e in fai.items():
-        s = 1
-        while s <= e.length:
-            plan.append((name, s, min(s + window - 1, e.length)))
-            s += window
+    return scan_fasta_windows(path, window, overlap).frame(spark)
+
+
+def scan_fasta_windows(path: str, window: int = 1_000_000, overlap: int = 0) -> Scan:
+    """The FASTA window scan: plan rows are (contig, start, end) windows
+    from the .fai; each decode fetches one window."""
+
+    def plan() -> list[tuple[str, int, int]]:
+        out: list[tuple[str, int, int]] = []
+        for name, e in read_fai(path + ".fai").items():
+            s = 1
+            while s <= e.length:
+                out.append((name, s, min(s + window - 1, e.length)))
+                s += window
+        return out
 
     def fetch(c: str, s: int, e: int) -> Iterator[pd.DataFrame]:
         ref = open_indexed_reference(path)
         seq = ref.get(c, s, min(e + overlap, ref.fai[c].length))
         yield pd.DataFrame({"contig": [c], "start": [s], "end": [e], "seq": [seq]})
 
-    return plan_frame(spark, plan, fetch, FASTA_WINDOW_SCHEMA)
+    return Scan(FASTA_WINDOW_SCHEMA, None, fetch, plan)

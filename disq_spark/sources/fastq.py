@@ -1,15 +1,16 @@
 """Splittable FASTQ source and sink.
 
-Read lifecycle (mirrors the BAM source's shape, applied to text):
-  1. plan byte ranges of split_size per plain file (gzip: whole file —
-     not splittable),
-  2. snap each interior boundary forward to the next chain-validated
-     record start (formats/fastq.find_record_start) — the snap runs as a
-     SPARK JOB over the boundaries, one small window read each, so
-     planning a 100 TB directory never serializes through the driver,
-  3. each task parses complete records from [start, end) — ownership is
-     by record start, exactly-once across any split size (tested over a
-     split matrix).
+Read lifecycle (``scan_fastq``; mirrors the BAM source's shape, applied
+to text):
+  1. plan raw byte ranges of split_size per plain file (gzip: whole
+     file — not splittable); the driver only stats the files,
+  2. each task snaps both ends of its range forward to the next
+     chain-validated record start (formats/fastq.find_record_start, one
+     small window read per end). The snap is deterministic, so adjacent
+     tasks agree on their shared boundary,
+  3. the task parses the complete records in the snapped range —
+     ownership is by record start, exactly-once across any split size
+     (tested over a split matrix).
 
 Write: text parts in parallel -> concat (single-file) or one file per
 partition (sharded), through the fs layer like every other sink.
@@ -29,7 +30,7 @@ from pyspark.sql import types as T
 from disq_spark import fs as _dfs
 from disq_spark.formats import fastq as fq
 from disq_spark.sinks import merge
-from disq_spark.sources.plan import plan_frame, resolve_paths
+from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, Scan, resolve_paths
 
 FASTQ_EXTENSIONS = (".fastq", ".fq", ".fastq.gz", ".fq.gz")
 
@@ -46,13 +47,11 @@ FASTQ_SCHEMA = T.StructType(
 #: (a record start must appear within one window for the snap to land).
 _SNAP_WINDOW = 1 << 20
 
-DEFAULT_SPLIT_SIZE = 128 * 1024 * 1024
-
 
 def _snap(path: str, pos: int, size: int) -> int:
     """First record-start offset >= pos (file offset), or ``size``."""
-    if pos == 0:
-        return 0
+    if pos == 0 or pos >= size:
+        return min(pos, size)
     # read from pos-1 so the newline (or not) preceding pos is visible:
     # candidates are then offsets >= pos that provably begin a line —
     # an '@' at pos with a non-newline byte before it is mid-line and
@@ -73,68 +72,45 @@ def read_fastq(
 ) -> DataFrame:
     """Load FASTQ (file, dir, or glob; plain splittable, .gz whole-file)
     as (name, comment, seq, qual)."""
+    return scan_fastq(path, split_size).frame(spark)
+
+
+def scan_fastq(path: str, split_size: int | None = None) -> Scan:
+    """The FASTQ scan: raw byte ranges, snapped to record starts in the
+    decoding task."""
     split = split_size or DEFAULT_SPLIT_SIZE
     paths = resolve_paths(path, FASTQ_EXTENSIONS)
 
-    bounds: list[tuple[str, int, int]] = []
-    for p in paths:
-        size = _dfs.getsize(p)
-        if p.endswith(".gz"):
-            bounds.append((p, 0, size))
-            continue
-        nsplits = max(1, (size + split - 1) // split)
-        for i in range(nsplits):
-            bounds.append((p, i * split, min((i + 1) * split, size)))
-
-    def snap_bounds(p: str, s: int, e: int) -> Iterator[pd.DataFrame]:
-        if not p.endswith(".gz"):
+    def plan() -> list[tuple[str, int, int]]:
+        out: list[tuple[str, int, int]] = []
+        for p in paths:
             size = _dfs.getsize(p)
-            s, e = _snap(p, s, size), _snap(p, e, size)
-        yield pd.DataFrame({"path": [p], "start": [s], "end": [e]})
+            if p.endswith(".gz"):
+                out.append((p, 0, size))
+            else:
+                out.extend((p, s, min(s + split, size)) for s in range(0, size, split))
+        return out
 
-    snapped = plan_frame(
-        spark, bounds, snap_bounds, "path string, start long, end long"
-    ).toPandas()
-    ranges = [
-        (p, int(s), int(e))
-        for p, s, e in zip(snapped["path"], snapped["start"], snapped["end"])
-        if e > s
-    ]
-
-    def parse_range(p: str, s: int, e: int) -> Iterator[pd.DataFrame]:
+    def decode(p: str, s: int, e: int) -> Iterator[pd.DataFrame]:
         import gzip
 
         if p.endswith(".gz"):
             with gzip.open(_dfs.open_input(p), "rt", encoding="ascii") as f:
                 lines = f.read().splitlines()
         else:
+            size = _dfs.getsize(p)
+            s, e = _snap(p, s, size), _snap(p, e, size)
+            if e <= s:
+                return
             with _dfs.open_input(p) as f:
                 f.seek(s)
-                data = f.read(e - s)
-                # the last record owned here may continue past e
-                while data and not data.endswith(b"\n"):
-                    more = f.read(1 << 16)
-                    if not more:
-                        break
-                    data += more
-                # records are owned by their start offset: we may
-                # have pulled whole extra records after e; drop
-                # any record whose start byte is >= e - s
-                lines_b = data.split(b"\n")
-                if lines_b and lines_b[-1] == b"":
-                    lines_b.pop()
-                keep: list[bytes] = []
-                off = 0
-                for i in range(0, len(lines_b) - len(lines_b) % 4, 4):
-                    if off >= e - s:
-                        break
-                    keep.extend(lines_b[i : i + 4])
-                    off += sum(len(x) + 1 for x in lines_b[i : i + 4])
-                lines = [x.decode("ascii") for x in keep]
+                lines = f.read(e - s).decode("ascii").split("\n")
+            if lines[-1] == "":
+                lines.pop()
         if lines:
             yield pd.DataFrame(fq.parse_lines(lines))
 
-    return plan_frame(spark, ranges, parse_range, FASTQ_SCHEMA)
+    return Scan(FASTQ_SCHEMA, None, decode, plan)
 
 
 def write_fastq(df: DataFrame, path: str, single_file: bool | None = None) -> None:

@@ -1,5 +1,12 @@
 """Driver-side partition planning shared by the binary/text sources.
 
+Every format exposes one ``scan_<fmt>(path, ...) -> Scan``: the header,
+the output schema, a zero-argument ``plan()`` returning the
+``(key, start, end)`` rows and a ``decode(key, start, end)`` yielding
+pandas frames. ``read_<fmt>`` turns it into a DataFrame with
+``Scan.frame``; ``spark.read.format(<fmt>)`` (sources/datasource.py)
+serves the same scan through the Python DataSource API.
+
 The reference plans splits with Spark jobs over ``PathSplit``/``BgzfBlock``
 RDDs (PathSplitSource.java:68-113, BgzfBlockSource.java:59-74). We plan
 driver-side (pure metadata: file lengths + optional indexes) and decode
@@ -24,7 +31,7 @@ from disq_spark import fs as _dfs
 import glob
 import os
 from dataclasses import dataclass
-from typing import Callable, Iterable, Sequence
+from typing import Any, Callable, Iterable, NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
@@ -32,11 +39,26 @@ import pandas as pd
 DEFAULT_SPLIT_SIZE = 128 * 1024 * 1024  # PathSplitSource.java:47 default
 
 
-@dataclass(frozen=True)
-class PathRange:
+class PathRange(NamedTuple):
     path: str
     start: int
     end: int
+
+
+@dataclass(frozen=True)
+class Scan:
+    """One format's read path. ``plan()`` runs on the driver (index reads
+    and arithmetic, no Spark job); ``decode`` runs in the tasks and
+    yields frames in ``schema``. Building a Scan reads headers only, so
+    it is cheap to pickle: the plan is never held by the Scan."""
+
+    schema: Any
+    header: Any
+    decode: Callable[[str, int, int], Iterable[pd.DataFrame]]
+    plan: Callable[[], list[tuple[str, int, int]]]
+
+    def frame(self, spark):
+        return plan_frame(spark, self.plan(), self.decode, self.schema)
 
 
 def resolve_paths(path: str, extensions: tuple[str, ...]) -> list[str]:
@@ -88,6 +110,31 @@ def plan_ranges(paths: list[str], split_size: int = DEFAULT_SPLIT_SIZE) -> list[
             out.append(PathRange(p, start, min(start + split_size, size)))
             start += split_size
     return out
+
+
+def read_lines(path: str, start: int, end: int) -> list[str]:
+    """Lines of a plain text file whose first byte lies in ``[start, end)``
+    (Hadoop text-split ownership), read with one seek+read extended to
+    the next newline; a trailing ``\\r`` is stripped as
+    ``spark.read.text`` does."""
+    lo = max(start - 1, 0)
+    with _dfs.open_input(path) as f:
+        f.seek(lo)
+        data = f.read(end - lo)
+        # finish the line holding byte end-1: it starts in this split
+        while data and not data.endswith(b"\n"):
+            more = f.read(1 << 16)
+            if not more:
+                break
+            nl = more.find(b"\n")
+            data += more if nl < 0 else more[: nl + 1]
+    if start > 0:
+        # the line holding byte start-1 belongs to the previous split
+        data = data.partition(b"\n")[2]
+    lines = data.decode("utf-8").split("\n")
+    if lines[-1] == "":
+        lines.pop()
+    return [ln[:-1] if ln.endswith("\r") else ln for ln in lines]
 
 
 def plan_frame(

@@ -1,10 +1,9 @@
 """SAM/BAM -> reads DataFrame (SAM text path here; BAM in bam_source.py).
 
 SAM lifecycle re-expressed (SamSource.java:61-104): Hadoop text splits ->
-skip '@' header lines -> per-record parse. Spark-first: ``spark.read.text``
-(already locality-aware + splittable) feeds an Arrow-batched pandas parse;
-the '@' filter is a Catalyst predicate that prunes whole batches before
-Python sees them.
+skip '@' header lines -> per-record parse. ``scan_sam`` plans
+newline-aligned byte ranges (a line belongs to the split holding its
+first byte) and each task parses its range in one pandas batch.
 """
 
 from __future__ import annotations
@@ -17,12 +16,11 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from disq_spark.formats.sam import parse_sam_lines
 from disq_spark.headers import SamHeader
 from disq_spark.schemas import READS_SCHEMA
-from disq_spark.sources.plan import resolve_paths
+from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, Scan, plan_ranges, read_lines, resolve_paths
 
 SAM_EXTENSIONS = (".sam",)
 
@@ -54,19 +52,24 @@ def read_sam(
     SamSource.java:93-102). ``mode``: STRICT/LENIENT/SILENT validation
     stringency (HtsjdkReadsRddStorage.java:85-88).
     """
-    paths = resolve_paths(path, SAM_EXTENSIONS)
-    header = read_sam_header(paths[0])
-
-    text = spark.read.text(list(paths)).filter(~F.col("value").startswith("@"))
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield parse_sam_lines(pdf["value"], mode)
-
-    df = text.mapInPandas(parse, READS_SCHEMA)
+    scan = scan_sam(path, mode=mode)
+    df, header = scan.frame(spark), scan.header
     if intervals is not None or traverse_unplaced_unmapped:
         from disq_spark.functions.intervals import filter_intervals
 
         df = filter_intervals(df, intervals, traverse_unplaced_unmapped)
     return df, header
+
+
+def scan_sam(path: str, split_size: int = DEFAULT_SPLIT_SIZE, mode: str = "STRICT") -> Scan:
+    """The SAM scan: newline-aligned byte ranges, one pandas parse each."""
+    paths = resolve_paths(path, SAM_EXTENSIONS)
+
+    def decode(p: str, start: int, end: int) -> Iterator[pd.DataFrame]:
+        lines = [ln for ln in read_lines(p, start, end) if ln and not ln.startswith("@")]
+        if lines:
+            yield parse_sam_lines(pd.Series(lines, dtype="object"), mode)
+
+    return Scan(
+        READS_SCHEMA, read_sam_header(paths[0]), decode, lambda: plan_ranges(paths, split_size)
+    )

@@ -5,11 +5,10 @@ header + sniffs compression (VcfSource.java:75-93,106-112); BGZF codecs
 make .bgz/.gz text-splittable (VcfSource.java:152-162); executors decode
 lines after dropping '#' (VcfSource.java:133-149).
 
-Spark-first shape:
-- plain .vcf  -> ``spark.read.text`` (natively splittable) + mapInPandas
-  batch parse.
-- .bgz / BGZF-content .gz -> driver plans block-aligned byte ranges and
-  ``sources.plan.plan_frame`` decodes one range per task: the plan rides
+Spark-first shape (``scan_vcf``, read through ``sources.plan.plan_frame``
+one range per task):
+- plain .vcf -> newline-aligned byte ranges (``sources.plan.read_lines``).
+- .bgz / BGZF-content .gz -> driver plans block-aligned byte ranges; the plan rides
   in the UDF closure as numpy columns (20 B per range at 10^6 ranges,
   plus the distinct paths), with no plan DataFrame or PythonRDD in front
   of the decode. Split ownership follows text-split semantics (a
@@ -35,7 +34,14 @@ from disq_spark.formats import bgzf
 from disq_spark.formats.vcf import parse_vcf_lines
 from disq_spark.headers import VcfHeader
 from disq_spark.schemas import VARIANTS_SCHEMA
-from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, plan_frame, plan_ranges, resolve_paths
+from disq_spark.sources.plan import (
+    DEFAULT_SPLIT_SIZE,
+    Scan,
+    plan_frame,
+    plan_ranges,
+    read_lines,
+    resolve_paths,
+)
 
 VCF_EXTENSIONS = (".vcf", ".vcf.gz", ".vcf.bgz", ".vcf.bgzf.gz")
 
@@ -82,81 +88,66 @@ def read_vcf(
     entirely (most of a cohort line); the column remains as NULL.
 
     ``intervals``: list of ``disq_spark.functions.intervals.Interval``.
-    When given, splits of .tbi-indexed BGZF files that cannot contain an
-    overlapping record are pruned at plan time (VcfSource.java:177-201
-    semantics) and a residual overlap predicate is applied. Unlike the
-    reference (which errors without an index, VcfSource.java:184-187),
-    index-less inputs degrade gracefully to filter-only.
+    When given, splits of .tbi-indexed BGZF files (or .idx-indexed plain
+    files) that cannot contain an overlapping record are pruned at plan
+    time (VcfSource.java:177-201 semantics) and a residual overlap
+    predicate is applied. Unlike the reference (which errors without an
+    index, VcfSource.java:184-187), index-less inputs degrade gracefully
+    to filter-only.
     """
     with_gt = columns is None or "genotypes" in columns
-    df, header = _read_vcf_all(spark, path, split_size, intervals, mode, with_gt)
+    scan = scan_vcf(path, split_size, intervals, mode, with_gt)
+    df = scan.frame(spark)
     if intervals is not None:
         from disq_spark.functions.intervals import overlaps
 
         df = df.filter(overlaps(intervals))
-    return df, header
+    return df, scan.header
 
 
-def _read_vcf_all(
-    spark: SparkSession,
+def scan_vcf(
     path: str,
-    split_size: int,
-    intervals: list | None,
+    split_size: int = DEFAULT_SPLIT_SIZE,
+    intervals: list | None = None,
     mode: str = "STRICT",
     with_genotypes: bool = True,
-) -> tuple[DataFrame, VcfHeader]:
+) -> Scan:
+    """The VCF scan: BGZF files split at block boundaries (``.tbi``
+    pruned), plain files at newline-aligned byte offsets (``.idx``
+    pruned), plain-gzip files as one whole-file range."""
     paths = resolve_paths(path, VCF_EXTENSIONS)
     header = read_header(paths[0])
     samples = header.samples
-
     kinds = {p: _compression(p) for p in paths}
+    triples = [(iv.contig, iv.start, iv.end) for iv in intervals or []]
 
-    if all(k == "plain" for k in kinds.values()):
-        if intervals is not None and all(_dfs.exists(p + ".idx") for p in paths):
-            # tribble-indexed plain VCF: prune byte splits whose indexed
-            # blocks miss every interval (the .idx counterpart of the
-            # .tbi branch below; VcfSource.java:177-201 loads the same
-            # index family through IndexFactory)
-            return _read_plain_pruned(
-                spark, paths, samples, split_size, intervals, mode, with_genotypes
-            ), header
-        text = spark.read.text(list(paths))
-        lines_col = "value"
+    def plan() -> list[tuple[str, int, int]]:
+        out: list[tuple[str, int, int]] = []
+        for p in paths:
+            if kinds[p] == "gzip":
+                out.append((p, 0, _dfs.getsize(p)))
+                continue
+            p_ranges = plan_ranges([p], split_size)
+            idx = p + (".tbi" if kinds[p] == "bgzf" else ".idx")
+            if intervals is not None and _dfs.exists(idx):
+                from disq_spark.formats import tabix, tribble
 
-        def parse_plain(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                yield parse_vcf_lines(pdf[lines_col], samples, mode, with_genotypes)
-
-        return text.mapInPandas(parse_plain, VARIANTS_SCHEMA), header
-
-    # compressed path: plan byte ranges; BGZF files split at block
-    # boundaries, plain-gzip files get one whole-file range. With
-    # intervals + a .tbi, non-overlapping splits are dropped at plan time.
-    import os
-
-    ranges = []
-    for p in paths:
-        if kinds[p] == "bgzf":
-            p_ranges = [(r.path, r.start, r.end) for r in plan_ranges([p], split_size)]
-            tbi = p + ".tbi"
-            if intervals is not None and _dfs.exists(tbi):
-                from disq_spark.formats.tabix import read_tbi, split_overlaps_intervals
-
-                idx = read_tbi(tbi)
-                triples = [(iv.contig, iv.start, iv.end) for iv in intervals]
+                if kinds[p] == "bgzf":
+                    fmt, index = tabix, tabix.read_tbi(idx)
+                else:
+                    fmt, index = tribble, tribble.read_tribble(idx)
                 p_ranges = [
-                    r for r in p_ranges if split_overlaps_intervals(idx, r[1], r[2], triples)
+                    r for r in p_ranges if fmt.split_overlaps_intervals(index, r.start, r.end, triples)
                 ]
-            ranges.extend(p_ranges)
-        else:
-            ranges.append((p, 0, _dfs.getsize(p)))
+            out.extend(p_ranges)
+        return out
 
-    def decode_range(p: str, start: int, end: int) -> Iterator[pd.DataFrame]:
-        lines = _range_lines(p, start, end)
+    def decode(p: str, start: int, end: int) -> Iterator[pd.DataFrame]:
+        lines = read_lines(p, start, end) if kinds[p] == "plain" else _range_lines(p, start, end)
         if lines:
             yield parse_vcf_lines(pd.Series(lines, dtype="object"), samples, mode, with_genotypes)
 
-    return plan_frame(spark, ranges, decode_range, VARIANTS_SCHEMA), header
+    return Scan(VARIANTS_SCHEMA, header, decode, plan)
 
 
 def _range_lines(path: str, start: int, end: int) -> list[str]:
@@ -280,7 +271,7 @@ def build_tbi(
 
     from disq_spark.formats import tabix as tbimod
 
-    ranges = [(r.path, r.start, r.end) for r in plan_ranges([path], split_size)]
+    ranges = plan_ranges([path], split_size)
 
     def scan(p: str, start: int, end: int) -> Iterator[pd.DataFrame]:
         b = tbimod.TbiBuilder()
@@ -321,46 +312,3 @@ def _read_until_newline(path: str, from_pos: int) -> str:
             if b"\n" in chunk:
                 break
     return buf.split(b"\n", 1)[0].decode("utf-8")
-
-
-def _read_plain_pruned(
-    spark: SparkSession,
-    paths: list[str],
-    samples: list[str],
-    split_size: int,
-    intervals: list,
-    mode: str,
-    with_genotypes: bool,
-) -> DataFrame:
-    """Plain-text VCF scan over newline-aligned byte splits, with splits
-    pruned through the tribble .idx (plan-time; the residual overlap
-    predicate in read_vcf keeps exactness)."""
-    from disq_spark.formats.tribble import read_tribble, split_overlaps_intervals
-
-    triples = [(iv.contig, iv.start, iv.end) for iv in intervals]
-    ranges: list[tuple[str, int, int]] = []
-    for p in paths:
-        tidx = read_tribble(p + ".idx")
-        size = _dfs.getsize(p)
-        for s in range(0, max(size, 1), split_size):
-            e = min(s + split_size, size)
-            if split_overlaps_intervals(tidx, s, e, triples):
-                ranges.append((p, s, e))
-
-    def parse_range(p: str, start: int, end: int) -> Iterator[pd.DataFrame]:
-        lines: list[str] = []
-        with _dfs.open_input(p) as f:
-            if start > 0:
-                f.seek(start - 1)
-                f.readline()  # straddling line belongs to prior split
-            while f.tell() < end:
-                raw = f.readline()
-                if not raw:
-                    break
-                text = raw.decode("utf-8").rstrip("\n")
-                if text and not text.startswith("#"):
-                    lines.append(text)
-        if lines:
-            yield parse_vcf_lines(pd.Series(lines, dtype="object"), samples, mode, with_genotypes)
-
-    return plan_frame(spark, ranges, parse_range, VARIANTS_SCHEMA)

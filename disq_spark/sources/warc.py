@@ -25,6 +25,7 @@ tasks with no shuffle before the first transformation.
 
 from __future__ import annotations
 
+import os
 from typing import Iterator
 
 import pandas as pd
@@ -38,7 +39,7 @@ from disq_spark.formats.warc import (
     record_status,
     resync_record_start,
 )
-from disq_spark.sources.plan import resolve_paths
+from disq_spark.sources.plan import Scan, resolve_paths
 
 WARC_SCHEMA = (
     "record_id string, warc_type string, url string, date string, "
@@ -195,18 +196,52 @@ def plan_warc_chunks(path: str, split_size: int) -> list[tuple]:
     return chunks
 
 
+def segment_sizes(path: str) -> dict[str, int]:
+    """{basename: size} of the segments ``path`` resolves to ({} when it
+    resolves to nothing yet) — the streaming reader's offset."""
+    try:
+        paths = resolve_paths(path, _WARC_EXTS)
+    except FileNotFoundError:
+        return {}
+    return {os.path.basename(p): _dfs.getsize(p) for p in paths}
+
+
+def plan_new_segments(
+    path: str, seen: dict[str, int], latest: dict[str, int], split_size: int
+) -> list[tuple[str, int, int]]:
+    """(path, start, end) chunks of the segments in ``latest`` but not in
+    ``seen`` (``segment_sizes`` maps), each cut at its size pinned in
+    ``latest``: one streaming microbatch's plan. A segment that vanished
+    between the two offsets is skipped (its pinned size said ingested)."""
+    new = {n: size for n, size in latest.items() if n not in seen}
+    if not new:
+        return []
+    try:
+        by_name = {os.path.basename(p): p for p in resolve_paths(path, _WARC_EXTS)}
+    except FileNotFoundError:
+        return []
+    return [
+        (by_name[n], s, e)
+        for n, size in sorted(new.items())
+        if n in by_name
+        for s, e in chunk_ranges(size, split_size)
+    ]
+
+
 def read_warc(
     spark: SparkSession, path: str, split_size: int = 64 * 1024 * 1024
 ) -> DataFrame:
-    chunks = plan_warc_chunks(path, split_size)
-    cdf = spark.createDataFrame(
-        chunks, "path string, start long, end long, is_gz boolean"
-    ).repartition(len(chunks))
+    return scan_warc(path, split_size).frame(spark)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield from decode_warc_chunks(
-                zip(pdf["path"], pdf["start"], pdf["end"], pdf["is_gz"])
-            )
 
-    return cdf.mapInPandas(kernel, WARC_SCHEMA)
+def scan_warc(path: str, split_size: int = 64 * 1024 * 1024) -> Scan:
+    """The WARC scan: byte-range chunks in file order, each snapped to
+    its first record in the task (gzip-ness taken from the path)."""
+
+    def plan() -> list[tuple[str, int, int]]:
+        return [(p, s, e) for p, s, e, _gz in plan_warc_chunks(path, split_size)]
+
+    def decode(p: str, start: int, end: int) -> Iterator[pd.DataFrame]:
+        return decode_warc_chunks([(p, start, end, p.endswith(".gz"))])
+
+    return Scan(WARC_SCHEMA, None, decode, plan)

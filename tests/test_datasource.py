@@ -155,7 +155,7 @@ def test_bam_datasource_interval_option(spark, fixtures_dir, tmp_path):
     inside read() (the DS API's stand-in for filter pushdown)."""
     from disq_spark.functions.intervals import Interval
     from disq_spark.sources.bam_source import read_bam
-    from disq_spark.sources.datasource import BamReader
+    from disq_spark.sources.datasource import BamDataSource
 
     from disq_spark.sinks.bam import write_bam
 
@@ -178,16 +178,16 @@ def test_bam_datasource_interval_option(spark, fixtures_dir, tmp_path):
     assert key(got) == key(want) and got.count() > 0
 
     # plan-time pruning engaged (fewer partitions than the full plan)
-    full = BamReader({"path": src, "split_size": "200000"}).partitions()
-    pruned = BamReader(
+    full = BamDataSource({"path": src, "split_size": "200000"}).reader(None).partitions()
+    pruned = BamDataSource(
         {"path": src, "split_size": "200000", "intervals": "1:24800000-24900000"}
-    ).partitions()
+    ).reader(None).partitions()
     assert 0 < len(pruned) < len(full)
 
 
 def test_vcf_datasource_interval_option(spark, fixtures_dir):
     from disq_spark.functions.intervals import Interval
-    from disq_spark.sources.datasource import VcfReader
+    from disq_spark.sources.datasource import VcfDataSource
     from disq_spark.sources.variants import read_vcf
 
     src = os.path.join(fixtures_dir, "HiSeq.10000.vcf.bgz")
@@ -203,10 +203,10 @@ def test_vcf_datasource_interval_option(spark, fixtures_dir):
     key = lambda df: sorted((r.contig, r.start, r.ref) for r in df.collect())
     assert key(got) == key(want) and got.count() == 1072
 
-    full = VcfReader({"path": src, "split_size": str(64 * 1024)}).partitions()
-    pruned = VcfReader(
+    full = VcfDataSource({"path": src, "split_size": str(64 * 1024)}).reader(None).partitions()
+    pruned = VcfDataSource(
         {"path": src, "split_size": str(64 * 1024), "intervals": "chr1:1000000-2000000"}
-    ).partitions()
+    ).reader(None).partitions()
     assert 0 < len(pruned) < len(full)
 
 

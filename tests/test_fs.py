@@ -136,60 +136,6 @@ def test_concat_dispatch(tmp_path, monkeypatch):
     assert calls == [str(dst2)]  # attempted, fell back serially
 
 
-def test_block_locations_dispatch(tmp_path):
-    """Local paths report no hosts; a registered filesystem exposing
-    block_locations gets its hints attached to DataSource partitions
-    (the PathSplitSource.java:89-112 locality analog)."""
-    import shutil
-
-    from disq_spark.sources.datasource import BamReader
-
-    src = os.path.join(REF_FIX, "1.bam")
-    local_dir = tmp_path / "d"
-    local_dir.mkdir()
-    shutil.copy(src, local_dir / "1.bam")
-
-    assert fs.block_locations(str(local_dir / "1.bam")) == []
-
-    class LocatedFS(fs.LocalFileSystem):
-        """Local files under a fake scheme, with host hints."""
-
-        def __init__(self, root):
-            self.root = root
-
-        def _m(self, path):
-            return os.path.join(self.root, fs.split_scheme(path)[1])
-
-        def open_input(self, path):
-            return open(self._m(path), "rb")
-
-        def exists(self, path):
-            return os.path.exists(self._m(path))
-
-        def getsize(self, path):
-            return os.path.getsize(self._m(path))
-
-        def isdir(self, path):
-            return os.path.isdir(self._m(path))
-
-        def listdir(self, path):
-            base = self._m(path)
-            return [path.rstrip("/") + "/" + n for n in sorted(os.listdir(base))]
-
-        def block_locations(self, path, start, length):
-            return ["dn-1.example", "dn-2.example"]
-
-    fs.register("mockloc", LocatedFS(str(local_dir)))
-    try:
-        reader = BamReader({"path": "mockloc://1.bam", "split_size": "200000"})
-        parts = reader.partitions()
-        assert len(parts) > 1
-        for part in parts:
-            assert part.hosts == ("dn-1.example", "dn-2.example")
-    finally:
-        fs._REGISTRY.pop("mockloc", None)
-
-
 def test_resolve_paths_glob_on_memory_fs():
     """Globs must work on non-local schemes through the fs registry
     (fnmatch over the listed parent), with hidden/_ files skipped."""

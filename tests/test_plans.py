@@ -636,31 +636,38 @@ def test_pq_stored_codes_search_never_scans_embeddings(spark):
     assert "SortMergeJoin" not in iplan, iplan[:800]
 
 
-def test_planned_sources_scan_a_range_not_an_existing_rdd(spark, planned_inputs):
+def test_planned_sources_scan_a_range_not_an_existing_rdd(spark, planned_inputs, tmp_path):
     """Split-planned reads build their frame as ``spark.range`` ->
     ``MapInPandas`` (sources/plan.py::plan_frame). A ``Scan ExistingRDD``
     leaf (the marker above) would mean a plan shipped through
     ``sc.parallelize``: a PythonRDD, and a second Python worker per
-    decode task just to pickle one plan row into the JVM."""
+    decode task just to pickle one plan row into the JVM. No reader
+    shuffles: partition i is plan row i, in file order."""
     import os
 
+    from disq_spark.formats.warc import build_warc
     from disq_spark.sources.bam_source import read_bam
     from disq_spark.sources.fasta import read_fasta_windows
     from disq_spark.sources.fastq import read_fastq
     from disq_spark.sources.variants import read_vcf
+    from disq_spark.sources.warc import read_warc
 
     fx = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures")
+    warc = tmp_path / "seg.warc.gz"
+    warc.write_bytes(build_warc([({"WARC-Type": "response"}, b"x" * 500)] * 8))
     frames = {
         "read_bam": read_bam(spark, planned_inputs["bam"], planned_inputs["bam_split"])[0],
         "read_vcf": read_vcf(spark, planned_inputs["vcf"], planned_inputs["vcf_split"])[0],
+        "read_vcf_plain": read_vcf(spark, planned_inputs["plain_vcf"], planned_inputs["vcf_split"])[0],
         "read_fastq": read_fastq(spark, os.path.join(fx, "sample.fastq"), 16 * 1024),
         "read_fasta_windows": read_fasta_windows(spark, os.path.join(fx, "ref.fa"), 10_000),
+        "read_warc": read_warc(spark, str(warc), split_size=128),
     }
     for name, df in frames.items():
         assert df.collect(), name
         plan = plan_of(df)
         assert "MapInPandas" in plan and "Range" in plan, (name, plan[:800])
-        assert "Scan ExistingRDD" not in plan, (name, plan[:800])
+        assert "Scan ExistingRDD" not in plan and "Exchange" not in plan, (name, plan[:800])
         assert df.rdd.getNumPartitions() > 1, name
 
 
