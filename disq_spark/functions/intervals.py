@@ -27,10 +27,28 @@ class Interval:
     end: int  # 1-based inclusive
 
 
+def as_intervals(intervals) -> list[Interval] | None:
+    """``intervals`` as a list of ``Interval``s: each entry an ``Interval``
+    or a (contig, start, end) tuple; None stays None. Any other entry
+    raises ``TypeError`` naming it."""
+    if intervals is None:
+        return None
+    out = []
+    for iv in intervals:
+        if isinstance(iv, tuple) and len(iv) == 3:
+            iv = Interval(*iv)
+        elif not isinstance(iv, Interval):
+            raise TypeError(f"interval {iv!r} is neither an Interval nor a (contig, start, end) tuple")
+        out.append(iv)
+    return out
+
+
 def merge_intervals(intervals: list[Interval]) -> list[Interval]:
     """Sort + merge overlapping/adjacent intervals per contig — the
-    QueryInterval.optimizeIntervals step (BoundedTraversalUtil.java:35-51)."""
-    by_key = sorted(intervals, key=lambda iv: (iv.contig, iv.start, iv.end))
+    QueryInterval.optimizeIntervals step (BoundedTraversalUtil.java:35-51).
+    Entries go through ``as_intervals``, and so do those of ``overlaps``
+    and ``filter_intervals``, which merge first."""
+    by_key = sorted(as_intervals(intervals), key=lambda iv: (iv.contig, iv.start, iv.end))
     out: list[Interval] = []
     for iv in by_key:
         if out and out[-1].contig == iv.contig and iv.start <= out[-1].end + 1:

@@ -29,6 +29,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from disq_spark.headers import SamHeader
+from disq_spark.operators.intervals import _events, _islands, _segments
 from disq_spark.schemas import (
     FLAG_DUPLICATE,
     FLAG_FAIL_QC,
@@ -618,67 +619,39 @@ def coverage_depth(
     contig: str = "contig",
     start: str = "start",
     end: str = "end",
-    chunk_size: int = 1 << 20,
 ) -> DataFrame:
     """Exact per-base depth as run-length segments:
-    (contig, pos, next_pos, depth) — depth holds for [pos, next_pos).
+    (contig, pos, next_pos, depth, prev_depth) — depth holds for
+    [pos, next_pos); prev_depth is the depth of the segment ending at pos
+    (NULL at each contig's first event).
 
     Difference-array + DISTRIBUTED prefix sum. The naive formulation
     (one window per contig) serializes each chromosome onto a single
     reducer — at 100 TB a whole-genome depth pass would run on ~24
-    tasks. Instead, the classic two-level scan:
+    tasks. Instead, the classic two-level scan (operators/intervals.py
+    ``_events`` + ``_segments``):
 
-      1. events: +1 at read start, -1 past read end, pre-summed per
+      1. events: +1 at read start, -1 past read end (one explode, so
+         the reads are decoded once per consumer), pre-summed per
          (contig, pos) — map-side partial agg.
       2. within-chunk prefix sum: window over (contig, chunk) where
-         chunk = pos div chunk_size — parallelism = genome/chunk_size.
+         chunk = pos div 2^20 — parallelism = genome/2^20.
       3. chunk metadata: per-chunk delta totals + first event position
          (tiny: one row per chunk with events) — prefix-summed / lead'd
          per contig, the only per-contig serial step, over
-         ~genome/chunk_size rows, then broadcast-joined back.
+         ~genome/2^20 rows, then broadcast-joined back.
       4. depth = within-chunk sum + exclusive chunk offset; next_pos =
          lead within chunk, falling back to the next chunk's first
-         event at chunk boundaries.
+         event at chunk boundaries; prev_depth = depth - this row's delta.
 
     Output rows = distinct event positions (2x reads worst case), run-
     length encoded — including the depth-0 segments between covered
     regions (next_pos NULL only at each contig's final event).
     """
-    c, s, e = F.col(contig), F.col(start), F.col(end)
-    mapped = df.filter(c.isNotNull() & s.isNotNull() & e.isNotNull())
-    events = (
-        mapped.select(c.alias("contig"), s.alias("pos"), F.lit(1).alias("delta"))
-        .union(mapped.select(c.alias("contig"), (e + 1).alias("pos"), F.lit(-1).alias("delta")))
-        .groupBy("contig", "pos")
-        .agg(F.sum("delta").alias("delta"))
-        .withColumn("chunk", (F.col("pos") / chunk_size).cast("long"))
+    reads = df.select(
+        F.col(contig).alias("contig"), F.col(start).alias("start"), F.col(end).alias("end")
     )
-    win = W.partitionBy("contig", "chunk").orderBy("pos").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    within = events.withColumn("within", F.sum("delta").over(win))
-    meta = events.groupBy("contig", "chunk").agg(
-        F.sum("delta").alias("chunk_total"), F.min("pos").alias("first_pos")
-    )
-    offw = W.partitionBy("contig").orderBy("chunk").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    leadw = W.partitionBy("contig").orderBy("chunk")
-    meta = meta.select(
-        "contig",
-        "chunk",
-        (F.sum("chunk_total").over(offw) - F.col("chunk_total")).alias("offset"),
-        F.lead("first_pos").over(leadw).alias("next_chunk_first"),
-    )
-    nextw = W.partitionBy("contig", "chunk").orderBy("pos")
-    return (
-        within.join(F.broadcast(meta), ["contig", "chunk"])
-        .withColumn("depth", (F.col("within") + F.col("offset")).cast("long"))
-        .withColumn(
-            "next_pos", F.coalesce(F.lead("pos").over(nextw), F.col("next_chunk_first"))
-        )
-        .select("contig", "pos", "next_pos", "depth")
-    )
+    return _segments(_events(reads, "depth"), ["depth"])
 
 
 def callable_loci(
@@ -690,32 +663,19 @@ def callable_loci(
     maximal 'callable' intervals where min_depth <= depth (<= max_depth):
     (contig, start, end, span) — the GATK CallableLoci analog.
 
-    Gap-and-islands with one window pass per contig: a new island starts
-    wherever the previous qualifying segment doesn't touch this one
-    (prev_end != start); island id = running count of starts; one
-    groupBy merges each island. Segments are 2x reads rows at worst, so
-    the window input is event-sized, not base-sized.
+    Gap-and-islands without a window over a contig's segments: a row is
+    an island boundary where the threshold holds on one side of pos
+    (depth vs prev_depth) and not on the other; one ``lead`` over the
+    boundary rows alone (2 per output interval) pairs each start with
+    its stop. With ``min_depth`` 0 the depth-0 gaps between reads
+    qualify too, so each contig is one interval from its first read
+    start to its last read end.
     """
-    q = depth_segments.filter(
-        F.col("next_pos").isNotNull() & (F.col("depth") >= min_depth)
-    )
-    if max_depth is not None:
-        q = q.filter(F.col("depth") <= max_depth)
-    w = W.partitionBy("contig").orderBy("pos")
-    islands = q.withColumn(
-        "new_island",
-        (F.coalesce(F.lag("next_pos").over(w), F.lit(-1)) != F.col("pos")).cast("long"),
-    ).withColumn("island", F.sum("new_island").over(w))
-    return (
-        islands.groupBy("contig", "island")
-        .agg(
-            F.min("pos").alias("start"),
-            (F.max("next_pos") - 1).alias("end"),
-        )
-        .select(
-            "contig", "start", "end", (F.col("end") - F.col("start") + 1).alias("span")
-        )
-    )
+    def keep(d):
+        ok = d("depth") >= min_depth
+        return ok if max_depth is None else ok & (d("depth") <= max_depth)
+
+    return _islands(depth_segments, keep)
 
 
 def downsample_reads(df: DataFrame, fraction: float, seed: str = "") -> DataFrame:

@@ -1,5 +1,6 @@
 """Distributed interval algebra over (contig, start, end) tables —
-bedtools merge / intersect / subtract / complement / jaccard analogs.
+bedtools merge / intersect / subtract / complement / jaccard analogs —
+and the two mechanisms every depth operator shares.
 
 All set operations use GENOME-SPACE (merged) semantics: inputs are
 treated as position sets, exactly what bedtools produces when its
@@ -8,166 +9,204 @@ per-record bookkeeping variants can be layered with ``interval_join``).
 Coordinates are 1-based inclusive, the convention of the reads/variants
 frames (BED's half-open 0-based form is converted by ``sources.bed``).
 
-Scale shape: every operation is one event RLE — the same chunked
-two-level prefix sum as ``operators.genomics.coverage_depth``, so no
-per-contig single reducer on the event pass — followed by a
-gap-and-islands merge over QUALIFYING segments only (2x interval rows
-at worst, BED-sized not genome-sized). Reference parity: the reference
-engine has no interval algebra (it defers to htsjdk's IntervalList in
-tests); these are the downstream layer re-expressed Spark-first.
+Scale shape, shared with ``operators.genomics.coverage_depth`` and
+``callable_loci``:
+
+- ``_events`` turns each input into +1/-1 boundary events through one
+  ``explode``, so an expensive input (a decoded BAM) is one subtree.
+- ``_segments`` is the chunked two-level prefix sum over N counters:
+  a running sum within each (contig, chunk of ``CHUNK`` positions), plus
+  exclusive chunk offsets from a broadcast per-chunk meta table. Each
+  row is a run-length segment [pos, next_pos) carrying every counter's
+  depth and its predecessor depth ``prev_<c>``.
+- ``_islands`` marks rows where a predicate flips between the
+  predecessor segment and this one, then pairs each island start with
+  its stop by a ``lead`` over those boundary rows only (2 rows per
+  output interval). Counting operators sum the flags with no window.
+
+No step runs a window over a whole contig's segments. Reference parity:
+the reference engine has no interval algebra (it defers to htsjdk's
+IntervalList in tests); these are the downstream layer re-expressed
+Spark-first.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+# Positions per prefix-sum chunk: the unit of parallelism of the event
+# scan (a 250 Mb contig runs as ~240 tasks, not one).
+CHUNK = 1 << 20
 
-def _events(df: DataFrame, da: int, db: int) -> DataFrame:
-    return df.select(
-        F.col("contig"),
-        F.col("start").alias("pos"),
-        F.lit(da).alias("da"),
-        F.lit(db).alias("db"),
-    ).union(
-        df.select(
-            F.col("contig"),
-            (F.col("end") + 1).alias("pos"),
-            F.lit(-da).alias("da"),
-            F.lit(-db).alias("db"),
+# A predicate over depths: called with a counter-name -> Column getter.
+Keep = Callable[[Callable[[str], Column]], Column]
+
+
+def _events(df: DataFrame, counter: str) -> DataFrame:
+    """(contig, pos, <counter>): +1 at each interval's start, -1 one past
+    its end, from ONE subtree of ``df`` (an explode, not a union of two
+    selects, so the input is decoded once per consumer). Rows with a
+    null coordinate carry no interval and are dropped."""
+    c, s, e = F.col("contig"), F.col("start"), F.col("end")
+    return (
+        df.filter(c.isNotNull() & s.isNotNull() & e.isNotNull())
+        .select(
+            c,
+            F.explode(
+                F.array(
+                    F.struct(s.alias("pos"), F.lit(1).alias("d")),
+                    F.struct((e + 1).alias("pos"), F.lit(-1).alias("d")),
+                )
+            ).alias("e"),
         )
+        .select(c, F.col("e.pos").alias("pos"), F.col("e.d").alias(counter))
     )
 
 
-def dual_depth_segments(
-    a: DataFrame, b: DataFrame, chunk_size: int = 1 << 20
-) -> DataFrame:
-    """Run-length segments (contig, pos, next_pos, depth_a, depth_b)
-    over the union of both inputs' boundary positions. Chunked
-    two-level prefix sum (within-chunk window + broadcast chunk
-    offsets), two counters in one pass."""
-    events = (
-        _events(a, 1, 0)
-        .union(_events(b, 0, 1))
-        .groupBy("contig", "pos")
-        .agg(F.sum("da").alias("da"), F.sum("db").alias("db"))
-        .withColumn("chunk", (F.col("pos") / chunk_size).cast("long"))
+def _segments(events: DataFrame, counters: list[str]) -> DataFrame:
+    """Run-length segments (contig, pos, next_pos, <c>..., prev_<c>...):
+    each counter's depth over [pos, next_pos), one row per distinct
+    event position. ``events`` carries (contig, pos) and the counters (a
+    null counter counts 0, as ``unionByName(allowMissingColumns=True)``
+    leaves it).
+
+    The chunked two-level prefix sum: events pre-summed per
+    (contig, pos); a running sum within (contig, chunk); per-chunk
+    totals prefix-summed over the tiny meta table and broadcast back as
+    exclusive offsets. next_pos is the next event in the chunk, else the
+    next chunk's first event (NULL after a contig's last event).
+    ``prev_<c>`` = depth - delta is the depth of the segment ending at
+    pos, NULL at a contig's first event (no segment ends there).
+    """
+    ev = (
+        events.groupBy("contig", "pos")
+        .agg(*[F.coalesce(F.sum(c), F.lit(0)).alias(f"d_{c}") for c in counters])
+        .withColumn("chunk", (F.col("pos") / CHUNK).cast("long"))
     )
-    win = W.partitionBy("contig", "chunk").orderBy("pos").rowsBetween(
-        W.unboundedPreceding, W.currentRow
+    inw = W.partitionBy("contig", "chunk").orderBy("pos")
+    runw = inw.rowsBetween(W.unboundedPreceding, W.currentRow)
+    within = ev.select(
+        "contig",
+        "chunk",
+        "pos",
+        F.lead("pos").over(inw).alias("lead_pos"),
+        *[F.col(f"d_{c}") for c in counters],
+        *[F.sum(f"d_{c}").over(runw).alias(f"w_{c}") for c in counters],
     )
-    within = events.withColumn("wa", F.sum("da").over(win)).withColumn(
-        "wb", F.sum("db").over(win)
-    )
-    meta = events.groupBy("contig", "chunk").agg(
-        F.sum("da").alias("ta"),
-        F.sum("db").alias("tb"),
+    meta = ev.groupBy("contig", "chunk").agg(
         F.min("pos").alias("first_pos"),
+        *[F.sum(f"d_{c}").alias(f"t_{c}") for c in counters],
     )
-    offw = W.partitionBy("contig").orderBy("chunk").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    leadw = W.partitionBy("contig").orderBy("chunk")
+    byc = W.partitionBy("contig").orderBy("chunk")
+    offw = byc.rowsBetween(W.unboundedPreceding, W.currentRow)
     meta = meta.select(
         "contig",
         "chunk",
-        (F.sum("ta").over(offw) - F.col("ta")).alias("oa"),
-        (F.sum("tb").over(offw) - F.col("tb")).alias("ob"),
-        F.lead("first_pos").over(leadw).alias("next_chunk_first"),
+        F.first("first_pos").over(offw).alias("contig_first"),
+        F.lead("first_pos").over(byc).alias("next_chunk_first"),
+        *[(F.sum(f"t_{c}").over(offw) - F.col(f"t_{c}")).alias(f"o_{c}") for c in counters],
     )
-    nextw = W.partitionBy("contig", "chunk").orderBy("pos")
-    return (
-        within.join(F.broadcast(meta), ["contig", "chunk"])
-        .withColumn("depth_a", (F.col("wa") + F.col("oa")).cast("long"))
-        .withColumn("depth_b", (F.col("wb") + F.col("ob")).cast("long"))
-        .withColumn(
-            "next_pos",
-            F.coalesce(F.lead("pos").over(nextw), F.col("next_chunk_first")),
-        )
-        .select("contig", "pos", "next_pos", "depth_a", "depth_b")
+    depth = {c: (F.col(f"w_{c}") + F.col(f"o_{c}")).cast("long") for c in counters}
+    has_prev = F.col("pos") != F.col("contig_first")
+    return within.join(F.broadcast(meta), ["contig", "chunk"]).select(
+        "contig",
+        "pos",
+        F.coalesce(F.col("lead_pos"), F.col("next_chunk_first")).alias("next_pos"),
+        *[depth[c].alias(c) for c in counters],
+        *[F.when(has_prev, depth[c] - F.col(f"d_{c}")).alias(f"prev_{c}") for c in counters],
     )
 
 
-def _islands(segments: DataFrame, keep) -> DataFrame:
-    """Merge touching qualifying segments into maximal intervals."""
-    q = segments.filter(F.col("next_pos").isNotNull() & keep)
+def _flags(keep: Keep) -> tuple[Column, Column]:
+    """(is_in, was_in): ``keep`` holds on this row's segment, and on the
+    segment ending at its pos. A contig's last event starts no segment
+    (NULL next_pos) and its first ends none (NULL prev_<c>)."""
+    is_in = F.col("next_pos").isNotNull() & keep(F.col)
+    was_in = F.coalesce(keep(lambda c: F.col(f"prev_{c}")), F.lit(False))
+    return is_in, was_in
+
+
+def _islands(segs: DataFrame, keep: Keep) -> DataFrame:
+    """Maximal (contig, start, end, span) intervals where ``keep`` holds:
+    boundary rows (``keep`` flips at pos) found row by row, then each
+    start paired with the next boundary — its stop — by one ``lead``
+    over the boundary rows alone."""
+    is_in, was_in = _flags(keep)
     w = W.partitionBy("contig").orderBy("pos")
-    isl = q.withColumn(
-        "new_island",
-        (F.coalesce(F.lag("next_pos").over(w), F.lit(-1)) != F.col("pos")).cast(
-            "long"
-        ),
-    ).withColumn("island", F.sum("new_island").over(w))
     return (
-        isl.groupBy("contig", "island")
-        .agg(F.min("pos").alias("start"), (F.max("next_pos") - 1).alias("end"))
+        segs.filter(is_in != was_in)
         .select(
             "contig",
-            "start",
-            "end",
-            (F.col("end") - F.col("start") + 1).alias("span"),
+            F.col("pos").alias("start"),
+            (F.lead("pos").over(w) - 1).alias("end"),
+            is_in.alias("is_start"),
         )
+        .filter("is_start")
+        .select("contig", "start", "end", (F.col("end") - F.col("start") + 1).alias("span"))
     )
+
+
+def _pair(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Segments of two inputs: counters ``a`` and ``b``."""
+    events = _events(a, "a").unionByName(_events(b, "b"), allowMissingColumns=True)
+    return _segments(events, ["a", "b"])
 
 
 def merge_intervals_table(df: DataFrame) -> DataFrame:
     """bedtools merge: maximal intervals covering the input's position
     set (book-ended intervals coalesce, as bedtools' default -d 0)."""
-    empty = df.sparkSession.createDataFrame(
-        [], "contig string, start long, end long"
-    )
-    segs = dual_depth_segments(df, empty)
-    return _islands(segs, F.col("depth_a") > 0)
+    return _islands(_segments(_events(df, "a"), ["a"]), lambda d: d("a") > 0)
 
 
 def intersect_intervals(a: DataFrame, b: DataFrame) -> DataFrame:
     """bedtools intersect (genome-space): positions covered by both."""
-    segs = dual_depth_segments(a, b)
-    return _islands(segs, (F.col("depth_a") > 0) & (F.col("depth_b") > 0))
+    return _islands(_pair(a, b), lambda d: (d("a") > 0) & (d("b") > 0))
 
 
 def subtract_intervals(a: DataFrame, b: DataFrame) -> DataFrame:
     """bedtools subtract (genome-space): positions of A not in B."""
-    segs = dual_depth_segments(a, b)
-    return _islands(segs, (F.col("depth_a") > 0) & (F.col("depth_b") == 0))
+    return _islands(_pair(a, b), lambda d: (d("a") > 0) & (d("b") == 0))
+
+
+def _ref_table(spark, refs: list[tuple[str, int]]) -> DataFrame:
+    return spark.createDataFrame(
+        [(n, 1, int(ln)) for n, ln in refs], "contig string, start long, end long"
+    )
 
 
 def complement_intervals(
     df: DataFrame, refs: list[tuple[str, int]]
 ) -> DataFrame:
     """bedtools complement: genome minus the input's position set."""
-    ref_df = df.sparkSession.createDataFrame(
-        [(n, 1, int(ln)) for n, ln in refs], "contig string, start long, end long"
-    )
-    return subtract_intervals(ref_df, df)
+    return subtract_intervals(_ref_table(df.sparkSession, refs), df)
 
 
 def jaccard_intervals(a: DataFrame, b: DataFrame) -> DataFrame:
     """bedtools jaccard: one row (intersection_bp, union_bp, jaccard,
-    n_intersections) over the two position sets."""
-    segs = dual_depth_segments(a, b).filter(F.col("next_pos").isNotNull())
+    n_intersections) over the two position sets — span sums and island
+    starts counted in one aggregate over the segments."""
+    is_both, was_both = _flags(lambda d: (d("a") > 0) & (d("b") > 0))
+    valid = F.col("next_pos").isNotNull()
     span = F.col("next_pos") - F.col("pos")
-    both = (F.col("depth_a") > 0) & (F.col("depth_b") > 0)
-    either = (F.col("depth_a") > 0) | (F.col("depth_b") > 0)
-    inter = _islands(segs, both)
-    n_inter = inter.agg(F.count("*").alias("n")).select("n")
-    sums = segs.agg(
-        F.sum(F.when(both, span).otherwise(0)).alias("intersection_bp"),
-        F.sum(F.when(either, span).otherwise(0)).alias("union_bp"),
-    )
+    either = (F.col("a") > 0) | (F.col("b") > 0)
     return (
-        sums.crossJoin(F.broadcast(n_inter))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("intersection_bp")
-                / F.nullif(F.col("union_bp"), F.lit(0)),
-                6,
-            ),
+        _pair(a, b)
+        .agg(
+            F.sum(F.when(valid, F.when(is_both, span).otherwise(0))).alias("intersection_bp"),
+            F.sum(F.when(valid, F.when(either, span).otherwise(0))).alias("union_bp"),
+            F.count(F.when(is_both & ~was_both, 1)).alias("n_intersections"),
         )
         .select(
-            "intersection_bp", "union_bp", "jaccard", F.col("n").alias("n_intersections")
+            "intersection_bp",
+            "union_bp",
+            F.round(
+                F.col("intersection_bp") / F.nullif(F.col("union_bp"), F.lit(0)), 6
+            ).alias("jaccard"),
+            "n_intersections",
         )
     )
 
@@ -176,7 +215,6 @@ def interval_algebra_summary(
     a: DataFrame,
     b: DataFrame,
     refs: list[tuple[str, int]],
-    chunk_size: int = 1 << 20,
 ) -> DataFrame:
     """The five-op algebra summary — (op, n_intervals, total_bp) rows for
     merge(a) / intersect(a,b) / subtract(a,b) / complement(a,refs) plus
@@ -186,152 +224,48 @@ def interval_algebra_summary(
 
     Why it is equivalent: every op is an island count / span sum over
     the SAME run-length segment table, just under a different depth
-    predicate — merge: depth_a>0; intersect: a>0 AND b>0; subtract:
-    a>0 AND b=0; complement: depth_ref>0 AND a=0; jaccard: span sums
-    under both/either. Adding the other inputs' boundary positions only
-    SPLITS runs into adjacent segments, which the gap-and-islands merge
-    re-joins, so one tri-depth segment table (a, b, reference) serves
-    all five predicates. Island starts are counted with an unfiltered
-    lag: segments tile each contig contiguously (next_pos = the next
-    event position), so "new island" is exactly "this segment qualifies
-    and its immediate predecessor does not" — the same breaks
-    ``_islands``'s filtered lag produces. The expensive input (``a`` is
-    a decoded BAM in the gate) enters through a single explode-based
-    event subtree, so the decode appears once per physical consumer of
-    the event table — the segment pass and the broadcast chunk-offset
-    (``meta``) side, 2 subtrees total where the 6-branch union carried
-    24 (plans/r12) — without a cache (the naive fix — persisting the
-    decoded table — measured NEGATIVE in r11 §4.6: AQE serializes
-    cached query stages the union overlapped).
+    predicate — merge: a>0; intersect: a>0 AND b>0; subtract: a>0 AND
+    b=0; complement: ref>0 AND a=0; jaccard: span sums under
+    both/either. Adding the other inputs' boundary positions only
+    SPLITS runs into adjacent segments, so one tri-depth segment table
+    (a, b, reference) serves all five predicates. Each op's islands are
+    counted by its boundary flag — the row qualifies and the segment
+    ending at its pos (``prev_<c>``) does not — so the pass has no
+    window over a whole contig. The expensive input (``a`` is a decoded
+    BAM in the gate) enters through a single explode-based event
+    subtree, so the decode appears once per physical consumer of the
+    event table — the segment pass and the broadcast chunk-offset meta,
+    2 subtrees total where the 6-branch union carried 24 (plans/r12) —
+    without a cache (persisting the decoded table measured NEGATIVE in
+    r11 §4.6: AQE serializes cached query stages the union overlapped).
 
     Differs from composing the individual operators only on EMPTY
     inputs: the jaccard sums return 0 (not null) whenever any boundary
     exists, and null only when all inputs are empty.
     """
-    spark = a.sparkSession
-    zero = F.lit(0)
-    # single-subtree events for the expensive input: explode, not union
-    a_ev = a.select(
-        "contig",
-        F.explode(
-            F.array(
-                F.struct(F.col("start").alias("pos"), F.lit(1).alias("d")),
-                F.struct((F.col("end") + 1).alias("pos"), F.lit(-1).alias("d")),
-            )
-        ).alias("e"),
-    ).select(
-        "contig",
-        F.col("e.pos").alias("pos"),
-        F.col("e.d").alias("da"),
-        zero.alias("db"),
-        zero.alias("dr"),
-    )
-    ref_df = spark.createDataFrame(
-        [(n, 1, int(ln)) for n, ln in refs], "contig string, start long, end long"
-    )
-
-    def _ev(df: DataFrame, col: str) -> DataFrame:
-        lo = df.select(
-            "contig", F.col("start").alias("pos"), F.lit(1).alias(col)
-        ).union(
-            df.select("contig", (F.col("end") + 1).alias("pos"), F.lit(-1).alias(col))
-        )
-        others = [c for c in ("da", "db", "dr") if c != col]
-        return lo.select(
-            "contig", "pos", *[zero.alias(c) for c in others], F.col(col)
-        ).select("contig", "pos", "da", "db", "dr")
-
     events = (
-        a_ev.unionByName(_ev(b, "db"))
-        .unionByName(_ev(ref_df, "dr"))
-        .groupBy("contig", "pos")
-        .agg(F.sum("da").alias("da"), F.sum("db").alias("db"), F.sum("dr").alias("dr"))
-        .withColumn("chunk", (F.col("pos") / chunk_size).cast("long"))
+        _events(a, "a")
+        .unionByName(_events(b, "b"), allowMissingColumns=True)
+        .unionByName(_events(_ref_table(a.sparkSession, refs), "r"), allowMissingColumns=True)
     )
-    # chunked two-level prefix sum, as dual_depth_segments, 3 counters
-    win = W.partitionBy("contig", "chunk").orderBy("pos").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    within = (
-        events.withColumn("wa", F.sum("da").over(win))
-        .withColumn("wb", F.sum("db").over(win))
-        .withColumn("wr", F.sum("dr").over(win))
-    )
-    meta = events.groupBy("contig", "chunk").agg(
-        F.sum("da").alias("ta"),
-        F.sum("db").alias("tb"),
-        F.sum("dr").alias("tr"),
-        F.min("pos").alias("first_pos"),
-    )
-    offw = W.partitionBy("contig").orderBy("chunk").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    leadw = W.partitionBy("contig").orderBy("chunk")
-    meta = meta.select(
-        "contig",
-        "chunk",
-        (F.sum("ta").over(offw) - F.col("ta")).alias("oa"),
-        (F.sum("tb").over(offw) - F.col("tb")).alias("ob"),
-        (F.sum("tr").over(offw) - F.col("tr")).alias("or_"),
-        F.lead("first_pos").over(leadw).alias("next_chunk_first"),
-    )
-    nextw = W.partitionBy("contig", "chunk").orderBy("pos")
-    segs = (
-        within.join(F.broadcast(meta), ["contig", "chunk"])
-        .withColumn("depth_a", (F.col("wa") + F.col("oa")).cast("long"))
-        .withColumn("depth_b", (F.col("wb") + F.col("ob")).cast("long"))
-        .withColumn("depth_r", (F.col("wr") + F.col("or_")).cast("long"))
-        .withColumn(
-            "next_pos",
-            F.coalesce(F.lead("pos").over(nextw), F.col("next_chunk_first")),
-        )
-        .select("contig", "pos", "next_pos", "depth_a", "depth_b", "depth_r")
-    )
+    segs = _segments(events, ["a", "b", "r"])
+    preds = {
+        "merge": lambda d: d("a") > 0,
+        "intersect": lambda d: (d("a") > 0) & (d("b") > 0),
+        "subtract": lambda d: (d("a") > 0) & (d("b") == 0),
+        "complement": lambda d: (d("r") > 0) & (d("a") == 0),
+    }
     valid = F.col("next_pos").isNotNull()
     span = F.col("next_pos") - F.col("pos")
-    in_a, in_b, in_r = (
-        F.col("depth_a") > 0,
-        F.col("depth_b") > 0,
-        F.col("depth_r") > 0,
-    )
-    preds = {
-        "merge": valid & in_a,
-        "intersect": valid & in_a & in_b,
-        "subtract": valid & in_a & ~in_b,
-        "complement": valid & in_r & ~in_a,
-    }
-    flagged = segs.select(
-        "contig",
-        "pos",
-        span.alias("span"),
-        valid.alias("valid"),
-        (in_a & in_b).alias("both"),
-        (in_a | in_b).alias("either"),
-        *[p.alias(f"q_{k}") for k, p in preds.items()],
-    )
-    lagw = W.partitionBy("contig").orderBy("pos")
-    for k in preds:
-        flagged = flagged.withColumn(
-            f"new_{k}",
-            F.col(f"q_{k}")
-            & ~F.coalesce(F.lag(f"q_{k}").over(lagw), F.lit(False)),
-        )
+    in_a, in_b = F.col("a") > 0, F.col("b") > 0
     aggs = []
-    for k in preds:
-        aggs.append(F.count(F.when(F.col(f"new_{k}"), 1)).alias(f"n_{k}"))
-        aggs.append(F.sum(F.when(F.col(f"q_{k}"), F.col("span"))).alias(f"bp_{k}"))
-    aggs.append(
-        F.sum(
-            F.when(F.col("valid"), F.when(F.col("both"), F.col("span")).otherwise(0))
-        ).alias("j_inter")
-    )
-    aggs.append(
-        F.sum(
-            F.when(F.col("valid"), F.when(F.col("either"), F.col("span")).otherwise(0))
-        ).alias("j_union")
-    )
-    one = flagged.agg(*aggs)
-    return one.select(
+    for k, keep in preds.items():
+        is_in, was_in = _flags(keep)
+        aggs.append(F.count(F.when(is_in & ~was_in, 1)).alias(f"n_{k}"))
+        aggs.append(F.sum(F.when(is_in, span)).alias(f"bp_{k}"))
+    aggs.append(F.sum(F.when(valid, F.when(in_a & in_b, span).otherwise(0))).alias("j_inter"))
+    aggs.append(F.sum(F.when(valid, F.when(in_a | in_b, span).otherwise(0))).alias("j_union"))
+    return segs.agg(*aggs).select(
         F.expr(
             "stack(5, "
             "'merge', n_merge, bp_merge, "

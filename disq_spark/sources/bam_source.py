@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from disq_spark.formats import bam as bamcodec
 from disq_spark.formats import bgzf
 from disq_spark.formats import sbi as sbimod
+from disq_spark.functions.intervals import as_intervals, filter_intervals
 from disq_spark.headers import SamHeader
 from disq_spark.schemas import READS_COLUMNS, READS_SCHEMA, READS_SCHEMA_RAW_TAGS
 from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, Scan, plan_frame, resolve_paths
@@ -660,7 +661,8 @@ def read_bam(
     writes too). Default ``"parsed"`` keeps the map<tag, "TYPE:value">
     schema.
 
-    ``intervals``/``traverse_unplaced_unmapped`` mirror the reference's
+    ``intervals`` (``Interval``s or (contig, start, end) tuples) and
+    ``traverse_unplaced_unmapped`` mirror the reference's
     HtsjdkReadsTraversalParameters surface: a residual Column predicate
     (always correct) plus .bai-driven partition pruning when the index
     exists (AbstractBinarySamSource.java:111-158 — but unlike the
@@ -679,8 +681,6 @@ def read_bam(
     )
     df, header = scan.frame(spark), scan.header
     if intervals is not None or traverse_unplaced_unmapped:
-        from disq_spark.functions.intervals import filter_intervals
-
         df = filter_intervals(df, intervals, traverse_unplaced_unmapped)
     return df, header
 
@@ -731,6 +731,7 @@ def scan_bam(
     and a column-pruned decode of each virtual-offset chunk."""
     paths = resolve_paths(path, BAM_EXTENSIONS)
     header, refs, first_voff = read_bam_header(paths[0])
+    intervals = as_intervals(intervals)
 
     def plan() -> list[tuple[str, int, int]]:
         out: list[tuple[str, int, int]] = []

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from disq_spark.formats.cram import plan_cram_containers, read_crai
 from disq_spark.formats.cram_decode import decode_cram_range, read_cram_header
+from disq_spark.functions.intervals import as_intervals, filter_intervals
 from disq_spark.headers import SamHeader
 from disq_spark.schemas import READS_COLUMNS, READS_SCHEMA
 from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, Scan, resolve_paths
@@ -102,8 +103,6 @@ def read_cram(
     )
     df = scan.frame(spark)
     if intervals is not None or traverse_unplaced_unmapped:
-        from disq_spark.functions.intervals import filter_intervals
-
         df = filter_intervals(df, intervals, traverse_unplaced_unmapped)
     return df, scan.header
 
@@ -120,6 +119,7 @@ def scan_cram(
     decoded against ``reference_path``."""
     paths = resolve_paths(path, CRAM_EXTENSIONS)
     text, refs = read_cram_header(paths[0])
+    intervals = as_intervals(intervals)
     header = SamHeader(text=text if text.endswith("\n") else text + "\n")
 
     def plan() -> list[tuple[str, int, int]]:

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from disq_spark.formats import bgzf
 from disq_spark.formats.vcf import parse_vcf_lines
+from disq_spark.functions.intervals import as_intervals, overlaps
 from disq_spark.headers import VcfHeader
 from disq_spark.schemas import VARIANTS_SCHEMA
 from disq_spark.sources.plan import (
@@ -87,7 +88,8 @@ def read_vcf(
     ``columns``: omitting "genotypes" prunes the sample-column parse
     entirely (most of a cohort line); the column remains as NULL.
 
-    ``intervals``: list of ``disq_spark.functions.intervals.Interval``.
+    ``intervals``: list of ``disq_spark.functions.intervals.Interval`` or
+    (contig, start, end) tuples.
     When given, splits of .tbi-indexed BGZF files (or .idx-indexed plain
     files) that cannot contain an overlapping record are pruned at plan
     time (VcfSource.java:177-201 semantics) and a residual overlap
@@ -99,8 +101,6 @@ def read_vcf(
     scan = scan_vcf(path, split_size, intervals, mode, with_gt)
     df = scan.frame(spark)
     if intervals is not None:
-        from disq_spark.functions.intervals import overlaps
-
         df = df.filter(overlaps(intervals))
     return df, scan.header
 
@@ -119,6 +119,7 @@ def scan_vcf(
     header = read_header(paths[0])
     samples = header.samples
     kinds = {p: _compression(p) for p in paths}
+    intervals = as_intervals(intervals)
     triples = [(iv.contig, iv.start, iv.end) for iv in intervals or []]
 
     def plan() -> list[tuple[str, int, int]]:

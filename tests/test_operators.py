@@ -3,6 +3,7 @@ pair grouping, as-of join, multimodal plumbing, dedup/similarity units."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from disq_spark.operators.asof import asof_join
@@ -12,6 +13,7 @@ from disq_spark.operators.genomics import (
     mark_duplicates,
     pair_reads,
 )
+from disq_spark.operators.intervals import CHUNK
 from disq_spark.operators.multimodal import attach_payload, decode_image, frame_sample
 from disq_spark.queries.tables import load
 from disq_spark.sources.bam_source import read_bam
@@ -532,40 +534,99 @@ def test_duplicate_components_transitive(spark):
     assert kept == sorted(set(range(25)) - {2, 3, 4, 11, 21, 22, 6})
 
 
-def test_coverage_depth_matches_bruteforce(spark, fixtures_dir):
-    """Run-length depth segments == per-base counting done in Python.
-    chunk_size tiny (4 kb) so chunk-boundary stitching is exercised."""
-    import os
-    from collections import Counter
+def _synthetic_reads():
+    """(contig, start, end) reads over several 2^20-position prefix-sum
+    chunks of s1: reads straddling chunk edges, book-ended reads (end + 1
+    == next start) at depth 4 and 1, a one-position pile-up, a depth-4
+    island over chunks 2-5, then chunk 6 at depth 1 only and chunk 7
+    empty before the next island in chunk 8; s2 holds a single read."""
+    import random
 
+    rng = random.Random(6)
+    c = CHUNK
+    rows = [("s1", 100, 199)] * 4 + [("s1", 200, 299)] * 4
+    rows += [("s1", 400, 499), ("s1", 500, 599)]
+    rows += [("s1", 10_000, 10_000)] * 5
+    rows += [("s1", c - 50, c + 50), ("s1", 2 * c - 5, 2 * c + 5)] * 4
+    rows += [("s1", 2 * c + 900_000, 5 * c + 100)] * 4
+    rows += [("s1", 6 * c + 10, 6 * c + 5_000)] + [("s1", 8 * c + 1, 8 * c + 300)] * 4
+    for _ in range(40):
+        st = rng.randrange(1, 5 * c)
+        rows.append(("s1", st, st + rng.randrange(0, 30_000)))
+    rows.append(("s2", c - 10, c + 10))
+    return rows
+
+
+def _depth_input(spark, source, fixtures_dir):
+    """The reads frame of a depth differential, and its mapped
+    (contig, start, end) rows."""
+    if source == "bam":
+        df, _ = read_bam(spark, os.path.join(fixtures_dir, "1.bam"))
+    else:
+        df = spark.createDataFrame(_synthetic_reads(), "contig string, start long, end long")
+    rows = df.filter(F.col("contig").isNotNull()).select("contig", "start", "end").collect()
+    return df, [tuple(r) for r in rows]
+
+
+def _bruteforce_runs(reads):
+    """{contig: [(lo, hi, depth)]}: the runs between consecutive distinct
+    read boundaries (starts and ends + 1), each depth counted directly as
+    the reads covering lo; plus a direct depth(contig, pos) counter."""
+    import numpy as np
+
+    by_contig = {}
+    for c, s, e in reads:
+        by_contig.setdefault(c, ([], []))
+        by_contig[c][0].append(s)
+        by_contig[c][1].append(e)
+    arrays = {c: (np.array(s), np.array(e)) for c, (s, e) in by_contig.items()}
+
+    def depth(c, p):
+        s, e = arrays[c]
+        return int(((s <= p) & (e >= p)).sum())
+
+    runs = {}
+    for c, (s, e) in arrays.items():
+        bounds = np.unique(np.concatenate([s, e + 1])).tolist()
+        runs[c] = [(lo, nxt - 1, depth(c, lo)) for lo, nxt in zip(bounds, bounds[1:])]
+    return runs, depth
+
+
+@pytest.mark.parametrize("source", ["bam", "synthetic"])
+def test_coverage_depth_matches_bruteforce(spark, fixtures_dir, source):
+    """Run-length depth segments == the reads covering each position,
+    counted directly in Python. The synthetic reads span several prefix
+    -sum chunks, so chunk-boundary stitching is exercised."""
     from disq_spark.operators.genomics import coverage_depth
-    from disq_spark.sources.bam_source import read_bam
 
-    df, _ = read_bam(spark, os.path.join(fixtures_dir, "1.bam"))
-    reads = df.filter(F.col("contig").isNotNull()).select("contig", "start", "end").collect()
-    depth = Counter()
-    for r in reads:
-        for p in range(r["start"], r["end"] + 1):
-            depth[(r["contig"], p)] += 1
-
-    segs = coverage_depth(df, chunk_size=4096).collect()
+    df, reads = _depth_input(spark, source, fixtures_dir)
+    runs, depth = _bruteforce_runs(reads)
+    segs = coverage_depth(df).collect()
     # every segment [pos, next_pos) must have constant brute-force depth
     checked = 0
     for s in segs:
         hi = s["next_pos"] if s["next_pos"] is not None else s["pos"] + 1
         for p in (s["pos"], hi - 1):
-            assert depth.get((s["contig"], p), 0) == s["depth"], (s, p)
+            assert depth(s["contig"], p) == s["depth"], (s, p)
             checked += 1
     assert checked > 100
+    # one segment per distinct read boundary
+    assert sorted((s["contig"], s["pos"]) for s in segs) == sorted(
+        [(c, lo) for c, rr in runs.items() for lo, _hi, _d in rr]
+        + [(c, rr[-1][1] + 1) for c, rr in runs.items()]
+    )
     # segments tile the covered genome: per-contig, next_pos chains are
-    # contiguous and only the final segment is open-ended
+    # contiguous and only the final segment is open-ended; prev_depth is
+    # the depth of the segment ending at pos, NULL before the first
     by_contig = {}
     for s in segs:
         by_contig.setdefault(s["contig"], []).append(s)
     for contig, ss in by_contig.items():
         ss.sort(key=lambda s: s["pos"])
+        assert ss[0]["prev_depth"] is None
         for a, b in zip(ss, ss[1:]):
             assert a["next_pos"] == b["pos"], (a, b)
+            assert b["prev_depth"] == a["depth"] == depth(contig, b["pos"] - 1), (a, b)
         assert ss[-1]["next_pos"] is None
         assert ss[-1]["depth"] == 0  # all reads closed
 
@@ -935,43 +996,39 @@ def test_simhash64_buckets_bounded_on_skewed_corpus(spark):
     assert n < 1500, n  # and boilerplate alone doesn't explode
 
 
-def test_callable_loci_matches_bruteforce(spark, fixtures_dir):
-    """Merged callable intervals == per-base threshold scan done in
-    Python over the exact depth map."""
-    import os
-    from collections import Counter
-
+@pytest.mark.parametrize("source", ["bam", "synthetic"])
+def test_callable_loci_matches_bruteforce(spark, fixtures_dir, source):
+    """Merged callable intervals == maximal runs of directly counted
+    depth within the thresholds. ``min_depth=0`` keeps the depth-0 gaps
+    between reads: one interval per contig, first read start to last
+    read end."""
     from disq_spark.operators.genomics import callable_loci, coverage_depth
-    from disq_spark.sources.bam_source import read_bam
 
-    df, _ = read_bam(spark, os.path.join(fixtures_dir, "1.bam"))
+    df, reads = _depth_input(spark, source, fixtures_dir)
+    runs, _depth = _bruteforce_runs(reads)
     segs = coverage_depth(df)
-    got = sorted(
-        (r["contig"], r["start"], r["end"], r["span"])
-        for r in callable_loci(segs, min_depth=4).collect()
-    )
-    depth = Counter()
-    for r in df.filter(F.col("contig").isNotNull()).select("contig", "start", "end").collect():
-        for p in range(r["start"], r["end"] + 1):
-            depth[(r["contig"], p)] += 1
-    # brute force: maximal runs of depth >= 4
-    want = []
-    by_contig = {}
-    for (c, p), d in depth.items():
-        if d >= 4:
-            by_contig.setdefault(c, []).append(p)
-    for c, ps in by_contig.items():
-        ps.sort()
-        run_start = ps[0]
-        prev = ps[0]
-        for p in ps[1:]:
-            if p != prev + 1:
-                want.append((c, run_start, prev, prev - run_start + 1))
-                run_start = p
-            prev = p
-        want.append((c, run_start, prev, prev - run_start + 1))
-    assert got == sorted(want)
-    assert len(got) > 0
+    for lo, hi in ((0, None), (1, None), (4, None), (2, 5)):
+        got = sorted(
+            (r["contig"], r["start"], r["end"], r["span"])
+            for r in callable_loci(segs, min_depth=lo, max_depth=hi).collect()
+        )
+        want = []
+        for c, rr in runs.items():
+            start = None
+            for r_lo, r_hi, d in rr + [(None, None, -1)]:
+                if d >= lo and (hi is None or d <= hi):
+                    start, end = r_lo if start is None else start, r_hi
+                elif start is not None:
+                    want.append((c, start, end, end - start + 1))
+                    start = None
+        assert got == sorted(want), (lo, hi)
+        assert len(got) > 0
+        if lo == 0:
+            assert len(got) == len(runs)
+        if source == "synthetic" and lo == 4:
+            # an island over >= 3 chunks, book-ended reads merged, pile-up kept
+            assert any(e // CHUNK - s // CHUNK >= 2 for _c, s, e, _n in got)
+            assert ("s1", 100, 299, 200) in got and ("s1", 10_000, 10_000, 1) in got
 
 
 def test_downsample_reads_is_template_atomic(spark, fixtures_dir):

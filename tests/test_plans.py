@@ -688,3 +688,51 @@ def test_plan_ships_as_numpy_columns():
 
     size = len(CloudPickleSerializer().dumps(_plan_runner(plan, decode)))
     assert size <= 24 * n + sum(len(p) for p in paths) + 64 * 1024, size
+
+
+def test_depth_and_interval_operators_decode_their_input_twice(spark):
+    """Coverage depth, callable loci and the interval algebra turn an
+    input into events through one explode (operators/intervals.py
+    ``_events``), so a decoded input feeds only the chunked prefix sum's
+    two consumers, the within-chunk pass and the chunk meta: at most 2x
+    its rows decoded, counted by an accumulator in a mapInPandas source
+    (a union of start and end events decodes 4x). No window runs over a
+    whole contig's segments; the islands' one contig-wide window pairs
+    boundary rows, and counting operators have none."""
+    import random
+
+    from disq_spark.operators import intervals as IV
+    from disq_spark.operators.genomics import callable_loci, coverage_depth
+
+    rng = random.Random(6)
+    rows = []
+    for _ in range(2000):
+        s = rng.randrange(1, 4 << 20)
+        rows.append((rng.choice(["c1", "c2"]), s, s + rng.randrange(0, 5000)))
+    schema = "contig string, start long, end long"
+    other = spark.createDataFrame(rows[::3], schema)
+    refs = [("c1", 5 << 20), ("c2", 5 << 20)]
+    ops = {  # name -> (operator, max contig-only windows ordered by pos)
+        "coverage_depth": (coverage_depth, 0),
+        "callable_loci": (lambda d: callable_loci(coverage_depth(d), min_depth=2), 1),
+        "merge": (IV.merge_intervals_table, 1),
+        "intersect": (lambda d: IV.intersect_intervals(d, other), 1),
+        "subtract": (lambda d: IV.subtract_intervals(d, other), 1),
+        "complement": (lambda d: IV.complement_intervals(d, refs), 1),
+        "jaccard": (lambda d: IV.jaccard_intervals(d, other), 0),
+        "summary": (lambda d: IV.interval_algebra_summary(d, other, refs), 0),
+    }
+    contig_window = re.compile(r"Window \[.*\], \[contig#\d+\], \[pos#\d+ ASC")
+    for name, (op, max_windows) in ops.items():
+        decoded = spark.sparkContext.accumulator(0)
+
+        def count(batches, decoded=decoded):
+            for pdf in batches:
+                decoded.add(len(pdf))
+                yield pdf
+
+        out = op(spark.createDataFrame(rows, schema).mapInPandas(count, schema))
+        plan = simple_plan_of(out)
+        assert len(contig_window.findall(plan)) <= max_windows, (name, plan)
+        assert out.collect(), name
+        assert 0 < decoded.value <= 2 * len(rows), (name, decoded.value)

@@ -196,6 +196,25 @@ def test_vcf_query_pruning_every_tbi_split_is_empty(spark, inputs):
     assert df.collect() == []
 
 
+def test_tuple_intervals_read_like_interval_objects(spark, planned_inputs):
+    """``intervals`` accepts (contig, start, end) tuples: same rows as
+    ``Interval``s through the .bai- and .tbi-pruned scans; any other entry
+    is a TypeError naming it."""
+    from disq_spark.sources.bam_source import read_bam
+    from disq_spark.sources.variants import read_vcf
+
+    for read, key, split, contig in (
+        (read_bam, "bam", "bam_split", "c1"),
+        (read_vcf, "vcf", "vcf_split", "v1"),
+    ):
+        path, split = planned_inputs[key], planned_inputs[split]
+        objs = read(spark, path, split, intervals=[Interval(contig, 10001, 20000)])[0]
+        tups = read(spark, path, split, intervals=[(contig, 10001, 20000)])[0]
+        assert _rows(tups) == _rows(objs) and objs.count() > 0, key
+        with pytest.raises(TypeError, match="'c1', 10001"):
+            read(spark, path, split, intervals=[("c1", 10001)])
+
+
 def test_empty_fastq_is_empty(spark, inputs):
     assert spark.read.format("fastq").load(inputs["empty_fastq"]).collect() == []
 
