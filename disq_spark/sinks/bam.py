@@ -1,14 +1,19 @@
-"""BAM sinks: single-file with distributed .sbi build-and-merge, and sharded.
+"""BAM sinks: single-file with distributed .sbi/.bai build-and-merge, and
+sharded, on the shared write path (sinks/merge.py).
 
-Re-expresses BamSink.java:60-139 + HeaderlessBamOutputFormat.java:57-194:
-- executors write headerless, terminatorless BGZF parts; each task also
-  streams a hidden per-part ``.sbi`` fragment recording every record's
-  virtual offset (HeaderlessBamOutputFormat.java:111-130).
-- driver writes the BGZF-compressed BAM header (magic + text + ref dict),
-  concatenates header + parts in order, appends the 28-byte BGZF EOF
-  terminator once, then merges the part indexes with virtual-offset
-  shifting (SbiMerger.java:39-64): each part's offsets shift by the
-  cumulative compressed byte length of everything before it.
+Re-expresses BamSink.java:60-139 + HeaderlessBamOutputFormat.java:57-194.
+What is BAM's own:
+- the part encoder: headerless, terminatorless BGZF records plus hidden
+  per-part ``.sbi`` (every ``granularity``-th record's virtual offset,
+  HeaderlessBamOutputFormat.java:111-130) and ``.bai`` fragments and the
+  reads ``.order`` sidecar (``PartOrder``, shared with CRAM);
+- the BGZF-compressed header (magic + text + ref dict) and the 28-byte
+  BGZF EOF terminator;
+- the reads cross-part order rule (``_check_cross_part_order``, also
+  used by CRAM and ``build_bai``);
+- the index merges with virtual-offset shifting (SbiMerger.java:39-64):
+  each part's offsets shift by the cumulative compressed byte length of
+  everything before it.
 
 Scale note: concat is the only sequential step (O(bytes) locally,
 O(#parts) with HDFS concat); index merge is O(#records/granularity)
@@ -49,19 +54,99 @@ def write_bam(
 ) -> None:
     if single_file is None:
         single_file = path.endswith(".bam")
+    if single_file:
+        body, commit = single_file_sink(
+            header, path, write_sbi=write_sbi, write_bai=write_bai, sbi_granularity=sbi_granularity
+        )
+        merge.write_single(df, path, body, commit)
+    else:
+        refs = header.sequences
+        merge.write_sharded(df, path, _body(refs, sbi_granularity, False), _layout(header, refs))
+
+
+def single_file_sink(
+    header: SamHeader,
+    path: str,
+    *,
+    write_sbi: bool = True,
+    write_bai: bool | None = None,
+    sbi_granularity: int = DEFAULT_GRANULARITY,
+):
+    """``(body, commit)`` of a single-file BAM at ``path``, shared by
+    ``write_bam`` and ``df.write.format("bam")``; the commit runs
+    ``finalize_single``."""
     if write_bai is None:
         # .bai is only meaningful for coordinate-sorted output
         # (BamSink.java:78-80)
         write_bai = header.sort_order == "coordinate"
     refs = header.sequences
-    if single_file:
-        # the pre-existing target is deleted inside finalize_single, AFTER
-        # cross-part order validation passes — a rejected overwrite leaves
-        # yesterday's file and indexes untouched
-        _write_single(df, header, refs, path, write_sbi, write_bai, sbi_granularity)
-    else:
-        merge.prepare_overwrite(path, (".sbi", ".bai"))
-        _write_sharded(df, header, refs, path)
+
+    def commit(parts_dir: str, parts: list[str]) -> None:
+        finalize_single(path, parts_dir, header, refs, parts, write_sbi, write_bai)
+
+    return _body(refs, sbi_granularity, write_bai), commit
+
+
+def _body(refs: list[tuple[str, int]], granularity: int, with_bai: bool):
+    ref_index = {name: i for i, (name, _l) in enumerate(refs)}
+
+    def body(batches, out):
+        rows = (row for pdf in batches for row in pdf.to_dict("records"))
+        return _encode(rows, out, ref_index, granularity, with_bai)
+
+    return body
+
+
+def _layout(
+    header: SamHeader, refs: list[tuple[str, int]], with_sbi: bool = False, with_bai: bool = False
+) -> merge.Layout:
+    return merge.Layout(
+        header=bgzf.compress_all(bamcodec.encode_bam_header(header.text, refs), terminate=False),
+        terminator=bgzf.EOF_BLOCK,
+        ext=".bam",
+        stale=(".sbi", ".bai"),
+        check_order=_check_cross_part_order if with_bai else None,
+        indexes=((".sbi", _merge_sbi),) * with_sbi + ((".bai", _merge_bai),) * with_bai,
+    )
+
+
+class PartOrder:
+    """Coordinate order of one reads part, for the ``.order`` sidecar:
+    first and last placed (ref rank, 0-based pos) and whether unplaced
+    reads were seen. Refuses a placed read after an unplaced one
+    (coordinate sort puts unplaced reads last) and a placed read before
+    its predecessor; ``what`` names the write in the error."""
+
+    def __init__(self, what: str):
+        self.what = what
+        self.first: tuple[int, int] | None = None
+        self.last: tuple[int, int] | None = None
+        self.unplaced = False
+
+    def add(self, key: tuple[int, int] | None) -> None:
+        """``key`` = (ref rank, 0-based pos), None for an unplaced read."""
+        if key is None:
+            self.unplaced = True
+            return
+        if self.unplaced:
+            raise ValueError(
+                f"{self.what} requires coordinate-sorted records: "
+                "placed record after unplaced reads (unplaced must sort last)"
+            )
+        if self.last is not None and key < self.last:
+            raise ValueError(
+                f"{self.what} requires coordinate-sorted records: "
+                f"ref {key[0]}:{key[1]} after ref {self.last[0]}:{self.last[1]}"
+            )
+        self.last = key
+        if self.first is None:
+            self.first = key
+
+    def write(self, part: str) -> None:
+        merge.write_order_sidecar(
+            os.path.dirname(part), os.path.basename(part),
+            {"first": self.first, "last": self.last, "unplaced": self.unplaced},
+        )
 
 
 def encode_part(
@@ -73,124 +158,74 @@ def encode_part(
 ) -> int:
     """Write one headerless/terminatorless BGZF part + hidden .sbi (and
     optionally .bai) fragments next to it; returns the record count.
-    Empty input writes nothing. This is the task-side core shared by the
-    mapInPandas sink and the format("bam") DataSource writer."""
-    parts_dir = os.path.dirname(part_path)
-    tmp = part_path + ".tmp"
+    Empty input writes nothing."""
+    return merge.stage_part(
+        part_path, lambda out: _encode(rows, out, ref_index, granularity, with_bai)
+    )[1]
+
+
+def _encode(rows, out, ref_index: dict[str, int], granularity: int, with_bai: bool):
+    """The BAM part encoder: records to ``out`` as terminatorless BGZF;
+    returns ``(n, sidecars)``."""
     n = 0
     offsets: list[int] = []
     bai = baimod.BaiBuilder(len(ref_index)) if with_bai else None
-    # first/last coordinate key of this part: the builder guard proves
-    # WITHIN-part order; these let the driver-side merge prove order
-    # ACROSS parts (per-part-sorted but globally-interleaved input would
-    # otherwise still produce a silently-corrupt merged .bai).
-    # unplaced_seen: BAM coordinate sort puts unplaced reads LAST — a
-    # placed record after an unplaced one is refused here, and the flag
-    # rides the sidecar so the merge can refuse placed parts after an
-    # unplaced tail.
-    first_key: tuple[int, int] | None = None
-    last_key: tuple[int, int] | None = None
-    unplaced_seen = False
-    with _dfs.open_output(tmp) as f:
-        w = bgzf.BgzfWriter(f, terminate=False)
-        for row in rows:
-            v_start = w.virtual_offset
-            if n % granularity == 0:
-                offsets.append(v_start)
-            w.write(bamcodec.encode_record(row, ref_index))
-            n += 1
-            if bai is not None:
-                contig, start = row["contig"], row["start"]
-                if contig is None or start is None or pd.isna(start):
-                    bai.add(-1, -1, -1, 0, v_start, w.virtual_offset, False)
-                    unplaced_seen = True
-                else:
-                    if unplaced_seen:
-                        raise ValueError(
-                            ".bai build requires coordinate-sorted records: "
-                            "placed record after unplaced reads (unplaced "
-                            "must sort last)"
-                        )
-                    pos0 = int(start) - 1
-                    end0 = int(row["end"]) if row["end"] is not None and not pd.isna(row["end"]) else pos0 + 1
-                    bai.add(
-                        ref_index[contig],
-                        pos0,
-                        end0,
-                        _reg2bin(pos0, max(end0, pos0 + 1)),
-                        v_start,
-                        w.virtual_offset,
-                        int(row["flags"]) & FLAG_UNMAPPED == 0,
-                    )
-                    last_key = (ref_index[contig], pos0)
-                    if first_key is None:
-                        first_key = last_key
-        dangling = w.virtual_offset  # last record's end, pre-final-flush
-        w.close()
-    base = os.path.basename(part_path)
-    if n > 0:
-        _dfs.rename(tmp, part_path)
+    # PartOrder proves WITHIN-part order; its .order sidecar lets the
+    # driver prove it ACROSS parts (per-part-sorted but globally-
+    # interleaved input would otherwise still produce a silently-corrupt
+    # merged .bai)
+    order = PartOrder(".bai build")
+    w = bgzf.BgzfWriter(out, terminate=False)
+    for row in rows:
+        v_start = w.virtual_offset
+        if n % granularity == 0:
+            offsets.append(v_start)
+        w.write(bamcodec.encode_record(row, ref_index))
+        n += 1
+        if bai is not None:
+            contig, start = row["contig"], row["start"]
+            if contig is None or start is None or pd.isna(start):
+                bai.add(-1, -1, -1, 0, v_start, w.virtual_offset, False)
+                order.add(None)
+            else:
+                pos0 = int(start) - 1
+                end0 = int(row["end"]) if row["end"] is not None and not pd.isna(row["end"]) else pos0 + 1
+                order.add((ref_index[contig], pos0))
+                bai.add(
+                    ref_index[contig],
+                    pos0,
+                    end0,
+                    _reg2bin(pos0, max(end0, pos0 + 1)),
+                    v_start,
+                    w.virtual_offset,
+                    int(row["flags"]) & FLAG_UNMAPPED == 0,
+                )
+    dangling = w.virtual_offset  # last record's end, pre-final-flush
+    w.close()
+
+    def sidecars(part: str) -> None:
         offsets.append(w.compressed_len << 16)  # end-of-part sentinel
         sbimod.write_sbi(
-            os.path.join(parts_dir, f".{base}.sbi"),
+            merge.fragment(part, ".sbi"),
             sbimod.SbiIndex(w.compressed_len, n, granularity, offsets),
         )
         if bai is not None:
             built = bai.build()
             if dangling & 0xFFFF:
                 baimod.patch_dangling_end(built, dangling, w.compressed_len << 16)
-            baimod.write_bai(os.path.join(parts_dir, f".{base}.bai"), built, fragment=True)
-            merge.write_order_sidecar(
-                parts_dir,
-                base,
-                {"first": first_key, "last": last_key, "unplaced": unplaced_seen},
-            )
-    else:
-        _dfs.remove(tmp)
-    return n
+            baimod.write_bai(merge.fragment(part, ".bai"), built, fragment=True)
+            order.write(part)
 
-
-def _encode_partition(
-    batches: Iterator[pd.DataFrame],
-    parts_dir: str,
-    ref_index: dict[str, int],
-    granularity: int,
-    with_bai: bool,
-):
-    part_path = merge.attempt_part_path(parts_dir)
-    rows = (row for pdf in batches for row in pdf.to_dict("records"))
-    n = encode_part(rows, part_path, ref_index, granularity, with_bai)
-    yield pd.DataFrame({"part": [part_path if n else ""], "n": [n]})
-
-
-def _write_single(
-    df: DataFrame,
-    header: SamHeader,
-    refs: list[tuple[str, int]],
-    path: str,
-    with_sbi: bool,
-    with_bai: bool,
-    granularity: int,
-) -> None:
-    parts_dir = path + ".parts"
-    _dfs.makedirs(parts_dir)
-    ref_index = {name: i for i, (name, _l) in enumerate(refs)}
-
-    def run(batches):
-        yield from _encode_partition(batches, parts_dir, ref_index, granularity, with_bai)
-
-    rows = df.mapInPandas(run, "part string, n long").collect()
-    finalize_single(path, parts_dir, header, refs, merge.collected_parts(rows),
-                    with_sbi, with_bai)
+    return n, sidecars
 
 
 def _check_cross_part_order(parts_dir: str, part_paths: list[str]) -> None:
-    """Per-part builders prove WITHIN-part coordinate order; this proves
-    it ACROSS parts before the .bai merge: each part's first placed key
-    must be >= the previous part's last placed key, and no placed part
-    may follow a part containing unplaced reads (unplaced sort last).
-    Per-part-sorted but globally-interleaved input — e.g. a hash
-    repartition of sorted data — would otherwise still produce a
+    """Per-part guards prove WITHIN-part coordinate order; this proves it
+    ACROSS parts before a reads index merge (.bai, .crai): each part's
+    first placed key must be >= the previous part's last placed key, and
+    no placed part may follow a part containing unplaced reads (unplaced
+    sort last). Per-part-sorted but globally-interleaved input — e.g. a
+    hash repartition of sorted data — would otherwise still produce a
     silently-corrupt merged index."""
     prev_last: tuple[int, int] | None = None
     prev_part = None
@@ -199,24 +234,24 @@ def _check_cross_part_order(parts_dir: str, part_paths: list[str]) -> None:
         base = os.path.basename(pp)
         meta = merge.read_order_sidecar(parts_dir, base)
         if meta is None:
-            # encode_part always writes the .bai fragment and the .order
+            # the part encoders write the index fragment and the .order
             # sidecar together; a part in the finalize set without its
             # sidecar can only be a partially-failed or foreign file —
             # exactly when the merged index would be least trustworthy
             raise ValueError(
-                f".bai merge: part {base} has no .order sidecar — "
+                f"index merge: part {base} has no .order sidecar — "
                 "refusing to merge an unverifiable part"
             )
         first, last = meta.get("first"), meta.get("last")
         if first is not None:
             if unplaced_part is not None:
                 raise ValueError(
-                    f".bai merge requires unplaced reads last: {base} has "
+                    f"index merge requires unplaced reads last: {base} has "
                     f"placed records after unplaced reads in {unplaced_part}"
                 )
             if prev_last is not None and tuple(first) < tuple(prev_last):
                 raise ValueError(
-                    f".bai merge requires globally coordinate-sorted parts: "
+                    f"index merge requires globally coordinate-sorted parts: "
                     f"{base} starts at ref {first[0]}:{first[1]} "
                     f"before {prev_part} ended at ref {prev_last[0]}:{prev_last[1]}"
                 )
@@ -234,89 +269,23 @@ def finalize_single(
     with_sbi: bool,
     with_bai: bool,
 ) -> None:
-    """Driver-side single-file commit: compressed header, concat in part
-    order, BGZF terminator, offset-shifted index merge (BamSink.java:96-137).
-
-    Order validation runs BEFORE any target byte is written, and a
-    failure removes ONLY outputs this invocation created — a validation
-    rejection of an overwrite leaves the pre-existing target (and its
-    indexes) untouched."""
-    created: list[str] = []
-    try:
-        if with_bai:
-            _check_cross_part_order(parts_dir, part_paths)
-        # validation passed: NOW it is safe to clear a pre-existing target
-        # and its (possibly stale) index sidecars
-        merge.prepare_overwrite(path, (".sbi", ".bai"))
-        header_block = bgzf.compress_all(
-            bamcodec.encode_bam_header(header.text, refs), terminate=False
-        )
-        header_path = os.path.join(parts_dir, "_header")
-        with _dfs.open_output(header_path) as f:
-            f.write(header_block)
-        created.append(path)
-        lengths = merge.concat_parts(path, [header_path] + part_paths)
-        data_len = sum(lengths)
-        with _dfs.open_append(path) as f:
-            f.write(bgzf.EOF_BLOCK)
-
-        if with_sbi:
-            part_indexes = []
-            for pp in part_paths:
-                sbi_path = os.path.join(parts_dir, "." + os.path.basename(pp) + ".sbi")
-                part_indexes.append(sbimod.read_sbi(sbi_path))
-            merged = sbimod.merge_sbi(
-                part_indexes,
-                lengths[1:],  # part lengths, in concat order
-                final_voff=data_len << 16,
-                base_offset=lengths[0],  # header block length
-            )
-            merged.file_length = _dfs.getsize(path)
-            created.append(path + ".sbi")
-            sbimod.write_sbi(path + ".sbi", merged)
-        if with_bai:
-            part_bais = [
-                baimod.read_bai(os.path.join(parts_dir, "." + os.path.basename(pp) + ".bai"), fragment=True)
-                for pp in part_paths
-            ]
-            merged_bai = baimod.merge_bai(part_bais, lengths[1:], base_offset=lengths[0])
-            created.append(path + ".bai")
-            baimod.write_bai(path + ".bai", merged_bai)
-    except Exception:
-        for leftover in created:
-            if _dfs.exists(leftover):
-                _dfs.remove(leftover)
-        merge.cleanup(parts_dir)
-        raise
-    merge.cleanup(parts_dir)
+    """Driver-side single-file commit (BamSink.java:96-137) through
+    ``merge.commit_single``: compressed header, concat in part order,
+    BGZF terminator, offset-shifted .sbi/.bai merges."""
+    merge.commit_single(path, parts_dir, part_paths, _layout(header, refs, with_sbi, with_bai))
 
 
-def _write_sharded(
-    df: DataFrame, header: SamHeader, refs: list[tuple[str, int]], path: str
-) -> None:
-    _dfs.makedirs(path)
-    ref_index = {name: i for i, (name, _l) in enumerate(refs)}
-    header_block = bgzf.compress_all(bamcodec.encode_bam_header(header.text, refs), terminate=False)
+def _merge_sbi(path: str, fragments: list[str], lengths: list[int]) -> None:
+    merged = sbimod.merge_sbi(
+        [sbimod.read_sbi(f) for f in fragments],
+        lengths[1:],  # part lengths, in concat order
+        final_voff=sum(lengths) << 16,
+        base_offset=lengths[0],  # header block length
+    )
+    merged.file_length = _dfs.getsize(path)
+    sbimod.write_sbi(path + ".sbi", merged)
 
-    def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        part_path = os.path.join(path, f"part-{pid:05d}.bam")
-        # stage attempt-unique, publish by rename: concurrent speculative
-        # attempts each write a complete private file; whichever renames
-        # last wins with identical content (deterministic input)
-        tmp = merge.attempt_part_path(path, suffix=".bam.tmp")
-        n = 0
-        with _dfs.open_output(tmp) as f:
-            f.write(header_block)
-            w = bgzf.BgzfWriter(f, terminate=True)
-            for pdf in batches:
-                for row in pdf.to_dict("records"):
-                    w.write(bamcodec.encode_record(row, ref_index))
-                    n += 1
-            w.close()
-        _dfs.rename(tmp, part_path)
-        yield pd.DataFrame({"part": [part_path], "n": [n]})
-
-    df.mapInPandas(write_partition, "part string, n long").collect()
+def _merge_bai(path: str, fragments: list[str], lengths: list[int]) -> None:
+    parts = [baimod.read_bai(f, fragment=True) for f in fragments]
+    baimod.write_bai(path + ".bai", baimod.merge_bai(parts, lengths[1:], base_offset=lengths[0]))

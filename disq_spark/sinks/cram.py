@@ -1,35 +1,35 @@
 """CRAM sinks: single-file with distributed .crai build-and-merge, and
 sharded — completing the reference's CRAM write path
 (CramSink.java:60-141, CramOutputFormat.java:51-127, CraiMerger.java:40-66)
-on the pure-Python encoder (formats/cram_encode.py).
+on the pure-Python encoder (formats/cram_encode.py) and the shared write
+path (sinks/merge.py).
 
-Same single-file pattern as the BAM sink: executors write headerless
-container runs + hidden per-part .crai fragments (container offsets
-part-relative); the driver writes the file-definition + SAM-header
-container, concatenates parts in partition order, appends the spec EOF
-container once, and merges the fragments by shifting each container
-offset by the cumulative byte length of everything before its part —
-the CraiMerger offset-shift, in plain TSV.
+What is CRAM's own: the part encoder (headerless container runs plus a
+hidden per-part .crai fragment with part-relative container offsets and,
+when indexing, BAM's reads ``.order`` sidecar), the file-definition +
+SAM-header container, the spec EOF container, and the .crai merge, which
+shifts each container offset by the cumulative byte length of everything
+before its part — the CraiMerger offset-shift, in plain TSV. The
+cross-part order rule is BAM's (sinks/bam.py::_check_cross_part_order).
 """
 
 from __future__ import annotations
 
-import io
-
-from disq_spark import fs as _dfs
-
+from functools import partial
 import gzip
-import os
-from typing import Iterator
+import io
+import itertools
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from disq_spark import fs as _dfs
+
 from disq_spark.formats import cram_encode as CE
 from disq_spark.formats.gzi import open_reference
 from disq_spark.headers import SamHeader
-from disq_spark.schemas import READS_COLUMNS
 from disq_spark.sinks import merge
+from disq_spark.sinks.bam import PartOrder, _check_cross_part_order
 
 RECORDS_PER_CONTAINER = 10_000
 
@@ -68,26 +68,41 @@ def write_cram(
 
     ``reference_path``: FASTA used to express mapped sequences as
     reference-relative features (required when any mapped record has a
-    sequence).
+    sequence). The .crai is a coordinate index: it is only written over a
+    coordinate-sorted header (htsjdk writes CRAM indexes only for
+    coordinate sort order), so a queryname/unsorted header with the
+    default ``write_crai=True`` writes the CRAM without an index.
     """
     if single_file is None:
         single_file = path.endswith(".cram")
-    refs = header.sequences
-    ref_index = {name: i for i, (name, _l) in enumerate(refs)}
+    ref_index = {name: i for i, (name, _l) in enumerate(header.sequences)}
+    body = partial(_encode, ref_index=ref_index, reference_path=reference_path)
     if single_file:
-        # pre-existing target is deleted during finalize AFTER the
-        # cross-part order validation passes
-        _write_single(df, header, ref_index, path, reference_path, write_crai)
+        with_crai = write_crai and header.sort_order == "coordinate"
+        merge.write_single(
+            df, path, partial(body, with_crai=with_crai),
+            partial(merge.commit_single, path, layout=_layout(header, with_crai)),
+        )
     else:
-        merge.prepare_overwrite(path, (".crai",))
-        _write_sharded(df, header, ref_index, path, reference_path)
+        merge.write_sharded(df, path, body, _layout(header))
 
 
-def _encode_partition_containers(batches, ref_index, reference_path, require_sorted=False):
-    """Yields (container_bytes, crai_entries_with_relative_offsets).
+def _layout(header: SamHeader, with_crai: bool = False) -> merge.Layout:
+    text = header.text if header.text.endswith("\n") else header.text + "\n"
+    return merge.Layout(
+        header=CE.file_definition() + CE.encode_file_header(text),
+        terminator=CE.EOF_V3,
+        ext=".cram",
+        stale=(".crai",),
+        check_order=_check_cross_part_order if with_crai else None,
+        indexes=((".crai", _merge_crai),) if with_crai else (),
+    )
 
-    ``require_sorted``: refuse records out of coordinate order (placed by
-    (ref rank, pos), unplaced last) — the per-RECORD guard the .bai/.tbi
+
+def _encode(batches, out, ref_index, reference_path, with_crai: bool = False):
+    """The CRAM part encoder: containers of up to RECORDS_PER_CONTAINER
+    records to ``out``; returns ``(n, sidecars)``. With ``with_crai`` the
+    records must be coordinate-sorted — the per-RECORD guard the .bai/.tbi
     builders have natively; crai entries alone carry only per-slice
     min/max spans, which cannot prove record order after the fact."""
     ref = open_reference(reference_path) if reference_path else None
@@ -97,181 +112,44 @@ def _encode_partition_containers(batches, ref_index, reference_path, require_sor
             raise ValueError("CRAM write of mapped sequences requires reference_path")
         return ref.get(contig, s1, e1)
 
-    last_key = None
-
-    def _checked(pdf):
-        nonlocal last_key
-        for t in _row_tuples(pdf):
-            if require_sorted:
-                contig, start = t[2], t[3]
-                key = (
-                    (1, 0, 0)
-                    if contig is None or start is None
-                    else (0, ref_index[contig], start)
-                )
-                if last_key is not None and key < last_key:
-                    raise ValueError(
-                        "CRAM write with a coordinate sort-order header "
-                        "requires coordinate-sorted records: "
-                        f"{contig}:{start} out of order"
-                    )
-                last_key = key
-            yield t
-
-    pending: list[tuple] = []
-    for pdf in batches:
-        pending.extend(_checked(pdf))
-        while len(pending) >= RECORDS_PER_CONTAINER:
-            chunk, pending = pending[:RECORDS_PER_CONTAINER], pending[RECORDS_PER_CONTAINER:]
-            yield CE.encode_container(chunk, ref_index, get_ref)
-    if pending:
-        yield CE.encode_container(pending, ref_index, get_ref)
-
-
-def _write_single(
-    df: DataFrame,
-    header: SamHeader,
-    ref_index: dict[str, int],
-    path: str,
-    reference_path: str | None,
-    with_crai: bool,
-) -> None:
-    parts_dir = path + ".parts"
-    _dfs.makedirs(parts_dir)
-    # .crai is a coordinate index: only trustworthy — and only emitted —
-    # over coordinate-sorted output (htsjdk writes CRAM indexes only for
-    # coordinate sort order). A queryname/unsorted header with the
-    # default write_crai=True writes the CRAM without an index instead of
-    # failing mid-finalize.
-    with_crai = with_crai and header.sort_order == "coordinate"
-    require_sorted = with_crai
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        part_path = merge.attempt_part_path(parts_dir)
-        tmp = part_path + ".tmp"
-        n = 0
-        crai_rows = []
-        offset = 0
-        with _dfs.open_output(tmp) as f:
-            for container, crai in _encode_partition_containers(
-                batches, ref_index, reference_path, require_sorted=require_sorted
-            ):
-                f.write(container)
-                for (rid, start, span, _c0, s_off, s_size) in crai:
-                    crai_rows.append((rid, start, span, offset, s_off, s_size))
-                offset += len(container)
-                n += 1
-        if offset > 0:
-            _dfs.rename(tmp, part_path)
-            base = os.path.basename(part_path)
-            with io.TextIOWrapper(_dfs.open_output(os.path.join(parts_dir, f".{base}.crai"))) as cf:
-                for r in crai_rows:
-                    cf.write("\t".join(str(x) for x in r) + "\n")
-        else:
-            _dfs.remove(tmp)
-        yield pd.DataFrame({"part": [part_path if offset else ""], "n": [n]})
-
-    rows = df.mapInPandas(run, "part string, n long").collect()
-    part_paths = merge.collected_parts(rows)
-
-    created: list[str] = []
-    try:
-        lengths = [_dfs.getsize(pp) for pp in part_paths]
-        entries = None
+    order = PartOrder("CRAM write with a coordinate sort-order header")
+    tuples = (t for pdf in batches for t in _row_tuples(pdf))
+    n = offset = 0
+    crai_rows = []
+    while chunk := list(itertools.islice(tuples, RECORDS_PER_CONTAINER)):
         if with_crai:
-            # validate cross-part order from the fragments BEFORE any
-            # target byte is written (slice entries carry genomic
-            # coordinates, so order is checkable directly; unmapped
-            # rid<0 sorts last and is skipped). Offsets get their final
-            # header shift after the header is encoded below.
-            entries = []
-            shift = 0
-            last_key = None  # (rid, start) of the previous mapped slice
-            last_part = None
-            for pp, plen in zip(part_paths, lengths):
-                frag = os.path.join(parts_dir, "." + os.path.basename(pp) + ".crai")
-                with io.TextIOWrapper(_dfs.open_input(frag)) as cf:
-                    for line in cf:
-                        rid, start, span, c_off, s_off, s_size = (int(x) for x in line.split("\t"))
-                        if rid >= 0:
-                            if last_key is not None and (rid, start) < last_key:
-                                raise ValueError(
-                                    f".crai merge requires globally coordinate-"
-                                    f"sorted parts: {os.path.basename(pp)} has "
-                                    f"slice ref {rid}:{start} after {last_part} "
-                                    f"ended at ref {last_key[0]}:{last_key[1]}"
-                                )
-                            last_key = (rid, start)
-                            last_part = os.path.basename(pp)
-                        entries.append((rid, start, span, c_off + shift, s_off, s_size))
-                shift += plen
-
-        header_bytes = CE.file_definition() + CE.encode_file_header(
-            header.text if header.text.endswith("\n") else header.text + "\n"
+            for _name, _flags, contig, start, *_rest in chunk:
+                placed = contig is not None and start is not None
+                order.add((ref_index[contig], start - 1) if placed else None)
+        container, crai = CE.encode_container(chunk, ref_index, get_ref)
+        out.write(container)
+        crai_rows.extend(
+            (rid, start, span, offset, s_off, s_size)
+            for (rid, start, span, _c0, s_off, s_size) in crai
         )
-        header_path = os.path.join(parts_dir, "_header")
-        with _dfs.open_output(header_path) as f:
-            f.write(header_bytes)
+        offset += len(container)
+        n += len(chunk)
 
-        # validation passed: NOW clear a pre-existing target + stale index
-        merge.prepare_overwrite(path, (".crai",))
-        created.append(path)
-        merge.concat_parts(path, [header_path] + part_paths)
-        with _dfs.open_append(path) as f:
-            f.write(CE.EOF_V3)
+    def sidecars(part: str) -> None:
+        if not with_crai:
+            return
+        with io.TextIOWrapper(_dfs.open_output(merge.fragment(part, ".crai"))) as cf:
+            for r in crai_rows:
+                cf.write("\t".join(str(x) for x in r) + "\n")
+        order.write(part)
 
-        if with_crai:
-            created.append(path + ".crai")
-            head_len = len(header_bytes)
-            # GzipFile never closes a caller-supplied fileobj; close the
-            # raw stream explicitly (fsspec/memory sinks publish on close)
-            with _dfs.open_output(path + ".crai") as raw:
-                with gzip.GzipFile(fileobj=raw, mode="wb") as gz:
-                    for (rid, start, span, c_off, s_off, s_size) in entries:
-                        gz.write(
-                            ("\t".join(str(x) for x in (rid, start, span, c_off + head_len, s_off, s_size)) + "\n").encode("ascii")
-                        )
-    except Exception:
-        # remove ONLY outputs this invocation created: a cross-part order
-        # rejection before concat must leave any pre-existing target file
-        # (and its index) untouched
-        for leftover in created:
-            if _dfs.exists(leftover):
-                _dfs.remove(leftover)
-        merge.cleanup(parts_dir)
-        raise
-    merge.cleanup(parts_dir)
+    return n, sidecars
 
 
-def _write_sharded(
-    df: DataFrame,
-    header: SamHeader,
-    ref_index: dict[str, int],
-    path: str,
-    reference_path: str | None,
-) -> None:
-    _dfs.makedirs(path)
-    header_bytes = CE.file_definition() + CE.encode_file_header(
-        header.text if header.text.endswith("\n") else header.text + "\n"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        part_path = os.path.join(path, f"part-{pid:05d}.cram")
-        # attempt-unique stage + rename publish (speculation-safe)
-        tmp = merge.attempt_part_path(path, suffix=".cram.tmp")
-        n = 0
-        with _dfs.open_output(tmp) as f:
-            f.write(header_bytes)
-            for container, _crai in _encode_partition_containers(
-                batches, ref_index, reference_path
-            ):
-                f.write(container)
-                n += 1
-            f.write(CE.EOF_V3)
-        _dfs.rename(tmp, part_path)
-        yield pd.DataFrame({"part": [part_path], "n": [n]})
-
-    df.mapInPandas(run, "part string, n long").collect()
+def _merge_crai(path: str, fragments: list[str], lengths: list[int]) -> None:
+    """Concatenate the part fragments, each container offset shifted by
+    the bytes before its part (header included); gzip as the spec wants.
+    GzipFile never closes a caller-supplied fileobj, so the raw stream is
+    closed by its own ``with`` (fsspec/memory sinks publish on close)."""
+    with _dfs.open_output(path + ".crai") as raw, gzip.GzipFile(fileobj=raw, mode="wb") as gz:
+        for frag, shift in zip(fragments, itertools.accumulate(lengths)):
+            with io.TextIOWrapper(_dfs.open_input(frag)) as cf:
+                for line in cf:
+                    rid, start, span, c_off, s_off, s_size = (int(x) for x in line.split("\t"))
+                    row = (rid, start, span, c_off + shift, s_off, s_size)
+                    gz.write(("\t".join(str(x) for x in row) + "\n").encode("ascii"))

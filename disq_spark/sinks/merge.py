@@ -1,9 +1,26 @@
-"""Part-file concatenation for single-file outputs.
+"""The one write path every sink shares: part staging, the single-file
+commit and the sharded writer.
 
 The reference's move (Merger.java:41-63 + HadoopFileSystemWrapper
 .concat:142-168): write headerless/terminatorless parts in parallel,
-then concatenate header + parts + terminator in filename order. Merge
-strategy is dispatched per filesystem:
+then concatenate header + parts + terminator in filename order. A format
+contributes only what is its own — a ``Layout`` (header bytes,
+terminator, shard extension, cross-part order rule, index mergers) and a
+part encoder ``body(batches, out) -> (n, sidecars)`` that writes records
+to ``out`` and returns the record count plus a callable that writes the
+part's hidden index fragment and ``.order`` sidecar (or None).
+
+- ``stage_part``: the one task body. Writes to ``<part>.tmp``, renames
+  the part only when it holds records, then writes its sidecars.
+- ``commit_single``: the one single-file commit. Check cross-part order,
+  clear the old target, header, concat, terminator, index merges; a
+  failure removes only what this call created, and the parts directory
+  goes either way.
+- ``write_single`` / ``write_sharded``: one ``mapInPandas(...).collect()``
+  job each. Sharded output publishes ``part-{pid:05d}{ext}`` = header +
+  body + terminator per partition.
+
+Concat strategy is dispatched per filesystem:
 
 - HDFS-family schemes: rename the first part onto the target, then one
   driver-side ``FileSystem.concat`` py4j call — O(#parts) metadata-only,
@@ -20,11 +37,34 @@ from __future__ import annotations
 
 import os
 import shutil
+from dataclasses import dataclass
+from typing import Callable
 
 from disq_spark import fs as _dfs
 
 # schemes whose Hadoop FileSystem implements concat() (metadata-only)
 HADOOP_CONCAT_SCHEMES = ("hdfs", "webhdfs", "viewfs")
+
+PART_SCHEMA = "part string, n long"
+
+
+@dataclass(frozen=True)
+class Layout:
+    """What a format adds to the shared write path.
+
+    ``check_order(parts_dir, parts)`` raises on parts whose concatenation
+    would break the index's coordinate order. Each ``indexes`` entry is
+    ``(ext, merge)``: ``merge(path, fragments, lengths)`` writes
+    ``path + ext`` from the parts' ``ext`` fragments, where ``lengths``
+    are the concatenated byte lengths (header first). ``stale`` names the
+    index sidecars an overwrite clears."""
+
+    header: bytes = b""
+    terminator: bytes = b""
+    ext: str = ""
+    stale: tuple[str, ...] = ()
+    check_order: Callable[[str, list[str]], None] | None = None
+    indexes: tuple[tuple[str, Callable], ...] = ()
 
 
 def attempt_part_path(parts_dir: str, prefix: str = "part", suffix: str = "") -> str:
@@ -36,7 +76,7 @@ def attempt_part_path(parts_dir: str, prefix: str = "part", suffix: str = "") ->
     task stage to DIFFERENT paths, so neither can interleave the other's
     writes. The zero-padded pid prefix keeps lexicographic sort ==
     partition order, so the driver can finalize from the sorted collected
-    names. Same scheme as the DataSource writer (sources/datasource.py).
+    names (``write_single`` and the DataSource writer both do).
     """
     import uuid
 
@@ -45,6 +85,35 @@ def attempt_part_path(parts_dir: str, prefix: str = "part", suffix: str = "") ->
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else 0
     return os.path.join(parts_dir, f"{prefix}-{pid:05d}-{uuid.uuid4().hex[:8]}{suffix}")
+
+
+def fragment(part: str, ext: str) -> str:
+    """The hidden per-part file ``.{part}{ext}`` next to ``part``."""
+    return os.path.join(os.path.dirname(part), f".{os.path.basename(part)}{ext}")
+
+
+def stage_part(part: str, write, head: bytes = b"", tail: bytes = b"", publish: str | None = None):
+    """The one task body: ``head``, ``write(out) -> (n, sidecars)`` and
+    ``tail`` go to ``<part>.tmp``. With ``publish`` (a shard), the file
+    is renamed onto it whatever ``n`` is. Otherwise the part is renamed
+    into place only when it holds records, its ``sidecars(part)`` are
+    written, and an empty one is dropped. Returns ``(part, n)``; the part
+    is "" when dropped."""
+    tmp = part + ".tmp"
+    with _dfs.open_output(tmp) as out:
+        out.write(head)
+        n, sidecars = write(out)
+        out.write(tail)
+    if publish is not None:
+        _dfs.rename(tmp, publish)
+        return publish, n
+    if n == 0:
+        _dfs.remove(tmp)
+        return "", 0
+    _dfs.rename(tmp, part)
+    if sidecars is not None:
+        sidecars(part)
+    return part, n
 
 
 def collected_parts(rows) -> list[str]:
@@ -62,6 +131,88 @@ def list_parts(parts_dir: str) -> list[str]:
         if not os.path.basename(p).startswith((".", "_")) and _dfs.getsize(p) > 0
     ]
     return sorted(paths)
+
+
+def write_single(df, path: str, body, commit) -> None:
+    """Single-file write: one ``mapInPandas`` job stages each partition's
+    part under ``<path>.parts``, then ``commit(parts_dir, parts)`` runs on
+    the driver. A failed job removes the parts directory and leaves any
+    existing target alone."""
+    import pandas as pd
+
+    parts_dir = path + ".parts"
+    _dfs.makedirs(parts_dir)
+
+    def task(batches):
+        part, n = stage_part(attempt_part_path(parts_dir), lambda out: body(batches, out))
+        yield pd.DataFrame({"part": [part], "n": [n]})
+
+    try:
+        rows = df.mapInPandas(task, PART_SCHEMA).collect()
+    except BaseException:
+        cleanup(parts_dir)
+        raise
+    commit(parts_dir, collected_parts(rows))
+
+
+def commit_single(path: str, parts_dir: str, parts: list[str], layout: Layout) -> None:
+    """The one single-file commit: cross-part order check, then clear the
+    old target and its stale sidecars, header, concat in part order,
+    terminator, index merges, cleanup.
+
+    The order check runs before any target byte is written, and a failure
+    removes ONLY the outputs this call created — a rejected overwrite
+    leaves the pre-existing target and its indexes untouched."""
+    created: list[str] = []
+    try:
+        if layout.check_order is not None:
+            layout.check_order(parts_dir, parts)
+        prepare_overwrite(path, layout.stale)
+        header_path = os.path.join(parts_dir, "_header")
+        with _dfs.open_output(header_path) as f:
+            f.write(layout.header)
+        created.append(path)
+        lengths = concat_parts(path, [header_path] + parts)
+        if layout.terminator:
+            with _dfs.open_append(path) as f:
+                f.write(layout.terminator)
+        for ext, merge_index in layout.indexes:
+            created.append(path + ext)
+            merge_index(path, [fragment(p, ext) for p in parts], lengths)
+    except BaseException:
+        for leftover in created:
+            if _dfs.exists(leftover):
+                _dfs.remove(leftover)
+        raise
+    finally:
+        cleanup(parts_dir)
+
+
+def write_sharded(df, path: str, body, layout: Layout) -> None:
+    """Directory output: each partition publishes ``part-{pid:05d}{ext}``
+    = header + body + terminator, even when it holds no records. The old
+    output is deleted first. Attempts stage to unique names and publish
+    by rename, so the last of two speculative attempts wins with
+    identical content."""
+    import pandas as pd
+
+    prepare_overwrite(path, layout.stale)
+    _dfs.makedirs(path)
+
+    def task(batches):
+        from pyspark import TaskContext
+
+        shard = os.path.join(path, f"part-{TaskContext.get().partitionId():05d}{layout.ext}")
+        part, n = stage_part(
+            attempt_part_path(path, suffix=layout.ext),
+            lambda out: body(batches, out),
+            layout.header,
+            layout.terminator,
+            publish=shard,
+        )
+        yield pd.DataFrame({"part": [part], "n": [n]})
+
+    df.mapInPandas(task, PART_SCHEMA).collect()
 
 
 def _hadoop_concat(dst: str, srcs: list[str]) -> list[int] | None:
@@ -104,9 +255,9 @@ def cleanup(parts_dir: str) -> None:
 
 def prepare_overwrite(path: str, index_exts: tuple[str, ...] = ()) -> None:
     """Delete a pre-existing output (file or shard directory) and any
-    stale index sidecars BEFORE writing (AnySamSinkMultiple.java:74-78
-    semantics). Stale sidecars are the dangerous case: a leftover .sbi/
-    .bai next to a rewritten file silently mis-plans every later read."""
+    stale index sidecars (AnySamSinkMultiple.java:74-78 semantics). Stale
+    sidecars are the dangerous case: a leftover .sbi/.bai next to a
+    rewritten file silently mis-plans every later read."""
     if _dfs.isdir(path):
         _dfs.rmtree(path)
     elif _dfs.exists(path):

@@ -1,19 +1,13 @@
-"""SAM sink: single-file text (SamSink.java:53-74 pattern) and sharded.
-
-Single-file: headerless text parts in parallel -> header file -> concat.
-(SAM needs no terminator.)
+"""SAM sink: single-file text (SamSink.java:53-74 pattern) and sharded, on
+the shared write path (sinks/merge.py). What is SAM's own: the header
+text and the part encoder (one text line per record). SAM needs no
+terminator and has no index.
 """
 
 from __future__ import annotations
 
-import io
+from functools import partial
 
-from disq_spark import fs as _dfs
-
-import os
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from disq_spark.formats.sam import format_sam_batch
@@ -26,66 +20,18 @@ def write_sam(
 ) -> None:
     if single_file is None:
         single_file = path.endswith(".sam")
-    merge.prepare_overwrite(path)
+    layout = merge.Layout(header=header.text.encode("utf-8"), ext=".sam")
     if single_file:
-        _write_single(df, header, path)
+        merge.write_single(df, path, _encode, partial(merge.commit_single, path, layout=layout))
     else:
-        _write_sharded(df, header, path)
+        merge.write_sharded(df, path, _encode, layout)
 
 
-def _write_single(df: DataFrame, header: SamHeader, path: str) -> None:
-    parts_dir = path + ".parts"
-    _dfs.makedirs(parts_dir)
-
-    def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        part_path = merge.attempt_part_path(parts_dir)
-        tmp = part_path + ".tmp"
-        n = 0
-        with io.TextIOWrapper(_dfs.open_output(tmp), encoding="utf-8") as f:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for line in format_sam_batch(pdf):
-                    f.write(line)
-                    f.write("\n")
-                n += len(pdf)
-        if n > 0:
-            _dfs.rename(tmp, part_path)
-        else:
-            _dfs.remove(tmp)
-        yield pd.DataFrame({"part": [part_path if n else ""], "n": [n]})
-
-    rows = df.mapInPandas(write_partition, "part string, n long").collect()
-
-    header_path = os.path.join(parts_dir, "_header")
-    with io.TextIOWrapper(_dfs.open_output(header_path), encoding="utf-8") as f:
-        f.write(header.text)
-    merge.concat_parts(path, [header_path] + merge.collected_parts(rows))
-    merge.cleanup(parts_dir)
-
-
-def _write_sharded(df: DataFrame, header: SamHeader, path: str) -> None:
-    _dfs.makedirs(path)
-    header_text = header.text
-
-    def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        part_path = os.path.join(path, f"part-{pid:05d}.sam")
-        # attempt-unique stage + rename publish (speculation-safe)
-        tmp = merge.attempt_part_path(path, suffix=".sam.tmp")
-        n = 0
-        with io.TextIOWrapper(_dfs.open_output(tmp), encoding="utf-8") as f:
-            f.write(header_text)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for line in format_sam_batch(pdf):
-                    f.write(line)
-                    f.write("\n")
-                n += len(pdf)
-        _dfs.rename(tmp, part_path)
-        yield pd.DataFrame({"part": [part_path], "n": [n]})
-
-    df.mapInPandas(write_partition, "part string, n long").collect()
+def _encode(batches, out):
+    """The SAM part encoder: text lines to ``out``; no sidecars."""
+    n = 0
+    for pdf in batches:
+        if len(pdf):
+            out.write("".join(line + "\n" for line in format_sam_batch(pdf)).encode("utf-8"))
+            n += len(pdf)
+    return n, None

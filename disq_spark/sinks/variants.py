@@ -1,12 +1,12 @@
-"""VCF sinks: single-file (plain or BGZF) and sharded.
+"""VCF sinks: single-file (plain or BGZF, optional .tbi) and sharded, on
+the shared write path (sinks/merge.py).
 
-Re-expresses VcfSink.java:52-131 / VcfSinkMultiple.java:38-72:
-- single-file: executors write headerless, terminatorless part files
-  (BGZF-compressed when the target is .bgz/.gz — VcfSink.java:66), the
-  driver writes the (compressed) header, concatenates in part order and
-  appends the BGZF terminator once (VcfSink.java:87-103).
-- sharded: one complete VCF (header + records + terminator) per
-  partition, directory output (the natural Spark mode).
+Re-expresses VcfSink.java:52-131 / VcfSinkMultiple.java:38-72. What is
+VCF's own: the part encoder (text lines, BGZF-compressed when the target
+is .bgz/.gz — VcfSink.java:66 — plus a hidden .tbi fragment and the
+``.order`` sidecar when indexing), the (compressed) header and BGZF
+terminator, the contig-grouped order rule and the .tbi merge
+(VcfSink.java:87-127). Sharded output is one plain VCF per partition.
 
 Format/cardinality dispatch follows VcfFormat.fromPath semantics
 (VcfFormat.java:82-93): a path with a VCF extension -> SINGLE, else a
@@ -15,11 +15,8 @@ directory of shards.
 
 from __future__ import annotations
 
-import io
-
-from disq_spark import fs as _dfs
-
 import os
+from functools import partial
 from typing import Iterator
 
 import pandas as pd
@@ -53,15 +50,39 @@ def write_vcf(
     """
     if single_file is None:
         single_file = path.endswith((".vcf", ".vcf.gz", ".vcf.bgz"))
-    if write_tbi and not (_is_bgzf_target(path) and single_file):
+    if write_tbi and not single_file:
         raise ValueError("write_tbi requires a single-file BGZF target")
     if single_file:
-        # pre-existing target is deleted in finalize_single AFTER the
-        # cross-part order validation passes
-        _write_single(df, header, path, write_tbi)
+        merge.write_single(df, path, *single_file_sink(header, path, write_tbi=write_tbi))
     else:
-        merge.prepare_overwrite(path, (".tbi",))
-        _write_sharded(df, header, path)
+        body = partial(_encode, samples=header.samples)
+        merge.write_sharded(df, path, body, _layout(header, False))
+
+
+def single_file_sink(header: VcfHeader, path: str, *, write_tbi: bool = False):
+    """``(body, commit)`` of a single-file VCF at ``path`` (BGZF when it
+    ends in .gz/.bgz), shared by ``write_vcf`` and
+    ``df.write.format("vcf")``; the commit runs ``finalize_single``."""
+    compress = _is_bgzf_target(path)
+    if write_tbi and not compress:
+        raise ValueError("write_tbi requires a single-file BGZF target")
+
+    def commit(parts_dir: str, parts: list[str]) -> None:
+        finalize_single(path, parts_dir, header, parts, compress, write_tbi)
+
+    return partial(_encode, samples=header.samples, compress=compress, with_tbi=write_tbi), commit
+
+
+def _layout(header: VcfHeader, compress: bool, with_tbi: bool = False) -> merge.Layout:
+    text = header.text.encode("utf-8")
+    return merge.Layout(
+        header=bgzf.compress_all(text, terminate=False) if compress else text,
+        terminator=bgzf.EOF_BLOCK if compress else b"",
+        ext=".vcf",
+        stale=(".tbi",),
+        check_order=_check_cross_part_order if with_tbi else None,
+        indexes=((".tbi", _merge_tbi),) if with_tbi else (),
+    )
 
 
 def encode_vcf_part(
@@ -72,14 +93,17 @@ def encode_vcf_part(
     with_tbi: bool,
 ) -> int:
     """Write one headerless (optionally terminatorless-BGZF) VCF part,
-    plus a hidden .tbi fragment when indexing; returns the record count.
-    Task-side core shared by the mapInPandas sink and the format("vcf")
-    DataSource writer."""
+    plus a hidden .tbi fragment when indexing; returns the record count."""
+    return merge.stage_part(
+        part_path, lambda out: _encode(batches, out, samples, compress, with_tbi)
+    )[1]
+
+
+def _encode(batches, out, samples: list[str], compress: bool = False, with_tbi: bool = False):
+    """The VCF part encoder: lines to ``out``; returns ``(n, sidecars)``."""
     from disq_spark.formats import tabix as tbimod
 
-    parts_dir = os.path.dirname(part_path)
     n = 0
-    tmp = part_path + ".tmp"
     tbi = tbimod.TbiBuilder() if with_tbi else None
     dangling = 0
     # first/last (contig, pos) of the part: the builder guard proves
@@ -87,51 +111,47 @@ def encode_vcf_part(
     # parts (see _check_cross_part_order)
     first_key = None
     last_key = None
-    with _dfs.open_output(tmp) as f:
-        sink = bgzf.BgzfWriter(f, terminate=False) if compress else f
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lines = format_vcf_batch(pdf, samples)
-            if tbi is None:
-                payload = ("\n".join(lines) + "\n").encode("utf-8")
-                sink.write(payload)
-            else:
-                # per-record virtual-offset tracking for the index
-                for line, contig, start, end in zip(
-                    lines, pdf["contig"], pdf["start"], pdf["end"]
-                ):
-                    v_start = sink.virtual_offset
-                    sink.write(line.encode("utf-8") + b"\n")
-                    tbi.add(contig, int(start), int(end), v_start, sink.virtual_offset)
-                    last_key = (contig, int(start))
-                    if first_key is None:
-                        first_key = last_key
-            n += len(pdf)
-        if compress:
-            dangling = sink.virtual_offset
-            sink.close()
-    if n > 0:
-        _dfs.rename(tmp, part_path)
-        if tbi is not None:
-            built = tbi.build()
-            if dangling & 0xFFFF:
-                tbimod.patch_dangling_end(built, dangling, sink.compressed_len << 16)
-            base = os.path.basename(part_path)
-            tbimod.write_tbi(
-                os.path.join(parts_dir, f".{base}.tbi"), built, fragment=True
-            )
-            # contigs = the part's FULL contig sequence in order (the
-            # builder registers them by first appearance) — first/last
-            # alone would hide interior contigs from the cross-part check
-            merge.write_order_sidecar(
-                parts_dir,
-                base,
-                {"first": first_key, "last": last_key, "contigs": built.names},
-            )
-    else:
-        _dfs.remove(tmp)
-    return n
+    sink = bgzf.BgzfWriter(out, terminate=False) if compress else out
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        lines = format_vcf_batch(pdf, samples)
+        if tbi is None:
+            payload = ("\n".join(lines) + "\n").encode("utf-8")
+            sink.write(payload)
+        else:
+            # per-record virtual-offset tracking for the index
+            for line, contig, start, end in zip(
+                lines, pdf["contig"], pdf["start"], pdf["end"]
+            ):
+                v_start = sink.virtual_offset
+                sink.write(line.encode("utf-8") + b"\n")
+                tbi.add(contig, int(start), int(end), v_start, sink.virtual_offset)
+                last_key = (contig, int(start))
+                if first_key is None:
+                    first_key = last_key
+        n += len(pdf)
+    if compress:
+        dangling = sink.virtual_offset
+        sink.close()
+
+    def sidecars(part: str) -> None:
+        if tbi is None:
+            return
+        built = tbi.build()
+        if dangling & 0xFFFF:
+            tbimod.patch_dangling_end(built, dangling, sink.compressed_len << 16)
+        tbimod.write_tbi(merge.fragment(part, ".tbi"), built, fragment=True)
+        # contigs = the part's FULL contig sequence in order (the builder
+        # registers them by first appearance) — first/last alone would
+        # hide interior contigs from the cross-part check
+        merge.write_order_sidecar(
+            os.path.dirname(part),
+            os.path.basename(part),
+            {"first": first_key, "last": last_key, "contigs": built.names},
+        )
+
+    return n, sidecars
 
 
 def finalize_single(
@@ -142,45 +162,17 @@ def finalize_single(
     compress: bool,
     with_tbi: bool,
 ) -> None:
-    """Driver-side single-file commit: header file + concat in part order
-    + one BGZF terminator + offset-shifted .tbi merge (VcfSink.java:87-127).
+    """Driver-side single-file commit (VcfSink.java:87-127) through
+    ``merge.commit_single``: header, concat in part order, one BGZF
+    terminator when compressed, offset-shifted .tbi merge."""
+    merge.commit_single(path, parts_dir, part_paths, _layout(header, compress, with_tbi))
 
-    Order validation runs BEFORE any target byte is written; a failure
-    removes ONLY outputs this invocation created, so a validation
-    rejection of an overwrite leaves the pre-existing target intact."""
+
+def _merge_tbi(path: str, fragments: list[str], lengths: list[int]) -> None:
     from disq_spark.formats import tabix as tbimod
 
-    created: list[str] = []
-    try:
-        if with_tbi:
-            _check_cross_part_order(parts_dir, part_paths)
-        # validation passed: NOW clear a pre-existing target + stale index
-        merge.prepare_overwrite(path, (".tbi",))
-        header_path = os.path.join(parts_dir, "_header")
-        header_bytes = header.text.encode("utf-8")
-        with _dfs.open_output(header_path) as f:
-            f.write(bgzf.compress_all(header_bytes, terminate=False) if compress else header_bytes)
-
-        created.append(path)
-        lengths = merge.concat_parts(path, [header_path] + part_paths)
-        if compress:
-            with _dfs.open_append(path) as f:
-                f.write(bgzf.EOF_BLOCK)
-        if with_tbi:
-            part_idx = [
-                tbimod.read_tbi(os.path.join(parts_dir, "." + os.path.basename(pp) + ".tbi"), fragment=True)
-                for pp in part_paths
-            ]
-            merged = tbimod.merge_tbi(part_idx, lengths[1:], base_offset=lengths[0])
-            created.append(path + ".tbi")
-            tbimod.write_tbi(path + ".tbi", merged)
-    except Exception:
-        for leftover in created:
-            if _dfs.exists(leftover):
-                _dfs.remove(leftover)
-        merge.cleanup(parts_dir)
-        raise
-    merge.cleanup(parts_dir)
+    parts = [tbimod.read_tbi(f, fragment=True) for f in fragments]
+    tbimod.write_tbi(path + ".tbi", tbimod.merge_tbi(parts, lengths[1:], base_offset=lengths[0]))
 
 
 def _check_cross_part_order(parts_dir: str, part_paths: list[str]) -> None:
@@ -200,7 +192,7 @@ def _check_cross_part_order(parts_dir: str, part_paths: list[str]) -> None:
         base = os.path.basename(pp)
         meta = merge.read_order_sidecar(parts_dir, base)
         if meta is None:
-            # encode_vcf_part writes the .tbi fragment and the sidecar
+            # the part encoder writes the .tbi fragment and the sidecar
             # together; a finalize-set part without one is unverifiable
             raise ValueError(
                 f".tbi merge: part {base} has no .order sidecar — "
@@ -231,47 +223,3 @@ def _check_cross_part_order(parts_dir: str, part_paths: list[str]) -> None:
             done.add(cur)
         done.update(contigs[:-1])
         cur, cur_last, prev_part = lc, lp, base
-
-
-def _write_single(df: DataFrame, header: VcfHeader, path: str, with_tbi: bool = False) -> None:
-    parts_dir = path + ".parts"  # temp-parts convention (HtsjdkReadsRddStorage.java:224-229)
-    _dfs.makedirs(parts_dir)
-    compress = _is_bgzf_target(path)
-    samples = header.samples
-
-    def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        part_path = merge.attempt_part_path(parts_dir)
-        n = encode_vcf_part(batches, part_path, samples, compress, with_tbi)
-        yield pd.DataFrame({"part": [part_path if n else ""], "n": [n]})
-
-    rows = df.mapInPandas(write_partition, "part string, n long").collect()
-    finalize_single(path, parts_dir, header, merge.collected_parts(rows), compress, with_tbi)
-
-
-def _write_sharded(df: DataFrame, header: VcfHeader, path: str) -> None:
-    _dfs.makedirs(path)
-    samples = header.samples
-    header_text = header.text
-    ext = ".vcf"
-
-    def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        part_path = os.path.join(path, f"part-{pid:05d}{ext}")
-        # attempt-unique stage + rename publish (speculation-safe)
-        tmp = merge.attempt_part_path(path, suffix=ext + ".tmp")
-        n = 0
-        with io.TextIOWrapper(_dfs.open_output(tmp), encoding="utf-8") as f:
-            f.write(header_text)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for line in format_vcf_batch(pdf, samples):
-                    f.write(line)
-                    f.write("\n")
-                n += len(pdf)
-        _dfs.rename(tmp, part_path)
-        yield pd.DataFrame({"part": [part_path], "n": [n]})
-
-    df.mapInPandas(write_partition, "part string, n long").collect()

@@ -537,8 +537,7 @@ def build_bai(
     from disq_spark.formats import bai as baimod
     from disq_spark.formats.bam import _reg2bin
     from disq_spark.schemas import FLAG_UNMAPPED
-    from disq_spark.sinks import merge as _merge
-    from disq_spark.sinks.bam import _check_cross_part_order
+    from disq_spark.sinks.bam import PartOrder, _check_cross_part_order
 
     header, refs, first_voff = read_bam_header(path)
     if header.sort_order != "coordinate":
@@ -570,31 +569,23 @@ def build_bai(
             )
             b = baimod.BaiBuilder(n_ref)
             ends_v = voffs[1:] + [ve_eff]
-            first_key = last_key = None
-            unplaced = False
+            order = PartOrder("build_bai")
             for i in range(n):
                 contig, start = cols["contig"][i], cols["start"][i]
                 if contig is None or start is None or pd_.isna(start):
                     b.add(-1, -1, -1, 0, voffs[i], ends_v[i], False)
-                    unplaced = True
+                    order.add(None)
                 else:
-                    if unplaced:
-                        raise ValueError(
-                            "build_bai requires coordinate-sorted "
-                            "records: placed record after unplaced"
-                        )
                     pos0 = int(start) - 1
                     e = cols["end"][i]
                     end0 = int(e) if e is not None and not pd_.isna(e) else pos0 + 1
+                    order.add((ref_index[contig], pos0))
                     b.add(
                         ref_index[contig], pos0, end0,
                         _reg2bin(pos0, max(end0, pos0 + 1)),
                         voffs[i], ends_v[i],
                         int(cols["flags"][i]) & FLAG_UNMAPPED == 0,
                     )
-                    last_key = (ref_index[contig], pos0)
-                    if first_key is None:
-                        first_key = last_key
             # attempt-unique base (uuid8): a speculative/zombie
             # retry of this chunk stages to a DIFFERENT name, so
             # it can never re-truncate a fragment the driver is
@@ -608,10 +599,7 @@ def build_bai(
             baimod.write_bai(
                 os.path.join(parts_dir, f".{base}.bai"), b.build(), fragment=True
             )
-            _merge.write_order_sidecar(
-                parts_dir, base,
-                {"first": first_key, "last": last_key, "unplaced": unplaced},
-            )
+            order.write(os.path.join(parts_dir, base))
         yield pd_.DataFrame({"part": [base], "n": [n]})
 
     try:

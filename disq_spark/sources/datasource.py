@@ -20,16 +20,16 @@ need the default-off ``spark.sql.python.filterPushdown.enabled``, so
 intervals ride an option string.
 
 Writes: ``df.write.format("bam"/"vcf")`` maps onto the DataSource
-writer protocol like the reference's sink (BamSink.java:60-139): tasks
-write uniquely named headerless parts plus index fragments; the driver's
-``commit()`` concatenates the parts named in the commit messages and
-merges their indexes, so task retries are safe.
+writer protocol like the reference's sink (BamSink.java:60-139) through
+one ``SinkWriter``: tasks run the same part staging as ``write_<fmt>``,
+and the driver's ``commit()`` runs the same single-file commit over the
+parts named in the commit messages, so task retries are safe. A format
+supplies only how to read its header from ``header_path``/``header_text``
+and its sink.
 """
 
 from __future__ import annotations
 
-import os
-import uuid
 from dataclasses import dataclass
 from functools import partial
 from typing import Iterator
@@ -171,192 +171,100 @@ class BamDataSource(_ScanSource):
             columns=_columns(o), **_split(o),
         )
 
-    def writer(self, schema, overwrite: bool) -> BamWriter:
-        return BamWriter(self.options, overwrite)
-
-
-@dataclass
-class BamPartCommit(WriterCommitMessage):
-    part: str
-    n: int
-
-
-class BamWriter(DataSourceWriter):
-    """df.write.format("bam"): parallel part encode, commit-time merge.
-
-    The header cannot be inferred from rows (sequence dictionary order
-    defines refIDs), so it is passed as an option: ``header_path`` (copy
-    the header of an existing .sam/.bam file) or ``header_text`` (literal
-    ``@``-line text). Mirrors the reference, where the caller always
-    supplies a SAMFileHeader to the sink (BamSink.java:62-67).
-    """
-
-    def __init__(self, options: dict, overwrite: bool):
+    def writer(self, schema, overwrite: bool) -> SinkWriter:
         from disq_spark.headers import SamHeader
+        from disq_spark.sinks.bam import single_file_sink
 
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError('format("bam") write requires .save(path)')
-        header_text = options.get("header_text")
-        header_path = options.get("header_path")
-        if header_text:
-            self.header = SamHeader(
-                text=header_text if header_text.endswith("\n") else header_text + "\n"
-            )
-        elif header_path:
-            if header_path.endswith(".bam"):
+        def read_header(path):
+            if path.endswith(".bam"):
                 from disq_spark.sources.bam_source import read_bam_header
 
-                self.header, _refs, _ = read_bam_header(header_path)
-            else:
-                from disq_spark.sources.reads import read_sam_header
+                return read_bam_header(path)[0]
+            from disq_spark.sources.reads import read_sam_header
 
-                self.header = read_sam_header(header_path)
-        else:
-            raise ValueError(
-                'format("bam") write requires option("header_path", ...) or '
-                'option("header_text", ...)'
-            )
-        self.refs = self.header.sequences
-        self.ref_index = {name: i for i, (name, _l) in enumerate(self.refs)}
-        self.granularity = int(options.get("sbi_granularity", 4096))
-        self.write_sbi = options.get("write_sbi", "true").lower() == "true"
-        bai_opt = options.get("write_bai")
-        self.write_bai = (
-            self.header.sort_order == "coordinate"
-            if bai_opt is None
-            else bai_opt.lower() == "true"
-        )
-        if _dfs.exists(self.path) and not overwrite:
-            raise ValueError(f"path exists (use mode('overwrite')): {self.path}")
-        # overwrite deletion is deferred to finalize_single (post-validation)
-        # so a rejected commit leaves a pre-existing target untouched
-        self.parts_dir = self.path + ".parts"
-        _dfs.makedirs(self.parts_dir)
+            return read_sam_header(path)
 
-    def write(self, rows) -> BamPartCommit:
-        from pyspark import TaskContext
+        header = _write_header(self.options, "bam", lambda text: SamHeader(text=text), read_header)
+        return SinkWriter(self.options, overwrite, schema, header, single_file_sink)
 
-        from disq_spark.sinks.bam import encode_part
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        # unique suffix → task retries never collide; commit() keeps only
-        # the parts the scheduler reports as successful
-        part = os.path.join(
-            self.parts_dir, f"part-{pid:05d}-{uuid.uuid4().hex[:8]}"
-        )
-        n = encode_part(
-            (r.asDict() for r in rows),
-            part,
-            self.ref_index,
-            self.granularity,
-            self.write_bai,
-        )
-        return BamPartCommit(part=part if n else "", n=n)
-
-    def commit(self, messages) -> None:
-        from disq_spark.sinks.bam import finalize_single
-
-        parts = sorted(m.part for m in messages if m is not None and m.part)
-        finalize_single(
-            self.path,
-            self.parts_dir,
-            self.header,
-            self.refs,
-            parts,
-            self.write_sbi,
-            self.write_bai,
-        )
-
-    def abort(self, messages) -> None:
-        from disq_spark.sinks.merge import cleanup
-
-        cleanup(self.parts_dir)
+def _write_header(options, fmt: str, parse, read):
+    """The header a ``format(fmt)`` write takes (after checking it has a
+    path): ``parse(header_text)`` or ``read(header_path)``. Rows cannot
+    carry it (the sequence dictionary's order defines refIDs, the #CHROM
+    line the samples); the reference's caller likewise always hands the
+    sink a header (BamSink.java:62-67)."""
+    if not options.get("path"):
+        raise ValueError(f'format("{fmt}") write requires .save(path)')
+    text, path = options.get("header_text"), options.get("header_path")
+    if text:
+        return parse(text if text.endswith("\n") else text + "\n")
+    if path:
+        return read(path)
+    raise ValueError(
+        f'format("{fmt}") write requires option("header_path", ...) or '
+        'option("header_text", ...)'
+    )
 
 
 @dataclass
-class VcfPartCommit(WriterCommitMessage):
+class _PartCommit(WriterCommitMessage):
     part: str
     n: int
 
 
-class VcfWriter(DataSourceWriter):
-    """df.write.format("vcf"): single-file VCF (plain or BGZF by target
-    extension), optional distributed .tbi build+merge. Header comes from
-    option("header_path", <existing .vcf[.gz|.bgz]>) or
-    option("header_text", ...)."""
+class SinkWriter(DataSourceWriter):
+    """``df.write.format(<fmt>)`` for a single-file sink: the DataSource
+    writer protocol over the same task body and commit as ``write_<fmt>``
+    (sinks/merge.py). ``sink(header, path, **options)`` returns the
+    format's ``(body, commit)``; its keyword-only parameters are the
+    write options (``write_*`` flags, integer otherwise). Tasks stage
+    attempt-unique parts; ``commit()`` finalizes only the parts named in
+    the successful tasks' messages, so retries are safe; ``abort()``
+    removes the parts directory."""
 
     BATCH = 4096
 
-    def __init__(self, options: dict, overwrite: bool):
-        from disq_spark.headers import VcfHeader
+    def __init__(self, options, overwrite: bool, schema, header, sink):
+        import inspect
 
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError('format("vcf") write requires .save(path)')
-        header_text = options.get("header_text")
-        header_path = options.get("header_path")
-        if header_text:
-            self.header = VcfHeader(
-                text=header_text if header_text.endswith("\n") else header_text + "\n"
-            )
-        elif header_path:
-            from disq_spark.sources.variants import read_header
-
-            self.header = read_header(header_path)
-        else:
-            raise ValueError(
-                'format("vcf") write requires option("header_path", ...) or '
-                'option("header_text", ...)'
-            )
-        self.compress = self.path.endswith((".gz", ".bgz"))
-        self.write_tbi = options.get("write_tbi", "false").lower() == "true"
-        if self.write_tbi and not self.compress:
-            raise ValueError("write_tbi requires a BGZF target (.gz/.bgz)")
-        if _dfs.exists(self.path) and not overwrite:
-            raise ValueError(f"path exists (use mode('overwrite')): {self.path}")
-        # overwrite deletion is deferred to finalize_single (post-validation)
-        self.parts_dir = self.path + ".parts"
+        path = options.get("path")
+        if _dfs.exists(path) and not overwrite:
+            raise ValueError(f"path exists (use mode('overwrite')): {path}")
+        params = inspect.signature(sink).parameters
+        kwargs = {
+            k: v.lower() == "true" if k.startswith("write_") else int(v)
+            for k, v in options.items()
+            if k in params and params[k].kind is inspect.Parameter.KEYWORD_ONLY
+        }
+        self.body, self.finish = sink(header, path, **kwargs)
+        self.columns = schema.fieldNames()
+        # an overwrite deletes the old target only in commit(), after the
+        # order check passed
+        self.parts_dir = path + ".parts"
         _dfs.makedirs(self.parts_dir)
 
-    def write(self, rows) -> VcfPartCommit:
+    def write(self, rows) -> _PartCommit:
+        import itertools
+
         import pandas as pd
-        from pyspark import TaskContext
 
-        from disq_spark.schemas import VARIANTS_COLUMNS
-        from disq_spark.sinks.variants import encode_vcf_part
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        part = os.path.join(
-            self.parts_dir, f"part-{pid:05d}-{uuid.uuid4().hex[:8]}"
-        )
+        from disq_spark.sinks import merge
 
         def batches():
-            # asDict keeps nested genotype Rows (format_vcf_line reads
-            # them by field name) and makes us order-independent
-            buf = []
-            for r in rows:
-                buf.append(r.asDict(recursive=False))
-                if len(buf) >= self.BATCH:
-                    yield pd.DataFrame(buf, columns=VARIANTS_COLUMNS)
-                    buf = []
-            if buf:
-                yield pd.DataFrame(buf, columns=VARIANTS_COLUMNS)
+            # asDict keeps nested Rows (format_vcf_line reads genotypes by
+            # field name)
+            it = iter(rows)
+            while chunk := list(itertools.islice(it, self.BATCH)):
+                yield pd.DataFrame([r.asDict(recursive=False) for r in chunk], columns=self.columns)
 
-        n = encode_vcf_part(
-            batches(), part, self.header.samples, self.compress, self.write_tbi
+        part, n = merge.stage_part(
+            merge.attempt_part_path(self.parts_dir), lambda out: self.body(batches(), out)
         )
-        return VcfPartCommit(part=part if n else "", n=n)
+        return _PartCommit(part, n)
 
     def commit(self, messages) -> None:
-        from disq_spark.sinks.variants import finalize_single
-
-        parts = sorted(m.part for m in messages if m is not None and m.part)
-        finalize_single(
-            self.path, self.parts_dir, self.header, parts, self.compress, self.write_tbi
-        )
+        self.finish(self.parts_dir, sorted(m.part for m in messages if m is not None and m.part))
 
     def abort(self, messages) -> None:
         from disq_spark.sinks.merge import cleanup
@@ -382,8 +290,15 @@ class VcfDataSource(_ScanSource):
 
         return scan_vcf(path, intervals=_intervals(o), mode=o.get("mode", "STRICT"), **_split(o))
 
-    def writer(self, schema, overwrite: bool) -> VcfWriter:
-        return VcfWriter(self.options, overwrite)
+    def writer(self, schema, overwrite: bool) -> SinkWriter:
+        from disq_spark.headers import VcfHeader
+        from disq_spark.sinks.variants import single_file_sink
+        from disq_spark.sources.variants import read_header
+
+        header = _write_header(
+            self.options, "vcf", lambda text: VcfHeader.from_lines(text.splitlines()), read_header
+        )
+        return SinkWriter(self.options, overwrite, schema, header, single_file_sink)
 
 
 class SamDataSource(_ScanSource):

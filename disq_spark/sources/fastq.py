@@ -13,13 +13,12 @@ to text):
      (tested over a split matrix).
 
 Write: text parts in parallel -> concat (single-file) or one file per
-partition (sharded), through the fs layer like every other sink.
+partition (sharded), on the write path every sink shares (sinks/merge.py).
 """
 
 from __future__ import annotations
 
-import io
-import os
+from functools import partial
 from typing import Iterator
 
 import pandas as pd
@@ -114,49 +113,26 @@ def scan_fastq(path: str, split_size: int | None = None) -> Scan:
 
 
 def write_fastq(df: DataFrame, path: str, single_file: bool | None = None) -> None:
-    """Write (name, comment, seq, qual) as FASTQ: single-file (parts ->
-    concat) or sharded directory."""
+    """Write (name, comment, seq, qual) as FASTQ on the shared write path
+    (sinks/merge.py): single-file (parts -> concat) or sharded directory.
+    FASTQ has no header, terminator or index."""
     if single_file is None:
         single_file = path.endswith((".fastq", ".fq"))
-    merge.prepare_overwrite(path)
+    layout = merge.Layout(ext=".fastq")
     if single_file:
-        parts_dir = path + ".parts"
-        _dfs.makedirs(parts_dir)
+        merge.write_single(df, path, _encode, partial(merge.commit_single, path, layout=layout))
     else:
-        _dfs.makedirs(path)
+        merge.write_sharded(df, path, _encode, layout)
 
-    def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        # attempt-unique staging (speculation/retry-safe): single-file
-        # parts keep the unique name (finalize uses the collected names);
-        # sharded parts publish by rename onto the canonical pid name
-        if single_file:
-            part_path = merge.attempt_part_path(parts_dir)
-            tmp = part_path + ".tmp"
-        else:
-            part_path = os.path.join(path, f"part-{pid:05d}.fastq")
-            tmp = merge.attempt_part_path(path, suffix=".fastq.tmp")
-        n = 0
-        with io.TextIOWrapper(_dfs.open_output(tmp), encoding="ascii") as f:
-            for pdf in batches:
-                for name, comment, seq, qual in zip(
-                    pdf["name"], pdf["comment"], pdf["seq"], pdf["qual"]
-                ):
-                    f.write(fq.format_record(name, comment, seq, qual))
-                    f.write("\n")
-                n += len(pdf)
-        if n > 0 or not single_file:
-            _dfs.rename(tmp, part_path)
-        else:
-            _dfs.remove(tmp)
-        yield pd.DataFrame({"part": [part_path if (n or not single_file) else ""], "n": [n]})
-
-    rows = df.mapInPandas(write_partition, "part string, n long").collect()
-    if single_file:
-        merge.concat_parts(path, merge.collected_parts(rows))
-        merge.cleanup(parts_dir)
+def _encode(batches, out):
+    """The FASTQ part encoder: 4-line records to ``out``; no sidecars."""
+    n = 0
+    for pdf in batches:
+        cols = zip(pdf["name"], pdf["comment"], pdf["seq"], pdf["qual"])
+        out.write("".join(fq.format_record(*rec) + "\n" for rec in cols).encode("ascii"))
+        n += len(pdf)
+    return n, None
 
 
 def pair_fastq(r1: DataFrame, r2: DataFrame) -> DataFrame:

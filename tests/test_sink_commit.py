@@ -8,6 +8,13 @@ attempt-unique part names, and the driver finalizes ONLY from the part
 names the successful attempts returned — never from a directory listing,
 which would include losing speculative attempts, stale impostors from a
 previous failed job, and orphaned .tmp files.
+
+The same commit owns failure cleanup for every single-file sink: a failed
+task or a refused order check leaves the pre-existing target untouched
+and removes ``<path>.parts``.
+
+Self-contained: inputs come from the ``planned_inputs`` fixture, the
+library's own sinks and ``fixtures/``.
 """
 
 import os
@@ -17,7 +24,9 @@ import pytest
 from disq_spark import fs as _dfs
 from disq_spark.sinks import merge
 
-FIXTURES = "/root/reference/src/test/resources"
+REF_FA = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures", "ref.fa"
+)
 
 
 def _mk_row(i, part):
@@ -68,13 +77,11 @@ def test_bam_single_file_excludes_impostor_and_tmp_orphan(spark, tmp_path):
     assert not os.path.exists(parts_dir)  # cleaned up
 
 
-def test_vcf_single_file_excludes_impostor(spark, tmp_path):
-    from disq_spark.headers import VcfHeader
+def test_vcf_single_file_excludes_impostor(spark, planned_inputs, tmp_path):
     from disq_spark.sinks.variants import write_vcf
     from disq_spark.sources.variants import read_vcf
 
-    src = os.path.join(FIXTURES, "test.vcf")
-    df, header = read_vcf(spark, src)
+    df, header = read_vcf(spark, planned_inputs["plain_vcf"])
     out = str(tmp_path / "out.vcf")
     parts_dir = out + ".parts"
     _dfs.makedirs(parts_dir)
@@ -88,12 +95,12 @@ def test_vcf_single_file_excludes_impostor(spark, tmp_path):
     assert back.count() == df.count()
 
 
-def test_sam_single_file_excludes_impostor(spark, tmp_path):
+def test_sam_single_file_excludes_impostor(spark, planned_inputs, tmp_path):
     from disq_spark.sinks.reads import write_sam
+    from disq_spark.sources.bam_source import read_bam
     from disq_spark.sources.reads import read_sam
 
-    src = os.path.join(FIXTURES, "test.sam")
-    df, header = read_sam(spark, src)
+    df, header = read_bam(spark, planned_inputs["bam"])
     out = str(tmp_path / "out.sam")
     parts_dir = out + ".parts"
     _dfs.makedirs(parts_dir)
@@ -244,7 +251,7 @@ def test_rejected_overwrite_preserves_existing_target(spark, tmp_path):
     assert not os.path.exists(out + ".parts")
 
 
-def test_build_sbi_excludes_losing_attempt_fragment(spark, tmp_path):
+def test_build_sbi_excludes_losing_attempt_fragment(spark, planned_inputs, tmp_path):
     """READ-side distributed index construction (build_sbi) has the same
     attempt-isolation obligation as the write sinks above: a losing
     speculative/zombie attempt's fragment (attempt-unique name, already
@@ -257,11 +264,12 @@ def test_build_sbi_excludes_losing_attempt_fragment(spark, tmp_path):
 
     from disq_spark.sources.bam_source import build_sbi
 
-    src = os.path.join(FIXTURES, "1-with-splitting-index.bam")
+    src = planned_inputs["bam"]
+    split = planned_inputs["bam_split"]
     clean = str(tmp_path / "clean.bam")
     shutil.copyfile(src, clean)
     truth = open(
-        build_sbi(spark, clean, split_size=150_000, granularity=1), "rb"
+        build_sbi(spark, clean, split_size=split, granularity=1), "rb"
     ).read()
 
     dirty = str(tmp_path / "dirty.bam")
@@ -272,12 +280,12 @@ def test_build_sbi_excludes_losing_attempt_fragment(spark, tmp_path):
     with open(os.path.join(parts_dir, "frag-00000-00000000"), "wb") as f:
         f.write(struct.pack("<4q", 1, 2, 3, 4))  # garbage virtual offsets
 
-    out = build_sbi(spark, dirty, split_size=150_000, granularity=1)
+    out = build_sbi(spark, dirty, split_size=split, granularity=1)
     assert open(out, "rb").read() == truth
     assert not os.path.exists(parts_dir)  # staging cleaned up
 
 
-def test_build_bai_excludes_losing_attempt_fragment(spark, tmp_path):
+def test_build_bai_excludes_losing_attempt_fragment(spark, planned_inputs, tmp_path):
     """Same guarantee for build_bai's per-chunk .bai fragments: a stale
     losing-attempt fragment AND its order sidecar planted in the parts
     dir must not perturb the merged index (merge set = collected task
@@ -287,14 +295,14 @@ def test_build_bai_excludes_losing_attempt_fragment(spark, tmp_path):
     from disq_spark.sinks.bam import write_bam
     from disq_spark.sources.bam_source import build_bai, read_bam
 
-    src = os.path.join(FIXTURES, "1-with-splitting-index.bam")
-    df, header = read_bam(spark, src, split_size=200_000)
+    split = planned_inputs["bam_split"]
+    df, header = read_bam(spark, planned_inputs["bam"], split_size=split)
     sorted_bam = str(tmp_path / "sorted.bam")
     write_bam(df.coalesce(1), header, sorted_bam, write_bai=False)
 
     clean = str(tmp_path / "clean.bam")
     shutil.copyfile(sorted_bam, clean)
-    truth = open(build_bai(spark, clean, split_size=100_000), "rb").read()
+    truth = open(build_bai(spark, clean, split_size=split), "rb").read()
 
     dirty = str(tmp_path / "dirty.bam")
     shutil.copyfile(sorted_bam, dirty)
@@ -307,6 +315,117 @@ def test_build_bai_excludes_losing_attempt_fragment(spark, tmp_path):
         parts_dir, impostor, {"first": [0, 0], "last": [0, 1], "unplaced": False}
     )
 
-    built = build_bai(spark, dirty, split_size=100_000)
+    built = build_bai(spark, dirty, split_size=split)
     assert open(built, "rb").read() == truth
     assert not os.path.exists(parts_dir)
+
+
+def _chrA_rows(n, first, unplaced=0):
+    """``n`` 10-base reads on fixtures/ref.fa's chrA from ``first`` on,
+    then ``unplaced`` unplaced unmapped reads."""
+    placed = [
+        dict(_mk_row(i, 0), name=f"a{first + i}", contig="chrA",
+             start=first + i, end=first + i + 9)
+        for i in range(n)
+    ]
+    return placed + [
+        dict(_mk_row(i, 0), name=f"u{first + i}", flags=4, contig=None, start=None,
+             end=None, mapq=None, cigar=None)
+        for i in range(unplaced)
+    ]
+
+
+CHRA_HEADER = "@HD\tVN:1.6\tSO:coordinate\n@SQ\tSN:chrA\tLN:30000\n"
+
+
+def _sink_case(spark, planned_inputs, fmt, tmp_path):
+    """(frame, write(frame, path), target path, index sidecars) for one
+    single-file sink."""
+    from disq_spark.headers import SamHeader
+    from disq_spark.schemas import READS_SCHEMA
+    from disq_spark.sinks.bam import write_bam
+    from disq_spark.sinks.cram import write_cram
+    from disq_spark.sinks.reads import write_sam
+    from disq_spark.sinks.variants import write_vcf
+    from disq_spark.sources.fastq import read_fastq, write_fastq
+    from disq_spark.sources.variants import read_vcf
+
+    if fmt == "vcf":
+        df, vheader = read_vcf(spark, planned_inputs["plain_vcf"])
+        return (df, lambda d, p: write_vcf(d, vheader, p, write_tbi=True),
+                str(tmp_path / "out.vcf.bgz"), (".tbi",))
+    if fmt == "fastq":
+        fastq = os.path.join(os.path.dirname(REF_FA), "sample.fastq")
+        return read_fastq(spark, fastq), write_fastq, str(tmp_path / "out.fastq"), ()
+    header = SamHeader(text=CHRA_HEADER)
+    df = spark.createDataFrame(_chrA_rows(40, 1), READS_SCHEMA)
+    write, idx = {
+        "bam": (lambda d, p: write_bam(d, header, p), (".sbi", ".bai")),
+        "cram": (lambda d, p: write_cram(d, header, p, reference_path=REF_FA), (".crai",)),
+        "sam": (lambda d, p: write_sam(d, header, p), ()),
+    }[fmt]
+    return df, write, str(tmp_path / f"out.{fmt}"), idx
+
+
+def _failing(df):
+    """``df`` over two partitions whose second task fails."""
+    from pyspark.sql import functions as F
+
+    c = df.columns[0]
+    return df.repartition(2).withColumn(
+        c, F.when(F.spark_partition_id() == 1, F.raise_error("task failure")).otherwise(F.col(c))
+    )
+
+
+@pytest.mark.parametrize("fmt", ["bam", "vcf", "cram", "sam", "fastq"])
+def test_failed_task_keeps_existing_target(spark, planned_inputs, tmp_path, fmt):
+    """A single-file write whose job fails must leave yesterday's file
+    and its indexes byte-for-byte in place: the old target is deleted
+    only in the commit, after every task has succeeded."""
+    df, write, out, idx = _sink_case(spark, planned_inputs, fmt, tmp_path)
+    write(df.coalesce(1), out)
+    want = {p: open(p, "rb").read() for p in [out] + [out + e for e in idx]}
+
+    with pytest.raises(Exception, match="task failure"):
+        write(_failing(df), out)
+    for p, content in want.items():
+        assert os.path.exists(p) and open(p, "rb").read() == content
+
+
+@pytest.mark.parametrize("fmt", ["bam", "vcf", "cram", "sam", "fastq"])
+def test_failed_task_removes_parts_dir(spark, planned_inputs, tmp_path, fmt):
+    """A failed job leaves no ``<path>.parts`` behind, the parts the
+    successful tasks staged included."""
+    df, write, out, _idx = _sink_case(spark, planned_inputs, fmt, tmp_path)
+    with pytest.raises(Exception, match="task failure"):
+        write(_failing(df), out)
+    assert not os.path.exists(out + ".parts")
+    assert not os.path.exists(out)
+
+
+@pytest.mark.parametrize("fmt", ["bam", "cram"])
+def test_placed_part_after_unplaced_reads_refused(spark, tmp_path, fmt):
+    """Part 0 = [chrA:1-5, 3 unplaced], part 1 = [chrA:101-105]: each part
+    is sorted, but the file would hold unplaced reads mid-way. BAM and
+    CRAM share one cross-part order rule and refuse it before any target
+    byte is written."""
+    from disq_spark.headers import SamHeader
+    from disq_spark.schemas import READS_SCHEMA
+    from disq_spark.sinks.bam import write_bam
+    from disq_spark.sinks.cram import write_cram
+
+    sc = spark.sparkContext
+    rdd = sc.parallelize(_chrA_rows(5, 1, unplaced=3), 1).union(
+        sc.parallelize(_chrA_rows(5, 101), 1)
+    )
+    df = spark.createDataFrame(rdd, READS_SCHEMA)
+    header = SamHeader(text=CHRA_HEADER)
+    out = str(tmp_path / f"bad.{fmt}")
+    with pytest.raises(ValueError, match="unplaced reads last"):
+        if fmt == "bam":
+            write_bam(df, header, out)
+        else:
+            write_cram(df, header, out, reference_path=REF_FA)
+    assert not os.path.exists(out)
+    assert not os.path.exists(out + (".bai" if fmt == "bam" else ".crai"))
+    assert not os.path.exists(out + ".parts")
