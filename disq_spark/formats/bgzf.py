@@ -174,6 +174,17 @@ def decompress_block(f: BinaryIO, pos: int) -> bytes:
     return zlib.decompressobj(15 + 16).decompress(data)
 
 
+def data_end(path: str) -> int:
+    """Byte offset where a BGZF file's data ends: before its trailing EOF
+    block, or the file size when it has none — the position htsjdk's
+    SBIIndexWriter records as the end-of-data sentinel."""
+    size = fs.getsize(path)
+    with fs.open_input(path) as f:
+        f.seek(max(size - len(EOF_BLOCK), 0))
+        has_eof = f.read(len(EOF_BLOCK)) == EOF_BLOCK
+    return size - len(EOF_BLOCK) if has_eof else size
+
+
 def read_range(path: str, start: int, end: int) -> bytes:
     """Decompressed bytes of every block starting in [start, end)."""
     out = []

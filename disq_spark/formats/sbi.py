@@ -7,10 +7,11 @@ Format (htsjdk SBIIndex, verified against the reference fixture
   then numOffsets x virtualOffset:i64 (ascending; the last offset is the
   virtual end-of-data position).
 
-Distributed build-and-merge parity (SURVEY.md §2.4): each part writes its
-own index fragment during encode; the merger shifts every virtual offset
-by the cumulative compressed length of preceding parts
-(SbiMerger.java:39-64 + htsjdk SBIIndexMerger semantics).
+Distributed build-and-merge parity (SURVEY.md §2.4): each written part,
+or each planned chunk of an existing file, writes its own index
+fragment; ``merge_sbi`` streams them into one index, shifting every
+virtual offset by the cumulative compressed length of preceding parts
+(SbiMerger.java:39-64 + htsjdk SBIIndexMerger semantics; zero for chunks).
 """
 
 from __future__ import annotations
@@ -68,61 +69,55 @@ def write_sbi(path: str, index: SbiIndex) -> None:
         f.write(struct.pack(f"<{len(index.offsets)}q", *index.offsets))
 
 
-def write_sbi_stream(
-    path: str,
-    file_length: int,
-    total_records: int,
-    granularity: int,
-    num_offsets: int,
-    blob_paths: list[str],
-    tail_offset: int,
-    buf_size: int = 8 * 1024 * 1024,
-) -> None:
-    """Write an .sbi by STREAMING pre-packed little-endian int64 offset
-    blobs from fragment files, never materializing the offset array.
-
-    This is the driver-memory-bounded path for index construction over
-    very large inputs (10^12 records at granularity 1 would be ~8 TB of
-    offsets — nothing any single heap should hold): tasks write their
-    packed offsets as fragment files, the driver concatenates them here
-    in chunk order and appends the end-of-data sentinel. Driver peak
-    memory is O(buf_size), independent of record count.
-    """
-    with fs.open_output(path) as f:
-        f.write(MAGIC)
-        f.write(struct.pack("<q", file_length))
-        f.write(b"\x00" * 32)  # md5 + uuid (optional integrity fields)
-        f.write(struct.pack("<qqq", total_records, granularity, num_offsets))
-        for bp in blob_paths:
-            with fs.open_input(bp) as src:
-                while True:
-                    chunk = src.read(buf_size)
-                    if not chunk:
-                        break
-                    f.write(chunk)
-        f.write(struct.pack("<q", tail_offset))
-
-
 def merge_sbi(
-    parts: list[SbiIndex],
+    path: str,
+    fragments: list[str],
     part_lengths: list[int],
-    final_voff: int,
+    granularity: int,
     base_offset: int = 0,
-) -> SbiIndex:
-    """Merge per-part indexes for a concatenation of those parts.
+    buf_offsets: int = 1 << 20,
+) -> None:
+    """Write ``path + '.sbi'`` for ``path``, the concatenation of parts
+    whose ``.sbi`` fragments are ``fragments``, by STREAMING their offsets.
 
-    ``part_lengths[i]`` is the compressed byte length of part i as laid
-    out in the final file (header part included in the shift base).
-    Virtual offsets shift by (cumulative_bytes << 16); intra-block
-    offsets are preserved (IndexFileMerger.java:48-105 semantics).
-    """
-    offsets: list[int] = []
-    shift_bytes = base_offset  # e.g. the concatenated header's length
-    total = 0
-    for idx, plen in zip(parts, part_lengths):
-        for vo in idx.offsets[:-1]:  # drop each part's end-sentinel
-            offsets.append(((vo >> 16) + shift_bytes) << 16 | (vo & 0xFFFF))
-        total += idx.total_records
-        shift_bytes += plen
-    offsets.append(final_voff)
-    return SbiIndex(file_length=0, total_records=total, granularity=parts[0].granularity if parts else 1, offsets=offsets)
+    ``part_lengths[i]`` is the compressed byte length of part i in
+    ``path`` and ``base_offset`` the bytes before the first part (the
+    header): each part's offsets shift by the bytes before it
+    (IndexFileMerger.java:48-105 semantics; all zeros when the fragments
+    index chunks of ``path`` itself). Each fragment's end sentinel is
+    dropped and ``path``'s end of data appended. The fragments' own
+    granularity is recorded; ``granularity`` is the one requested for
+    the parts, recorded when no part held a record. The offsets are copied
+    ``buf_offsets`` at a time, so driver memory is bounded by that buffer
+    whatever the record count (10^12 records at granularity 1 would be
+    ~8 TB of offsets)."""
+    import numpy as np
+
+    from disq_spark.formats import bgzf
+
+    heads = []
+    for frag in fragments:
+        with fs.open_input(frag) as f:
+            head = f.read(68)
+        if head[:4] != MAGIC:
+            raise ValueError(f"not an SBI index: {frag}")
+        heads.append(struct.unpack_from("<qqq", head, 44))
+    with fs.open_output(path + ".sbi") as out:
+        out.write(MAGIC)
+        out.write(struct.pack("<q", fs.getsize(path)))
+        out.write(b"\x00" * 32)  # md5 + uuid (optional integrity fields)
+        n_offsets = sum(noff - 1 for _n, _g, noff in heads) + 1
+        granularity = heads[0][1] if heads else granularity
+        out.write(struct.pack("<qqq", sum(n for n, _g, _o in heads), granularity, n_offsets))
+        shift = base_offset
+        for frag, (_n, _g, noff), plen in zip(fragments, heads, part_lengths):
+            with fs.open_input(frag) as f:
+                f.read(68)
+                left = noff - 1
+                while left:
+                    k = min(left, buf_offsets)
+                    block = np.frombuffer(f.read(8 * k), dtype="<i8")
+                    out.write((block + (shift << 16)).astype("<i8").tobytes())
+                    left -= k
+            shift += plen
+        out.write(struct.pack("<q", bgzf.data_end(path) << 16))

@@ -288,9 +288,10 @@ def write_tbi(path: str, idx: TabixIndex, fragment: bool = False) -> None:
     (hts_idx_finish convention), and the trailing u64 records the
     no-coordinate count.
 
-    ``fragment=True`` = hidden per-part intermediate: linear stored
-    biased (v+1, 0 = absent) because part-relative voff 0 is a real
-    offset, and absent windows stay absent for the merge's min logic."""
+    ``fragment=True`` = hidden per-part intermediate: bins in
+    first-record order, linear stored biased (v+1, 0 = absent) because
+    part-relative voff 0 is a real offset, and absent windows stay absent
+    for the merge's min logic."""
     body = bytearray()
     body += b"TBI\x01"
     names_blob = b"".join(n.encode("utf-8") + b"\x00" for n in idx.names)
@@ -305,11 +306,9 @@ def write_tbi(path: str, idx: TabixIndex, fragment: bool = False) -> None:
         if st is not None:
             # pseudo-bin registers last (tabix adds it at ref finish)
             rbins[PSEUDO_BIN] = [(st[0], st[1]), (st[2], st[3])]
-        order = (
-            sorted(rbins)
-            if fragment
-            else _khash_layout_order(list(rbins))
-        )
+        # a fragment keeps first-record order, which the merge turns into
+        # the khash insertion order of the final index
+        order = list(rbins) if fragment else _khash_layout_order(list(rbins))
         body += struct.pack("<i", len(order))
         for b in order:
             chunks = rbins[b]

@@ -3,8 +3,10 @@ sharded, on the shared write path (sinks/merge.py).
 
 Re-expresses BamSink.java:60-139 + HeaderlessBamOutputFormat.java:57-194.
 What is BAM's own:
-- the part encoder: headerless, terminatorless BGZF records plus hidden
-  per-part ``.sbi`` (every ``granularity``-th record's virtual offset,
+- the part encoder: headerless, terminatorless BGZF records fed to the
+  one ``PartIndexer`` (also run by ``build_sbi``/``build_bai`` over the
+  chunks of an existing file), which writes the hidden per-part ``.sbi``
+  (every ``granularity``-th record's virtual offset,
   HeaderlessBamOutputFormat.java:111-130) and ``.bai`` fragments and the
   reads ``.order`` sidecar (``PartOrder``, shared with CRAM);
 - the BGZF-compressed header (magic + text + ref dict) and the 28-byte
@@ -17,15 +19,15 @@ What is BAM's own:
 
 Scale note: concat is the only sequential step (O(bytes) locally,
 O(#parts) with HDFS concat); index merge is O(#records/granularity)
-driver-side — at 100 TB use granularity 4096 (htsjdk default) to keep
+driver-side time, and the ``.sbi`` merge streams, so its driver memory
+is one buffer — at 100 TB use granularity 4096 (htsjdk default) to keep
 fragments tiny. Sharded mode has no sequential step at all.
 """
 
 from __future__ import annotations
 
-from disq_spark import fs as _dfs
-
 import os
+from functools import partial
 from typing import Iterator
 
 import pandas as pd
@@ -61,7 +63,7 @@ def write_bam(
         merge.write_single(df, path, body, commit)
     else:
         refs = header.sequences
-        merge.write_sharded(df, path, _body(refs, sbi_granularity, False), _layout(header, refs))
+        merge.write_sharded(df, path, _body(refs, sbi_granularity, False, False), layout(header, refs))
 
 
 def single_file_sink(
@@ -82,31 +84,40 @@ def single_file_sink(
     refs = header.sequences
 
     def commit(parts_dir: str, parts: list[str]) -> None:
-        finalize_single(path, parts_dir, header, refs, parts, write_sbi, write_bai)
+        finalize_single(
+            path, parts_dir, header, refs, parts, write_sbi, write_bai, granularity=sbi_granularity
+        )
 
-    return _body(refs, sbi_granularity, write_bai), commit
+    return _body(refs, sbi_granularity, write_sbi, write_bai), commit
 
 
-def _body(refs: list[tuple[str, int]], granularity: int, with_bai: bool):
+def _body(refs: list[tuple[str, int]], granularity: int, with_sbi: bool, with_bai: bool):
     ref_index = {name: i for i, (name, _l) in enumerate(refs)}
 
     def body(batches, out):
         rows = (row for pdf in batches for row in pdf.to_dict("records"))
-        return _encode(rows, out, ref_index, granularity, with_bai)
+        return _encode(rows, out, ref_index, granularity, with_sbi, with_bai)
 
     return body
 
 
-def _layout(
-    header: SamHeader, refs: list[tuple[str, int]], with_sbi: bool = False, with_bai: bool = False
+def layout(
+    header: SamHeader,
+    refs: list[tuple[str, int]],
+    with_sbi: bool = False,
+    with_bai: bool = False,
+    granularity: int = DEFAULT_GRANULARITY,
 ) -> merge.Layout:
+    """BAM's layout; its order rule and index merges also commit
+    ``build_sbi``/``build_bai``."""
     return merge.Layout(
         header=bgzf.compress_all(bamcodec.encode_bam_header(header.text, refs), terminate=False),
         terminator=bgzf.EOF_BLOCK,
         ext=".bam",
         stale=(".sbi", ".bai"),
         check_order=_check_cross_part_order if with_bai else None,
-        indexes=((".sbi", _merge_sbi),) * with_sbi + ((".bai", _merge_bai),) * with_bai,
+        indexes=((".sbi", partial(_merge_sbi, granularity=granularity)),) * with_sbi
+        + ((".bai", partial(_merge_bai, n_ref=len(refs))),) * with_bai,
     )
 
 
@@ -149,6 +160,69 @@ class PartOrder:
         )
 
 
+class PartIndexer:
+    """The per-record index feed of one BAM part, shared by the part
+    encoder and ``build_sbi``/``build_bai``'s chunk scan: every
+    ``granularity``-th record's start for the ``.sbi`` fragment
+    (HeaderlessBamOutputFormat.java:111-130), ``BaiBuilder.add`` and the
+    ``PartOrder`` of the ``.order`` sidecar for the ``.bai`` fragment.
+    Offsets are part-relative for a written part, absolute for a chunk
+    of an existing file."""
+
+    def __init__(self, ref_index: dict[str, int], granularity: int, with_sbi: bool, with_bai: bool, what: str):
+        self.ref_index = ref_index
+        self.granularity = granularity
+        self.n = 0
+        self.offsets: list[int] | None = [] if with_sbi else None
+        self.bai = baimod.BaiBuilder(len(ref_index)) if with_bai else None
+        # PartOrder proves WITHIN-part order; its .order sidecar lets the
+        # driver prove it ACROSS parts (per-part-sorted but globally-
+        # interleaved input would otherwise still produce a silently-
+        # corrupt merged .bai)
+        self.order = PartOrder(what)
+
+    def add(self, v_start: int, v_end: int, contig=None, start=None, end=None, flags=0) -> None:
+        """One record occupying [v_start, v_end); the alignment fields
+        matter only with a ``.bai``."""
+        if self.offsets is not None and self.n % self.granularity == 0:
+            self.offsets.append(v_start)
+        self.n += 1
+        if self.bai is None:
+            return
+        if contig is None or start is None or pd.isna(start):
+            self.bai.add(-1, -1, -1, 0, v_start, v_end, False)
+            self.order.add(None)
+            return
+        pos0 = int(start) - 1
+        end0 = int(end) if end is not None and not pd.isna(end) else pos0 + 1
+        ref_id = self.ref_index[contig]
+        self.order.add((ref_id, pos0))
+        self.bai.add(
+            ref_id, pos0, end0, _reg2bin(pos0, max(end0, pos0 + 1)),
+            v_start, v_end, int(flags) & FLAG_UNMAPPED == 0,
+        )
+
+    def sidecars(self, end_voff: int, dangling: int = 0):
+        """Writer of the part's ``.sbi``/``.bai`` fragments and ``.order``
+        sidecar; ``end_voff`` is the part's end, which also replaces the
+        last record's ``dangling`` pre-flush end."""
+
+        def write(part: str) -> None:
+            if self.offsets is not None:
+                sbimod.write_sbi(
+                    merge.fragment(part, ".sbi"),
+                    sbimod.SbiIndex(end_voff >> 16, self.n, self.granularity, self.offsets + [end_voff]),
+                )
+            if self.bai is not None:
+                built = self.bai.build()
+                if dangling & 0xFFFF:
+                    baimod.patch_dangling_end(built, dangling, end_voff)
+                baimod.write_bai(merge.fragment(part, ".bai"), built, fragment=True)
+                self.order.write(part)
+
+        return write
+
+
 def encode_part(
     rows: Iterator[dict],
     part_path: str,
@@ -160,63 +234,22 @@ def encode_part(
     optionally .bai) fragments next to it; returns the record count.
     Empty input writes nothing."""
     return merge.stage_part(
-        part_path, lambda out: _encode(rows, out, ref_index, granularity, with_bai)
+        part_path, lambda out: _encode(rows, out, ref_index, granularity, True, with_bai)
     )[1]
 
 
-def _encode(rows, out, ref_index: dict[str, int], granularity: int, with_bai: bool):
+def _encode(rows, out, ref_index: dict[str, int], granularity: int, with_sbi: bool, with_bai: bool):
     """The BAM part encoder: records to ``out`` as terminatorless BGZF;
     returns ``(n, sidecars)``."""
-    n = 0
-    offsets: list[int] = []
-    bai = baimod.BaiBuilder(len(ref_index)) if with_bai else None
-    # PartOrder proves WITHIN-part order; its .order sidecar lets the
-    # driver prove it ACROSS parts (per-part-sorted but globally-
-    # interleaved input would otherwise still produce a silently-corrupt
-    # merged .bai)
-    order = PartOrder(".bai build")
+    index = PartIndexer(ref_index, granularity, with_sbi, with_bai, ".bai build")
     w = bgzf.BgzfWriter(out, terminate=False)
     for row in rows:
         v_start = w.virtual_offset
-        if n % granularity == 0:
-            offsets.append(v_start)
         w.write(bamcodec.encode_record(row, ref_index))
-        n += 1
-        if bai is not None:
-            contig, start = row["contig"], row["start"]
-            if contig is None or start is None or pd.isna(start):
-                bai.add(-1, -1, -1, 0, v_start, w.virtual_offset, False)
-                order.add(None)
-            else:
-                pos0 = int(start) - 1
-                end0 = int(row["end"]) if row["end"] is not None and not pd.isna(row["end"]) else pos0 + 1
-                order.add((ref_index[contig], pos0))
-                bai.add(
-                    ref_index[contig],
-                    pos0,
-                    end0,
-                    _reg2bin(pos0, max(end0, pos0 + 1)),
-                    v_start,
-                    w.virtual_offset,
-                    int(row["flags"]) & FLAG_UNMAPPED == 0,
-                )
+        index.add(v_start, w.virtual_offset, row["contig"], row["start"], row["end"], row["flags"])
     dangling = w.virtual_offset  # last record's end, pre-final-flush
     w.close()
-
-    def sidecars(part: str) -> None:
-        offsets.append(w.compressed_len << 16)  # end-of-part sentinel
-        sbimod.write_sbi(
-            merge.fragment(part, ".sbi"),
-            sbimod.SbiIndex(w.compressed_len, n, granularity, offsets),
-        )
-        if bai is not None:
-            built = bai.build()
-            if dangling & 0xFFFF:
-                baimod.patch_dangling_end(built, dangling, w.compressed_len << 16)
-            baimod.write_bai(merge.fragment(part, ".bai"), built, fragment=True)
-            order.write(part)
-
-    return n, sidecars
+    return index.n, index.sidecars(w.compressed_len << 16, dangling)
 
 
 def _check_cross_part_order(parts_dir: str, part_paths: list[str]) -> None:
@@ -268,24 +301,29 @@ def finalize_single(
     part_paths: list[str],
     with_sbi: bool,
     with_bai: bool,
+    granularity: int = DEFAULT_GRANULARITY,
 ) -> None:
     """Driver-side single-file commit (BamSink.java:96-137) through
     ``merge.commit_single``: compressed header, concat in part order,
-    BGZF terminator, offset-shifted .sbi/.bai merges."""
-    merge.commit_single(path, parts_dir, part_paths, _layout(header, refs, with_sbi, with_bai))
-
-
-def _merge_sbi(path: str, fragments: list[str], lengths: list[int]) -> None:
-    merged = sbimod.merge_sbi(
-        [sbimod.read_sbi(f) for f in fragments],
-        lengths[1:],  # part lengths, in concat order
-        final_voff=sum(lengths) << 16,
-        base_offset=lengths[0],  # header block length
+    BGZF terminator, offset-shifted .sbi/.bai merges. ``granularity`` is
+    the requested ``.sbi`` granularity, which the merge records when no
+    part holds a record (else the parts' fragments carry it)."""
+    merge.commit_single(
+        path, parts_dir, part_paths, layout(header, refs, with_sbi, with_bai, granularity)
     )
-    merged.file_length = _dfs.getsize(path)
-    sbimod.write_sbi(path + ".sbi", merged)
 
 
-def _merge_bai(path: str, fragments: list[str], lengths: list[int]) -> None:
+def _merge_sbi(path: str, fragments: list[str], lengths: list[int], granularity: int) -> None:
+    sbimod.merge_sbi(path, fragments, lengths[1:], granularity, base_offset=lengths[0])
+
+
+def _merge_bai(path: str, fragments: list[str], lengths: list[int], n_ref: int) -> None:
     parts = [baimod.read_bai(f, fragment=True) for f in fragments]
-    baimod.write_bai(path + ".bai", baimod.merge_bai(parts, lengths[1:], base_offset=lengths[0]))
+    # no records: a legal index still carries one empty entry per
+    # reference sequence
+    merged = (
+        baimod.merge_bai(parts, lengths[1:], base_offset=lengths[0])
+        if parts
+        else baimod.BaiBuilder(n_ref).build()
+    )
+    baimod.write_bai(path + ".bai", merged)

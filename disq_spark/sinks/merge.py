@@ -16,6 +16,13 @@ part's hidden index fragment and ``.order`` sidecar (or None).
   clear the old target, header, concat, terminator, index merges; a
   failure removes only what this call created, and the parts directory
   goes either way.
+- ``commit_indexes``: the one index commit inside it — the order check,
+  then the ``Layout.indexes`` merges with each part's shift.
+- ``build_index``: the same index path for an existing file
+  (``build_sbi``/``build_bai``/``build_tbi``). Each planned chunk runs
+  the format's part indexer and stages its fragments like a written
+  part; its virtual offsets are already absolute, so the commit shifts
+  by 0.
 - ``write_single`` / ``write_sharded``: one ``mapInPandas(...).collect()``
   job each. Sharded output publishes ``part-{pid:05d}{ext}`` = header +
   body + terminator per partition.
@@ -56,8 +63,9 @@ class Layout:
     would break the index's coordinate order. Each ``indexes`` entry is
     ``(ext, merge)``: ``merge(path, fragments, lengths)`` writes
     ``path + ext`` from the parts' ``ext`` fragments, where ``lengths``
-    are the concatenated byte lengths (header first). ``stale`` names the
-    index sidecars an overwrite clears."""
+    are the concatenated byte lengths (header first), all 0 when the
+    parts are chunks of an existing ``path``. ``stale`` names the index
+    sidecars an overwrite clears (every ``indexes`` ext among them)."""
 
     header: bytes = b""
     terminator: bytes = b""
@@ -68,15 +76,17 @@ class Layout:
 
 
 def attempt_part_path(parts_dir: str, prefix: str = "part", suffix: str = "") -> str:
-    """Attempt-unique staging name: ``{prefix}-{pid:05d}-{uuid8}{suffix}``.
+    """Attempt-unique staging name: ``{prefix}-{pid:010d}-{uuid8}{suffix}``.
 
     The uuid suffix is the retry/speculation guard (the Hadoop
     OutputCommitter guarantee the reference gets from
     saveAsNewAPIHadoopFile, BamSink.java:82-94): two live attempts of one
     task stage to DIFFERENT paths, so neither can interleave the other's
-    writes. The zero-padded pid prefix keeps lexicographic sort ==
-    partition order, so the driver can finalize from the sorted collected
-    names (``write_single`` and the DataSource writer both do).
+    writes. The pid is padded to 10 digits, the width of the largest
+    Spark partition id (a Java int), so lexicographic sort == partition
+    order for every job, and the driver can finalize from the sorted
+    collected names (``write_single``, ``build_index`` and the DataSource
+    writer all do).
     """
     import uuid
 
@@ -84,7 +94,7 @@ def attempt_part_path(parts_dir: str, prefix: str = "part", suffix: str = "") ->
 
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else 0
-    return os.path.join(parts_dir, f"{prefix}-{pid:05d}-{uuid.uuid4().hex[:8]}{suffix}")
+    return os.path.join(parts_dir, f"{prefix}-{pid:010d}-{uuid.uuid4().hex[:8]}{suffix}")
 
 
 def fragment(part: str, ext: str) -> str:
@@ -156,29 +166,29 @@ def write_single(df, path: str, body, commit) -> None:
 
 
 def commit_single(path: str, parts_dir: str, parts: list[str], layout: Layout) -> None:
-    """The one single-file commit: cross-part order check, then clear the
-    old target and its stale sidecars, header, concat in part order,
-    terminator, index merges, cleanup.
+    """The one single-file commit: ``commit_indexes`` around the data
+    write — clear the old target and its stale sidecars, header, concat
+    in part order, terminator — then cleanup.
 
     The order check runs before any target byte is written, and a failure
     removes ONLY the outputs this call created — a rejected overwrite
     leaves the pre-existing target and its indexes untouched."""
     created: list[str] = []
-    try:
-        if layout.check_order is not None:
-            layout.check_order(parts_dir, parts)
+
+    def write_data() -> list[int]:
         prepare_overwrite(path, layout.stale)
         header_path = os.path.join(parts_dir, "_header")
         with _dfs.open_output(header_path) as f:
             f.write(layout.header)
-        created.append(path)
+        created.extend([path] + [path + ext for ext, _merge in layout.indexes])
         lengths = concat_parts(path, [header_path] + parts)
         if layout.terminator:
             with _dfs.open_append(path) as f:
                 f.write(layout.terminator)
-        for ext, merge_index in layout.indexes:
-            created.append(path + ext)
-            merge_index(path, [fragment(p, ext) for p in parts], lengths)
+        return lengths
+
+    try:
+        commit_indexes(path, parts_dir, parts, layout, write_data)
     except BaseException:
         for leftover in created:
             if _dfs.exists(leftover):
@@ -186,6 +196,50 @@ def commit_single(path: str, parts_dir: str, parts: list[str], layout: Layout) -
         raise
     finally:
         cleanup(parts_dir)
+
+
+def commit_indexes(path: str, parts_dir: str, parts: list[str], layout: Layout, write_data) -> None:
+    """The one index commit: the layout's cross-part order check, then
+    ``write_data() -> lengths`` (header first, one per part), then each
+    ``layout.indexes`` merge of the parts' fragments shifted by those
+    lengths."""
+    if layout.check_order is not None:
+        layout.check_order(parts_dir, parts)
+    lengths = write_data()
+    for ext, merge_index in layout.indexes:
+        merge_index(path, [fragment(p, ext) for p in parts], lengths)
+
+
+def build_index(spark, path: str, ext: str, plan, index_chunk, layout: Layout) -> str:
+    """Index an existing file as if its planned chunks were written parts:
+    one ``plan_frame(...).collect()`` job runs ``index_chunk(key, start,
+    end) -> (n, sidecars)`` per chunk — the format's part indexer over the
+    chunk's records — and stages the sidecars under ``<path><ext>.parts``
+    with ``attempt_part_path`` names; the collected rows (never a
+    directory listing) go through ``commit_indexes``. Returns
+    ``path + ext``."""
+    import pandas as pd
+
+    from disq_spark.sources.plan import plan_frame
+
+    parts_dir = path + ext + ".parts"
+    _dfs.makedirs(parts_dir)
+
+    def task(key: str, start: int, end: int):
+        part = attempt_part_path(parts_dir)
+        n, sidecars = index_chunk(key, start, end)
+        if n:
+            sidecars(part)
+        yield pd.DataFrame({"part": [part if n else ""], "n": [n]})
+
+    try:
+        rows = plan_frame(spark, plan, task, PART_SCHEMA).collect()
+        parts = collected_parts(rows)
+        # chunks of ``path`` itself: virtual offsets are already absolute
+        commit_indexes(path, parts_dir, parts, layout, lambda: [0] * (len(parts) + 1))
+    finally:
+        cleanup(parts_dir)
+    return path + ext
 
 
 def write_sharded(df, path: str, body, layout: Layout) -> None:

@@ -3,10 +3,13 @@ the shared write path (sinks/merge.py).
 
 Re-expresses VcfSink.java:52-131 / VcfSinkMultiple.java:38-72. What is
 VCF's own: the part encoder (text lines, BGZF-compressed when the target
-is .bgz/.gz — VcfSink.java:66 — plus a hidden .tbi fragment and the
-``.order`` sidecar when indexing), the (compressed) header and BGZF
-terminator, the contig-grouped order rule and the .tbi merge
-(VcfSink.java:87-127). Sharded output is one plain VCF per partition.
+is .bgz/.gz — VcfSink.java:66 — fed to the one ``PartIndexer`` when
+indexing, which writes a hidden .tbi fragment and the ``.order``
+sidecar), the (compressed) header and BGZF terminator, the
+contig-grouped order rule and the .tbi merge (VcfSink.java:87-127).
+``build_tbi`` runs the same indexer, order rule and merge over the
+chunks of an existing file. Sharded output is one plain VCF per
+partition.
 
 Format/cardinality dispatch follows VcfFormat.fromPath semantics
 (VcfFormat.java:82-93): a path with a VCF extension -> SINGLE, else a
@@ -23,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from disq_spark.formats import bgzf
+from disq_spark.formats import tabix as tbimod
 from disq_spark.formats.vcf import format_vcf_batch
 from disq_spark.headers import VcfHeader
 from disq_spark.sinks import merge
@@ -56,7 +60,7 @@ def write_vcf(
         merge.write_single(df, path, *single_file_sink(header, path, write_tbi=write_tbi))
     else:
         body = partial(_encode, samples=header.samples)
-        merge.write_sharded(df, path, body, _layout(header, False))
+        merge.write_sharded(df, path, body, layout(header, False))
 
 
 def single_file_sink(header: VcfHeader, path: str, *, write_tbi: bool = False):
@@ -73,7 +77,9 @@ def single_file_sink(header: VcfHeader, path: str, *, write_tbi: bool = False):
     return partial(_encode, samples=header.samples, compress=compress, with_tbi=write_tbi), commit
 
 
-def _layout(header: VcfHeader, compress: bool, with_tbi: bool = False) -> merge.Layout:
+def layout(header: VcfHeader, compress: bool, with_tbi: bool = False) -> merge.Layout:
+    """VCF's layout; its order rule and .tbi merge also commit
+    ``build_tbi``."""
     text = header.text.encode("utf-8")
     return merge.Layout(
         header=bgzf.compress_all(text, terminate=False) if compress else text,
@@ -83,6 +89,50 @@ def _layout(header: VcfHeader, compress: bool, with_tbi: bool = False) -> merge.
         check_order=_check_cross_part_order if with_tbi else None,
         indexes=((".tbi", _merge_tbi),) if with_tbi else (),
     )
+
+
+class PartIndexer:
+    """The per-record index feed of one VCF part, shared by the part
+    encoder and ``build_tbi``'s chunk scan: ``TbiBuilder.add`` plus the
+    first/last (contig, pos) and contig sequence of the ``.order``
+    sidecar. The builder guard proves within-part order, the sidecar
+    lets the driver prove it across parts (``_check_cross_part_order``).
+    Offsets are part-relative for a written part, absolute for a chunk
+    of an existing file."""
+
+    def __init__(self) -> None:
+        self.tbi = tbimod.TbiBuilder()
+        self.n = 0
+        self.first: tuple[str, int] | None = None
+        self.last: tuple[str, int] | None = None
+
+    def add(self, contig: str, start: int, end: int, v_start: int, v_end: int) -> None:
+        self.tbi.add(contig, start, end, v_start, v_end)
+        self.n += 1
+        self.last = (contig, start)
+        if self.first is None:
+            self.first = self.last
+
+    def sidecars(self, end_voff: int, dangling: int = 0):
+        """Writer of the part's ``.tbi`` fragment and ``.order`` sidecar;
+        ``end_voff`` (the part's end) replaces the last record's
+        ``dangling`` pre-flush end."""
+
+        def write(part: str) -> None:
+            built = self.tbi.build()
+            if dangling & 0xFFFF:
+                tbimod.patch_dangling_end(built, dangling, end_voff)
+            tbimod.write_tbi(merge.fragment(part, ".tbi"), built, fragment=True)
+            # contigs = the part's FULL contig sequence in order (the
+            # builder registers them by first appearance) — first/last
+            # alone would hide interior contigs from the cross-part check
+            merge.write_order_sidecar(
+                os.path.dirname(part),
+                os.path.basename(part),
+                {"first": self.first, "last": self.last, "contigs": built.names},
+            )
+
+        return write
 
 
 def encode_vcf_part(
@@ -101,22 +151,14 @@ def encode_vcf_part(
 
 def _encode(batches, out, samples: list[str], compress: bool = False, with_tbi: bool = False):
     """The VCF part encoder: lines to ``out``; returns ``(n, sidecars)``."""
-    from disq_spark.formats import tabix as tbimod
-
     n = 0
-    tbi = tbimod.TbiBuilder() if with_tbi else None
-    dangling = 0
-    # first/last (contig, pos) of the part: the builder guard proves
-    # within-part order, the driver merge uses these to prove it across
-    # parts (see _check_cross_part_order)
-    first_key = None
-    last_key = None
+    index = PartIndexer() if with_tbi else None
     sink = bgzf.BgzfWriter(out, terminate=False) if compress else out
     for pdf in batches:
         if len(pdf) == 0:
             continue
         lines = format_vcf_batch(pdf, samples)
-        if tbi is None:
+        if index is None:
             payload = ("\n".join(lines) + "\n").encode("utf-8")
             sink.write(payload)
         else:
@@ -126,32 +168,13 @@ def _encode(batches, out, samples: list[str], compress: bool = False, with_tbi: 
             ):
                 v_start = sink.virtual_offset
                 sink.write(line.encode("utf-8") + b"\n")
-                tbi.add(contig, int(start), int(end), v_start, sink.virtual_offset)
-                last_key = (contig, int(start))
-                if first_key is None:
-                    first_key = last_key
+                index.add(contig, int(start), int(end), v_start, sink.virtual_offset)
         n += len(pdf)
-    if compress:
-        dangling = sink.virtual_offset
-        sink.close()
-
-    def sidecars(part: str) -> None:
-        if tbi is None:
-            return
-        built = tbi.build()
-        if dangling & 0xFFFF:
-            tbimod.patch_dangling_end(built, dangling, sink.compressed_len << 16)
-        tbimod.write_tbi(merge.fragment(part, ".tbi"), built, fragment=True)
-        # contigs = the part's FULL contig sequence in order (the builder
-        # registers them by first appearance) — first/last alone would
-        # hide interior contigs from the cross-part check
-        merge.write_order_sidecar(
-            os.path.dirname(part),
-            os.path.basename(part),
-            {"first": first_key, "last": last_key, "contigs": built.names},
-        )
-
-    return n, sidecars
+    if not compress:
+        return n, None
+    dangling = sink.virtual_offset
+    sink.close()
+    return n, index.sidecars(sink.compressed_len << 16, dangling) if index is not None else None
 
 
 def finalize_single(
@@ -165,12 +188,10 @@ def finalize_single(
     """Driver-side single-file commit (VcfSink.java:87-127) through
     ``merge.commit_single``: header, concat in part order, one BGZF
     terminator when compressed, offset-shifted .tbi merge."""
-    merge.commit_single(path, parts_dir, part_paths, _layout(header, compress, with_tbi))
+    merge.commit_single(path, parts_dir, part_paths, layout(header, compress, with_tbi))
 
 
 def _merge_tbi(path: str, fragments: list[str], lengths: list[int]) -> None:
-    from disq_spark.formats import tabix as tbimod
-
     parts = [tbimod.read_tbi(f, fragment=True) for f in fragments]
     tbimod.write_tbi(path + ".tbi", tbimod.merge_tbi(parts, lengths[1:], base_offset=lengths[0]))
 

@@ -17,16 +17,23 @@ Executors decode their virtual-offset span into Arrow batches via
 mapInPandas. Non-overlap invariant: a partition decodes exactly the
 records whose start virtual offset lies in [vStart, vEnd)
 (AbstractBinarySamSource.java:95-98 one-chunk-per-partition analog).
+One record walk (``walk_records``) finds those records for the decode,
+the index builders and the guesser check.
+
+``build_sbi``/``build_bai`` index an existing BAM on the write path's
+index path: each planned chunk feeds its walked records to the BAM
+sink's part indexer, and the sink's order check and merges commit the
+fragments with zero shift (``sinks/merge.py::build_index``).
 """
 
 from __future__ import annotations
 
 from disq_spark import fs as _dfs
 
-import os
 import struct as _struct
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
@@ -97,6 +104,16 @@ class _BlockBuffer:
                     continue  # block end == start of next block (or EOF)
                 return (c << 16) | (buf_off - b)
         raise ValueError("offset outside buffer")
+
+    def virtual_offsets(self, buf_offs: list[int]) -> list[int]:
+        """``virtual_offset`` of each of the ascending ``buf_offs`` in one
+        vectorized lookup: the last block starting at or before an offset
+        is the non-empty one holding it."""
+        starts = np.array([b for _c, b, _u in self.blocks], dtype=np.int64)
+        c_pos = np.array([c for c, _b, _u in self.blocks], dtype=np.int64)
+        offs = np.asarray(buf_offs, dtype=np.int64)
+        i = np.searchsorted(starts, offs, side="right") - 1
+        return ((c_pos[i] << 16) | (offs - starts[i])).tolist()
 
 
 def read_bam_header(path: str) -> tuple[SamHeader, list[tuple[str, int]], int]:
@@ -321,6 +338,27 @@ def decode_chunk_cols(
     """Column-dict variant of decode_chunk: a cheap offsets walk (one
     struct.unpack per record) followed by the numpy batch decoder — the
     hot read path feeding Arrow batches in mapInPandas."""
+    walked = walk_records(path, v_start, v_end)
+    if walked is None:
+        return None
+    buf, rec_offs = walked
+    return bamcodec.decode_batch(
+        buf.data,
+        rec_offs,
+        refs,
+        with_seq=with_seq,
+        with_qual=with_qual,
+        with_tags=with_tags,
+        raw_tags=raw_tags,
+    )
+
+
+def walk_records(path: str, v_start: int, v_end: int) -> tuple[_BlockBuffer, list[int]] | None:
+    """The one BAM record walk: the inflated buffer and the buffer offsets
+    of the whole records whose start virtual offset lies in
+    [v_start, v_end) (``buf.virtual_offsets`` gives their virtual
+    offsets). Serves the decode, the index builders and the guesser
+    check; None when ``v_start`` is not in the file."""
     c_start, u_start = v_start >> 16, v_start & 0xFFFF
     buf = _BlockBuffer(path, c_start, 1 << 22)
     off = buf.buf_offset(c_start, u_start)
@@ -355,15 +393,7 @@ def decode_chunk_cols(
             # might be exactly at end-of-data
             if not buf.extend(1 << 22):
                 break
-    return bamcodec.decode_batch(
-        buf.data,
-        rec_offs,
-        refs,
-        with_seq=with_seq,
-        with_qual=with_qual,
-        with_tags=with_tags,
-        raw_tags=raw_tags,
-    )
+    return buf, rec_offs
 
 
 def _advance_past_name_run(path: str, voff: int) -> int | None:
@@ -418,103 +448,18 @@ def adjust_chunks_for_queryname_groups(
     return out
 
 
-def scan_record_voffs(path: str, refs: list[tuple[str, int]], v_start: int, v_end: int) -> list[int]:
-    """Record-start virtual offsets in [v_start, v_end) — walks block_size
-    fields without decoding record bodies (an index scan, not a data scan)."""
-    c_start, u_start = v_start >> 16, v_start & 0xFFFF
-    buf = _BlockBuffer(path, c_start, 1 << 22)
-    off = buf.buf_offset(c_start, u_start)
-    if off is None:
-        return []
-    out = []
-    while True:
-        while off + 4 > len(buf.data):
-            if not buf.extend(1 << 22):
-                return out
-        try:
-            voff = buf.virtual_offset(off)
-        except ValueError:
-            return out
-        if voff >= v_end:
-            return out
-        block_size = _struct.unpack_from("<i", buf.data, off)[0]
-        out.append(voff)
-        off += 4 + block_size
-        while off > len(buf.data):
-            if not buf.extend(1 << 22):
-                return out
-
-
 def build_sbi(
     spark: SparkSession, path: str, split_size: int = DEFAULT_SPLIT_SIZE, granularity: int = 1
 ) -> str:
     """Distributed .sbi construction for an existing (index-less) BAM —
     the BamRecordGuesserChecker.getSBIIndex pattern (:82-95) done as one
-    Spark job: guesser-planned chunks scan their record starts in
-    parallel and write them as packed-int64 FRAGMENT FILES task-side;
-    the driver streams the fragments into ``path + '.sbi'`` in chunk
-    order. Driver peak memory is O(#chunks + io buffer) — independent of
-    record count (10^12 records at granularity 1 is terabytes of
-    offsets; no single heap should ever hold them). Subsequent reads
-    plan from the index (no guessing).
-    """
-    import numpy as _np
-    import pandas as pd_  # local alias to avoid shadowing
-
-    from disq_spark.sinks import merge as _merge
-
-    header, refs, first_voff = read_bam_header(path)
-    chunks = plan_bam_chunks(path, split_size, refs, first_voff)
-    gran = granularity
-    parts_dir = path + ".sbi.parts"
-    _dfs.makedirs(parts_dir)
-
-    def scan(p, v_start, v_end):
-        # One OUTPUT ROW PER CHUNK, not per record: each task subsamples
-        # its own offsets at `granularity` (phase restarting per chunk —
-        # the same semantics the write-side per-part fragment merge
-        # produces, sinks/bam.py) and writes them to an attempt-unique
-        # fragment file (speculation/retry-safe). Driver traffic is one
-        # row per chunk; the offset bytes stay on the filesystem.
-        voffs = scan_record_voffs(p, refs, v_start, v_end)
-        packed = _np.asarray(voffs[::gran], dtype="<i8").tobytes()
-        frag = ""
-        if packed:
-            frag = _merge.attempt_part_path(parts_dir, prefix="frag")
-            with _dfs.open_output(frag) as f:
-                f.write(packed)
-        yield pd_.DataFrame(
-            {"chunk": [v_start], "n": [len(voffs)], "frag": [frag], "n_offsets": [len(packed) // 8]}
-        )
-
-    try:
-        rows = plan_frame(
-            spark, [(path, vs, ve) for vs, ve in chunks], scan,
-            "chunk long, n long, frag string, n_offsets long",
-        ).collect()
-        rows.sort(key=lambda r: r.chunk)  # chunks are disjoint & ordered -> no global sort
-        total = sum(r.n for r in rows)
-        num_offsets = sum(r.n_offsets for r in rows) + 1  # + end sentinel
-        size = _dfs.getsize(path)
-        # end-of-data sentinel: htsjdk's SBIIndexWriter records the virtual
-        # position BEFORE the 28-byte BGZF EOF terminator (verified
-        # byte-for-byte against 1-with-splitting-index.bam.sbi)
-        with _dfs.open_input(path) as f:
-            f.seek(size - len(bgzf.EOF_BLOCK))
-            has_eof = f.read(len(bgzf.EOF_BLOCK)) == bgzf.EOF_BLOCK
-        end_of_data = size - len(bgzf.EOF_BLOCK) if has_eof else size
-        sbimod.write_sbi_stream(
-            path + ".sbi",
-            file_length=size,
-            total_records=total,
-            granularity=granularity,
-            num_offsets=num_offsets,
-            blob_paths=[r.frag for r in rows if r.frag],
-            tail_offset=end_of_data << 16,
-        )
-    finally:
-        _dfs.rmtree(parts_dir)
-    return path + ".sbi"
+    Spark job on the write path's index path: each guesser-planned chunk
+    is indexed like a written part (every ``granularity``-th record,
+    phase restarting per chunk) and the fragments are streamed into
+    ``path + '.sbi'`` in chunk order, so driver memory is one buffer
+    whatever the record count. Subsequent reads plan from the index (no
+    guessing)."""
+    return _build_index(spark, path, split_size, ".sbi", granularity)
 
 
 def build_bai(
@@ -526,102 +471,57 @@ def build_bai(
     reference only builds .sbi for existing files
     (BamRecordGuesserChecker.java:82-95) and defers .bai to htsjdk's
     single-threaded BAMIndexer; here each planned chunk builds its
-    fragment in parallel and the driver merges with zero offset shift
-    (record voffs are already absolute). Byte-identical to the index the
-    single-file write path would have produced for the same records
+    fragment in parallel (one inflate and walk per chunk) and the sink's
+    order rule and merge commit them with zero offset shift (record voffs
+    are already absolute). Byte-identical to the index the single-file
+    write path would have produced for the same records
     (differential-tested), so interval planners can't tell the
     difference. Writes ``path + '.bai'`` and returns it.
     """
-    import pandas as pd_
+    return _build_index(spark, path, split_size, ".bai")
 
-    from disq_spark.formats import bai as baimod
-    from disq_spark.formats.bam import _reg2bin
-    from disq_spark.schemas import FLAG_UNMAPPED
-    from disq_spark.sinks.bam import PartOrder, _check_cross_part_order
+
+def _build_index(spark: SparkSession, path: str, split_size: int, ext: str, granularity: int = 1) -> str:
+    """``build_sbi``/``build_bai``: the sink's ``PartIndexer`` over each
+    planned chunk's walked records, committed through ``merge.build_index``."""
+    from disq_spark.sinks import bam as bamsink
+    from disq_spark.sinks import merge
 
     header, refs, first_voff = read_bam_header(path)
-    if header.sort_order != "coordinate":
+    with_sbi, with_bai = ext == ".sbi", ext == ".bai"
+    if with_bai and header.sort_order != "coordinate":
         raise ValueError("build_bai requires a coordinate-sorted BAM header")
     chunks = plan_bam_chunks(path, split_size, refs, first_voff)
-    size = _dfs.getsize(path)
-    with _dfs.open_input(path) as f:
-        f.seek(size - len(bgzf.EOF_BLOCK))
-        has_eof = f.read(len(bgzf.EOF_BLOCK)) == bgzf.EOF_BLOCK
-    end_of_data_voff = (size - len(bgzf.EOF_BLOCK) if has_eof else size) << 16
-
-    parts_dir = path + ".bai.parts"
-    _dfs.makedirs(parts_dir)
     ref_index = {name: i for i, (name, _l) in enumerate(refs)}
-    n_ref = len(refs)
+    # write-side parity: the file's final record ends at the end-of-data
+    # position (pre-EOF-block), like the write path's dangling-end patch
+    end_of_data = bgzf.data_end(path) << 16
 
-    def scan(p, vs, ve):
-        # write-side parity: the file's final end voff is the
-        # end-of-data position (pre-EOF-block), like the write
-        # path's dangling-end patch target
-        ve_eff = min(ve, end_of_data_voff)
-        voffs = scan_record_voffs(p, refs, vs, ve)
-        n = len(voffs)
-        base = ""
-        if n:
-            cols = decode_chunk_cols(
-                p, refs, vs, ve,
-                with_seq=False, with_qual=False, with_tags=False,
+    def index_chunk(p: str, v_start: int, v_end: int):
+        walked = walk_records(p, v_start, v_end)
+        if walked is None:
+            return 0, None
+        buf, rec_offs = walked
+        voffs = buf.virtual_offsets(rec_offs)
+        index = bamsink.PartIndexer(ref_index, granularity, with_sbi, with_bai, "build_bai")
+        chunk_end = min(v_end, end_of_data)
+        if with_bai:
+            cols = bamcodec.decode_batch(
+                buf.data, rec_offs, refs, with_seq=False, with_qual=False, with_tags=False
             )
-            b = baimod.BaiBuilder(n_ref)
-            ends_v = voffs[1:] + [ve_eff]
-            order = PartOrder("build_bai")
-            for i in range(n):
-                contig, start = cols["contig"][i], cols["start"][i]
-                if contig is None or start is None or pd_.isna(start):
-                    b.add(-1, -1, -1, 0, voffs[i], ends_v[i], False)
-                    order.add(None)
-                else:
-                    pos0 = int(start) - 1
-                    e = cols["end"][i]
-                    end0 = int(e) if e is not None and not pd_.isna(e) else pos0 + 1
-                    order.add((ref_index[contig], pos0))
-                    b.add(
-                        ref_index[contig], pos0, end0,
-                        _reg2bin(pos0, max(end0, pos0 + 1)),
-                        voffs[i], ends_v[i],
-                        int(cols["flags"][i]) & FLAG_UNMAPPED == 0,
-                    )
-            # attempt-unique base (uuid8): a speculative/zombie
-            # retry of this chunk stages to a DIFFERENT name, so
-            # it can never re-truncate a fragment the driver is
-            # reading during merge; the driver merges only the
-            # bases reported by collected (winning) tasks. The
-            # zero-padded v_start prefix keeps lexicographic sort
-            # == chunk order. Same scheme as build_sbi / the sinks.
-            import uuid as _uuid
-
-            base = f"part-{vs:020d}-{_uuid.uuid4().hex[:8]}"
-            baimod.write_bai(
-                os.path.join(parts_dir, f".{base}.bai"), b.build(), fragment=True
-            )
-            order.write(os.path.join(parts_dir, base))
-        yield pd_.DataFrame({"part": [base], "n": [n]})
-
-    try:
-        rows = plan_frame(
-            spark, [(path, vs, ve) for vs, ve in chunks], scan, "part string, n long"
-        ).collect()
-        bases = sorted(r.part for r in rows if r.part)
-        _check_cross_part_order(parts_dir, bases)
-        frags = [
-            baimod.read_bai(os.path.join(parts_dir, f".{b}.bai"), fragment=True)
-            for b in bases
-        ]
-        if frags:
-            merged = baimod.merge_bai(frags, [0] * len(frags), base_offset=0)
+            for fields in zip(
+                voffs, voffs[1:] + [chunk_end], cols["contig"], cols["start"], cols["end"], cols["flags"]
+            ):
+                index.add(*fields)
         else:
-            # zero-record BAM: a legal index still carries one empty
-            # entry per reference sequence
-            merged = baimod.BaiBuilder(n_ref).build()
-        baimod.write_bai(path + ".bai", merged)
-    finally:
-        _dfs.rmtree(parts_dir)
-    return path + ".bai"
+            for v in voffs:
+                index.add(v, v)
+        return index.n, index.sidecars(chunk_end)
+
+    return merge.build_index(
+        spark, path, ext, [(path, vs, ve) for vs, ve in chunks], index_chunk,
+        bamsink.layout(header, refs, with_sbi, with_bai, granularity),
+    )
 
 
 def read_bam(
@@ -769,8 +669,6 @@ def check_record_guesser(
     (voff: long, kind: string); an empty result means the guesser is
     exact on this file at this granularity.
     """
-    import pandas as pd_
-
     header, refs, first_voff = read_bam_header(path)
     chunks = plan_bam_chunks(path, split_size, refs, first_voff)
     n_ref = len(refs)
@@ -789,43 +687,19 @@ def check_record_guesser(
         return True
 
     def scan(p, v_start, v_end):
-        c_start, u_start = v_start >> 16, v_start & 0xFFFF
-        buf = _BlockBuffer(p, c_start, 1 << 22)
-        off = buf.buf_offset(c_start, u_start)
-        if off is None:
+        walked = walk_records(p, v_start, v_end)
+        if walked is None:
             return
+        buf, rec_offs = walked
         bad: list[tuple[int, str]] = []
-        bi = 0
-        while True:
-            if off + 4 > len(buf.data) and not buf.extend(1 << 22):
-                break
-            while bi < len(buf.blocks) and off >= buf.blocks[bi][1] + buf.blocks[bi][2]:
-                bi += 1
-            if bi >= len(buf.blocks):
-                break
-            c_pos, b_start, _u = buf.blocks[bi]
-            voff = (c_pos << 16) | (off - b_start)
-            if voff >= v_end:
-                break
-            while off + 4 > len(buf.data) or off + 4 + _struct.unpack_from(
-                "<i", buf.data, off
-            )[0] > len(buf.data):
-                if not buf.extend(1 << 22):
-                    break
-            if off + 4 > len(buf.data) or off + 4 + _struct.unpack_from(
-                "<i", buf.data, off
-            )[0] > len(buf.data):
-                break
+        for off, voff in zip(rec_offs, buf.virtual_offsets(rec_offs)):
             if not chain_ok(buf.data, off):
                 bad.append((voff, "FALSE_NEGATIVE"))
             for d in range(1, neighborhood + 1):
                 if off + d + 36 <= len(buf.data) and chain_ok(buf.data, off + d):
                     bad.append((voff + d, "FALSE_POSITIVE"))
-            off += 4 + _struct.unpack_from("<i", buf.data, off)[0]
-            if off >= len(buf.data) and not buf.extend(1 << 22):
-                break
         if bad:
-            yield pd_.DataFrame(bad, columns=["voff", "kind"])
+            yield pd.DataFrame(bad, columns=["voff", "kind"])
 
     return plan_frame(
         spark, [(path, vs, ve) for vs, ve in chunks], scan, "voff long, kind string"

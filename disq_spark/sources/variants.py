@@ -17,6 +17,11 @@ one range per task):
   exactly once.
 - plain-gzip .gz -> unsplittable, one range covering the file
   (BGZFEnhancedGzipCodec.java:66-101 sniffing decides which).
+
+``build_tbi`` indexes an existing BGZF VCF on the write path's index
+path: each block-aligned split feeds its owned lines to the VCF sink's
+part indexer, and the sink's order check and .tbi merge commit the
+fragments with zero shift (``sinks/merge.py::build_index``).
 """
 
 from __future__ import annotations
@@ -260,22 +265,22 @@ def build_tbi(
     spark: SparkSession, path: str, split_size: int = DEFAULT_SPLIT_SIZE
 ) -> str:
     """Distributed .tbi construction for an existing BGZF VCF — the
-    ``tabix -p vcf`` analog as one Spark job (read-side counterpart of
-    the build-during-write index in sinks/variants.py, mirroring the
-    reference's build-index-for-existing-file surface,
-    BamRecordGuesserChecker.java:82-95 shape). Block-aligned splits scan
-    their owned lines with file-absolute virtual offsets in parallel;
-    the driver merges the per-split fragments in file order and writes
-    ``path + '.tbi'``. Byte-parity with the htsjdk-built fixture index
-    is asserted in tests/test_tabix.py."""
-    import pickle
+    ``tabix -p vcf`` analog as one Spark job, on the write path's index
+    path (``sinks/merge.py::build_index``): each block-aligned split
+    feeds its owned lines, with file-absolute virtual offsets, to the
+    sink's part indexer, and the sink's order rule and .tbi merge commit
+    the fragments with zero shift. Refuses what ``write_vcf(...,
+    write_tbi=True)`` refuses: a non-BGZF file and splits that are each
+    sorted but not in order across splits. Byte-parity with the
+    htsjdk-built fixture index is asserted in tests/test_tabix.py."""
+    from disq_spark.sinks import merge
+    from disq_spark.sinks import variants as vsink
 
-    from disq_spark.formats import tabix as tbimod
+    if not bgzf.is_bgzf(path):
+        raise ValueError(f"build_tbi requires a BGZF-compressed VCF: {path}")
 
-    ranges = plan_ranges([path], split_size)
-
-    def scan(p: str, start: int, end: int) -> Iterator[pd.DataFrame]:
-        b = tbimod.TbiBuilder()
+    def index_split(p: str, start: int, end: int):
+        index = vsink.PartIndexer()
         for line, vs, ve in _range_records_voff(p, start, end):
             if line.startswith("#") or not line:
                 continue
@@ -287,20 +292,13 @@ def build_tbi(
                     if kv.startswith("END="):
                         end_pos = int(kv[4:])
                         break
-            b.add(contig, pos, end_pos, vs, ve)
-        frag = pickle.dumps((b.names, b.bins, b.linear, b.stats))
-        yield pd.DataFrame({"start": [start], "frag": [frag]})
+            index.add(contig, pos, end_pos, vs, ve)
+        return index.n, index.sidecars(end << 16)
 
-    rows = plan_frame(spark, ranges, scan, "start long, frag binary").collect()
-    rows.sort(key=lambda r: r.start)
-    parts = []
-    for r in rows:
-        names, bins, linear, stats = pickle.loads(r.frag)
-        parts.append(tbimod.TabixIndex(names, bins, linear, stats))
-    # offsets are already file-absolute: merge with zero shift
-    merged = tbimod.merge_tbi(parts, [0] * len(parts), base_offset=0)
-    tbimod.write_tbi(path + ".tbi", merged)
-    return path + ".tbi"
+    return merge.build_index(
+        spark, path, ".tbi", plan_ranges([path], split_size), index_split,
+        vsink.layout(read_header(path), compress=True, with_tbi=True),
+    )
 
 
 def _read_until_newline(path: str, from_pos: int) -> str:

@@ -22,6 +22,15 @@ row hashes the decompressed payload (marked ``gunzip:``).
 checkout whose ``format("vcf")`` writer takes the sample names from
 ``header_text`` and one that does not (the latter drops every FORMAT and
 sample column).
+
+The ``build_*`` cases index existing files: an index-less copy of the
+reads BAM and of the BGZF VCF, each at a split size that cuts it into
+several chunks and at 1 GiB (one chunk), ``build_sbi`` at granularity 1
+and 4096; header-only BAM and VCF inputs (also written with their
+indexes by ``write_bam``/``write_vcf``); and the inputs ``build_tbi``
+must refuse (plain text, true gzip, and two BGZF runs that are each
+sorted but out of order across the split between them). A case that
+raises hashes as ``error:<exception type>``, next to any file it left.
 """
 
 from __future__ import annotations
@@ -98,6 +107,91 @@ def _hash(path: str) -> str:
     return hashlib.sha256(data).hexdigest()
 
 
+def _two_run_vcf(path: str) -> int:
+    """A BGZF VCF of two runs, each sorted, out of order across them:
+    header + v1:100000..199950, then v1:300000 and v1:10..89960. Returns
+    the first run's length, the split size that starts a split at the
+    second run's first block (whose first line the first split owns)."""
+    from disq_spark.formats import bgzf
+
+    def site(pos):
+        return f"v1\t{pos}\t.\tA\tC\t50\tPASS\tDP=1\n"
+
+    head = "##fileformat=VCFv4.2\n##contig=<ID=v1,length=1000000>\n#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n"
+    run1 = bgzf.compress_all((head + "".join(site(p) for p in range(100000, 200000, 50))).encode(), terminate=False)
+    run2 = bgzf.compress_all((site(300000) + "".join(site(p) for p in range(10, 90000, 50))).encode())
+    with open(path, "wb") as f:
+        f.write(run1 + run2)
+    return len(run1)
+
+
+def _build_cases(spark, work, reads, variants, header, vheader, src_vcf) -> dict:
+    """``build_sbi``/``build_bai``/``build_tbi`` over copies of index-less
+    inputs (see the module docstring)."""
+    from disq_spark.schemas import READS_SCHEMA, VARIANTS_SCHEMA
+    from disq_spark.sinks.bam import write_bam
+    from disq_spark.sinks.variants import write_vcf
+    from disq_spark.sources.bam_source import build_bai, build_sbi
+    from disq_spark.sources.variants import build_tbi
+
+    src = {k: os.path.join(work, k) for k in ("src.bam", "empty.bam", "src.vcf.bgz", "empty.vcf.bgz", "src.vcf.gz", "runs.vcf.bgz")}
+    # larger inputs than the sink cases', so the small splits cut them
+    # into several chunks: 3,000 reads on chrA/chrB then 9 unplaced ones,
+    # 4,000 sites with incompressible INFO over v1/v2
+    rng = random.Random(11)
+    given = [r.asDict() for r in reads.collect()]
+    rows = [
+        dict(rng.choice(given[:-9]), name=f"b{i:05d}", contig="chrA" if i < 2000 else "chrB",
+             start=(i % 2000) * 10 + 1, end=(i % 2000) * 10 + 60)
+        for i in range(3000)
+    ] + given[-9:]
+    write_bam(_frame(spark, rows, READS_SCHEMA), header, src["src.bam"], write_sbi=False, write_bai=False)
+    empty_reads = spark.createDataFrame([], READS_SCHEMA)
+    write_bam(empty_reads, header, src["empty.bam"], write_sbi=False, write_bai=False)
+    big_vcf = os.path.join(work, "big.vcf")
+    with open(big_vcf, "w") as f:
+        f.write("##fileformat=VCFv4.2\n##contig=<ID=v1,length=1000000>\n##contig=<ID=v2,length=1000000>\n")
+        f.write("#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n")
+        for i in range(4000):
+            f.write(f"v{1 + i // 3000}\t{(i % 3000) * 10 + 1}\t.\tA\tC\t50\tPASS\tH={rng.getrandbits(128):032x}\n")
+    from disq_spark.sources.variants import read_vcf
+
+    big, big_header = read_vcf(spark, big_vcf)
+    write_vcf(big, big_header, src["src.vcf.bgz"])
+    empty_sites = spark.createDataFrame([], VARIANTS_SCHEMA)
+    write_vcf(empty_sites, vheader, src["empty.vcf.bgz"])
+    with open(src_vcf, "rb") as f, gzip.GzipFile(src["src.vcf.gz"], "wb", mtime=0) as g:
+        g.write(f.read())
+    runs_split = _two_run_vcf(src["runs.vcf.bgz"])
+
+    def build(name, ext, fn, *args, **kw):
+        def run(p):
+            target = p + ext
+            shutil.copyfile(src[name], target)
+            fn(spark, target, *args, **kw)
+        return run
+
+    big = 1 << 30
+    cases = {}
+    for split in (32 * 1024, big):
+        tag = "1g" if split == big else "32k"
+        for g in (1, 4096):
+            cases[f"build_sbi_{tag}_g{g}"] = build("src.bam", ".bam", build_sbi, split, granularity=g)
+        cases[f"build_bai_{tag}"] = build("src.bam", ".bam", build_bai, split)
+        cases[f"build_tbi_{tag}"] = build("src.vcf.bgz", ".vcf.bgz", build_tbi, split)
+    cases.update({
+        "bam_single_empty_sbi_bai": lambda p: write_bam(empty_reads, header, p + ".bam"),
+        "build_sbi_empty_g4096": build("empty.bam", ".bam", build_sbi, big, granularity=4096),
+        "build_bai_empty": build("empty.bam", ".bam", build_bai, big),
+        "vcf_single_empty_tbi": lambda p: write_vcf(empty_sites, vheader, p + ".vcf.bgz", write_tbi=True),
+        "build_tbi_empty": build("empty.vcf.bgz", ".vcf.bgz", build_tbi, big),
+        "build_tbi_plain": lambda p: (shutil.copyfile(src_vcf, p + ".vcf"), build_tbi(spark, p + ".vcf")),
+        "build_tbi_gzip": build("src.vcf.gz", ".vcf.gz", build_tbi, big),
+        "build_tbi_unsorted_splits": build("runs.vcf.bgz", ".vcf.bgz", build_tbi, runs_split),
+    })
+    return cases
+
+
 def main() -> None:
     repo, out = os.path.abspath(sys.argv[1]), os.path.abspath(sys.argv[2])
     sys.path.insert(0, repo)
@@ -167,11 +261,15 @@ def main() -> None:
         "fastq_single": lambda p: write_fastq(fastq, p + ".fastq"),
         "fastq_sharded": lambda p: write_fastq(fastq, p, single_file=False),
     }
+    cases.update(_build_cases(spark, work, reads, variants, header, vheader, src_vcf))
     lines = []
     for name, run in cases.items():
         d = os.path.join(work, name)
         os.makedirs(d)
-        run(os.path.join(d, "out"))
+        try:
+            run(os.path.join(d, "out"))
+        except Exception as e:  # a refused input: record the refusal
+            lines.append(f"{name}\t(raised)\terror:{type(e).__name__}")
         for root, _dirs, files in os.walk(d):
             for fn in sorted(files):
                 p = os.path.join(root, fn)

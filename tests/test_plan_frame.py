@@ -94,8 +94,9 @@ def test_plan_runner_maps_range_ids_to_plan_rows():
 def test_index_builders_match_the_write_side_indexes(spark, planned_inputs, tmp_path):
     """build_bai/build_tbi merge per-chunk fragments in plan order: over
     several chunks they reproduce the sinks' indexes byte for byte.
-    build_sbi finds every record start, and the guesser check finds no
-    disagreement."""
+    build_sbi finds every record start and, at granularity 1 and two
+    split sizes, reproduces write_bam's .sbi byte for byte; the guesser
+    check finds no disagreement."""
     import filecmp
     import shutil
 
@@ -118,6 +119,16 @@ def test_index_builders_match_the_write_side_indexes(spark, planned_inputs, tmp_
     assert sbi.offsets == sorted(set(sbi.offsets))
     assert (sbi.offsets[0], sbi.offsets[-1]) == (written.offsets[0], written.offsets[-1])
     assert check_record_guesser(spark, bam, split).count() == 0
+
+    # granularity 1: the built .sbi is the one write_bam merges, byte for
+    # byte, whatever the split plan
+    df, header = read_bam(spark, planned_inputs["bam"], split_size=split)
+    g1 = str(tmp_path / "g1.bam")
+    write_bam(df, header, g1, sbi_granularity=1, write_bai=False)
+    for split_size in (split, 1 << 30):
+        copy = str(tmp_path / f"g1_{split_size}.bam")
+        shutil.copy(g1, copy)
+        assert filecmp.cmp(build_sbi(spark, copy, split_size, granularity=1), g1 + ".sbi", shallow=False)
 
 
 def test_tribble_pruned_plain_vcf_read_keeps_order(spark, planned_inputs, tmp_path):

@@ -141,6 +141,7 @@ def test_attempt_unique_staging_two_attempts_one_winner(tmp_path):
                     with_sbi=True, with_bai=True)
     idx = sbimod.read_sbi(out + ".sbi")
     assert idx.total_records == 25  # one attempt's records, not two
+    assert idx.granularity == 1  # the parts' own, not finalize_single's default
 
 
 def test_bam_missing_order_sidecar_refused(tmp_path):
@@ -260,8 +261,8 @@ def test_build_sbi_excludes_losing_attempt_fragment(spark, planned_inputs, tmp_p
     plausible-named garbage fragment before the build and require the
     built index byte-identical to a clean build."""
     import shutil
-    import struct
 
+    from disq_spark.formats.sbi import SbiIndex, write_sbi
     from disq_spark.sources.bam_source import build_sbi
 
     src = planned_inputs["bam"]
@@ -276,9 +277,11 @@ def test_build_sbi_excludes_losing_attempt_fragment(spark, planned_inputs, tmp_p
     shutil.copyfile(src, dirty)
     parts_dir = dirty + ".sbi.parts"
     _dfs.makedirs(parts_dir)
-    # name shape matches attempt_part_path(prefix="frag"); sorts first
-    with open(os.path.join(parts_dir, "frag-00000-00000000"), "wb") as f:
-        f.write(struct.pack("<4q", 1, 2, 3, 4))  # garbage virtual offsets
+    # a well-formed .sbi fragment of the part name attempt_part_path
+    # gives chunk 0, sorting first: garbage virtual offsets
+    write_sbi(
+        os.path.join(parts_dir, ".part-0000000000-00000000.sbi"), SbiIndex(0, 4, 1, [1, 2, 3, 4])
+    )
 
     out = build_sbi(spark, dirty, split_size=split, granularity=1)
     assert open(out, "rb").read() == truth
@@ -308,7 +311,7 @@ def test_build_bai_excludes_losing_attempt_fragment(spark, planned_inputs, tmp_p
     shutil.copyfile(sorted_bam, dirty)
     parts_dir = dirty + ".bai.parts"
     _dfs.makedirs(parts_dir)
-    impostor = "part-00000-00000000"  # sorts before every real base
+    impostor = "part-0000000000-00000000"  # sorts before every real base
     with open(os.path.join(parts_dir, f".{impostor}.bai"), "wb") as f:
         f.write(b"NOT-A-BAI-FRAGMENT" * 8)
     merge.write_order_sidecar(
@@ -318,6 +321,32 @@ def test_build_bai_excludes_losing_attempt_fragment(spark, planned_inputs, tmp_p
     built = build_bai(spark, dirty, split_size=split)
     assert open(built, "rb").read() == truth
     assert not os.path.exists(parts_dir)
+
+
+def test_collected_parts_follow_partition_order_past_five_digits(monkeypatch, tmp_path):
+    """``attempt_part_path`` names sort in partition order for every
+    partition id, so ``collected_parts`` merges chunks in file order even
+    past 99,999 partitions (a 5-digit pad put ``part-100000`` between
+    ``part-10000`` and ``part-10001``)."""
+    from collections import namedtuple
+
+    import pyspark
+
+    class FakeContext:
+        def __init__(self, pid):
+            self.pid = pid
+
+        def partitionId(self):
+            return self.pid
+
+    pids = [0, 9, 10000, 10001, 99998, 99999, 100000, 100001, 1000000, 2**31 - 1]
+    names = {}
+    for pid in pids:
+        monkeypatch.setattr(pyspark.TaskContext, "get", classmethod(lambda cls, p=pid: FakeContext(p)))
+        names[pid] = merge.attempt_part_path(str(tmp_path))
+    Row = namedtuple("Row", "part n")
+    rows = [Row(names[pid], 1) for pid in reversed(pids)] + [Row("", 0)]
+    assert merge.collected_parts(rows) == [names[pid] for pid in pids]
 
 
 def _chrA_rows(n, first, unplaced=0):
