@@ -13,14 +13,31 @@ Re-expresses (behavioral parity, no code):
   BGZFCompressionOutputStream.java:67-70
 
 Virtual offsets are htsjdk-style: (compressed_offset << 16) | intra_block_offset.
+
+Every BGZF read goes through one block reader, ``BlockReader`` (the
+role of BGZFSplitCompressionInputStream.java:39-131 and htsjdk's
+BlockCompressedInputStream): one open file, block boundaries from the
+header walk (realigned with ``find_block_start`` when a range starts at
+a byte offset), compressed bytes in sequential reads of up to
+``READ_AHEAD`` bounded by the range end plus one maximal block, and
+block-by-block inflate on demand through ``inflate``, zlib's gzip
+wrapper, which checks each block's CRC32 and ISIZE. It exposes the
+inflated data, its block table and the data <-> virtual offset maps.
+The BAM record walk, header read and split guesser, the VCF line owner
+(read and ``build_tbi``) and the ``.gzi`` slice reader are its callers.
+``read_range`` joins the inflated blocks of the same block stream
+(``_raw_blocks``); ``scan_blocks`` lists them without inflating.
 """
 
 from __future__ import annotations
 
+import itertools
 import struct
 import zlib
 from dataclasses import dataclass
 from typing import BinaryIO, Iterator
+
+import numpy as np
 
 from disq_spark import fs
 
@@ -35,6 +52,8 @@ MAX_BLOCK_SIZE = 0x10000  # 64 KiB
 # Max uncompressed payload per block, leaving room for headers (htsjdk uses
 # 64K - 28; any value < 64K that compresses into one block works)
 MAX_PAYLOAD = 0xFF00
+# Compressed bytes per sequential read inside a range (BlockReader)
+READ_AHEAD = 1 << 20
 
 
 @dataclass(frozen=True)
@@ -125,41 +144,52 @@ def find_block_start(buf: bytes, base_offset: int = 0, require_next: bool = True
         i = j + 1
 
 
+def _raw_blocks(f: BinaryIO, pos: int, stop: int) -> Iterator[tuple[int, bytes]]:
+    """``(offset, block bytes)`` of each whole block from ``pos`` on, for
+    as long as the caller pulls. ``pos > 0`` is first realigned to the
+    next block boundary within two maximal blocks (split semantics). The
+    compressed bytes come in sequential reads of up to READ_AHEAD that
+    reach no further than ``stop`` plus one maximal block, and past that
+    one maximal block at a time. Ends at end of file, trailing garbage or
+    a truncated final block."""
+    f.seek(pos)
+    buf, i = b"", 0
+    if pos > 0:
+        buf = f.read(2 * MAX_BLOCK_SIZE)
+        rel = find_block_start(buf)
+        if rel is None:
+            return
+        i, pos = rel, pos + rel
+    at_eof = False
+    while True:
+        have = len(buf) - i
+        if have < MAX_BLOCK_SIZE and not at_eof:
+            more = f.read(max(min(READ_AHEAD, stop + MAX_BLOCK_SIZE - pos) - have, MAX_BLOCK_SIZE - have))
+            at_eof = not more
+            buf, i = buf[i:] + more, 0
+        bsize = _parse_block_header(buf, i)
+        if bsize is None or i + bsize > len(buf):
+            return
+        yield pos, buf[i : i + bsize]
+        i += bsize
+        pos += bsize
+
+
 def scan_blocks(path: str, start: int = 0, end: int | None = None) -> Iterator[BgzfBlock]:
     """Yield all blocks whose start lies in [start, end). Realigns
     ``start`` to the next block boundary first (split semantics)."""
     with fs.open_input(path) as f:
-        f.seek(0, 2)
-        flen = f.tell()
-        end = flen if end is None else min(end, flen)
-        pos = start
-        if pos > 0:
-            # realign: scan up to 64K past start for a boundary
-            f.seek(pos)
-            window = f.read(2 * MAX_BLOCK_SIZE)
-            rel = find_block_start(window, 0)
-            if rel is None:
+        end = fs.getsize(path) if end is None else end
+        for pos, block in _raw_blocks(f, start, end):
+            if pos >= end:
                 return
-            pos = start + rel
-        while pos < end:
-            f.seek(pos)
-            head = f.read(18)
-            if len(head) < 18:
-                return
-            bsize = None
-            if head[:4] == MAGIC:
-                f.seek(pos)
-                buf = f.read(MAX_BLOCK_SIZE)
-                bsize = _parse_block_header(buf, 0)
-            if bsize is None or pos + bsize > flen:
-                return  # trailing garbage or a truncated final block
-            f.seek(pos + bsize - 4)
-            tail = f.read(4)
-            if len(tail) < 4:
-                return
-            isize = struct.unpack("<I", tail)[0]
-            yield BgzfBlock(pos, bsize, isize)
-            pos += bsize
+            yield BgzfBlock(pos, len(block), struct.unpack_from("<I", block, len(block) - 4)[0])
+
+
+def inflate(block: bytes) -> bytes:
+    """Payload of one whole block. zlib's gzip wrapper checks the block's
+    CRC32 and ISIZE trailer (raw ``-15`` inflate would not)."""
+    return zlib.decompressobj(15 + 16).decompress(block)
 
 
 def decompress_block(f: BinaryIO, pos: int) -> bytes:
@@ -171,7 +201,100 @@ def decompress_block(f: BinaryIO, pos: int) -> bytes:
     data = head[:bsize]
     if len(data) < bsize:
         data += f.read(bsize - len(data))
-    return zlib.decompressobj(15 + 16).decompress(data)
+    return inflate(data)
+
+
+class BlockReader:
+    """The inflated blocks of one file from compressed offset ``start``
+    (realigned to the next block boundary when > 0), over one open file
+    and one sequential read stream (``_raw_blocks``).
+
+    ``data`` is the payload of every block inflated so far, in file
+    order; the block table gives each block's file offset (``c_pos``)
+    and ``data`` offset (``u_start``). Blocks are inflated on demand:
+    ``fill`` inflates the range's blocks (those starting before
+    ``stop``), ``next_block`` one more, in the range or past it (a
+    record or line straddling the range end). ``virtual_offsets`` and
+    ``buffer_offsets`` map between ``data`` offsets and virtual offsets.
+    Use as a context manager; ``data`` and the table outlive the file.
+    """
+
+    def __init__(self, path: str, start: int = 0, stop: int | None = None):
+        self._stop = fs.getsize(path) if stop is None else stop
+        self._f = fs.open_input(path)
+        self._blocks = _raw_blocks(self._f, start, self._stop)
+        self._ahead: tuple[int, bytes] | tuple[()] | None = None
+        self.data = bytearray()
+        self.c_pos: list[int] = []
+        self.u_start: list[int] = []
+        self._c_end = start  # file offset just past the last inflated block
+
+    def __enter__(self) -> "BlockReader":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._f.close()
+
+    def _peek(self) -> tuple[int, bytes] | tuple[()]:
+        """The next block, read but not inflated; ``()`` at the end."""
+        if self._ahead is None:
+            self._ahead = next(self._blocks, ())
+        return self._ahead
+
+    def next_block(self) -> bool:
+        """Inflate the next block; False when there is none."""
+        if not self._peek():
+            return False
+        pos, block = self._ahead
+        self._ahead = None
+        self.c_pos.append(pos)
+        self.u_start.append(len(self.data))
+        self.data += inflate(block)
+        self._c_end = pos + len(block)
+        return True
+
+    def fill(self) -> "BlockReader":
+        """Inflate every block that starts before ``stop``."""
+        while self._peek() and self._ahead[0] < self._stop:
+            self.next_block()
+        return self
+
+    def _table(self) -> tuple[np.ndarray, np.ndarray]:
+        """(data offsets, file offsets) of the inflated blocks plus the
+        position after the last one."""
+        return (
+            np.array(self.u_start + [len(self.data)], dtype=np.int64),
+            np.array(self.c_pos + [self._c_end], dtype=np.int64),
+        )
+
+    def virtual_offsets(self, offs, side: str = "right") -> list[int]:
+        """Virtual offset of each ``data`` offset in ``offs``. An offset on
+        a block boundary maps to offset 0 of a block starting there: the
+        last one with ``side="right"`` (the non-empty block holding the
+        byte, as a record start is read), the first one with
+        ``side="left"`` (empty blocks included: htslib's ``tell()`` after
+        a whole block, which .tbi offsets use). The end of ``data`` maps
+        to the first block starting there, else to the block after the
+        last one inflated."""
+        starts, c_pos = self._table()
+        offs = np.asarray(offs, dtype=np.int64)
+        first = np.searchsorted(starts, offs, side="left")
+        if side == "right":
+            i = np.where(offs < starts[-1], np.searchsorted(starts, offs, side="right") - 1, first)
+        else:
+            i = np.where(starts[np.minimum(first, len(starts) - 1)] == offs, first, first - 1)
+        return ((c_pos[i] << 16) | (offs - starts[i])).tolist()
+
+    def buffer_offsets(self, voffs) -> list[int]:
+        """``data`` offset of each virtual offset in ``voffs``; one that
+        points into no inflated block maps to the start of the first block
+        after it (or the end of ``data``), so ``b < buffer_offsets([v])[0]``
+        exactly when the byte at ``b`` lies before ``v``."""
+        starts, c_pos = self._table()
+        voffs = np.asarray(voffs, dtype=np.int64)
+        c, u = voffs >> 16, voffs & 0xFFFF
+        i = np.minimum(np.searchsorted(c_pos, c, side="left"), len(c_pos) - 1)
+        return (starts[i] + np.where(c_pos[i] == c, u, 0)).tolist()
 
 
 def data_end(path: str) -> int:
@@ -187,11 +310,9 @@ def data_end(path: str) -> int:
 
 def read_range(path: str, start: int, end: int) -> bytes:
     """Decompressed bytes of every block starting in [start, end)."""
-    out = []
     with fs.open_input(path) as f:
-        for blk in scan_blocks(path, start, end):
-            out.append(decompress_block(f, blk.pos))
-    return b"".join(out)
+        blocks = itertools.takewhile(lambda pb: pb[0] < end, _raw_blocks(f, start, end))
+        return b"".join(inflate(block) for _pos, block in blocks)
 
 
 def compress_block(payload: bytes, level: int = 6) -> bytes:

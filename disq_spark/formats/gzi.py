@@ -78,27 +78,17 @@ class IndexedBgzfFasta:
         self.gzi = read_gzi(gzi_path or fasta_gz + ".gzi")
 
     def _read_uncompressed(self, u_start: int, u_end: int) -> bytes:
-        """Uncompressed bytes [u_start, u_end) via .gzi block lookup."""
+        """Uncompressed bytes [u_start, u_end): one block reader over the
+        .gzi entries from the block holding ``u_start`` to the last block
+        starting before ``u_end``."""
         gz = self.gzi
         i = bisect.bisect_right(gz.uncomp_offsets, u_start) - 1
-        out = bytearray()
-        with fs.open_input(self.path) as f:
-            pos = gz.comp_offsets[i]
-            covered = gz.uncomp_offsets[i]
-            while covered < u_end:
-                f.seek(pos)
-                buf = f.read(bgzf.MAX_BLOCK_SIZE)
-                bsize = bgzf._parse_block_header(buf, 0)
-                if bsize is None:
-                    break
-                payload = bgzf.decompress_block(f, pos)
-                if not payload:
-                    break
-                out += payload
-                covered += len(payload)
-                pos += bsize
+        j = bisect.bisect_left(gz.uncomp_offsets, u_end)
+        stop = gz.comp_offsets[j] if j < len(gz.comp_offsets) else None
+        with bgzf.BlockReader(self.path, gz.comp_offsets[i], stop) as r:
+            data = r.fill().data
         rel = u_start - gz.uncomp_offsets[i]
-        return bytes(out[rel : rel + (u_end - u_start)])
+        return bytes(data[rel : rel + (u_end - u_start)])
 
     def get(self, contig: str, start1: int, end1: int) -> str:
         """1-based closed slice of a contig, newline-stripped, uppercase."""

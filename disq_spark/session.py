@@ -9,6 +9,9 @@ also be the right default on a 1000-executor cluster:
   the genomics sources is Arrow-batched, never row-at-a-time).
 - Session timezone pinned to UTC so results are reproducible against
   external oracles regardless of cluster locale.
+- On a local master Python workers fork from ``disq_spark.daemon``,
+  which has already imported what they run, so a job's time does not
+  depend on how many new workers its task timing makes it start.
 """
 
 from __future__ import annotations
@@ -62,6 +65,11 @@ def get_session(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    if master.startswith("local"):
+        # workers fork from a daemon that has already imported what they
+        # run (disq_spark/daemon.py); it must be importable at daemon
+        # start, which the PYTHONPATH above ensures in local mode
+        builder = builder.config("spark.python.daemon.module", "disq_spark.daemon")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -110,10 +118,19 @@ def skip_unchanged_zip_rereads() -> None:
     disq_spark UDF imports the package when its closure unpickles. It
     does nothing outside a task (``TaskContext.get()`` is None), so the
     driver's importers stay as they are, and nothing on 3.13+. Calling
-    it again is a no-op."""
+    it again is a no-op. ``disq_spark.daemon``, which imports the
+    package before any task, installs it with ``check_zip_rereads``
+    before it forks the workers."""
     from pyspark import TaskContext
 
-    if TaskContext.get() is None or sys.version_info >= (3, 13):
+    if TaskContext.get() is not None:
+        check_zip_rereads()
+
+
+def check_zip_rereads() -> None:
+    """Install the stat check of ``skip_unchanged_zip_rereads`` in this
+    process, whether or not a task runs here (nothing on 3.13+)."""
+    if sys.version_info >= (3, 13):
         return
     import zipimport
 

@@ -18,7 +18,12 @@ mapInPandas. Non-overlap invariant: a partition decodes exactly the
 records whose start virtual offset lies in [vStart, vEnd)
 (AbstractBinarySamSource.java:95-98 one-chunk-per-partition analog).
 One record walk (``walk_records``) finds those records for the decode,
-the index builders and the guesser check.
+the index builders and the guesser check. Every read of the file —
+that walk, the header read, the index-less guesser and the queryname
+snap — is a ``formats/bgzf.py::BlockReader``: the walk inflates the
+blocks from its chunk's start to the one holding its end, plus what a
+record straddling the end needs; the others inflate blocks only as far
+as their check reaches.
 
 ``build_sbi``/``build_bai`` index an existing BAM on the write path's
 index path: each planned chunk feeds its walked records to the BAM
@@ -33,7 +38,6 @@ from disq_spark import fs as _dfs
 import struct as _struct
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
@@ -50,89 +54,26 @@ READS_TO_CHECK = 10  # BamRecordGuesser.java:42
 MAX_SEARCH_BYTES = 10 * 1024 * 1024  # MAX_READ_SIZE, BamSource.java:74
 
 
-class _BlockBuffer:
-    """Decompressed view of a run of BGZF blocks with virtual-offset maps."""
-
-    def __init__(self, path: str, c_start: int, min_bytes: int):
-        self.path = path
-        self.blocks: list[tuple[int, int, int]] = []  # (c_pos, buf_start, u_size)
-        chunks = []
-        total = 0
-        with _dfs.open_input(path) as f:
-            for blk in bgzf.scan_blocks(path, c_start):
-                data = bgzf.decompress_block(f, blk.pos)
-                self.blocks.append((blk.pos, total, len(data)))
-                chunks.append(data)
-                total += len(data)
-                if total >= min_bytes:
-                    break
-        self.data = b"".join(chunks)
-
-    def extend(self, min_extra: int) -> bool:
-        """Append more blocks; False if at EOF."""
-        if not self.blocks:
-            return False
-        last_c, last_b, last_u = self.blocks[-1]
-        with _dfs.open_input(self.path) as f:
-            added = 0
-            chunks = [self.data]
-            for blk in bgzf.scan_blocks(self.path, last_c):
-                if blk.pos == last_c:
-                    continue
-                data = bgzf.decompress_block(f, blk.pos)
-                self.blocks.append((blk.pos, len(self.data) + added, len(data)))
-                chunks.append(data)
-                added += len(data)
-                if added >= min_extra:
-                    break
-            if added == 0:
-                return False
-            self.data = b"".join(chunks)
-            return True
-
-    def buf_offset(self, c_pos: int, u_off: int) -> int | None:
-        for c, b, u in self.blocks:
-            if c == c_pos:
-                return b + u_off
-        return None
-
-    def virtual_offset(self, buf_off: int) -> int:
-        """Virtual offset of a record starting at this buffer offset."""
-        for c, b, u in reversed(self.blocks):
-            if buf_off >= b:
-                if buf_off >= b + u:
-                    continue  # block end == start of next block (or EOF)
-                return (c << 16) | (buf_off - b)
-        raise ValueError("offset outside buffer")
-
-    def virtual_offsets(self, buf_offs: list[int]) -> list[int]:
-        """``virtual_offset`` of each of the ascending ``buf_offs`` in one
-        vectorized lookup: the last block starting at or before an offset
-        is the non-empty one holding it."""
-        starts = np.array([b for _c, b, _u in self.blocks], dtype=np.int64)
-        c_pos = np.array([c for c, _b, _u in self.blocks], dtype=np.int64)
-        offs = np.asarray(buf_offs, dtype=np.int64)
-        i = np.searchsorted(starts, offs, side="right") - 1
-        return ((c_pos[i] << 16) | (offs - starts[i])).tolist()
-
-
 def read_bam_header(path: str) -> tuple[SamHeader, list[tuple[str, int]], int]:
-    """(header, refs, first_record_virtual_offset)."""
-    buf = _BlockBuffer(path, 0, 1 << 20)
-    while True:
-        try:
-            text, refs, off = bamcodec.parse_bam_header(buf.data)
-            break
-        except (_struct.error, IndexError):  # header spans more blocks
-            if not buf.extend(1 << 20):
-                raise
-    try:
-        voff = buf.virtual_offset(off)
-    except ValueError:
-        # header-only file: the "first record" position is end-of-data,
-        # i.e. the start of the block right after the header (EOF block)
-        nxt = [c for c, b, _u in buf.blocks if b == off]
-        voff = (nxt[0] << 16) if nxt else (_dfs.getsize(path) << 16)
+    """(header, refs, first_record_virtual_offset), inflating blocks only
+    until the header parses and the byte after it is held."""
+    with bgzf.BlockReader(path) as r:
+        r.next_block()
+        while True:
+            try:
+                text, refs, off = bamcodec.parse_bam_header(r.data)
+                break
+            except (_struct.error, IndexError, UnicodeDecodeError):  # header spans more blocks
+                if not r.next_block():
+                    raise
+        while len(r.data) <= off and r.next_block():
+            pass
+        # a header-only file's "first record" is end-of-data: the (EOF)
+        # block starting right after the header, else the file's end
+        if off < len(r.data) or off in r.u_start:
+            voff = r.virtual_offsets([off])[0]
+        else:
+            voff = _dfs.getsize(path) << 16
     return SamHeader(text=text), refs, voff
 
 
@@ -210,10 +151,11 @@ def _check_record(
 
 
 def find_record_start(
-    buf: _BlockBuffer, n_ref: int, ref_lens: list[int], search_limit: int = MAX_SEARCH_BYTES
+    r: bgzf.BlockReader, n_ref: int, ref_lens: list[int], search_limit: int = MAX_SEARCH_BYTES
 ) -> int | None:
-    """First buffer offset that begins a run of READS_TO_CHECK valid
-    records (BamRecordGuesser.checkRecordStart semantics).
+    """First ``r.data`` offset that begins a run of READS_TO_CHECK valid
+    records (BamRecordGuesser.checkRecordStart semantics), inflating
+    blocks only as far as the candidates and their chains reach.
 
     The bin-consistency discriminator assumes standard writers
     (bin = reg2bin of the alignment span); writers that leave bin stale
@@ -223,35 +165,36 @@ def find_record_start(
     field invariants must hold for READS_TO_CHECK consecutive records.
     """
     for check_bin in (True, False):
-        cand = _scan_for_record_start(buf, n_ref, ref_lens, search_limit, check_bin)
+        cand = _scan_for_record_start(r, n_ref, ref_lens, search_limit, check_bin)
         if cand is not None:
             return cand
     return None
 
 
 def _scan_for_record_start(
-    buf: _BlockBuffer,
+    r: bgzf.BlockReader,
     n_ref: int,
     ref_lens: list[int],
     search_limit: int,
     check_bin: bool,
 ) -> int | None:
+    data = r.data
     cand = 0
-    while cand < min(len(buf.data), search_limit):
+    while cand < search_limit and (cand < len(data) or r.next_block()):
         off = cand
         validated = 0
         ok = True
         while validated < READS_TO_CHECK:
-            nxt = _check_record(buf.data, off, n_ref, ref_lens, check_bin)
+            nxt = _check_record(data, off, n_ref, ref_lens, check_bin)
             while nxt == -1:
-                # candidate record overruns the buffer: fetch more blocks;
-                # at EOF a first record overrunning the file is bogus, but
-                # a chain that already validated >= 1 real record just hit
-                # the end of data — accept it
-                if not buf.extend(1 << 22):
+                # candidate record overruns the inflated data: inflate the
+                # next block; at EOF a first record overrunning the file is
+                # bogus, but a chain that already validated >= 1 real
+                # record just hit the end of data — accept it
+                if not r.next_block():
                     nxt = None if validated == 0 else -2
                     break
-                nxt = _check_record(buf.data, off, n_ref, ref_lens, check_bin)
+                nxt = _check_record(data, off, n_ref, ref_lens, check_bin)
             if nxt is None:
                 ok = False
                 break
@@ -291,11 +234,10 @@ def plan_bam_chunks(
         if pos == 0:
             starts.append(first_voff)
         else:
-            buf = _BlockBuffer(path, pos, 1 << 20)
-            if buf.blocks:
-                rec = find_record_start(buf, n_ref, ref_lens)
+            with bgzf.BlockReader(path, pos) as r:
+                rec = find_record_start(r, n_ref, ref_lens)
                 if rec is not None:
-                    starts.append(buf.virtual_offset(rec))
+                    starts.append(r.virtual_offsets([rec])[0])
         pos += split_size
     # dedupe + pair into [vStart, vEnd)
     starts = sorted(set(starts))
@@ -341,9 +283,9 @@ def decode_chunk_cols(
     walked = walk_records(path, v_start, v_end)
     if walked is None:
         return None
-    buf, rec_offs = walked
+    r, rec_offs = walked
     return bamcodec.decode_batch(
-        buf.data,
+        r.data,
         rec_offs,
         refs,
         with_seq=with_seq,
@@ -353,74 +295,56 @@ def decode_chunk_cols(
     )
 
 
-def walk_records(path: str, v_start: int, v_end: int) -> tuple[_BlockBuffer, list[int]] | None:
-    """The one BAM record walk: the inflated buffer and the buffer offsets
-    of the whole records whose start virtual offset lies in
-    [v_start, v_end) (``buf.virtual_offsets`` gives their virtual
-    offsets). Serves the decode, the index builders and the guesser
-    check; None when ``v_start`` is not in the file."""
-    c_start, u_start = v_start >> 16, v_start & 0xFFFF
-    buf = _BlockBuffer(path, c_start, 1 << 22)
-    off = buf.buf_offset(c_start, u_start)
-    if off is None:
-        return None
-    rec_offs: list[int] = []
-    unpack = _struct.unpack_from
-    bi = 0  # monotone block cursor: record offsets only move forward, so
-    # the voff boundary check is O(1) amortized instead of a per-record
-    # scan over the block table
-    while True:
-        if off + 4 > len(buf.data):
-            if not buf.extend(1 << 22):
-                break
-        while bi < len(buf.blocks) and off >= buf.blocks[bi][1] + buf.blocks[bi][2]:
-            bi += 1
-        if bi >= len(buf.blocks):
-            break
-        c_pos, b_start, _u = buf.blocks[bi]
-        voff = (c_pos << 16) | (off - b_start)
-        if voff >= v_end:
-            break
-        # ensure whole record in buffer
-        while off + 4 > len(buf.data) or off + 4 + unpack("<i", buf.data, off)[0] > len(buf.data):
-            if not buf.extend(1 << 22):
-                break
-        if off + 4 > len(buf.data) or off + 4 + unpack("<i", buf.data, off)[0] > len(buf.data):
-            break  # truncated final record (file cut mid-block)
-        rec_offs.append(off)
-        off += 4 + unpack("<i", buf.data, off)[0]
-        if off >= len(buf.data):
-            # might be exactly at end-of-data
-            if not buf.extend(1 << 22):
-                break
-    return buf, rec_offs
+def walk_records(path: str, v_start: int, v_end: int) -> tuple[bgzf.BlockReader, list[int]] | None:
+    """The one BAM record walk: the block reader over the chunk and the
+    ``r.data`` offsets of the whole records whose start virtual offset
+    lies in [v_start, v_end) (``r.virtual_offsets`` gives their virtual
+    offsets). Inflates the blocks from ``v_start``'s to the one holding
+    ``v_end``, plus those a record straddling the end needs. Serves the
+    decode, the index builders and the guesser check; None when
+    ``v_start`` is not a block of the file."""
+    c_start = v_start >> 16
+    # the range ends after the block holding v_end (before it, at offset 0)
+    with bgzf.BlockReader(path, c_start, (v_end >> 16) + (v_end & 0xFFFF > 0)) as r:
+        r.fill()
+        if r.c_pos[:1] != [c_start]:
+            return None
+        data = r.data
+        off, end = v_start & 0xFFFF, r.buffer_offsets([v_end])[0]
+        rec_offs: list[int] = []
+        unpack = _struct.unpack_from
+        while off < end:
+            if off + 4 > len(data) or off + 4 + unpack("<i", data, off)[0] > len(data):
+                if r.next_block():
+                    continue
+                break  # truncated final record (file cut mid-block)
+            rec_offs.append(off)
+            off += 4 + unpack("<i", data, off)[0]
+    return r, rec_offs
 
 
 def _advance_past_name_run(path: str, voff: int) -> int | None:
     """First record-start voff at/after ``voff`` whose name differs from
     the name at ``voff`` — the boundary snap that keeps a queryname group
     inside one partition. Returns None at end-of-data."""
-    c_start, u_start = voff >> 16, voff & 0xFFFF
-    buf = _BlockBuffer(path, c_start, 1 << 20)
-    off = buf.buf_offset(c_start, u_start)
-    if off is None:
-        return None
-    first_name = None
-    while True:
-        while off + 36 > len(buf.data):
-            if not buf.extend(1 << 20):
-                return None
-        block_size = _struct.unpack_from("<i", buf.data, off)[0]
-        while off + 4 + block_size > len(buf.data):
-            if not buf.extend(1 << 20):
-                return None
-        l_name = buf.data[off + 4 + 8]
-        name = buf.data[off + 4 + 32 : off + 4 + 32 + l_name - 1]
-        if first_name is None:
-            first_name = name
-        elif name != first_name:
-            return buf.virtual_offset(off)
-        off += 4 + block_size
+    c_start = voff >> 16
+    with bgzf.BlockReader(path, c_start) as r:
+        if not r.next_block() or r.c_pos[0] != c_start:
+            return None
+        data, unpack = r.data, _struct.unpack_from
+        off = voff & 0xFFFF
+        first_name = None
+        while True:
+            while off + 36 > len(data) or off + 4 + unpack("<i", data, off)[0] > len(data):
+                if not r.next_block():
+                    return None
+            l_name = data[off + 4 + 8]
+            name = data[off + 4 + 32 : off + 4 + 32 + l_name - 1]
+            if first_name is None:
+                first_name = name
+            elif name != first_name:
+                return r.virtual_offsets([off])[0]
+            off += 4 + unpack("<i", data, off)[0]
 
 
 def adjust_chunks_for_queryname_groups(
@@ -501,13 +425,13 @@ def _build_index(spark: SparkSession, path: str, split_size: int, ext: str, gran
         walked = walk_records(p, v_start, v_end)
         if walked is None:
             return 0, None
-        buf, rec_offs = walked
-        voffs = buf.virtual_offsets(rec_offs)
+        r, rec_offs = walked
+        voffs = r.virtual_offsets(rec_offs)
         index = bamsink.PartIndexer(ref_index, granularity, with_sbi, with_bai, "build_bai")
         chunk_end = min(v_end, end_of_data)
         if with_bai:
             cols = bamcodec.decode_batch(
-                buf.data, rec_offs, refs, with_seq=False, with_qual=False, with_tags=False
+                r.data, rec_offs, refs, with_seq=False, with_qual=False, with_tags=False
             )
             for fields in zip(
                 voffs, voffs[1:] + [chunk_end], cols["contig"], cols["start"], cols["end"], cols["flags"]
@@ -690,13 +614,13 @@ def check_record_guesser(
         walked = walk_records(p, v_start, v_end)
         if walked is None:
             return
-        buf, rec_offs = walked
+        r, rec_offs = walked
         bad: list[tuple[int, str]] = []
-        for off, voff in zip(rec_offs, buf.virtual_offsets(rec_offs)):
-            if not chain_ok(buf.data, off):
+        for off, voff in zip(rec_offs, r.virtual_offsets(rec_offs)):
+            if not chain_ok(r.data, off):
                 bad.append((voff, "FALSE_NEGATIVE"))
             for d in range(1, neighborhood + 1):
-                if off + d + 36 <= len(buf.data) and chain_ok(buf.data, off + d):
+                if off + d + 36 <= len(r.data) and chain_ok(r.data, off + d):
                     bad.append((voff + d, "FALSE_POSITIVE"))
         if bad:
             yield pd.DataFrame(bad, columns=["voff", "kind"])

@@ -115,8 +115,7 @@ def plan_ranges(paths: list[str], split_size: int = DEFAULT_SPLIT_SIZE) -> list[
 def read_lines(path: str, start: int, end: int) -> list[str]:
     """Lines of a plain text file whose first byte lies in ``[start, end)``
     (Hadoop text-split ownership), read with one seek+read extended to
-    the next newline; a trailing ``\\r`` is stripped as
-    ``spark.read.text`` does."""
+    the next newline, split by ``split_lines``."""
     lo = max(start - 1, 0)
     with _dfs.open_input(path) as f:
         f.seek(lo)
@@ -131,6 +130,14 @@ def read_lines(path: str, start: int, end: int) -> list[str]:
     if start > 0:
         # the line holding byte start-1 belongs to the previous split
         data = data.partition(b"\n")[2]
+    return split_lines(data)
+
+
+def split_lines(data) -> list[str]:
+    """The one line rule of every text read, whatever the compression:
+    split UTF-8 ``data`` on ``\\n`` only (not on the other separators
+    ``str.splitlines`` knows) and strip one trailing ``\\r``, as
+    ``spark.read.text`` does; a final newline ends the last line."""
     lines = data.decode("utf-8").split("\n")
     if lines[-1] == "":
         lines.pop()

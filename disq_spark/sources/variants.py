@@ -11,17 +11,24 @@ one range per task):
 - .bgz / BGZF-content .gz -> driver plans block-aligned byte ranges; the plan rides
   in the UDF closure as numpy columns (20 B per range at 10^6 ranges,
   plus the distinct paths), with no plan DataFrame or PythonRDD in front
-  of the decode. Split ownership follows text-split semantics (a
+  of the decode. One owner, ``_owned_span`` over a
+  ``formats/bgzf.py::BlockReader``, applies text-split semantics (a
   partition owns lines that *start* after its first newline, reading
   past its end to finish the last line) so every record is decoded
   exactly once.
 - plain-gzip .gz -> unsplittable, one range covering the file
   (BGZFEnhancedGzipCodec.java:66-101 sniffing decides which).
 
+Every compression splits its lines with the one rule of
+``sources.plan.split_lines`` (``\\n`` only, one trailing ``\\r``
+stripped, as ``spark.read.text`` does), so a file reads the same as
+.vcf, .vcf.bgz and .vcf.gz.
+
 ``build_tbi`` indexes an existing BGZF VCF on the write path's index
-path: each block-aligned split feeds its owned lines to the VCF sink's
-part indexer, and the sink's order check and .tbi merge commit the
-fragments with zero shift (``sinks/merge.py::build_index``).
+path: each block-aligned split feeds the lines ``_owned_span`` gives it,
+with virtual offsets from the reader's map (``_line_offsets``), to the
+VCF sink's part indexer, and the sink's order check and .tbi merge
+commit the fragments with zero shift (``sinks/merge.py::build_index``).
 """
 
 from __future__ import annotations
@@ -32,6 +39,7 @@ import gzip
 import io
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
@@ -47,6 +55,7 @@ from disq_spark.sources.plan import (
     plan_ranges,
     read_lines,
     resolve_paths,
+    split_lines,
 )
 
 VCF_EXTENSIONS = (".vcf", ".vcf.gz", ".vcf.bgz", ".vcf.bgzf.gz")
@@ -149,116 +158,58 @@ def scan_vcf(
         return out
 
     def decode(p: str, start: int, end: int) -> Iterator[pd.DataFrame]:
-        lines = read_lines(p, start, end) if kinds[p] == "plain" else _range_lines(p, start, end)
+        if kinds[p] == "plain":
+            lines = read_lines(p, start, end)
+        elif kinds[p] == "gzip":
+            with _dfs.open_input(p) as raw, gzip.open(raw, "rb") as f:
+                lines = split_lines(f.read())
+        else:
+            r, s, e = _owned_span(p, start, end)
+            lines = split_lines(r.data[s:e])
         if lines:
             yield parse_vcf_lines(pd.Series(lines, dtype="object"), samples, mode, with_genotypes)
 
     return Scan(VARIANTS_SCHEMA, header, decode, plan)
 
 
-def _range_lines(path: str, start: int, end: int) -> list[str]:
-    """Text-split ownership over a compressed byte range.
-
-    BGZF: decompress blocks starting in [start, end); if start > 0 the
-    first partial line belongs to the previous split (skip to first
-    newline — note a block boundary need not be a line boundary), and the
-    last line continues into following blocks until its newline.
-    Plain gzip: whole file (start must be 0).
-    """
-    if not bgzf.is_bgzf(path):
-        with gzip.open(_dfs.open_input(path), "rt", encoding="utf-8", errors="strict") as f:
-            return f.read().splitlines()
-
-    data = bgzf.read_range(path, start, end)
-    if not data:
-        return []
-    text = data.decode("utf-8", errors="strict")
-    lines = text.splitlines(keepends=True)
-    out: list[str] = []
-    # Hadoop text-split ownership: a split with start > 0 always skips its
-    # first line (the previous split reads past its end), and symmetric-
-    # ally this split reads past `end` to finish/claim its last line.
-    idx = 1 if start > 0 else 0
-    for i in range(idx, len(lines)):
-        ln = lines[i]
-        if ln.endswith("\n"):
-            out.append(ln.rstrip("\n"))
-        else:
-            # last line cut at the range end -> finish it from following blocks
-            out.append(ln + _read_until_newline(path, end))
-    if text.endswith("\n"):
-        # data ended exactly on a line boundary: the next split's first
-        # line starts at our end and it will skip it -> we own it
-        tail = _read_until_newline(path, end)
-        if tail:
-            out.append(tail)
-    return out
-
-
-def _range_records_voff(
-    path: str, start: int, end: int
-) -> Iterator[tuple[str, int, int]]:
-    """Yield ``(line, v_start, v_end)`` for lines owned by the
-    block-aligned compressed split ``[start, end)``.
-
-    Ownership is identical to ``_range_lines``; additionally each line
-    carries its tabix virtual offsets. ``v_end`` is the virtual offset
-    of the byte after the line's newline, normalized to
-    ``next_block << 16 | 0`` at block boundaries (the htslib ``tell()``
-    convention after a full-block read — required for byte-parity with
-    htsjdk/tabix-built indexes)."""
-    import bisect
-
-    bounds_u: list[int] = []  # uncompressed start of each block
-    bounds_c: list[tuple[int, int]] = []  # (c_pos, c_size) per block
-    data = bytearray()
-    with _dfs.open_input(path) as f:
-        for blk in bgzf.scan_blocks(path, start, end):
-            bounds_u.append(len(data))
-            bounds_c.append((blk.pos, blk.c_size))
-            data += bgzf.decompress_block(f, blk.pos)
-        u_in_range = len(data)
-        if u_in_range == 0:
-            return
-        # extend past the split end until the last owned line's newline
-        # (or the claimed next line's, when we end exactly on a boundary)
-        for blk in bgzf.scan_blocks(path, bounds_c[-1][0] + bounds_c[-1][1]):
-            if data[u_in_range:].find(b"\n") >= 0:
+def _owned_span(path: str, start: int, end: int) -> tuple[bgzf.BlockReader, int, int]:
+    """The one owner of BGZF VCF lines: the block reader over the
+    compressed split ``[start, end)`` and the ``r.data`` span
+    ``[s, e)`` of the lines the split owns (Hadoop text-split
+    semantics). A split with ``start > 0`` leaves the line holding its
+    first inflated byte to the previous split (a block boundary need not
+    be a line boundary) and reads past its last block to finish its last
+    line — or, when its data ends exactly on a line boundary (or the
+    first split holds only empty blocks), the next line, which the next
+    split skips. The read splits the span with
+    ``split_lines``; ``build_tbi`` maps the same line starts and ends
+    through ``r.virtual_offsets``."""
+    with bgzf.BlockReader(path, start, end) as r:
+        data = r.fill().data
+        s = 0 if start == 0 else data.find(b"\n") + 1
+        if start > 0 and s == 0:
+            return r, 0, 0  # no line starts in this split
+        nl = -1  # the first newline past the split's blocks ends its last line
+        while nl < 0:
+            seen = len(data)
+            if not r.next_block():
                 break
-            bounds_u.append(len(data))
-            bounds_c.append((blk.pos, blk.c_size))
-            data += bgzf.decompress_block(f, blk.pos)
+            nl = data.find(b"\n", seen)
+    return r, s, (nl + 1 if nl >= 0 else len(data))
 
-    def voff(u: int) -> int:
-        # a position at a block boundary maps to the FIRST block starting
-        # there (offset 0) — including an empty/EOF block, whose position
-        # is the end-of-data voff htslib reports
-        i = bisect.bisect_left(bounds_u, u)
-        if i < len(bounds_u) and bounds_u[i] == u:
-            return bounds_c[i][0] << 16
-        i -= 1
-        if u >= len(data) and i == len(bounds_u) - 1:
-            # past everything decompressed: end of the last block
-            return (bounds_c[i][0] + bounds_c[i][1]) << 16
-        return bounds_c[i][0] << 16 | (u - bounds_u[i])
 
-    s = 0
-    if start > 0:
-        nl = data.find(b"\n")
-        if nl < 0:
-            return
-        s = nl + 1  # first partial line belongs to the previous split
-    while s < len(data):
-        owns = s < u_in_range or (s == u_in_range and data[s - 1 : s] == b"\n")
-        if not owns:
-            return
-        nl = data.find(b"\n", s)
-        raw_end = (nl + 1) if nl >= 0 else len(data)
-        line = data[s : nl if nl >= 0 else len(data)].decode("utf-8")
-        yield line, voff(s), voff(raw_end)
-        if s >= u_in_range:
-            return  # the one claimed tail line
-        s = raw_end
+def _line_offsets(r: bgzf.BlockReader, s: int, e: int) -> Iterator[tuple[str, int, int]]:
+    """``(line, v_start, v_end)`` for each line of the owned span
+    ``[s, e)``. ``v_end`` is the virtual offset of the byte after the
+    line's newline; both map a block boundary to the first block starting
+    there (htslib's ``tell()`` after a whole block, which tabix and
+    htsjdk write)."""
+    span = r.data[s:e]
+    ends = (np.flatnonzero(np.frombuffer(span, dtype=np.uint8) == 10) + s + 1).tolist()
+    if e > s and span[-1] != 10:
+        ends.append(e)  # the file's last line, without a newline
+    starts = r.virtual_offsets([s] + ends[:-1], "left")
+    return zip(split_lines(span), starts, r.virtual_offsets(ends, "left"))
 
 
 def build_tbi(
@@ -281,7 +232,7 @@ def build_tbi(
 
     def index_split(p: str, start: int, end: int):
         index = vsink.PartIndexer()
-        for line, vs, ve in _range_records_voff(p, start, end):
+        for line, vs, ve in _line_offsets(*_owned_span(p, start, end)):
             if line.startswith("#") or not line:
                 continue
             fl = line.split("\t", 8)
@@ -299,15 +250,3 @@ def build_tbi(
         spark, path, ".tbi", plan_ranges([path], split_size), index_split,
         vsink.layout(read_header(path), compress=True, with_tbi=True),
     )
-
-
-def _read_until_newline(path: str, from_pos: int) -> str:
-    """Decompress blocks from ``from_pos`` until a newline appears."""
-    buf = b""
-    with _dfs.open_input(path) as f:
-        for blk in bgzf.scan_blocks(path, from_pos):
-            chunk = bgzf.decompress_block(f, blk.pos)
-            buf += chunk
-            if b"\n" in chunk:
-                break
-    return buf.split(b"\n", 1)[0].decode("utf-8")

@@ -33,26 +33,21 @@ def _serial_bai(path: str) -> baimod.BaiIndex:
     import struct
 
     from disq_spark.formats import bam as bamcodec
-    from disq_spark.sources.bam_source import _BlockBuffer
+    from disq_spark.formats import bgzf
 
     header, refs, voff = read_bam_header(path)
     ref_index = {name: i for i, (name, _l) in enumerate(refs)}
     b = baimod.BaiBuilder(len(refs))
-    buf = _BlockBuffer(path, 0, os.path.getsize(path) * 8)
-    off = buf.buf_offset(voff >> 16, voff & 0xFFFF)
-    while off is not None and off + 4 <= len(buf.data):
-        v_start = buf.virtual_offset(off)
-        row, nxt = bamcodec.decode_record(buf.data, off, refs)
-        block_size = struct.unpack_from("<i", buf.data, off)[0]
+    with bgzf.BlockReader(path) as r:
+        r.fill()
+    off = r.buffer_offsets([voff])[0]
+    while off is not None and off + 4 <= len(r.data):
+        row, nxt = bamcodec.decode_record(r.data, off, refs)
+        block_size = struct.unpack_from("<i", r.data, off)[0]
         assert nxt == off + 4 + block_size
-        try:
-            v_end = buf.virtual_offset(nxt)
-        except ValueError:  # record ends exactly at end-of-data: the
-            # canonical voff is (end of data blocks << 16), i.e. the
-            # position of the BGZF EOF terminator
-            from disq_spark.formats import bgzf
-
-            v_end = (os.path.getsize(path) - len(bgzf.EOF_BLOCK)) << 16
+        # a record ending exactly at end-of-data ends at (end of data
+        # blocks << 16), i.e. the position of the BGZF EOF terminator
+        v_start, v_end = r.virtual_offsets([off, nxt])
         name, flags, contig, start, end = row[0], row[1], row[2], row[3], row[4]
         if contig is None or start is None:
             b.add(-1, -1, -1, 0, v_start, v_end, False)
@@ -68,7 +63,7 @@ def _serial_bai(path: str) -> baimod.BaiIndex:
                 flags & 4 == 0,
             )
         off = nxt
-        if off >= len(buf.data):
+        if off >= len(r.data):
             break
     return b.build()
 

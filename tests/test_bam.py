@@ -99,15 +99,16 @@ def test_written_sbi_is_correct(spark, fixtures_dir, tmp_path):
 
     import struct
 
-    from disq_spark.sources.bam_source import _BlockBuffer
+    from disq_spark.formats import bgzf
 
-    buf = _BlockBuffer(out, 0, size * 4)
-    off = buf.buf_offset(voff2 >> 16, voff2 & 0xFFFF)
-    while off is not None and off + 4 <= len(buf.data):
-        truth.append(buf.virtual_offset(off))
-        bs = struct.unpack_from("<i", buf.data, off)[0]
+    with bgzf.BlockReader(out) as r:
+        r.fill()
+    off = r.buffer_offsets([voff2])[0]
+    while off is not None and off + 4 <= len(r.data):
+        truth.append(r.virtual_offsets([off])[0])
+        bs = struct.unpack_from("<i", r.data, off)[0]
         off = off + 4 + bs
-        if off >= len(buf.data):
+        if off >= len(r.data):
             break
     assert len(truth) == N_RECORDS
     assert idx.offsets[:-1] == truth
@@ -271,7 +272,8 @@ def test_column_pruned_decode(spark, fixtures_dir):
     assert a == b
 
 
-def test_guesser_handles_stale_bin_fields(fixtures_dir, tmp_path):
+@pytest.mark.parametrize("source", ["fixture", "generated"])
+def test_guesser_handles_stale_bin_fields(fixtures_dir, tmp_path, request, source):
     """Writers that leave the BAM bin field stale/0 must not defeat split
     planning: find_record_start falls back to a pass without the
     bin-consistency check instead of finding no boundary at all."""
@@ -280,12 +282,14 @@ def test_guesser_handles_stale_bin_fields(fixtures_dir, tmp_path):
     from disq_spark.formats import bgzf
     from disq_spark.formats.bam import parse_bam_header
     from disq_spark.sources.bam_source import (
-        _BlockBuffer,
         find_record_start,
         read_bam_header,
     )
 
-    src = os.path.join(fixtures_dir, "1.bam")
+    if source == "fixture":
+        src = os.path.join(fixtures_dir, "1.bam")
+    else:
+        src = request.getfixturevalue("planned_inputs")["bam"]
     with open(src, "rb") as f:
         raw = b"".join(bgzf.decompress_block(f, b.pos) for b in bgzf.scan_blocks(src))
     _text, refs, header_end = parse_bam_header(raw)
@@ -310,36 +314,41 @@ def test_guesser_handles_stale_bin_fields(fixtures_dir, tmp_path):
     # start the search in the middle of the file, as a split planner would
     blocks = list(bgzf.scan_blocks(out))
     mid_block = blocks[len(blocks) // 2]
-    buf = _BlockBuffer(out, mid_block.pos, 1 << 20)
-    found = find_record_start(buf, len(refs2), ref_lens)
+    with bgzf.BlockReader(out, mid_block.pos) as r:
+        found = find_record_start(r, len(refs2), ref_lens)
     assert found is not None
 
     # and the found offset really is a record boundary: its block_size
     # walks to another valid record chain
-    bs = struct.unpack_from("<i", buf.data, found)[0]
+    bs = struct.unpack_from("<i", r.data, found)[0]
     assert 32 <= bs < 1 << 20
 
 
-def test_decode_batch_matches_decode_record(fixtures_dir):
+@pytest.mark.parametrize("source", ["fixture", "generated"])
+def test_decode_batch_matches_decode_record(fixtures_dir, request, source):
     """The vectorized batch decoder must be value-identical to the
     per-record scalar decoder across every column, including tags."""
+    from disq_spark.formats import bgzf
     from disq_spark.formats.bam import decode_record
     from disq_spark.sources.bam_source import (
-        _BlockBuffer,
         decode_chunk,
         read_bam_header,
     )
 
-    path = os.path.join(fixtures_dir, "1-with-splitting-index.bam")
+    if source == "fixture":
+        path, n = os.path.join(fixtures_dir, "1-with-splitting-index.bam"), 4917
+    else:
+        path, n = request.getfixturevalue("planned_inputs")["bam"], 3000
     _h, refs, voff = read_bam_header(path)
     end = os.path.getsize(path) << 16
     rows = decode_chunk(path, refs, voff, end)  # batch path
-    assert len(rows) == 4917
+    assert len(rows) == n
 
-    buf = _BlockBuffer(path, 0, os.path.getsize(path) * 8)
-    off = buf.buf_offset(voff >> 16, voff & 0xFFFF)
+    with bgzf.BlockReader(path) as r:
+        r.fill()
+    off = r.buffer_offsets([voff])[0]
     for i, got in enumerate(rows):
-        want, off = decode_record(buf.data, off, refs)
+        want, off = decode_record(r.data, off, refs)
         assert tuple(got) == want, f"record {i} differs"
 
 

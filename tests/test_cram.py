@@ -16,6 +16,7 @@ from disq_spark.formats.cram import (
 from disq_spark.sources.cram_source import plan_cram, read_cram
 
 N_RECORDS = 8  # valid.cram ground truth (sum of container record counts)
+REF_FA = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures", "ref.fa")
 
 
 def test_itf8_roundtrip_points():
@@ -203,21 +204,50 @@ def test_cram_write_sharded(spark, fixtures_dir, tmp_path):
     assert back.count() == N_RECORDS
 
 
-def test_gzi_indexed_reference(fixtures_dir):
+def _bgzip_with_gzi(tmp_path) -> str:
+    """``fixtures/ref.fa`` as BGZF blocks of 4,000 bytes (so slices cross
+    blocks) with its ``.fai`` and a ``.gzi`` listing every block after the
+    first, as ``bgzip -i`` writes it."""
+    import shutil
+    import struct
+
+    from disq_spark.formats import bgzf
+
+    with open(REF_FA, "rb") as f:
+        text = f.read()
+    gz = str(tmp_path / "ref.fa.gz")
+    blocks = [bgzf.compress_block(text[i : i + 4000]) for i in range(0, len(text), 4000)]
+    with open(gz, "wb") as f:
+        f.write(b"".join(blocks) + bgzf.EOF_BLOCK)
+    entries = [(sum(map(len, blocks[:i])), 4000 * i) for i in range(1, len(blocks))]
+    with open(gz + ".gzi", "wb") as f:
+        f.write(struct.pack("<Q", len(entries)) + b"".join(struct.pack("<QQ", c, u) for c, u in entries))
+    shutil.copy(REF_FA + ".fai", gz + ".fai")
+    return gz
+
+
+@pytest.mark.parametrize("source", ["fixture", "generated"])
+def test_gzi_indexed_reference(fixtures_dir, tmp_path, source):
     """Bgzipped reference + .gzi/.fai random access
     (CramReferenceSourceBuilder.java:50-59): slices equal the plain
     FASTA, reading only covering blocks."""
     from disq_spark.formats.cram_decode import FastaReference
     from disq_spark.formats.gzi import IndexedBgzfFasta, open_reference
 
-    plain = FastaReference(os.path.join(fixtures_dir, "valid.fasta"))
-    idx = IndexedBgzfFasta(os.path.join(fixtures_dir, "valid.fasta.gz"))
-    for contig, ln in (("chr1", 101), ("chr7", 404), ("chr8", 202)):
+    if source == "fixture":
+        fasta, gz = os.path.join(fixtures_dir, "valid.fasta"), os.path.join(fixtures_dir, "valid.fasta.gz")
+        contigs = (("chr1", 101), ("chr7", 404), ("chr8", 202))
+    else:
+        fasta, gz = REF_FA, _bgzip_with_gzi(tmp_path)
+        contigs = (("chrA", 30000), ("chrB", 21000), ("chrM", 1200))
+    plain = FastaReference(fasta)
+    idx = IndexedBgzfFasta(gz)
+    for contig, ln in contigs:
         assert idx.get(contig, 1, ln) == plain.get(contig, 1, ln)
         assert idx.get(contig, 5, 37) == plain.get(contig, 5, 37)
         assert idx.get(contig, ln - 3, ln) == plain.get(contig, ln - 3, ln)
     # dispatch picks the indexed path for .gz + sidecars
-    ref = open_reference(os.path.join(fixtures_dir, "valid.fasta.gz"))
+    ref = open_reference(gz)
     assert isinstance(ref, IndexedBgzfFasta)
 
 

@@ -89,3 +89,24 @@ def test_truncated_bam_detected(spark, fixtures_dir, tmp_path):
     df, _ = read_bam(spark, cut, split_size=100_000)
     n = df.count()
     assert 0 < n < 4917
+
+
+@pytest.mark.parametrize("field, error", [("crc32", "incorrect data check"), ("isize", "incorrect length check")])
+def test_flipped_block_trailer_raises(spark, planned_inputs, tmp_path, field, error):
+    """One flipped byte in a data block's CRC32 or ISIZE trailer makes
+    ``read_bam`` and the BGZF ``read_vcf`` raise: every block inflate
+    goes through zlib's gzip wrapper, which checks both."""
+    from disq_spark.formats import bgzf
+
+    for key, read in (("bam", read_bam), ("vcf", read_vcf)):
+        src = planned_inputs[key]
+        blocks = list(bgzf.scan_blocks(src))
+        blk = blocks[len(blocks) // 2]  # a data block, not the header's
+        with open(src, "rb") as f:
+            data = bytearray(f.read())
+        data[blk.end - (8 if field == "crc32" else 4)] ^= 0xFF
+        bad = str(tmp_path / f"{field}_{os.path.basename(src)}")
+        with open(bad, "wb") as f:
+            f.write(bytes(data))
+        with pytest.raises(Exception, match=error):
+            read(spark, bad)[0].count()

@@ -185,6 +185,41 @@ def test_crlf_sam_reads_like_lf_sam(spark, inputs):
     assert _rows(lf) == _rows(crlf) and lf.count() == 3000
 
 
+def test_crlf_vcf_reads_like_lf_vcf(spark, tmp_path):
+    """One line rule for every VCF compression: a CRLF VCF with a U+2028
+    inside an INFO value reads like its LF copy as plain text, as BGZF
+    (small blocks that cut lines) and as true gzip, whole and cut into
+    splits — split on ``\\n`` only, one trailing ``\\r`` stripped."""
+    import gzip
+
+    from disq_spark.formats import bgzf
+    from disq_spark.sources.variants import read_vcf
+
+    header = [
+        "##fileformat=VCFv4.2",
+        "##contig=<ID=v1,length=1000000>",
+        "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1",
+    ]
+    note = "a\u2028b"
+    recs = [
+        f"v1\t{i * 10 + 1}\t.\tA\tC\t50\tPASS\tDP={i};NOTE={note if i % 7 == 3 else 'x'}\tGT:DP\t0/1:{i % 9}"
+        for i in range(300)
+    ]
+    lf = ("\n".join(header + recs) + "\n").encode()
+    crlf = lf.replace(b"\n", b"\r\n")
+    (tmp_path / "lf.vcf").write_bytes(lf)
+    (tmp_path / "crlf.vcf").write_bytes(crlf)
+    (tmp_path / "crlf.vcf.bgz").write_bytes(
+        b"".join(bgzf.compress_block(crlf[i : i + 700]) for i in range(0, len(crlf), 700)) + bgzf.EOF_BLOCK
+    )
+    (tmp_path / "crlf.vcf.gz").write_bytes(gzip.compress(crlf))
+    want = _rows(read_vcf(spark, str(tmp_path / "lf.vcf"))[0])
+    assert len(want) == 300
+    for name in ("crlf.vcf", "crlf.vcf.bgz", "crlf.vcf.gz"):
+        for split in (1 << 30, 1500):
+            assert _rows(read_vcf(spark, str(tmp_path / name), split)[0]) == want, (name, split)
+
+
 def test_vcf_query_pruning_every_tbi_split_is_empty(spark, inputs):
     df = (
         spark.read.format("vcf")
@@ -222,11 +257,20 @@ def test_empty_fastq_is_empty(spark, inputs):
 def test_read_lines_owns_each_line_once(tmp_path):
     """Newline-aligned byte ranges: over any split size the ranges
     return every line exactly once, CRLF stripped like spark.read.text,
-    with or without a final newline."""
-    from disq_spark.sources.plan import read_lines
+    with or without a final newline. The same text as BGZF, in blocks of
+    0-40 bytes (empty ones too) half of which end on a line boundary,
+    read through the one BGZF line owner: every compressed split size,
+    down to splits smaller than one block, gives the same lines once
+    each, and ``build_tbi``'s offsets of each line are htslib's
+    ``tell()`` before and after it (a block boundary is the next
+    block's offset 0)."""
+    from disq_spark.formats import bgzf
+    from disq_spark.sources.plan import read_lines, split_lines
+    from disq_spark.sources.variants import _line_offsets, _owned_span
 
     rng = random.Random(3)
     path = tmp_path / "lines.txt"
+    bgz = tmp_path / "lines.txt.bgz"
     for trial in range(60):
         lines = ["x" * rng.randint(0, 30) for _ in range(rng.randint(0, 20))]
         eol = "\r\n" if trial % 3 == 0 else "\n"
@@ -239,6 +283,41 @@ def test_read_lines_owns_each_line_once(tmp_path):
         for split in (1, 2, 3, 7, 50, 1000):
             got = [ln for s in range(0, size, split) for ln in read_lines(str(path), s, min(s + split, size))]
             assert got == want, (trial, split)
+
+        data = text.encode()
+        blocks, u_starts, pos = [], [], 0
+        while pos < len(data) or not blocks:
+            cut = min(pos + rng.randint(0, 40), len(data))
+            if rng.random() < 0.5 and data.find(b"\n", pos) >= 0:
+                cut = data.find(b"\n", pos) + 1
+            blocks.append(bgzf.compress_block(data[pos:cut]))
+            u_starts.append(pos)
+            pos = cut
+        blocks.append(bgzf.EOF_BLOCK)
+        u_starts.append(len(data))
+        c_pos = [sum(len(b) for b in blocks[:i]) for i in range(len(blocks))]
+        bgz.write_bytes(b"".join(blocks))
+
+        def tell(u: int) -> int:
+            """Virtual offset after reading u bytes from the start."""
+            if u == 0:
+                return 0
+            k = max(i for i in range(len(blocks)) if u_starts[i] <= u - 1 < u_starts[i + 1])
+            return c_pos[k + 1] << 16 if u == u_starts[k + 1] else c_pos[k] << 16 | (u - u_starts[k])
+
+        bounds = [0] + [i + 1 for i, b in enumerate(data) if b == 10]
+        if bounds[-1] != len(data):
+            bounds.append(len(data))
+        want_offsets = [(tell(a), tell(b)) for a, b in zip(bounds, bounds[1:])]
+        csize = c_pos[-1] + len(bgzf.EOF_BLOCK)
+        for split in (1, 2, 3, 7, 50, 1000):
+            got, offsets = [], []
+            for s in range(0, csize, split):
+                r, a, b = _owned_span(str(bgz), s, min(s + split, csize))
+                got += split_lines(r.data[a:b])
+                offsets += [(vs, ve) for _line, vs, ve in _line_offsets(r, a, b)]
+            assert got == want, (trial, split)
+            assert offsets == want_offsets, (trial, split)
 
 
 def test_overlap_mask_keeps_the_rows_filter_intervals_keeps(spark):

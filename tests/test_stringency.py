@@ -73,50 +73,62 @@ def test_sam_interval_filter(spark, fixtures_dir):
     assert filtered.count() == full.filter(overlaps(ivs)).count() > 0
 
 
-def test_guesser_matches_sbi_ground_truth(fixtures_dir):
+@pytest.mark.parametrize("source", ["fixture", "generated"])
+def test_guesser_matches_sbi_ground_truth(fixtures_dir, request, tmp_path, source):
     """Every granularity-1 .sbi offset must validate as a record start;
     offsets 1..8 bytes past a true start must not chain-validate
     (FALSE_POSITIVE / FALSE_NEGATIVE classification of
     BamRecordGuesserChecker.java:107-177)."""
+    from disq_spark.formats import bgzf
     from disq_spark.formats import sbi as sbimod
     from disq_spark.sources.bam_source import (
-        _BlockBuffer,
         _check_record,
         read_bam_header,
     )
 
-    bam = os.path.join(fixtures_dir, "1-with-splitting-index.bam")
+    if source == "fixture":
+        bam = os.path.join(fixtures_dir, "1-with-splitting-index.bam")
+    else:
+        # the sink's own granularity-1 .sbi over the self-made BAM
+        from disq_spark.sinks.bam import write_bam
+        from disq_spark.sources.bam_source import read_bam
+
+        spark = request.getfixturevalue("spark")
+        df, header = read_bam(spark, request.getfixturevalue("planned_inputs")["bam"])
+        bam = str(tmp_path / "g1.bam")
+        write_bam(df, header, bam, sbi_granularity=1)
     idx = sbimod.read_sbi(bam + ".sbi")
     _h, refs, _v = read_bam_header(bam)
     n_ref = len(refs)
     ref_lens = [l for _n, l in refs]
 
-    buf = _BlockBuffer(bam, 0, os.path.getsize(bam) * 8)
+    with bgzf.BlockReader(bam) as r:
+        r.fill()
 
     def validates(buf_off: int, depth: int = 5) -> bool:
         off = buf_off
-        for _ in range(depth):
-            nxt = _check_record(buf.data, off, n_ref, ref_lens)
+        for done in range(depth):
+            nxt = _check_record(r.data, off, n_ref, ref_lens)
             if nxt is None:
                 return False
-            if nxt == -1:  # ran off the buffer: accept what we verified
-                return True
+            if nxt == -1:  # ran off the data: accept what we verified, as
+                # the guesser does — a first record overrunning the file is bogus
+                return done > 0
             off = nxt
         return True
 
     starts = idx.offsets[:-1]
     # no false negatives: every true record start validates
     sampled = starts[:: max(len(starts) // 500, 1)]
-    for vo in sampled:
-        off = buf.buf_offset(vo >> 16, vo & 0xFFFF)
+    for vo, off in zip(sampled, r.buffer_offsets(sampled)):
         assert off is not None and validates(off), f"false negative at voff {vo}"
 
     # no false positives in the neighborhood of true starts
     fp = 0
-    for vo in sampled[:100]:
-        off = buf.buf_offset(vo >> 16, vo & 0xFFFF)
+    true_starts = set(r.buffer_offsets(starts[:2000]))
+    for off in r.buffer_offsets(sampled[:100]):
         for delta in range(1, 9):
-            if off + delta in {buf.buf_offset(v >> 16, v & 0xFFFF) for v in starts[:2000]}:
+            if off + delta in true_starts:
                 continue
             if validates(off + delta):
                 fp += 1

@@ -173,3 +173,41 @@ def test_reused_worker_keeps_pyspark_zip_directory(spark):
         by_pid.setdefault(r.pid, set()).add(r.dir_id)
     assert len(by_pid) < len(rows), "16 tasks on local[N] must reuse a worker"
     assert all(len(ids) == 1 for ids in by_pid.values()), by_pid
+
+
+def test_daemon_preloads_worker_imports_and_the_zip_check():
+    """``disq_spark.daemon`` imports what workers run and installs the
+    zip check before it forks them (run as Spark runs a daemon module,
+    minus the manager loop)."""
+    import subprocess
+
+    probe = (
+        "import runpy, sys, zipimport\n"
+        "runpy.run_module('disq_spark.daemon', run_name='not_main')\n"
+        "print(all(m in sys.modules for m in ('pandas', 'pyarrow', 'disq_spark.sinks.bam')),"
+        " getattr(zipimport.zipimporter.invalidate_caches, 'stat_checked', False))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", probe], cwd=root, capture_output=True, text=True, check=True)
+    assert out.stdout.split() == ["True", str(sys.version_info < (3, 13))]
+
+
+def test_local_workers_fork_from_the_preloading_daemon(spark):
+    """On a local master every Python worker's parent is the
+    ``disq_spark.daemon`` process, and what the daemon imported is out of
+    the workers' garbage collections."""
+    import pandas as pd
+
+    from disq_spark.sources.plan import plan_frame
+
+    def probe(key, start, end):
+        import gc
+        import os
+
+        with open(f"/proc/{os.getppid()}/cmdline", "rb") as f:
+            parent = f.read().replace(b"\0", b" ").decode()
+        yield pd.DataFrame({"parent": [parent], "frozen": [gc.get_freeze_count()]})
+
+    rows = plan_frame(spark, [("chunk", i, i + 1) for i in range(4)], probe, "parent string, frozen long").collect()
+    assert rows and all("-m disq_spark.daemon" in r.parent for r in rows), rows
+    assert all(r.frozen > 10_000 for r in rows), rows
