@@ -7,8 +7,8 @@ Design (see SURVEY.md, SCALE.md, COVERAGE.md):
 - DataFrames everywhere; genomics formats surface as typed DataFrames.
 - Partition planning for splittable compressed formats happens driver-side
   (index-driven where indexes exist), decode happens in Arrow-batched
-  Pandas stages (``mapInPandas``), relational work stays JVM-side in
-  whole-stage codegen.
+  Python stages (``mapInArrow`` reads, ``mapInPandas`` writes), relational
+  work stays JVM-side in whole-stage codegen.
 - Single-file outputs use the reference's signature pattern (headerless
   part files + header + terminator + filesystem concat) with per-part
   index fragments merged by virtual-offset shifting.

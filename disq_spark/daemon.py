@@ -7,8 +7,8 @@ pyspark's Arrow serializers and this package on its first task: about
 0.6 s on a 4-core x86 host, more while the other cores are busy. A job
 pays it for every worker beyond those the pool already holds, and how
 many workers a stage holds at once depends on task timing (each task of
-a stage that chains two ``mapInPandas``, such as a read written straight
-back, holds two). So the same job took 0.45 s in one run and 1.2 s in
+a stage that chains two Python maps, such as a read's ``mapInArrow``
+written straight back through a sink's ``mapInPandas``, holds two). So the same job took 0.45 s in one run and 1.2 s in
 the next. A worker forked from this daemon inherits the modules, and
 starts for the cost of the fork.
 

@@ -8,7 +8,7 @@ output (the reference's CRAM test fixtures) decodes fully.
 
 Containers are self-contained (each carries its own compression header),
 which is what makes the reference's container-aligned splits work
-(CramSource.java:82-144) — and what our mapInPandas partition decode
+(CramSource.java:82-144) — and what our per-partition decode
 relies on: a partition decodes exactly the containers whose start offset
 lies in its byte range.
 

@@ -2,8 +2,9 @@
 
 Replaces the reference's per-partition ``VCFCodec.decode``
 (VcfSource.java:133-149) and ``HeaderlessVcfOutputFormat`` encode
-(HeaderlessVcfOutputFormat.java:54-134) with pandas-batch functions for
-``mapInPandas``.
+(HeaderlessVcfOutputFormat.java:54-134) with pandas-batch functions: the
+parse feeds the VCF scan's Arrow batches, the format runs under the
+sinks' ``mapInPandas``.
 
 Line layout: #CHROM POS ID REF ALT QUAL FILTER INFO [FORMAT samples...]
 '.' encodes missing throughout. INFO flags are stored as key -> "".

@@ -27,10 +27,6 @@ _FLAG_FIELDS = {
 }
 
 
-def flag_predicate(name: str, flags_col: str = "flags") -> Column:
-    return F.col(flags_col).bitwiseAND(_FLAG_FIELDS[name]) != 0
-
-
 def with_flag_columns(df: DataFrame, flags_col: str = "flags") -> DataFrame:
     for name, bit in _FLAG_FIELDS.items():
         df = df.withColumn(name, F.col(flags_col).bitwiseAND(bit) != 0)

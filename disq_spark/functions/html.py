@@ -190,10 +190,3 @@ def decode_entities_sql(expr: str) -> str:
         rep_sql = rep.replace("'", "''")
         c = f"replace({c}, '{ent}', '{rep_sql}')"
     return c
-
-
-def html_to_text_sql(expr: str) -> str:
-    return (
-        f"trim(regexp_replace({decode_entities_sql(strip_markup_sql(expr))},"
-        f" '\\s+', ' ', 'g'))"
-    )

@@ -77,24 +77,3 @@ def http_body(payload) -> Column:
         is_http_response(payload) & (sep > 0),
         F.substring(payload, sep + 4, F.octet_length(payload) - sep - 3),
     ).otherwise(payload)
-
-
-# -- DuckDB fragments running the identical chain (oracle reuse) ----------
-
-
-def http_body_text_sql(payload_expr: str) -> str:
-    """Body as text from a latin-1 payload-text expression (DuckDB
-    reads the parquet value as VARCHAR already when the gate stores
-    text). ``payload_expr`` must be the latin-1 text form."""
-    sep = f"instr({payload_expr}, chr(13) || chr(10) || chr(13) || chr(10))"
-    return (
-        f"CASE WHEN {payload_expr} LIKE 'HTTP/%' AND {sep} > 0 "
-        f"THEN substring({payload_expr}, {sep} + 4) ELSE {payload_expr} END"
-    )
-
-
-def http_status_sql(payload_expr: str) -> str:
-    return (
-        f"CAST(NULLIF(regexp_extract({payload_expr}, "
-        f"'^HTTP/[0-9.]+ ([0-9]{{3}})', 1), '') AS INT)"
-    )

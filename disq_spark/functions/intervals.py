@@ -105,23 +105,25 @@ def filter_intervals(
 
 
 def overlap_mask(
-    pdf, intervals: list[Interval] | None, traverse_unplaced_unmapped: bool = False
+    batch, intervals: list[Interval] | None, traverse_unplaced_unmapped: bool = False
 ):
-    """The rows of a decoded pandas frame that ``filter_intervals`` keeps,
-    as a boolean numpy mask (``intervals`` alone: the rows ``overlaps``
+    """The rows of a decoded Arrow batch that ``filter_intervals`` keeps,
+    as a boolean Arrow mask (``intervals`` alone: the rows ``overlaps``
     keeps). A null contig/start/end never overlaps, as in SQL."""
-    import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    start = pd.to_numeric(pdf["start"])
-    keep = np.zeros(len(pdf), dtype=bool)
-    if intervals is not None:
-        end = pd.to_numeric(pdf["end"])
-        for iv in intervals:
-            hit = (pdf["contig"] == iv.contig) & (start <= iv.end) & (end >= iv.start)
-            keep |= hit.to_numpy(dtype=bool, na_value=False)
+    start = batch.column("start")
+    keep = pa.repeat(False, batch.num_rows)
+    for iv in intervals or []:
+        hit = pc.and_(
+            pc.equal(batch.column("contig"), iv.contig),
+            pc.and_(pc.less_equal(start, iv.end), pc.greater_equal(batch.column("end"), iv.start)),
+        )
+        keep = pc.or_(keep, pc.fill_null(hit, False))
     if traverse_unplaced_unmapped:
-        keep |= ((pdf["flags"].to_numpy() & FLAG_UNMAPPED) != 0) & start.isna().to_numpy()
+        unmapped = pc.not_equal(pc.bit_wise_and(batch.column("flags"), FLAG_UNMAPPED), 0)
+        keep = pc.or_(keep, pc.and_(unmapped, pc.is_null(start)))
     return keep
 
 

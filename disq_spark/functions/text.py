@@ -68,12 +68,6 @@ def fingerprint(col) -> Column:
     return F.md5(normalize(col))
 
 
-def stopword_count(col, lang: str) -> Column:
-    toks = tokens(col)
-    words = STOPWORDS[lang]
-    return F.size(F.filter(toks, lambda t: t.isin(*words))).cast("long")
-
-
 def stopword_ratio(col, lang: str = "en") -> Column:
     toks = tokens(col)
     words = STOPWORDS[lang]

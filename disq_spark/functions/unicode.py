@@ -21,7 +21,7 @@ mostly ASCII pay one vectorized check, not a per-string normalize.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -59,8 +59,3 @@ def nfc_normalize_col(df: DataFrame, text_col: str, out_col: str | None = None,
             yield pdf[cols]
 
     return df.mapInPandas(kernel, schema)
-
-
-def nfc_normalize_sql(expr: str) -> str:
-    """DuckDB fragment running the identical normalization."""
-    return f"nfc_normalize({expr})"

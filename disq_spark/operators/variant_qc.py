@@ -31,79 +31,6 @@ def _is_biallelic_snp() -> F.Column:
     )
 
 
-def ts_tv_stats(df: DataFrame) -> DataFrame:
-    """Transition/transversion counts over biallelic SNPs (bcftools
-    stats "ts/tv" line). Transitions are A<->G and C<->T; everything
-    else ACGT->ACGT is a transversion. Output: one row
-    (n_snp, n_ts, n_tv, ts_tv) with ts_tv rounded to 4 digits.
-    """
-    snp = df.filter(_is_biallelic_snp())
-    pur = ("A", "G")
-    is_ts = (F.col("ref").isin(*pur) == F.col("alts")[0].isin(*pur))
-    return snp.agg(
-        F.count("*").alias("n_snp"),
-        F.sum(is_ts.cast("long")).alias("n_ts"),
-        F.sum((~is_ts).cast("long")).alias("n_tv"),
-    ).select(
-        "n_snp",
-        "n_ts",
-        "n_tv",
-        F.round(F.col("n_ts") / F.col("n_tv"), 4).alias("ts_tv"),
-    )
-
-
-def genotype_sample_stats(df: DataFrame) -> DataFrame:
-    """Per-sample genotype tallies (bcftools stats "PSC" analog).
-
-    Output: (sample, n_called, n_missing, n_hom_ref, n_het, n_hom_alt).
-    A genotype is missing when gt is NULL/'.' or any allele is '.';
-    het = >1 distinct called allele; hom_alt = all alleles equal and
-    non-'0'. Phasing ('|' vs '/') is irrelevant to the tallies.
-
-    One explode (per-sample fan-out, shuffle-free) + one groupBy(sample)
-    whose cardinality is #samples — the shuffle is trivially small at
-    any corpus size.
-    """
-    g = df.select(F.explode("genotypes").alias("g")).select(
-        F.col("g.sample").alias("sample"), F.col("g.gt").alias("gt")
-    )
-    alleles = F.split(F.col("gt"), r"[/|]")
-    missing = (
-        F.col("gt").isNull() | (F.col("gt") == ".") | F.array_contains(alleles, ".")
-    )
-    distinct_n = F.size(F.array_distinct(alleles))
-    hom_ref = ~missing & (distinct_n == 1) & (alleles[0] == "0")
-    hom_alt = ~missing & (distinct_n == 1) & (alleles[0] != "0")
-    het = ~missing & (distinct_n > 1)
-    return (
-        g.groupBy("sample")
-        .agg(
-            F.sum((~missing).cast("long")).alias("n_called"),
-            F.sum(missing.cast("long")).alias("n_missing"),
-            F.sum(hom_ref.cast("long")).alias("n_hom_ref"),
-            F.sum(het.cast("long")).alias("n_het"),
-            F.sum(hom_alt.cast("long")).alias("n_hom_alt"),
-        )
-        .orderBy("sample")
-    )
-
-
-def variant_density(df: DataFrame, bin_size: int = 1_000_000) -> DataFrame:
-    """Variants per genomic bin: (contig, bin, n_variants, n_snp,
-    mean_qual). The groupBy key count is genome-size / bin_size —
-    bounded by the genome, not the cohort, so the shuffle never grows
-    with input size."""
-    return (
-        df.groupBy("contig", (F.col("start") / bin_size).cast("long").alias("bin"))
-        .agg(
-            F.count("*").alias("n_variants"),
-            F.sum(_is_biallelic_snp().cast("long")).alias("n_snp"),
-            F.round(F.avg("qual"), 4).alias("mean_qual"),
-        )
-        .orderBy("contig", "bin")
-    )
-
-
 def _gt_state_and_alleles(side: str):
     """(state, resolved-allele multiset) for one exploded genotype side.
 

@@ -89,6 +89,6 @@ VARIANTS_SCHEMA = T.StructType(
     ]
 )
 
-# Arrow-friendly pandas column orders (mapInPandas codecs)
+# Column orders of the decoded column mappings and the sinks' pandas batches
 READS_COLUMNS = [f.name for f in READS_SCHEMA.fields]
 VARIANTS_COLUMNS = [f.name for f in VARIANTS_SCHEMA.fields]

@@ -218,8 +218,6 @@ def build_index(spark, path: str, ext: str, plan, index_chunk, layout: Layout) -
     with ``attempt_part_path`` names; the collected rows (never a
     directory listing) go through ``commit_indexes``. Returns
     ``path + ext``."""
-    import pandas as pd
-
     from disq_spark.sources.plan import plan_frame
 
     parts_dir = path + ext + ".parts"
@@ -230,7 +228,7 @@ def build_index(spark, path: str, ext: str, plan, index_chunk, layout: Layout) -
         n, sidecars = index_chunk(key, start, end)
         if n:
             sidecars(part)
-        yield pd.DataFrame({"part": [part if n else ""], "n": [n]})
+        yield {"part": [part if n else ""], "n": [n]}
 
     try:
         rows = plan_frame(spark, plan, task, PART_SCHEMA).collect()

@@ -13,10 +13,11 @@ planning as distributed jobs — with an index the plan is pure metadata):
    consecutive records' field invariants (BamSource.java:120-139 +
    BamRecordGuesser.java:60-226, READS_TO_CHECK=10, MAX_READ_SIZE cap).
 
-Executors decode their virtual-offset span into Arrow batches via
-mapInPandas. Non-overlap invariant: a partition decodes exactly the
-records whose start virtual offset lies in [vStart, vEnd)
-(AbstractBinarySamSource.java:95-98 one-chunk-per-partition analog).
+Executors decode their virtual-offset span into column dicts that
+``plan_frame`` hands to Spark as Arrow batches. Non-overlap invariant: a
+partition decodes exactly the records whose start virtual offset lies in
+[vStart, vEnd) (AbstractBinarySamSource.java:95-98 one-chunk-per-partition
+analog).
 One record walk (``walk_records``) finds those records for the decode,
 the index builders and the guesser check. Every read of the file —
 that walk, the header read, the index-less guesser and the queryname
@@ -38,7 +39,6 @@ from disq_spark import fs as _dfs
 import struct as _struct
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from disq_spark.formats import bam as bamcodec
@@ -279,7 +279,7 @@ def decode_chunk_cols(
 ):
     """Column-dict variant of decode_chunk: a cheap offsets walk (one
     struct.unpack per record) followed by the numpy batch decoder — the
-    hot read path feeding Arrow batches in mapInPandas."""
+    hot read path, whose dict ``plan_frame`` hands to Arrow as it is."""
     walked = walk_records(path, v_start, v_end)
     if walked is None:
         return None
@@ -563,13 +563,13 @@ def scan_bam(
     w_qual = columns is None or "qual" in columns
     w_tags = columns is None or "tags" in columns or "read_group" in (columns or [])
 
-    def decode(p: str, v_start: int, v_end: int) -> Iterator[pd.DataFrame]:
+    def decode(p: str, v_start: int, v_end: int) -> Iterator[dict]:
         cols = decode_chunk_cols(
             p, refs, v_start, v_end,
             with_seq=w_seq, with_qual=w_qual, with_tags=w_tags, raw_tags=raw_tags,
         )
         if cols and cols["flags"]:
-            yield pd.DataFrame(cols, columns=READS_COLUMNS)
+            yield cols
 
     schema = READS_SCHEMA_RAW_TAGS if raw_tags else READS_SCHEMA
     return Scan(schema, header, decode, plan)
@@ -623,7 +623,7 @@ def check_record_guesser(
                 if off + d + 36 <= len(r.data) and chain_ok(r.data, off + d):
                     bad.append((voff + d, "FALSE_POSITIVE"))
         if bad:
-            yield pd.DataFrame(bad, columns=["voff", "kind"])
+            yield dict(zip(("voff", "kind"), zip(*bad)))
 
     return plan_frame(
         spark, [(path, vs, ve) for vs, ve in chunks], scan, "voff long, kind string"

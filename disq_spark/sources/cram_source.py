@@ -24,7 +24,6 @@ from disq_spark import fs as _dfs
 
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from disq_spark.formats.cram import plan_cram_containers, read_crai
@@ -132,12 +131,12 @@ def scan_cram(
             )
         ]
 
-    def decode(p: str, start: int, end: int) -> Iterator[pd.DataFrame]:
+    def decode(p: str, start: int, end: int) -> Iterator[dict]:
         rows = decode_cram_range(
             p, start, end, refs, reference_path, missing_ref_as_n=missing_ref_as_n
         )
         if rows:
-            yield pd.DataFrame(rows, columns=READS_COLUMNS)
+            yield dict(zip(READS_COLUMNS, zip(*rows)))
 
     return Scan(READS_SCHEMA, header, decode, plan)
 

@@ -13,9 +13,10 @@ to the scan's default (128 MiB; 64 MiB for WARC). Building the scan
 reads headers only, and pyspark pickles the reader before it calls
 ``partitions()`` (= ``scan.plan()``), so no task carries the plan. An
 empty plan makes pyspark plan one ``None`` partition, read as nothing.
-``read()`` yields ``pyarrow.RecordBatch``es after the ``intervals`` /
+``read()`` yields the ``pyarrow.RecordBatch``es ``read_<fmt>`` builds
+(sources/plan.py::to_batch), filtered by the ``intervals`` /
 ``unplaced_unmapped`` residual (functions/intervals.py::overlap_mask)
-and the ``columns`` projection. ``DataSourceReader.pushFilters`` would
+and projected to the ``columns``. ``DataSourceReader.pushFilters`` would
 need the default-off ``spark.sql.python.filterPushdown.enabled``, so
 intervals ride an option string.
 
@@ -45,6 +46,7 @@ from pyspark.sql.datasource import (
 
 from disq_spark import fs as _dfs
 from disq_spark.functions.intervals import overlap_mask, parse_intervals
+from disq_spark.sources.plan import arrow_schema, to_batch
 
 
 @dataclass
@@ -56,38 +58,29 @@ class _Split(InputPartition):
     end: int
 
 
-def _arrow_batches(decode, schema, part: _Split | None, keep=None) -> Iterator:
-    """``decode``'s frames for ``part`` as Arrow batches in ``schema``
-    (possibly a column subset), rows filtered by ``keep(frame) -> mask``;
-    the same conversion ``mapInPandas`` applies to its output."""
+def _arrow_batches(scan, part: _Split | None, keep=None, columns=None) -> Iterator:
+    """``scan.decode``'s columns for ``part`` as Arrow batches (the
+    ``to_batch`` of ``plan_frame``), rows filtered by ``keep(batch) ->
+    mask`` and projected to ``columns``; empty batches are dropped."""
     if part is None:
         return
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import _create_converter_from_pandas, to_arrow_schema
-
-    arrow = to_arrow_schema(schema)
-    convert = [
-        (f.name, _create_converter_from_pandas(f.dataType, error_on_duplicated_field_names=False))
-        for f in schema.fields
-    ]
-    for pdf in decode(part.key, part.start, part.end):
+    schema = arrow_schema(scan.schema)
+    for cols in scan.decode(part.key, part.start, part.end):
+        batch = to_batch(cols, schema)
         if keep is not None:
-            pdf = pdf[keep(pdf)]
-        if len(pdf):
-            cols = [conv(pdf[name]) for name, conv in convert]
-            yield pa.RecordBatch.from_arrays(
-                [pa.Array.from_pandas(c, mask=c.isnull(), type=t.type) for c, t in zip(cols, arrow)],
-                schema=arrow,
-            )
+            batch = batch.filter(keep(batch))
+        if batch.num_rows:
+            yield batch if columns is None else batch.select(columns)
 
 
 class _ScanReader(DataSourceReader):
     """``format(<fmt>)`` over a ``Scan``: partitions are its plan rows,
-    ``read`` its decode as Arrow with an optional interval residual."""
+    ``read`` its decode as Arrow with an optional interval residual,
+    projected to the read schema's columns."""
 
     def __init__(self, scan, schema, intervals=None, unplaced_unmapped: bool = False):
         self.scan = scan
-        self.schema = schema
+        self.columns = schema.fieldNames()
         self.keep = None
         if intervals is not None or unplaced_unmapped:
             self.keep = partial(
@@ -98,7 +91,7 @@ class _ScanReader(DataSourceReader):
         return [_Split(*row) for row in self.scan.plan()]
 
     def read(self, part: _Split | None) -> Iterator:
-        return _arrow_batches(self.scan.decode, self.schema, part, self.keep)
+        return _arrow_batches(self.scan, part, self.keep, self.columns)
 
 
 def _split(options) -> dict:
@@ -443,15 +436,14 @@ class WarcStreamReader(DataSourceStreamReader):
     dump wants Spark's file-source pattern (seen files in a per-checkpoint
     parquet ledger keyed by batch id, offset {"ledger_version": N})."""
 
-    def __init__(self, options: dict, schema):
+    def __init__(self, options: dict):
         from disq_spark.sources.warc import scan_warc
 
         self.path = options.get("path")
         if not self.path:
             raise ValueError("readStream format('warc') requires .load(dir)")
         self.split_size = int(options.get("split_size", 64 * 1024 * 1024))
-        self.decode = scan_warc(self.path, self.split_size).decode
-        self.schema = schema
+        self.scan = scan_warc(self.path, self.split_size)
 
     def initialOffset(self) -> dict:
         return {"files": {}}
@@ -471,7 +463,7 @@ class WarcStreamReader(DataSourceStreamReader):
         return [_Split(*row) for row in plan] or [None]
 
     def read(self, part: _Split | None):
-        return _arrow_batches(self.decode, self.schema, part)
+        return _arrow_batches(self.scan, part)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are the full state; nothing external to release
@@ -497,7 +489,7 @@ class WarcDataSource(_ScanSource):
         return scan_warc(path, **_split(o))
 
     def streamReader(self, schema) -> WarcStreamReader:
-        return WarcStreamReader(self.options, schema)
+        return WarcStreamReader(self.options)
 
 
 def register_datasources(spark) -> None:

@@ -14,7 +14,6 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -57,9 +56,9 @@ def scan_fasta_windows(path: str, window: int = 1_000_000, overlap: int = 0) -> 
                 s += window
         return out
 
-    def fetch(c: str, s: int, e: int) -> Iterator[pd.DataFrame]:
+    def fetch(c: str, s: int, e: int) -> Iterator[dict]:
         ref = open_indexed_reference(path)
         seq = ref.get(c, s, min(e + overlap, ref.fai[c].length))
-        yield pd.DataFrame({"contig": [c], "start": [s], "end": [e], "seq": [seq]})
+        yield {"contig": [c], "start": [s], "end": [e], "seq": [seq]}
 
     return Scan(FASTA_WINDOW_SCHEMA, None, fetch, plan)

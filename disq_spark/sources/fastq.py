@@ -21,7 +21,6 @@ from __future__ import annotations
 from functools import partial
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -90,7 +89,7 @@ def scan_fastq(path: str, split_size: int | None = None) -> Scan:
                 out.extend((p, s, min(s + split, size)) for s in range(0, size, split))
         return out
 
-    def decode(p: str, s: int, e: int) -> Iterator[pd.DataFrame]:
+    def decode(p: str, s: int, e: int) -> Iterator[dict]:
         import gzip
 
         if p.endswith(".gz"):
@@ -107,7 +106,7 @@ def scan_fastq(path: str, split_size: int | None = None) -> Scan:
             if lines[-1] == "":
                 lines.pop()
         if lines:
-            yield pd.DataFrame(fq.parse_lines(lines))
+            yield fq.parse_lines(lines)
 
     return Scan(FASTQ_SCHEMA, None, decode, plan)
 

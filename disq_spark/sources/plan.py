@@ -3,15 +3,17 @@
 Every format exposes one ``scan_<fmt>(path, ...) -> Scan``: the header,
 the output schema, a zero-argument ``plan()`` returning the
 ``(key, start, end)`` rows and a ``decode(key, start, end)`` yielding
-pandas frames. ``read_<fmt>`` turns it into a DataFrame with
-``Scan.frame``; ``spark.read.format(<fmt>)`` (sources/datasource.py)
-serves the same scan through the Python DataSource API.
+column mappings (a dict of lists, or a pandas frame from the SAM/VCF
+kernels). ``read_<fmt>`` turns it into a DataFrame with ``Scan.frame``;
+``spark.read.format(<fmt>)`` (sources/datasource.py) serves the same
+scan through the Python DataSource API. Both hand each mapping to Spark
+as one ``pyarrow.RecordBatch`` built by ``to_batch``.
 
 The reference plans splits with Spark jobs over ``PathSplit``/``BgzfBlock``
 RDDs (PathSplitSource.java:68-113, BgzfBlockSource.java:59-74). We plan
 driver-side (pure metadata: file lengths + optional indexes) and decode
 through ``plan_frame``: ``spark.range(n)`` in n partitions, so partition
-i is plan row i, mapped by one ``mapInPandas`` worker per task. The plan
+i is plan row i, mapped by one ``mapInArrow`` worker per task. The plan
 itself rides in the UDF closure as three numpy columns (key index,
 start, end) plus the distinct keys — no plan DataFrame and no
 PythonRDD in front of the decode, so each task runs one Python worker,
@@ -31,10 +33,9 @@ from disq_spark import fs as _dfs
 import glob
 import os
 from dataclasses import dataclass
-from typing import Any, Callable, Iterable, NamedTuple, Sequence
+from typing import Any, Callable, Iterable, Mapping, NamedTuple, Sequence
 
 import numpy as np
-import pandas as pd
 
 DEFAULT_SPLIT_SIZE = 128 * 1024 * 1024  # PathSplitSource.java:47 default
 
@@ -49,12 +50,13 @@ class PathRange(NamedTuple):
 class Scan:
     """One format's read path. ``plan()`` runs on the driver (index reads
     and arithmetic, no Spark job); ``decode`` runs in the tasks and
-    yields frames in ``schema``. Building a Scan reads headers only, so
-    it is cheap to pickle: the plan is never held by the Scan."""
+    yields column mappings holding every field of ``schema`` (a
+    ``StructType``). Building a Scan reads headers only, so it is cheap
+    to pickle: the plan is never held by the Scan."""
 
     schema: Any
     header: Any
-    decode: Callable[[str, int, int], Iterable[pd.DataFrame]]
+    decode: Callable[[str, int, int], Iterable[Mapping]]
     plan: Callable[[], list[tuple[str, int, int]]]
 
     def frame(self, spark):
@@ -144,27 +146,55 @@ def split_lines(data) -> list[str]:
     return [ln[:-1] if ln.endswith("\r") else ln for ln in lines]
 
 
+def arrow_schema(schema):
+    """The Arrow schema of a Spark ``StructType``, as pyspark's Arrow
+    exchanges spell it."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(schema)
+
+
+def to_batch(cols: Mapping, schema):
+    """The one hand-off of decoded columns to Arrow: ``cols`` (a dict of
+    lists or a pandas frame) as a ``RecordBatch`` in the Arrow
+    ``schema``, one ``pa.array`` per field. ``from_pandas`` keeps the
+    null rules of pyspark's pandas converter: a NaN bound for a long or
+    double column is null, a ``None`` map is null and ``{}`` an empty
+    map."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cols[f.name], type=f.type, from_pandas=True) for f in schema], schema=schema
+    )
+
+
 def plan_frame(
     spark,
     plan: Sequence[tuple[str, int, int]],
-    fn: Callable[[str, int, int], Iterable[pd.DataFrame]],
+    fn: Callable[[str, int, int], Iterable[Mapping]],
     schema,
 ):
     """DataFrame of ``fn(key, start, end)`` over every ``plan`` row, one
     partition per row in plan order — the file-order guarantee
     single-file sinks rely on (README.md:152-156); a repartition would
     round-robin arbitrarily. ``key`` is usually a path (a contig name
-    for FASTA windows); ``fn`` runs on the executor and yields pandas
-    frames in ``schema``."""
+    for FASTA windows); ``fn`` runs on the executor and yields column
+    mappings holding every field of ``schema`` (a ``StructType`` or a
+    DDL string), which is turned into an Arrow schema once, here."""
+    if isinstance(schema, str):
+        from pyspark.sql.types import DataType
+
+        schema = DataType.fromDDL(schema)
     if not plan:
         return spark.createDataFrame([], schema)
     n = len(plan)
-    return spark.range(0, n, 1, n).mapInPandas(_plan_runner(plan, fn), schema)
+    return spark.range(0, n, 1, n).mapInArrow(_plan_runner(plan, fn, arrow_schema(schema)), schema)
 
 
-def _plan_runner(plan, fn):
-    """The ``mapInPandas`` function ``plan_frame`` ships: maps each
-    ``spark.range`` id to its plan row. The plan is held as numpy
+def _plan_runner(plan, fn, schema):
+    """The ``mapInArrow`` function ``plan_frame`` ships: maps each
+    ``spark.range`` id to its plan row and each mapping ``fn`` yields
+    to a batch in the Arrow ``schema``. The plan is held as numpy
     columns plus the distinct keys, never as a list of tuples — at 10^6
     rows both pickle to ~20 MB, but the tuple list takes ~0.37 s to load
     in every task against ~0.016 s for the columns (one core of a 4-core
@@ -176,9 +206,10 @@ def _plan_runner(plan, fn):
     starts = np.fromiter((s for _k, s, _e in plan), dtype=np.int64, count=n)
     ends = np.fromiter((e for _k, _s, e in plan), dtype=np.int64, count=n)
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            for i in pdf["id"].to_numpy():
-                yield from fn(keys[key_ix[i]], int(starts[i]), int(ends[i]))
+    def run(batches):
+        for batch in batches:
+            for i in batch.column("id").to_numpy():
+                for cols in fn(keys[key_ix[i]], int(starts[i]), int(ends[i])):
+                    yield to_batch(cols, schema)
 
     return run

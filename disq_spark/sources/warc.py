@@ -30,6 +30,7 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from disq_spark import fs as _dfs
 from disq_spark.formats.warc import (
@@ -41,9 +42,16 @@ from disq_spark.formats.warc import (
 )
 from disq_spark.sources.plan import Scan, resolve_paths
 
-WARC_SCHEMA = (
-    "record_id string, warc_type string, url string, date string, "
-    "mime string, content_length long, payload binary"
+WARC_SCHEMA = T.StructType(
+    [
+        T.StructField("record_id", T.StringType(), True),
+        T.StructField("warc_type", T.StringType(), True),
+        T.StructField("url", T.StringType(), True),
+        T.StructField("date", T.StringType(), True),
+        T.StructField("mime", T.StringType(), True),
+        T.StructField("content_length", T.LongType(), True),
+        T.StructField("payload", T.BinaryType(), True),
+    ]
 )
 
 _WARC_EXTS = (".warc", ".warc.gz")

@@ -7,7 +7,7 @@ Self-contained: inputs come from the ``planned_inputs`` fixture."""
 
 import os
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from disq_spark.functions.intervals import Interval
@@ -77,18 +77,21 @@ def test_fully_pruned_queries_are_empty_in_source_schema(spark, planned_inputs):
     # every chunk was pruned at plan time: no decode stage at all
     for frame in (df, vdf):
         plan = frame._jdf.queryExecution().executedPlan().toString()
-        assert "MapInPandas" not in plan, plan
+        assert "MapInArrow" not in plan, plan
 
 
 def test_plan_runner_maps_range_ids_to_plan_rows():
     plan = [("a.bam", 0, 10), ("b.bam", 10, 20), ("a.bam", 20, 30)]
+    schema = pa.schema([("key", pa.string()), ("start", pa.int64()), ("end", pa.int64())])
 
     def echo(key, start, end):
-        yield pd.DataFrame({"key": [key], "start": [start], "end": [end]})
+        yield {"key": [key], "start": [start], "end": [end]}
 
-    run = _plan_runner(plan, echo)
-    out = pd.concat(run(iter([pd.DataFrame({"id": [2, 0]}), pd.DataFrame({"id": [1]})])))
-    assert list(out.itertuples(index=False, name=None)) == [plan[2], plan[0], plan[1]]
+    run = _plan_runner(plan, echo, schema)
+    ids = [pa.RecordBatch.from_pydict({"id": [2, 0]}), pa.RecordBatch.from_pydict({"id": [1]})]
+    out = pa.Table.from_batches(list(run(iter(ids))))
+    assert out.schema == schema
+    assert list(zip(*out.to_pydict().values())) == [plan[2], plan[0], plan[1]]
 
 
 def test_index_builders_match_the_write_side_indexes(spark, planned_inputs, tmp_path):

@@ -666,7 +666,7 @@ def test_planned_sources_scan_a_range_not_an_existing_rdd(spark, planned_inputs,
     for name, df in frames.items():
         assert df.collect(), name
         plan = plan_of(df)
-        assert "MapInPandas" in plan and "Range" in plan, (name, plan[:800])
+        assert "MapInArrow" in plan and "Range" in plan, (name, plan[:800])
         assert "Scan ExistingRDD" not in plan and "Exchange" not in plan, (name, plan[:800])
         assert df.rdd.getNumPartitions() > 1, name
 
@@ -677,7 +677,8 @@ def test_plan_ships_as_numpy_columns():
     int32 path index + int64 start + int64 end)."""
     from pyspark.serializers import CloudPickleSerializer
 
-    from disq_spark.sources.plan import _plan_runner
+    from disq_spark.schemas import READS_SCHEMA
+    from disq_spark.sources.plan import _plan_runner, arrow_schema
 
     n = 10**6
     paths = [f"/data/cohort/sample{i:03d}.bam" for i in range(8)]
@@ -686,7 +687,8 @@ def test_plan_ships_as_numpy_columns():
     def decode(path, start, end):
         yield from ()
 
-    size = len(CloudPickleSerializer().dumps(_plan_runner(plan, decode)))
+    schema = arrow_schema(READS_SCHEMA)
+    size = len(CloudPickleSerializer().dumps(_plan_runner(plan, decode, schema)))
     assert size <= 24 * n + sum(len(p) for p in paths) + 64 * 1024, size
 
 

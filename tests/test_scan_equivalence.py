@@ -1,9 +1,10 @@
 """One scan per format: ``spark.read.format(fmt)`` must return the same
 multiset of rows as ``read_<fmt>``, at a split size that keeps each file
 whole and at one that cuts lines and records mid-way. Both entry points
-build the same ``scan_<fmt>``; the DataSource serves it as Arrow batches
-after a pandas interval residual, which must keep exactly the rows the
-functional readers' Column filter keeps.
+build the same ``scan_<fmt>`` and hand its decoded columns to Arrow
+through one ``to_batch``; the DataSource then filters the batches by an
+Arrow interval residual, which must keep exactly the rows the functional
+readers' Column filter keeps.
 
 Self-contained: inputs come from the ``planned_inputs`` fixture, the
 library's own sinks and ``fixtures/``."""
@@ -11,7 +12,7 @@ library's own sinks and ``fixtures/``."""
 import os
 import random
 
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 from disq_spark.functions.intervals import Interval, filter_intervals, overlap_mask, overlaps
@@ -321,8 +322,10 @@ def test_read_lines_owns_each_line_once(tmp_path):
 
 
 def test_overlap_mask_keeps_the_rows_filter_intervals_keeps(spark):
-    """The DataSource residual (pandas) against the functional readers'
+    """The DataSource residual (Arrow) against the functional readers'
     Column predicate, over placed, placed-unmapped and unplaced rows."""
+    from disq_spark.sources.plan import arrow_schema, to_batch
+
     rows = [
         ("a", 0, "c1", 100, 199),
         ("b", 0, "c1", 200, 299),
@@ -333,16 +336,124 @@ def test_overlap_mask_keeps_the_rows_filter_intervals_keeps(spark):
         ("g", 0, "c1", 300, 300),
         ("h", 0, "c1", 1000, None),  # start without end
     ]
-    pdf = pd.DataFrame(rows, columns=["name", "flags", "contig", "start", "end"])
-    df = spark.createDataFrame(pdf, "name string, flags int, contig string, start long, end long")
+    df = spark.createDataFrame(rows, "name string, flags int, contig string, start long, end long")
+    cols = dict(zip(df.columns, zip(*rows)))
+    batch = to_batch(cols, arrow_schema(df.schema))
+
+    def kept(mask):
+        return sorted(batch.filter(mask).column("name").to_pylist())
+
     ivs = [Interval("c1", 150, 200), Interval("c2", 50, 60), Interval("c1", 300, 300)]
     for intervals, uu in [(ivs, False), (None, True), (ivs, True), ([Interval("c3", 1, 9)], True)]:
         want = sorted(r.name for r in filter_intervals(df, intervals, uu).collect())
-        got = sorted(pdf[overlap_mask(pdf, intervals, uu)]["name"])
-        assert got == want, (intervals, uu)
-    assert sorted(pdf[overlap_mask(pdf, ivs)]["name"]) == sorted(
-        r.name for r in df.filter(overlaps(ivs)).collect()
+        assert kept(overlap_mask(batch, intervals, uu)) == want, (intervals, uu)
+    assert kept(overlap_mask(batch, ivs)) == sorted(r.name for r in df.filter(overlaps(ivs)).collect())
+
+
+def _scans(inputs):
+    """Every split-planned scan over the module's inputs, by name."""
+    from disq_spark.sources.bam_source import scan_bam
+    from disq_spark.sources.cram_source import scan_cram
+    from disq_spark.sources.fasta import scan_fasta_windows
+    from disq_spark.sources.fastq import scan_fastq
+    from disq_spark.sources.reads import scan_sam
+    from disq_spark.sources.variants import scan_vcf
+    from disq_spark.sources.warc import scan_warc
+
+    bam, split = inputs["bam"], inputs["bam_split"]
+    return {
+        "bam": scan_bam(bam, split),
+        "bam_raw_tags": scan_bam(bam, split, raw_tags=True),
+        "bam_pruned": scan_bam(bam, split, columns=["name", "flags", "contig", "start", "end"]),
+        "sam": scan_sam(inputs["sam"], 4099),
+        "plain_vcf": scan_vcf(inputs["plain_vcf"], inputs["vcf_split"]),
+        "bgzf_vcf": scan_vcf(inputs["vcf"], inputs["vcf_split"]),
+        "cram": scan_cram(inputs["cram"], REF_FA, split_size=4099),
+        "fastq": scan_fastq(FASTQ, 4099),
+        "fasta": scan_fasta_windows(REF_FA, 7000),
+        "warc": scan_warc(inputs["warc"], 4099),
+    }
+
+
+def _plan_batches(scan):
+    """The batches ``plan_frame`` ships for ``scan``: its runner over
+    every plan row, fed ``spark.range`` id batches as Spark feeds it."""
+    from disq_spark.sources.plan import _plan_runner, arrow_schema
+
+    plan = scan.plan()
+    run = _plan_runner(plan, scan.decode, arrow_schema(scan.schema))
+    return list(run(iter([pa.RecordBatch.from_pydict({"id": list(range(len(plan)))})])))
+
+
+def test_every_scan_batch_is_in_the_scan_arrow_schema(inputs):
+    """Each batch of every scan carries exactly ``to_arrow_schema`` of the
+    scan's Spark schema — the schema ``mapInArrow`` declares — and holds
+    valid Arrow data."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    for name, scan in _scans(inputs).items():
+        want = to_arrow_schema(scan.schema)
+        batches = _plan_batches(scan)
+        assert len(batches) > 1, name
+        for batch in batches:
+            assert batch.schema == want, name
+            batch.validate(full=True)
+
+
+def test_to_batch_puts_null_where_the_rows_hold_null(spark, tmp_path):
+    """Nulls survive the hand-off as nulls, as pyspark's pandas converter
+    left them, not NaN or an empty map: a SAM unplaced read
+    (``start``/``end``/``mate_start``), a VCF site with ``.``
+    QUAL/FILTER/INFO, and a BAM record with no tags next to one with
+    tags."""
+    from disq_spark.headers import SamHeader
+    from disq_spark.sinks.bam import write_bam
+    from disq_spark.sources.bam_source import scan_bam
+    from disq_spark.sources.reads import scan_sam
+    from disq_spark.sources.variants import scan_vcf
+
+    sam = tmp_path / "u.sam"
+    sam.write_text(
+        "@HD\tVN:1.6\tSO:unsorted\n@SQ\tSN:c1\tLN:1000\n"
+        "p\t0\tc1\t5\t60\t4M\t=\t9\t8\tACGT\tIIII\tNM:i:0\n"
+        "u\t4\t*\t0\t0\t*\t*\t0\t0\tACGT\tIIII\n"
     )
+    vcf = tmp_path / "d.vcf"
+    vcf.write_text(
+        "##fileformat=VCFv4.2\n##contig=<ID=v1,length=1000>\n"
+        "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\n"
+        "v1\t5\t.\tA\tC\t.\t.\t.\tGT:DP\t0/1:.\n"
+        "v1\t9\trs1\tA\tG,T\t12.5\tPASS\tDP=3\tGT:DP\t1/2:7\n"
+    )
+    rows = [
+        {
+            "name": name, "flags": 0, "contig": "c1", "start": start, "end": start + 3,
+            "mapq": 60, "cigar": "4M", "mate_contig": None, "mate_start": None,
+            "template_len": 0, "seq": "ACGT", "qual": "IIII", "tags": tags, "read_group": None,
+        }
+        for name, start, tags in (("t", 5, {"NM": "i:1", "RG": "Z:g1"}), ("n", 9, None))
+    ]
+    bam = str(tmp_path / "t.bam")
+    write_bam(
+        spark.createDataFrame(rows, READS_SCHEMA),
+        SamHeader(text="@HD\tVN:1.6\tSO:coordinate\n@SQ\tSN:c1\tLN:1000\n"),
+        bam, write_bai=False, write_sbi=False,
+    )
+    cases = {"sam": scan_sam(str(sam)), "vcf": scan_vcf(str(vcf)), "bam": scan_bam(bam)}
+    got = {}
+    for name, scan in cases.items():
+        [batch] = _plan_batches(scan)
+        got[name] = {r["start" if name == "vcf" else "name"]: r for r in batch.to_pylist()}
+    u = got["sam"]["u"]
+    assert (u["contig"], u["start"], u["end"], u["mate_start"], u["tags"]) == (None,) * 5
+    site = got["vcf"][5]
+    assert (site["qual"], site["filters"], site["info"], site["ids"]) == (None,) * 4
+    assert ("DP", ".") in site["genotypes"][0]["attrs"]
+    placed = got["vcf"][9]
+    assert (placed["qual"], placed["filters"], placed["info"]) == (12.5, [], [("DP", "3")])
+    assert (got["sam"]["p"]["start"], got["sam"]["p"]["mate_start"]) == (5, 9)
+    assert got["bam"]["n"]["tags"] is None and got["bam"]["n"]["read_group"] is None
+    assert sorted(got["bam"]["t"]["tags"]) == [("NM", "i:1"), ("RG", "Z:g1")]
 
 
 def test_pickled_reader_does_not_grow_with_the_plan(tmp_path):

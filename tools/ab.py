@@ -1,6 +1,6 @@
 """Interleaved A/B of two checkouts on one perfbench workload.
 
-    python plans/pr2/ab.py A_DIR B_DIR --workload bam_read --seeds 201-210 [--trace 1]
+    python tools/ab.py A_DIR B_DIR --workload bam_read --seeds 201-210 [--trace 1]
 
 Each seed runs ``perfbench/run.py`` once in each checkout, alternating
 which goes first, so host drift hits both sides alike. Prints one JSON
