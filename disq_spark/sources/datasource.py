@@ -76,11 +76,11 @@ def _arrow_batches(scan, part: _Split | None, keep=None, columns=None) -> Iterat
 class _ScanReader(DataSourceReader):
     """``format(<fmt>)`` over a ``Scan``: partitions are its plan rows,
     ``read`` its decode as Arrow with an optional interval residual,
-    projected to the read schema's columns."""
+    projected to the read schema's columns (all of them for ``None``)."""
 
     def __init__(self, scan, schema, intervals=None, unplaced_unmapped: bool = False):
         self.scan = scan
-        self.columns = schema.fieldNames()
+        self.columns = None if schema is None else schema.fieldNames()
         self.keep = None
         if intervals is not None or unplaced_unmapped:
             self.keep = partial(

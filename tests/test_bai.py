@@ -14,6 +14,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import bam_inputs, fixture, needs_reference, upstream
 from disq_spark.formats import bai as baimod
 from disq_spark.formats.bam import _reg2bin
 from disq_spark.functions.intervals import Interval, overlaps
@@ -25,7 +26,6 @@ from disq_spark.sources.bam_source import (
     read_bam_header,
 )
 
-N_RECORDS = 4917
 
 
 def _serial_bai(path: str) -> baimod.BaiIndex:
@@ -90,12 +90,15 @@ def test_bai_write_read_roundtrip(tmp_path):
     assert list(r0.bins.values())[0] == [(0 << 16 | 10, 1 << 16 | 0)]
 
 
-def test_distributed_bai_equals_serial(spark, fixtures_dir, tmp_path):
+def test_distributed_bai_equals_serial(spark, gen_reads, tmp_path):
     """Write with >1 partition, merge part .bais, compare against a
     serial single-pass index of the final file (BaiMergingTest analog)."""
-    src = os.path.join(fixtures_dir, "1-with-splitting-index.bam")
+    for i, (src, n) in enumerate(bam_inputs(gen_reads, "1-with-splitting-index.bam")):
+        _check_distributed_bai(spark, src, n, str(tmp_path / f"indexed{i}.bam"))
+
+
+def _check_distributed_bai(spark, src, n_records, out):
     df, header = read_bam(spark, src, split_size=200_000)  # multiple partitions
-    out = str(tmp_path / "indexed.bam")
     write_bam(df, header, out, write_bai=True)
     assert os.path.exists(out + ".bai")
 
@@ -113,7 +116,7 @@ def test_distributed_bai_equals_serial(spark, fixtures_dir, tmp_path):
         assert m.linear == [max(v, 0) for v in s.linear]
 
     total = sum(r.n_mapped + r.n_unmapped for r in merged.refs) + (merged.n_no_coor or 0)
-    assert total == N_RECORDS
+    assert total == n_records
 
 
 # fixture coverage: all 4917 reads on contig "1" at 24,795,478..24,981,705
@@ -127,6 +130,7 @@ def test_distributed_bai_equals_serial(spark, fixtures_dir, tmp_path):
         [Interval("99", 1, 2)],  # contig absent from the data
     ],
 )
+@needs_reference
 def test_interval_read_pruned_equals_filtered(spark, fixtures_dir, tmp_path, ivs):
     """read_bam(intervals) with a .bai == brute-force residual filter
     (traversal matrix differential, HtsjdkReadsRddTest.java:312-459)."""
@@ -144,6 +148,7 @@ def test_interval_read_pruned_equals_filtered(spark, fixtures_dir, tmp_path, ivs
     )
 
 
+@needs_reference
 def test_pruning_actually_drops_partitions(spark, fixtures_dir, tmp_path):
     src = os.path.join(fixtures_dir, "1-with-splitting-index.bam")
     df, header = read_bam(spark, src, split_size=200_000)
@@ -166,13 +171,16 @@ def test_pruning_actually_drops_partitions(spark, fixtures_dir, tmp_path):
     assert none_kept == []
 
 
-def test_idxstats_matches_full_scan(spark, fixtures_dir, tmp_path):
+def test_idxstats_matches_full_scan(spark, gen_reads, tmp_path):
     """O(index) idxstats == O(data) groupBy over the decoded records."""
+    for i, (src, _n) in enumerate(bam_inputs(gen_reads, "1-with-splitting-index.bam")):
+        _check_idxstats(spark, src, str(tmp_path / f"indexed{i}.bam"))
+
+
+def _check_idxstats(spark, src, out):
     from disq_spark.sources.bam_source import bam_idxstats
 
-    src = os.path.join(fixtures_dir, "1-with-splitting-index.bam")
     df, header = read_bam(spark, src, split_size=200_000)
-    out = str(tmp_path / "indexed.bam")
     write_bam(df, header, out, write_bai=True)
 
     got = {r.contig: r for r in bam_idxstats(spark, out).collect()}
@@ -219,18 +227,21 @@ def test_bai_build_refuses_unsorted_records():
         b2.add(0, 2000, 2100, 4681, 100, 200, True)
 
 
-def test_bai_merge_refuses_globally_interleaved_parts(spark, fixtures_dir, tmp_path):
+def test_bai_merge_refuses_globally_interleaved_parts(spark, planned_inputs, tmp_path):
     """Per-part-sorted but globally-interleaved parts (each part
     internally ordered, ranges overlapping across parts) must be refused
-    at merge time — within-part guards alone cannot see this."""
+    at merge time — within-part guards alone cannot see this. Inputs
+    hold one contig and no unplaced reads, so no within-part guard
+    refuses first."""
     import pytest
 
     from disq_spark.sinks.bam import write_bam
     from disq_spark.sources.bam_source import read_bam
 
-    df, header = read_bam(spark, os.path.join(fixtures_dir, "1.bam"))
-    # 4 hash partitions, each sorted within itself: every part spans
-    # nearly the whole coordinate range -> interleaved globally
-    bad = df.repartition(4).sortWithinPartitions("contig", "start")
-    with pytest.raises(Exception, match="globally coordinate-sorted"):
-        write_bam(bad, header, str(tmp_path / "bad.bam"), write_bai=True)
+    for i, src in enumerate([planned_inputs["bam"]] + upstream(fixture("1.bam"))):
+        df, header = read_bam(spark, src)
+        # 4 hash partitions, each sorted within itself: every part spans
+        # nearly the whole coordinate range -> interleaved globally
+        bad = df.repartition(4).sortWithinPartitions("contig", "start")
+        with pytest.raises(Exception, match="globally coordinate-sorted"):
+            write_bam(bad, header, str(tmp_path / f"bad{i}.bam"), write_bai=True)

@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import bam_inputs, fixture, needs_reference, upstream
 from disq_spark.formats import sbi as sbimod
 from disq_spark.sinks.bam import write_bam
 from disq_spark.sources.bam_source import (
@@ -20,6 +21,7 @@ from disq_spark.sources.bam_source import (
 N_RECORDS = 4917  # ground truth from the fixture's granularity-1 .sbi
 
 
+@needs_reference
 def test_header(fixtures_dir):
     header, refs, voff = read_bam_header(os.path.join(fixtures_dir, "1.bam"))
     assert header.sort_order == "coordinate"
@@ -27,6 +29,7 @@ def test_header(fixtures_dir):
     assert refs[0] == ("1", 249250621)
 
 
+@needs_reference
 def test_sbi_matches_fixture_truth(fixtures_dir):
     idx = sbimod.read_sbi(os.path.join(fixtures_dir, "1-with-splitting-index.bam.sbi"))
     assert idx.total_records == N_RECORDS
@@ -35,11 +38,14 @@ def test_sbi_matches_fixture_truth(fixtures_dir):
 
 
 @pytest.mark.parametrize("split", [50_000, 76_458, 100_000, 1 << 20])
-def test_chunks_nonoverlapping_complete(fixtures_dir, split):
+def test_chunks_nonoverlapping_complete(gen_reads, split):
     """Every record decoded exactly once for any split size — with and
     without the index (BamSourceTest.java:44-77 analog)."""
-    for name in ("1-with-splitting-index.bam", "1.bam"):
-        p = os.path.join(fixtures_dir, name)
+    n = gen_reads["n"]
+    cases = [(gen_reads["bam"], n), (gen_reads["bam_noindex"], n)]
+    cases += upstream(*((fixture(name), N_RECORDS) for name in ("1-with-splitting-index.bam", "1.bam")))
+    for p, n_records in cases:
+        name = os.path.basename(p)
         header, refs, voff = read_bam_header(p)
         chunks = plan_bam_chunks(p, split, refs, voff)
         # non-overlap: ends meet starts
@@ -48,48 +54,53 @@ def test_chunks_nonoverlapping_complete(fixtures_dir, split):
         names = []
         for vs, ve in chunks:
             names.extend(r[0] for r in decode_chunk(p, refs, vs, ve))
-        assert len(names) == N_RECORDS, f"{name} split={split}"
+        assert len(names) == n_records, f"{name} split={split}"
 
 
-def test_read_bam_spark(spark, fixtures_dir):
-    df, header = read_bam(spark, os.path.join(fixtures_dir, "1-with-splitting-index.bam"), split_size=100_000)
-    assert df.count() == N_RECORDS
-    # typed columns usable in Catalyst expressions
-    agg = df.filter(F.col("contig") == "1").agg(
-        F.min("start").alias("lo"), F.max("end").alias("hi"), F.count("*").alias("n")
-    ).collect()[0]
-    assert agg.n > 0 and agg.lo <= agg.hi
+def test_read_bam_spark(spark, gen_reads):
+    for path, n in bam_inputs(gen_reads, "1-with-splitting-index.bam"):
+        df, header = read_bam(spark, path, split_size=100_000)
+        assert df.count() == n
+        # typed columns usable in Catalyst expressions; the first
+        # @SQ contig ("1" upstream) holds reads in both inputs
+        agg = df.filter(F.col("contig") == header.sequences[0][0]).agg(
+            F.min("start").alias("lo"), F.max("end").alias("hi"), F.count("*").alias("n")
+        ).collect()[0]
+        assert agg.n > 0 and agg.lo <= agg.hi
 
 
-def test_roundtrip_single_file_with_sbi(spark, fixtures_dir, tmp_path):
-    src = os.path.join(fixtures_dir, "1-with-splitting-index.bam")
-    df, header = read_bam(spark, src, split_size=200_000)
-    out = str(tmp_path / "out.bam")
-    write_bam(df, header, out, sbi_granularity=1)
-    assert os.path.exists(out) and os.path.exists(out + ".sbi")
+def test_roundtrip_single_file_with_sbi(spark, gen_reads, tmp_path):
+    for i, (src, n) in enumerate(bam_inputs(gen_reads, "1-with-splitting-index.bam")):
+        df, header = read_bam(spark, src, split_size=200_000)
+        out = str(tmp_path / f"out{i}.bam")
+        write_bam(df, header, out, sbi_granularity=1)
+        assert os.path.exists(out) and os.path.exists(out + ".sbi")
 
-    df2, header2 = read_bam(spark, out, split_size=100_000)
-    assert header2.text == header.text
-    assert df2.count() == N_RECORDS
-    # value-level equality of the full record set (order-insensitive;
-    # writing repartitions so file order may differ)
-    cols = ["name", "flags", "contig", "start", "end", "cigar", "seq", "qual"]
-    a = sorted(map(tuple, df.select(cols).collect()))
-    b = sorted(map(tuple, df2.select(cols).collect()))
-    assert a == b
+        df2, header2 = read_bam(spark, out, split_size=100_000)
+        assert header2.text == header.text
+        assert df2.count() == n
+        # value-level equality of the full record set (order-insensitive;
+        # writing repartitions so file order may differ)
+        cols = ["name", "flags", "contig", "start", "end", "cigar", "seq", "qual"]
+        a = sorted(map(tuple, df.select(cols).collect()))
+        b = sorted(map(tuple, df2.select(cols).collect()))
+        assert a == b
 
 
-def test_written_sbi_is_correct(spark, fixtures_dir, tmp_path):
+def test_written_sbi_is_correct(spark, gen_reads, tmp_path):
     """Merged .sbi must list exactly the true record-start virtual
     offsets of the written file (testWriteSBIIndex analog, semantic
     equality instead of byte equality — we zero the optional md5/uuid)."""
-    src = os.path.join(fixtures_dir, "1-with-splitting-index.bam")
+    for i, (src, n) in enumerate(bam_inputs(gen_reads, "1-with-splitting-index.bam")):
+        _check_written_sbi(spark, src, n, str(tmp_path / f"indexed{i}.bam"))
+
+
+def _check_written_sbi(spark, src, n_records, out):
     df, header = read_bam(spark, src, split_size=200_000)
-    out = str(tmp_path / "indexed.bam")
     write_bam(df, header, out, sbi_granularity=1)
 
     idx = sbimod.read_sbi(out + ".sbi")
-    assert idx.total_records == N_RECORDS
+    assert idx.total_records == n_records
     assert idx.file_length == os.path.getsize(out)
 
     # serially decode the written file recording true start offsets
@@ -110,34 +121,35 @@ def test_written_sbi_is_correct(spark, fixtures_dir, tmp_path):
         off = off + 4 + bs
         if off >= len(r.data):
             break
-    assert len(truth) == N_RECORDS
+    assert len(truth) == n_records
     assert idx.offsets[:-1] == truth
 
 
-def test_roundtrip_sharded(spark, fixtures_dir, tmp_path):
-    src = os.path.join(fixtures_dir, "1.bam")
-    df, header = read_bam(spark, src)
-    out = str(tmp_path / "bam_shards")
-    write_bam(df.repartition(3), header, out, single_file=False)
-    shards = [f for f in os.listdir(out) if f.endswith(".bam")]
-    assert len(shards) == 3
-    df2, _ = read_bam(spark, out)
-    assert df2.count() == N_RECORDS
+def test_roundtrip_sharded(spark, gen_reads, tmp_path):
+    for i, (src, n) in enumerate(bam_inputs(gen_reads, "1.bam")):
+        df, header = read_bam(spark, src)
+        out = str(tmp_path / f"bam_shards{i}")
+        write_bam(df.repartition(3), header, out, single_file=False)
+        shards = [f for f in os.listdir(out) if f.endswith(".bam")]
+        assert len(shards) == 3
+        df2, _ = read_bam(spark, out)
+        assert df2.count() == n
 
 
-def test_tags_roundtrip(spark, fixtures_dir, tmp_path):
-    src = os.path.join(fixtures_dir, "1.bam")
-    df, header = read_bam(spark, src)
-    row = df.filter(F.col("tags").isNotNull()).first()
-    assert row.tags  # fixture records carry aux tags
-    out = str(tmp_path / "tags.bam")
-    write_bam(df, header, out)
-    df2, _ = read_bam(spark, out)
-    t1 = sorted(tuple(sorted((r.tags or {}).items())) for r in df.select("tags").collect())
-    t2 = sorted(tuple(sorted((r.tags or {}).items())) for r in df2.select("tags").collect())
-    assert t1 == t2
+def test_tags_roundtrip(spark, gen_reads, tmp_path):
+    for i, (src, _n) in enumerate(bam_inputs(gen_reads, "1.bam")):
+        df, header = read_bam(spark, src)
+        row = df.filter(F.col("tags").isNotNull()).first()
+        assert row.tags  # fixture records carry aux tags
+        out = str(tmp_path / f"tags{i}.bam")
+        write_bam(df, header, out)
+        df2, _ = read_bam(spark, out)
+        t1 = sorted(tuple(sorted((r.tags or {}).items())) for r in df.select("tags").collect())
+        t2 = sorted(tuple(sorted((r.tags or {}).items())) for r in df2.select("tags").collect())
+        assert t1 == t2
 
 
+@needs_reference
 def test_zero_length_secondary(spark, fixtures_dir):
     """Records with '*' seq (zero-length secondary alignments fixture)."""
     df, _ = read_bam(spark, os.path.join(fixtures_dir, "zero-length-secondary-alignment.bam"))
@@ -146,6 +158,7 @@ def test_zero_length_secondary(spark, fixtures_dir):
     assert any(r.seq is None for r in rows)
 
 
+@needs_reference
 def test_build_sbi_matches_fixture_index(spark, fixtures_dir, tmp_path):
     """Distributed .sbi construction over an index-less copy reproduces
     the htsjdk-written fixture index's record offsets exactly
@@ -179,57 +192,62 @@ def test_build_sbi_matches_fixture_index(spark, fixtures_dir, tmp_path):
     assert df.count() == N_RECORDS
 
 
-def test_raw_tags_mode_equivalent_and_roundtrips(spark, fixtures_dir, tmp_path):
+def test_raw_tags_mode_equivalent_and_roundtrips(spark, gen_reads, tmp_path):
     """``tags="raw"`` (the lazy-tags 100 TB scan shape): parse_tags on
     the raw byte spans reproduces the parsed-mode rows exactly, and the
     sink's verbatim-copy write path round-trips bit-equivalently."""
     from disq_spark.functions.flags import parse_tags
     from disq_spark.sinks.bam import write_bam
 
-    src = os.path.join(fixtures_dir, "1.bam")
-    parsed, header = read_bam(spark, src, split_size=200_000)
-    raw, _ = read_bam(spark, src, split_size=200_000, tags="raw")
-    assert dict(raw.dtypes)["tags"] == "binary"
+    for i, (src, _n) in enumerate(bam_inputs(gen_reads, "1.bam")):
+        parsed, header = read_bam(spark, src, split_size=200_000)
+        raw, _ = read_bam(spark, src, split_size=200_000, tags="raw")
+        assert dict(raw.dtypes)["tags"] == "binary"
 
-    a = sorted(map(str, parsed.collect()))
-    b = sorted(map(str, parse_tags(raw).collect()))
-    assert a == b
+        a = sorted(map(str, parsed.collect()))
+        b = sorted(map(str, parse_tags(raw).collect()))
+        assert a == b
 
-    out = str(tmp_path / "rt.bam")
-    write_bam(raw, header, out, write_sbi=False, write_bai=False)
-    back, _ = read_bam(spark, out, split_size=200_000)
-    assert sorted(map(str, back.collect())) == a
+        out = str(tmp_path / f"rt{i}.bam")
+        write_bam(raw, header, out, write_sbi=False, write_bai=False)
+        back, _ = read_bam(spark, out, split_size=200_000)
+        assert sorted(map(str, back.collect())) == a
 
 
-def test_typed_tag_projection(spark, fixtures_dir):
+def test_typed_tag_projection(spark, gen_reads):
     """SAM aux tags as typed Columns (htsjdk getAttribute parity)."""
     from disq_spark.functions.flags import typed_tag
 
-    df, _ = read_bam(spark, os.path.join(fixtures_dir, "1.bam"))
-    t = df.select(
-        typed_tag("NM", "i").alias("nm"),
-        typed_tag("MD").alias("md"),
-        typed_tag("RG", "Z").alias("rg"),
-    ).filter(F.col("nm").isNotNull())
-    assert dict(t.dtypes)["nm"] == "bigint"
-    row = t.first()
-    assert isinstance(row.nm, int) and row.rg
-    stats = t.agg(F.avg("nm").alias("mean_nm")).collect()[0]
-    assert stats.mean_nm >= 0
+    for src, _n in bam_inputs(gen_reads, "1.bam"):
+        df, _ = read_bam(spark, src)
+        t = df.select(
+            typed_tag("NM", "i").alias("nm"),
+            typed_tag("MD").alias("md"),
+            typed_tag("RG", "Z").alias("rg"),
+        ).filter(F.col("nm").isNotNull())
+        assert dict(t.dtypes)["nm"] == "bigint"
+        row = t.first()
+        assert isinstance(row.nm, int) and row.rg
+        stats = t.agg(F.avg("nm").alias("mean_nm")).collect()[0]
+        assert stats.mean_nm >= 0
 
 
-def test_queryname_pair_atomicity(spark, fixtures_dir, tmp_path):
+def test_queryname_pair_atomicity(spark, gen_reads, tmp_path):
     """pair_atomic read: no read name's records span two partitions —
     the guarantee the reference documents as unimplemented
-    (README.md:39,162-166). Fixture: 1.bam re-sorted by name."""
+    (README.md:39,162-166). Input: the BAM re-sorted by name."""
+    for i, (src, n) in enumerate(bam_inputs(gen_reads, "1.bam")):
+        _check_pair_atomic(spark, src, n, str(tmp_path / f"byname{i}.bam"))
+
+
+def _check_pair_atomic(spark, src, n_records, out):
     from pyspark.sql import functions as SF
 
-    df, header = read_bam(spark, os.path.join(fixtures_dir, "1.bam"))
+    df, header = read_bam(spark, src)
     by_name = df.orderBy("name", "flags")
     qn_header = type(header)(
         text=header.text.replace("SO:coordinate", "SO:queryname")
     )
-    out = str(tmp_path / "byname.bam")
     write_bam(by_name, qn_header, out, write_sbi=True, sbi_granularity=1)
 
     for split in (50_000, 120_000):
@@ -242,7 +260,7 @@ def test_queryname_pair_atomicity(spark, fixtures_dir, tmp_path):
             .collect()[0][0]
         )
         assert spread == 1, f"split={split}: a name group crossed partitions"
-        assert got.count() == N_RECORDS
+        assert got.count() == n_records
 
         # contrast: without the guarantee some group DOES split (so the
         # test would catch a no-op implementation)
@@ -258,21 +276,21 @@ def test_queryname_pair_atomicity(spark, fixtures_dir, tmp_path):
             assert spread0 >= 1
 
 
-def test_column_pruned_decode(spark, fixtures_dir):
+def test_column_pruned_decode(spark, gen_reads):
     """columns= pushes pruning into the Python decoder: same record set,
     seq/qual/tags skipped (NULL), measurably less work."""
-    src = os.path.join(fixtures_dir, "1-with-splitting-index.bam")
-    full, _ = read_bam(spark, src, split_size=200_000)
-    lean, _ = read_bam(spark, src, split_size=200_000, columns=["flags", "contig", "start", "end"])
-    assert lean.count() == N_RECORDS
-    row = lean.first()
-    assert row.seq is None and row.qual is None and row.tags is None
-    a = sorted(map(tuple, full.select("name", "flags", "contig", "start", "end").collect()))
-    b = sorted(map(tuple, lean.select("name", "flags", "contig", "start", "end").collect()))
-    assert a == b
+    for src, n in bam_inputs(gen_reads, "1-with-splitting-index.bam"):
+        full, _ = read_bam(spark, src, split_size=200_000)
+        lean, _ = read_bam(spark, src, split_size=200_000, columns=["flags", "contig", "start", "end"])
+        assert lean.count() == n
+        row = lean.first()
+        assert row.seq is None and row.qual is None and row.tags is None
+        a = sorted(map(tuple, full.select("name", "flags", "contig", "start", "end").collect()))
+        b = sorted(map(tuple, lean.select("name", "flags", "contig", "start", "end").collect()))
+        assert a == b
 
 
-@pytest.mark.parametrize("source", ["fixture", "generated"])
+@pytest.mark.parametrize("source", [pytest.param("fixture", marks=needs_reference), "generated"])
 def test_guesser_handles_stale_bin_fields(fixtures_dir, tmp_path, request, source):
     """Writers that leave the BAM bin field stale/0 must not defeat split
     planning: find_record_start falls back to a pass without the
@@ -324,7 +342,7 @@ def test_guesser_handles_stale_bin_fields(fixtures_dir, tmp_path, request, sourc
     assert 32 <= bs < 1 << 20
 
 
-@pytest.mark.parametrize("source", ["fixture", "generated"])
+@pytest.mark.parametrize("source", [pytest.param("fixture", marks=needs_reference), "generated"])
 def test_decode_batch_matches_decode_record(fixtures_dir, request, source):
     """The vectorized batch decoder must be value-identical to the
     per-record scalar decoder across every column, including tags."""
@@ -352,52 +370,50 @@ def test_decode_batch_matches_decode_record(fixtures_dir, request, source):
         assert tuple(got) == want, f"record {i} differs"
 
 
-def test_check_record_guesser_exact_on_fixture(spark, fixtures_dir):
+def test_check_record_guesser_exact_on_fixture(spark, gen_reads):
     """The distributed diagnostic scan (BamRecordGuesserChecker analog)
     must find zero FALSE_NEGATIVEs and zero FALSE_POSITIVEs on the
     fixture: every true record start chain-validates, and the 8 offsets
     after each start do not."""
     from disq_spark.sources.bam_source import check_record_guesser
 
-    bad = check_record_guesser(
-        spark, os.path.join(fixtures_dir, "1-with-splitting-index.bam"),
-        split_size=512 * 1024,
-    ).collect()
-    assert bad == [], bad[:10]
+    for src, _n in bam_inputs(gen_reads, "1-with-splitting-index.bam"):
+        bad = check_record_guesser(spark, src, split_size=512 * 1024).collect()
+        assert bad == [], bad[:10]
 
 
-def test_build_bai_matches_write_side_index(spark, fixtures_dir, tmp_path):
+def test_build_bai_matches_write_side_index(spark, gen_reads, tmp_path):
     """Read-side distributed .bai construction (build_bai) must produce
     byte-identical output to the index the single-file WRITE path built
     for the same records — chunk fragmentation differs (read chunks vs
     write parts), so equality proves the fragment merge is exact."""
     from disq_spark.sources.bam_source import build_bai, read_bam
 
-    src = os.path.join(fixtures_dir, "1-with-splitting-index.bam")
-    df, header = read_bam(spark, src, split_size=200_000)
-    out = str(tmp_path / "sorted.bam")
-    # fixture is coordinate-sorted; keep one partition so the write-side
-    # .bai sees the same global order the file has
-    write_bam(df.coalesce(1), header, out, write_bai=True, sbi_granularity=1)
-    write_side = open(out + ".bai", "rb").read()
-    os.remove(out + ".bai")
+    for i, (src, _n) in enumerate(bam_inputs(gen_reads, "1-with-splitting-index.bam")):
+        df, header = read_bam(spark, src, split_size=200_000)
+        out = str(tmp_path / f"sorted{i}.bam")
+        # input is coordinate-sorted; keep one partition so the write-side
+        # .bai sees the same global order the file has
+        write_bam(df.coalesce(1), header, out, write_bai=True, sbi_granularity=1)
+        write_side = open(out + ".bai", "rb").read()
+        os.remove(out + ".bai")
 
-    built = build_bai(spark, out, split_size=100_000)
-    read_side = open(built, "rb").read()
-    assert read_side == write_side
-    assert not os.path.exists(out + ".bai.parts")
+        built = build_bai(spark, out, split_size=100_000)
+        read_side = open(built, "rb").read()
+        assert read_side == write_side
+        assert not os.path.exists(out + ".bai.parts")
 
 
-def test_build_bai_refuses_unsorted_header(spark, fixtures_dir, tmp_path):
+def test_build_bai_refuses_unsorted_header(spark, gen_reads, tmp_path):
     from disq_spark.sources.bam_source import build_bai, read_bam
 
-    src = os.path.join(fixtures_dir, "1-with-splitting-index.bam")
-    df, header = read_bam(spark, src)
-    out = str(tmp_path / "uns.bam")
-    header2 = type(header)(text=header.text.replace("SO:coordinate", "SO:queryname"))
-    write_bam(df.coalesce(1), header2, out, write_bai=False)
-    with pytest.raises(ValueError, match="coordinate-sorted"):
-        build_bai(spark, out)
+    for i, (src, _n) in enumerate(bam_inputs(gen_reads, "1-with-splitting-index.bam")):
+        df, header = read_bam(spark, src)
+        out = str(tmp_path / f"uns{i}.bam")
+        header2 = type(header)(text=header.text.replace("SO:coordinate", "SO:queryname"))
+        write_bam(df.coalesce(1), header2, out, write_bai=False)
+        with pytest.raises(ValueError, match="coordinate-sorted"):
+            build_bai(spark, out)
 
 
 def test_build_bai_empty_bam(spark, tmp_path):

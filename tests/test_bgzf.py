@@ -8,6 +8,7 @@ import random
 
 import pytest
 
+from conftest import fixture, needs_reference, upstream
 from disq_spark.formats import bgzf
 
 
@@ -26,7 +27,7 @@ def _bgzf_input(source: str, name: str, fixtures_dir: str, tmp_path) -> str:
     return path
 
 
-@pytest.mark.parametrize("source", ["fixture", "generated"])
+@pytest.mark.parametrize("source", [pytest.param("fixture", marks=needs_reference), "generated"])
 def test_scan_all_blocks_covers_file(fixtures_dir, tmp_path, source):
     path = _bgzf_input(source, "test.vcf.bgz", fixtures_dir, tmp_path)
     size = os.path.getsize(path)
@@ -42,7 +43,7 @@ def test_scan_all_blocks_covers_file(fixtures_dir, tmp_path, source):
     assert blocks[-1].u_size == 0
 
 
-@pytest.mark.parametrize("source", ["fixture", "generated"])
+@pytest.mark.parametrize("source", [pytest.param("fixture", marks=needs_reference), "generated"])
 def test_split_realignment_no_dup_no_loss(fixtures_dir, tmp_path, source):
     """Any byte-split partition of the file must see each block exactly
     once (BamSourceTest.testPathChunksDontOverlap analog for BGZF)."""
@@ -59,7 +60,7 @@ def test_split_realignment_no_dup_no_loss(fixtures_dir, tmp_path, source):
         assert seen == all_blocks, f"split={split}"
 
 
-@pytest.mark.parametrize("source", ["fixture", "generated"])
+@pytest.mark.parametrize("source", [pytest.param("fixture", marks=needs_reference), "generated"])
 def test_decompressed_equals_gzip_module(fixtures_dir, tmp_path, source):
     path = _bgzf_input(source, "test.vcf.bgz", fixtures_dir, tmp_path)
     ours = bgzf.read_range(path, 0, os.path.getsize(path))
@@ -99,13 +100,16 @@ def test_terminatorless_parts_concat_legal(tmp_path):
         assert f.read() == a + b
 
 
-def test_sniffing(fixtures_dir, tmp_path):
-    assert bgzf.is_bgzf(os.path.join(fixtures_dir, "test.vcf.bgz"))
-    assert bgzf.is_bgzf(os.path.join(fixtures_dir, "test.vcf.bgzf.gz"))
-    # true-gzip VCF is gzip but NOT bgzf (BGZFEnhancedGzipCodec sniff)
-    true_gz = os.path.join(fixtures_dir, "test.vcf.gz")
-    assert bgzf.is_gzip(true_gz)
-    assert not bgzf.is_bgzf(true_gz)
+def test_sniffing(gen_variants, tmp_path):
+    small = gen_variants["small"]
+    cases = [(small["bgz"], small["bgzf_gz"], small["gz"])]
+    cases += upstream(tuple(fixture(n) for n in ("test.vcf.bgz", "test.vcf.bgzf.gz", "test.vcf.gz")))
+    for bgz, bgzf_gz, true_gz in cases:
+        assert bgzf.is_bgzf(bgz)
+        assert bgzf.is_bgzf(bgzf_gz)
+        # true-gzip VCF is gzip but NOT bgzf (BGZFEnhancedGzipCodec sniff)
+        assert bgzf.is_gzip(true_gz)
+        assert not bgzf.is_bgzf(true_gz)
     plain = tmp_path / "p.txt"
     plain.write_text("hello")
     assert not bgzf.is_gzip(str(plain))

@@ -6,6 +6,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import needs_reference
 from disq_spark.formats.cram import (
     plan_cram_containers,
     read_crai,
@@ -30,6 +31,7 @@ def test_itf8_roundtrip_points():
     assert read_ltf8(bytes([0x7F]), 0) == (0x7F, 1)
 
 
+@needs_reference
 def test_scan_containers_full_coverage(fixtures_dir):
     for name in ("valid.cram", "valid_no_index.cram"):
         p = os.path.join(fixtures_dir, name)
@@ -41,6 +43,7 @@ def test_scan_containers_full_coverage(fixtures_dir):
             assert a.end == b.offset
 
 
+@needs_reference
 def test_crai_offsets_match_scan(fixtures_dir):
     p = os.path.join(fixtures_dir, "valid.cram")
     offsets = {c.offset for c in scan_containers(p)}
@@ -48,6 +51,7 @@ def test_crai_offsets_match_scan(fixtures_dir):
         assert entry[3] in offsets
 
 
+@needs_reference
 def test_plan_prefers_crai(fixtures_dir):
     plan = plan_cram(os.path.join(fixtures_dir, "valid.cram"), split_size=1000)
     assert plan  # (path, start, end) triples from the index
@@ -58,6 +62,7 @@ def test_plan_prefers_crai(fixtures_dir):
     assert plan2
 
 
+@needs_reference
 def test_read_cram_decodes(spark, fixtures_dir):
     df, header = read_cram(
         spark,
@@ -79,6 +84,7 @@ def test_read_cram_decodes(spark, fixtures_dir):
         assert r.end - r.start + 1 == cigar_reference_length(r.cigar)
 
 
+@needs_reference
 def test_cram_indexless_equals_indexed(spark, fixtures_dir):
     """valid.cram (.crai planning) and valid_no_index.cram (header-walk
     planning) hold the same records — decode must agree."""
@@ -93,6 +99,7 @@ def test_cram_indexless_equals_indexed(spark, fixtures_dir):
     )
 
 
+@needs_reference
 def test_cram_interval_filter(spark, fixtures_dir):
     from disq_spark.functions.intervals import Interval
 
@@ -106,6 +113,7 @@ def test_cram_interval_filter(spark, fixtures_dir):
     assert rows and all(r.contig == "chr7" and r.start <= 150 for r in rows)
 
 
+@needs_reference
 def test_cram_to_bam_roundtrip(spark, fixtures_dir, tmp_path):
     """CRAM -> reads DataFrame -> single-file BAM -> re-read: the decoded
     records survive the BAM codec unchanged (cross-format consistency)."""
@@ -126,6 +134,7 @@ def test_cram_to_bam_roundtrip(spark, fixtures_dir, tmp_path):
     )
 
 
+@needs_reference
 def test_bigger_real_file(fixtures_dir):
     p = os.path.join(fixtures_dir, "CEUTrio.HiSeq.WGS.b37.NA12878.20.21.10m-10m100.cram")
     cs = scan_containers(p)
@@ -133,6 +142,7 @@ def test_bigger_real_file(fixtures_dir):
     assert cs[-1].end == os.path.getsize(p)
 
 
+@needs_reference
 def test_rans_v3_real_world_decode(spark, fixtures_dir):
     """CRAM 3.0 + rANS (htsjdk default): the real-world GATK fixture
     decodes structurally — 654 records, exact CIGAR/position/length
@@ -156,6 +166,7 @@ def test_rans_v3_real_world_decode(spark, fixtures_dir):
             assert read_len == len(r.seq)
 
 
+@needs_reference
 def test_cram_write_roundtrip_single_file(spark, fixtures_dir, tmp_path):
     """CRAM sink: distributed single-file write + merged .crai, re-read
     with our own reader — value-identical records (CramSink analog)."""
@@ -191,6 +202,7 @@ def test_cram_write_roundtrip_single_file(spark, fixtures_dir, tmp_path):
         assert e[3] in offsets
 
 
+@needs_reference
 def test_cram_write_sharded(spark, fixtures_dir, tmp_path):
     from disq_spark.sinks.cram import write_cram
 
@@ -226,7 +238,7 @@ def _bgzip_with_gzi(tmp_path) -> str:
     return gz
 
 
-@pytest.mark.parametrize("source", ["fixture", "generated"])
+@pytest.mark.parametrize("source", [pytest.param("fixture", marks=needs_reference), "generated"])
 def test_gzi_indexed_reference(fixtures_dir, tmp_path, source):
     """Bgzipped reference + .gzi/.fai random access
     (CramReferenceSourceBuilder.java:50-59): slices equal the plain
@@ -251,6 +263,7 @@ def test_gzi_indexed_reference(fixtures_dir, tmp_path, source):
     assert isinstance(ref, IndexedBgzfFasta)
 
 
+@needs_reference
 def test_cram_decode_with_bgzipped_reference(spark, fixtures_dir):
     """read_cram accepts a bgzipped reference (gzip whole-file load or
     .gzi random access) and produces the same rows as the plain FASTA."""
@@ -270,6 +283,7 @@ def test_cram_decode_with_bgzipped_reference(spark, fixtures_dir):
     )
 
 
+@needs_reference
 def test_crai_interval_partition_pruning(spark, fixtures_dir):
     """With a .crai, interval planning must drop containers whose slice
     spans miss the query (AbstractBinarySamSource BAI-clip analog for
@@ -302,6 +316,7 @@ def test_crai_interval_partition_pruning(spark, fixtures_dir):
     assert got == want and got
 
 
+@needs_reference
 def test_build_crai_matches_fixture_index(fixtures_dir, tmp_path):
     """Indexing an existing CRAM reproduces the htsjdk-shipped
     ``valid.cram.crai`` exactly (decompressed content byte-identical;
@@ -324,6 +339,7 @@ def test_build_crai_matches_fixture_index(fixtures_dir, tmp_path):
     assert {e[3] for e in entries} == offsets
 
 
+@needs_reference
 def test_rans_compress_roundtrip_and_fixture_parity(fixtures_dir):
     """The order-0 rans4x8 ENCODER: synthetic round-trips across shapes,
     plus parity on real data — every rANS block payload in the GATK
@@ -523,6 +539,7 @@ def test_cram_write_quality_series_picks_order1(spark, tmp_path):
         assert got[r["name"]] == r["qual"]
 
 
+@needs_reference
 def test_cram_whole_file_parity_valid_fixture(spark, fixtures_dir, tmp_path):
     """Whole-pipeline storage parity on the one fixture whose reference
     FASTA is vendored (valid.cram + valid.fasta, htsjdk-written): our

@@ -5,6 +5,7 @@ import os
 
 import pytest
 
+from conftest import bam_inputs, fixture, needs_reference, upstream
 from disq_spark.sources.datasource import register_datasources
 
 REF_FA = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures", "ref.fa")
@@ -15,45 +16,57 @@ def _register(spark):
     register_datasources(spark)
 
 
-def test_bam_datasource_matches_functional(spark, fixtures_dir):
-    from disq_spark.sources.bam_source import read_bam
-
-    path = os.path.join(fixtures_dir, "1.bam")
-    ds = spark.read.format("bam").option("split_size", 200_000).load(path)
-    fn, _ = read_bam(spark, path, split_size=123_456)
-    key = ["name", "start", "flags"]
-    a = sorted(map(tuple, ds.select(*key).collect()))
-    b = sorted(map(tuple, fn.select(*key).collect()))
-    assert a == b and len(a) == 4917
-    assert ds.rdd.getNumPartitions() > 1  # split planning engaged
+N_SITES = 8171  # records of HiSeq.10000.vcf.bgz
 
 
-def test_vcf_datasource_split_invariance(spark, fixtures_dir):
-    path = os.path.join(fixtures_dir, "HiSeq.10000.vcf.bgz")
-    whole = spark.read.format("vcf").load(path)
-    split = spark.read.format("vcf").option("split_size", 65536).load(path)
-    assert whole.count() == split.count() == 8171
-    assert split.rdd.getNumPartitions() > whole.rdd.getNumPartitions()
-    key = ["contig", "start", "ref"]
-    assert sorted(map(tuple, whole.select(*key).collect())) == sorted(
-        map(tuple, split.select(*key).collect())
+def _hiseqs(gen_variants):
+    """(path, sites) of the generated BGZF VCF, and of the upstream
+    HiSeq.10000.vcf.bgz where it exists."""
+    return [(gen_variants["bgz"], gen_variants["n"])] + upstream(
+        (fixture("HiSeq.10000.vcf.bgz"), N_SITES)
     )
 
 
-def test_sam_datasource_split_invariance(spark, fixtures_dir):
+def test_bam_datasource_matches_functional(spark, gen_reads):
+    from disq_spark.sources.bam_source import read_bam
+
+    for path, n in bam_inputs(gen_reads, "1.bam"):
+        ds = spark.read.format("bam").option("split_size", 200_000).load(path)
+        fn, _ = read_bam(spark, path, split_size=123_456)
+        key = ["name", "start", "flags"]
+        a = sorted(map(tuple, ds.select(*key).collect()))
+        b = sorted(map(tuple, fn.select(*key).collect()))
+        assert a == b and len(a) == n
+        assert ds.rdd.getNumPartitions() > 1  # split planning engaged
+
+
+def test_vcf_datasource_split_invariance(spark, gen_variants):
+    for path, n in _hiseqs(gen_variants):
+        whole = spark.read.format("vcf").load(path)
+        split = spark.read.format("vcf").option("split_size", 65536).load(path)
+        assert whole.count() == split.count() == n
+        assert split.rdd.getNumPartitions() > whole.rdd.getNumPartitions()
+        key = ["contig", "start", "ref"]
+        assert sorted(map(tuple, whole.select(*key).collect())) == sorted(
+            map(tuple, split.select(*key).collect())
+        )
+
+
+def test_sam_datasource_split_invariance(spark, gen_reads):
     from disq_spark.sources.reads import read_sam
 
-    path = os.path.join(fixtures_dir, "test.sam")
-    fn, _ = read_sam(spark, path)
-    expected = sorted(map(tuple, fn.select("name", "start", "flags").collect()))
-    whole = spark.read.format("sam").load(path)
-    tiny = spark.read.format("sam").option("split_size", 200).load(path)
-    assert tiny.rdd.getNumPartitions() > 1  # byte splits engaged
-    for df in (whole, tiny):
-        got = sorted(map(tuple, df.select("name", "start", "flags").collect()))
-        assert got == expected
+    for path in [gen_reads["sam"]] + upstream(fixture("test.sam")):
+        fn, _ = read_sam(spark, path)
+        expected = sorted(map(tuple, fn.select("name", "start", "flags").collect()))
+        whole = spark.read.format("sam").load(path)
+        tiny = spark.read.format("sam").option("split_size", 200).load(path)
+        assert tiny.rdd.getNumPartitions() > 1  # byte splits engaged
+        for df in (whole, tiny):
+            got = sorted(map(tuple, df.select("name", "start", "flags").collect()))
+            assert got == expected
 
 
+@needs_reference
 def test_cram_datasource_matches_functional(spark, fixtures_dir):
     from disq_spark.sources.cram_source import read_cram
 
@@ -72,13 +85,15 @@ def test_cram_datasource_matches_functional(spark, fixtures_dir):
     )
 
 
-def test_bam_datasource_write_single_file(spark, fixtures_dir, tmp_path):
+def test_bam_datasource_write_single_file(spark, gen_reads, tmp_path):
+    for i, (src, n) in enumerate(bam_inputs(gen_reads, "1.bam")):
+        _check_bam_datasource_write(spark, src, n, tmp_path / str(i))
+
+
+def _check_bam_datasource_write(spark, src, n_records, tmp_path):
     from disq_spark.formats.sbi import read_sbi
     from disq_spark.sources.bam_source import read_bam
 
-    import pytest
-
-    src = os.path.join(fixtures_dir, "1.bam")
     reads = spark.read.format("bam").load(src)
     out = str(tmp_path / "out.bam")
     # a hash repartition breaks coordinate order; the header claims
@@ -107,48 +122,53 @@ def test_bam_datasource_write_single_file(spark, fixtures_dir, tmp_path):
         .save(out)
     )
     back, _ = read_bam(spark, out)
-    assert back.count() == 4917
+    assert back.count() == n_records
     key = ["name", "start", "flags", "cigar"]
     assert sorted(map(tuple, back.select(*key).collect())) == sorted(
         map(tuple, reads.select(*key).collect())
     )
     # merged .sbi from per-task fragments must cover every record
-    assert read_sbi(out + ".sbi").total_records == 4917
+    assert read_sbi(out + ".sbi").total_records == n_records
     assert not os.path.exists(out + ".parts")
 
 
-def test_vcf_datasource_write_single_file(spark, fixtures_dir, tmp_path):
-    src = os.path.join(fixtures_dir, "HiSeq.10000.vcf.bgz")
-    variants = spark.read.format("vcf").load(src)
-    out = str(tmp_path / "out.vcf.bgz")
-    (
-        variants.repartition(3)
-        .sortWithinPartitions("contig", "start")
-        .write.format("vcf")
-        .option("header_path", src)
-        .mode("overwrite")
-        .save(out)
-    )
-    back = spark.read.format("vcf").load(out)
-    assert back.count() == 8171
-    key = ["contig", "start", "ref", "qual"]
-    assert sorted(map(repr, back.select(*key).collect())) == sorted(
-        map(repr, variants.select(*key).collect())
-    )
-    assert not os.path.exists(out + ".parts")
+def test_vcf_datasource_write_single_file(spark, gen_variants, tmp_path):
+    for i, (src, n) in enumerate(_hiseqs(gen_variants)):
+        variants = spark.read.format("vcf").load(src)
+        out = str(tmp_path / f"out{i}.vcf.bgz")
+        (
+            variants.repartition(3)
+            .sortWithinPartitions("contig", "start")
+            .write.format("vcf")
+            .option("header_path", src)
+            .mode("overwrite")
+            .save(out)
+        )
+        back = spark.read.format("vcf").load(out)
+        assert back.count() == n
+        key = ["contig", "start", "ref", "qual"]
+        assert sorted(map(repr, back.select(*key).collect())) == sorted(
+            map(repr, variants.select(*key).collect())
+        )
+        assert not os.path.exists(out + ".parts")
 
 
-def test_vcf_datasource_plain_and_sql(spark, fixtures_dir):
-    path = os.path.join(fixtures_dir, "test.vcf")
-    df = spark.read.format("vcf").load(path)
-    assert df.count() == 5
-    df.createOrReplaceTempView("ds_variants")
-    n = spark.sql(
-        "SELECT count(*) AS n FROM ds_variants WHERE contig = '20'"
-    ).first().n
-    assert n == df.filter("contig = '20'").count()
+def test_vcf_datasource_plain_and_sql(spark, gen_variants):
+    from disq_spark.sources.variants import read_header
+
+    path = gen_variants["small"]["vcf"]
+    cases = [(path, gen_variants["n_small"], read_header(path).contigs[0])]
+    for path, n_records, contig in cases + upstream((fixture("test.vcf"), 5, "20")):
+        df = spark.read.format("vcf").load(path)
+        assert df.count() == n_records
+        df.createOrReplaceTempView("ds_variants")
+        n = spark.sql(
+            f"SELECT count(*) AS n FROM ds_variants WHERE contig = '{contig}'"
+        ).first().n
+        assert n == df.filter(f"contig = '{contig}'").count()
 
 
+@needs_reference
 def test_bam_datasource_interval_option(spark, fixtures_dir, tmp_path):
     """option('intervals', 'contig:lo-hi') must match read_bam(intervals=)
     exactly: .bai partition pruning at plan time + the residual filter
@@ -185,31 +205,39 @@ def test_bam_datasource_interval_option(spark, fixtures_dir, tmp_path):
     assert 0 < len(pruned) < len(full)
 
 
-def test_vcf_datasource_interval_option(spark, fixtures_dir):
+def test_vcf_datasource_interval_option(spark, gen_variants):
+    from perfbench.gen import region_counts
+
     from disq_spark.functions.intervals import Interval
     from disq_spark.sources.datasource import VcfDataSource
-    from disq_spark.sources.variants import read_vcf
+    from disq_spark.sources.variants import read_header, read_vcf
 
-    src = os.path.join(fixtures_dir, "HiSeq.10000.vcf.bgz")
-    got = (
-        spark.read.format("vcf")
-        .option("split_size", 64 * 1024)
-        .option("intervals", "chr1:1000000-2000000")
-        .load(src)
-    )
-    want, _ = read_vcf(
-        spark, src, split_size=64 * 1024, intervals=[Interval("chr1", 1_000_000, 2_000_000)]
-    )
-    key = lambda df: sorted((r.contig, r.start, r.ref) for r in df.collect())
-    assert key(got) == key(want) and got.count() == 1072
+    src = gen_variants["bgz"]
+    contig = read_header(src).contigs[0]
+    hits = region_counts(gen_variants["cols"], [[(contig, 1_000_000, 2_000_000)]])[0]
+    cases = [(src, contig, hits)] + upstream((fixture("HiSeq.10000.vcf.bgz"), "chr1", 1072))
+    for src, contig, n_hits in cases:
+        region = f"{contig}:1000000-2000000"
+        got = (
+            spark.read.format("vcf")
+            .option("split_size", 64 * 1024)
+            .option("intervals", region)
+            .load(src)
+        )
+        want, _ = read_vcf(
+            spark, src, split_size=64 * 1024, intervals=[Interval(contig, 1_000_000, 2_000_000)]
+        )
+        key = lambda df: sorted((r.contig, r.start, r.ref) for r in df.collect())
+        assert key(got) == key(want) and got.count() == n_hits
 
-    full = VcfDataSource({"path": src, "split_size": str(64 * 1024)}).reader(None).partitions()
-    pruned = VcfDataSource(
-        {"path": src, "split_size": str(64 * 1024), "intervals": "chr1:1000000-2000000"}
-    ).reader(None).partitions()
-    assert 0 < len(pruned) < len(full)
+        full = VcfDataSource({"path": src, "split_size": str(64 * 1024)}).reader(None).partitions()
+        pruned = VcfDataSource(
+            {"path": src, "split_size": str(64 * 1024), "intervals": region}
+        ).reader(None).partitions()
+        assert 0 < len(pruned) < len(full)
 
 
+@needs_reference
 def test_cram_datasource_interval_option(spark, fixtures_dir):
     from disq_spark.functions.intervals import Interval
     from disq_spark.sources.cram_source import read_cram
@@ -229,21 +257,22 @@ def test_cram_datasource_interval_option(spark, fixtures_dir):
     assert key(got) == key(want) and got.count() > 0
 
 
-def test_bam_datasource_columns_option(spark, fixtures_dir):
+def test_bam_datasource_columns_option(spark, gen_reads):
     """option('columns', ...) prunes the declared schema AND the decode
     (seq/qual/tags skipped in the reader)."""
-    src = os.path.join(fixtures_dir, "1-with-splitting-index.bam")
-    df = (
-        spark.read.format("bam")
-        .option("columns", "flags,contig,start")
-        .load(src)
-    )
-    assert [f.name for f in df.schema.fields] == ["flags", "contig", "start"]
-    assert df.count() == 4917
-    full = spark.read.format("bam").load(src).select("flags", "contig", "start")
-    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, full.collect()))
+    for src, n in bam_inputs(gen_reads, "1-with-splitting-index.bam"):
+        df = (
+            spark.read.format("bam")
+            .option("columns", "flags,contig,start")
+            .load(src)
+        )
+        assert [f.name for f in df.schema.fields] == ["flags", "contig", "start"]
+        assert df.count() == n
+        full = spark.read.format("bam").load(src).select("flags", "contig", "start")
+        assert sorted(map(tuple, df.collect())) == sorted(map(tuple, full.collect()))
 
 
+@needs_reference
 def test_sam_datasource_interval_option(spark, fixtures_dir):
     from disq_spark.functions.intervals import Interval
     from disq_spark.sources.reads import read_sam

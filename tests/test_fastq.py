@@ -10,6 +10,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import needs_reference
 from disq_spark.formats import fastq as fq
 from disq_spark.sources.fastq import read_fastq, write_fastq
 
@@ -124,6 +125,7 @@ def test_fastq_datasource(spark, fastq_file):
 # ---------------------------------------------------------------------------
 
 
+@needs_reference
 def test_bed_reader_and_pushdown(spark, tmp_path, fixtures_dir):
     import os
 
@@ -237,6 +239,7 @@ def test_pair_fastq(spark, tmp_path):
     assert got["frag2"]["qual_2"] == "JJJJ"
 
 
+@needs_reference
 def test_real_htslib_gzi_parses(fixtures_dir):
     """Parse the htslib-produced .gzi shipped with the reference (for the
     excluded human_g1k fasta.gz): offsets must be strictly increasing in

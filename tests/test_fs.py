@@ -6,11 +6,10 @@ import os
 
 import pytest
 
+from conftest import bam_inputs
 from disq_spark import fs
 from disq_spark.formats import bgzf
 from disq_spark.sinks import merge
-
-REF_FIX = "/root/reference/src/test/resources"
 
 
 def test_split_scheme():
@@ -43,24 +42,24 @@ def test_memory_roundtrip_basic():
     assert not fs.exists(p)
 
 
-def test_bgzf_stack_on_memory_fs():
+def test_bgzf_stack_on_memory_fs(gen_reads):
     """The BGZF scanner/decompressor must work through the fs layer on a
-    non-local filesystem — copy a real fixture into memory:// and scan."""
-    src = os.path.join(REF_FIX, "1.bam")
-    dst = "memory://fixtures/1.bam"
-    with open(src, "rb") as f, fs.open_output(dst) as out:
-        out.write(f.read())
-
-    local_blocks = [(b.pos, b.u_size) for b in bgzf.scan_blocks(src)]
-    mem_blocks = [(b.pos, b.u_size) for b in bgzf.scan_blocks(dst)]
-    assert mem_blocks == local_blocks and len(mem_blocks) > 10
-
-    # header parse through the fs layer (driver-side read path)
+    non-local filesystem — copy a real BAM into memory:// and scan."""
     from disq_spark.sources.bam_source import read_bam_header
 
-    h_local, refs_local, v_local = read_bam_header(src)
-    h_mem, refs_mem, v_mem = read_bam_header(dst)
-    assert (h_mem.text, refs_mem, v_mem) == (h_local.text, refs_local, v_local)
+    for i, (src, _n) in enumerate(bam_inputs(gen_reads)):
+        dst = f"memory://fixtures/{i}/{os.path.basename(src)}"
+        with open(src, "rb") as f, fs.open_output(dst) as out:
+            out.write(f.read())
+
+        local_blocks = [(b.pos, b.u_size) for b in bgzf.scan_blocks(src)]
+        mem_blocks = [(b.pos, b.u_size) for b in bgzf.scan_blocks(dst)]
+        assert mem_blocks == local_blocks and len(mem_blocks) > 10
+
+        # header parse through the fs layer (driver-side read path)
+        h_local, refs_local, v_local = read_bam_header(src)
+        h_mem, refs_mem, v_mem = read_bam_header(dst)
+        assert (h_mem.text, refs_mem, v_mem) == (h_local.text, refs_local, v_local)
 
 
 def test_single_file_finalize_on_memory_fs():

@@ -6,11 +6,13 @@ import os
 
 from pyspark.sql import functions as F
 
+from conftest import needs_reference
 from disq_spark.functions.intervals import Interval, overlaps
 from disq_spark.sinks.materialize import materialize_reads, read_materialized
 from disq_spark.sources.bam_source import read_bam
 
 
+@needs_reference
 def test_materialized_roundtrip_and_pruning(spark, fixtures_dir, tmp_path):
     src = os.path.join(fixtures_dir, "1-with-splitting-index.bam")
     df, header = read_bam(spark, src, split_size=200_000)
@@ -36,6 +38,7 @@ def test_materialized_roundtrip_and_pruning(spark, fixtures_dir, tmp_path):
     assert am == ab and len(am) > 0
 
 
+@needs_reference
 def test_pushdown_reaches_parquet_scan(spark, fixtures_dir, tmp_path):
     src = os.path.join(fixtures_dir, "1-with-splitting-index.bam")
     df, header = read_bam(spark, src, split_size=200_000)

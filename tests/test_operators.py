@@ -6,6 +6,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import bam_inputs, needs_reference
 from disq_spark.operators.asof import asof_join
 from disq_spark.operators.genomics import (
     coordinate_sort,
@@ -46,6 +47,7 @@ def test_interval_join_matches_naive(spark):
     assert len(pairs) > 0
 
 
+@needs_reference
 def test_interval_join_on_bam(spark, fixtures_dir):
     df, _ = read_bam(spark, os.path.join(fixtures_dir, "1.bam"))
     targets = spark.createDataFrame(
@@ -61,14 +63,22 @@ def test_interval_join_on_bam(spark, fixtures_dir):
     ).select("name", "start").distinct().count()
 
 
-def test_coordinate_sort(spark, fixtures_dir):
-    df, header = read_bam(spark, os.path.join(fixtures_dir, "1.bam"))
+def test_coordinate_sort(spark, gen_reads):
+    for src, _n in bam_inputs(gen_reads):
+        _check_coordinate_sort(spark, src)
+
+
+def _check_coordinate_sort(spark, src):
+    df, header = read_bam(spark, src)
     # shuffle it out of order first
     shuffled = df.repartition(7)
     sorted_df = coordinate_sort(shuffled, header, num_partitions=4)
     parts = sorted_df.select("contig", "start").rdd.glom().collect()
     flat = [r for p in parts for r in p]
-    starts = [r.start for r in flat if r.start is not None]
+    # starts ascend within each contig, contigs in sequence-dictionary
+    # order (1.bam's reads all lie on one contig)
+    rank = header.contig_index()
+    starts = [(rank[r.contig], r.start) for r in flat if r.start is not None]
     assert starts == sorted(starts)  # global order across partition concat
 
 
@@ -202,6 +212,7 @@ def test_mark_duplicates_library_pooling(spark):
     assert out["b1"] & 0x400 == 0  # other library untouched
 
 
+@needs_reference
 def test_mark_duplicates_matches_serial_picard(spark, fixtures_dir):
     """Differential vs an independent serial Picard-style implementation
     over the full 1.bam fixture (20 read groups -> one LB pool). Also
@@ -293,8 +304,13 @@ def test_mark_duplicates_matches_serial_picard(spark, fixtures_dir):
     assert len(refound) / len(pre_templates) > 0.97
 
 
-def test_pair_reads_atomicity(spark, fixtures_dir):
-    df, _ = read_bam(spark, os.path.join(fixtures_dir, "1.bam"))
+def test_pair_reads_atomicity(spark, gen_reads):
+    for src, _n in bam_inputs(gen_reads):
+        _check_pair_reads_atomicity(spark, src)
+
+
+def _check_pair_reads_atomicity(spark, src):
+    df, _ = read_bam(spark, src)
     pairs = pair_reads(df)
     counts = pairs.groupBy("n_reads").count().collect()
     by_n = {r.n_reads: r["count"] for r in counts}
@@ -592,7 +608,7 @@ def _bruteforce_runs(reads):
     return runs, depth
 
 
-@pytest.mark.parametrize("source", ["bam", "synthetic"])
+@pytest.mark.parametrize("source", [pytest.param("bam", marks=needs_reference), "synthetic"])
 def test_coverage_depth_matches_bruteforce(spark, fixtures_dir, source):
     """Run-length depth segments == the reads covering each position,
     counted directly in Python. The synthetic reads span several prefix
@@ -631,23 +647,28 @@ def test_coverage_depth_matches_bruteforce(spark, fixtures_dir, source):
         assert ss[-1]["depth"] == 0  # all reads closed
 
 
-def test_coverage_bins_consistent_with_depth(spark, fixtures_dir):
+def test_coverage_bins_consistent_with_depth(spark, gen_reads):
     """covered_bases per bin (mean_depth * bin_size) == integral of the
     exact per-base depth over the bin."""
+    for src, _n in bam_inputs(gen_reads):
+        _check_coverage_bins_consistent_with_depth(spark, src)
+
+
+def _check_coverage_bins_consistent_with_depth(spark, src):
     import os
 
     from disq_spark.operators.genomics import coverage_bins, coverage_depth
     from disq_spark.sources.bam_source import read_bam
 
     bs = 10_000
-    df, _ = read_bam(spark, os.path.join(fixtures_dir, "1.bam"))
+    df, _ = read_bam(spark, src)
     bins = {(r["contig"], r["bin"]): r for r in coverage_bins(df, bin_size=bs).collect()}
     integral = {}
     for s in coverage_depth(df).collect():
         if s["next_pos"] is None or s["depth"] == 0:
             continue
-        for p0 in range(s["pos"], s["next_pos"], bs):
-            b = (p0 - 1) // bs
+        # every bin the segment [pos, next_pos) touches
+        for b in range((s["pos"] - 1) // bs, (s["next_pos"] - 2) // bs + 1):
             lo, hi = max(s["pos"], b * bs + 1), min(s["next_pos"] - 1, (b + 1) * bs)
             integral[(s["contig"], b)] = integral.get((s["contig"], b), 0) + s["depth"] * (
                 hi - lo + 1
@@ -996,7 +1017,7 @@ def test_simhash64_buckets_bounded_on_skewed_corpus(spark):
     assert n < 1500, n  # and boilerplate alone doesn't explode
 
 
-@pytest.mark.parametrize("source", ["bam", "synthetic"])
+@pytest.mark.parametrize("source", [pytest.param("bam", marks=needs_reference), "synthetic"])
 def test_callable_loci_matches_bruteforce(spark, fixtures_dir, source):
     """Merged callable intervals == maximal runs of directly counted
     depth within the thresholds. ``min_depth=0`` keeps the depth-0 gaps
@@ -1031,10 +1052,14 @@ def test_callable_loci_matches_bruteforce(spark, fixtures_dir, source):
             assert ("s1", 100, 299, 200) in got and ("s1", 10_000, 10_000, 1) in got
 
 
-def test_downsample_reads_is_template_atomic(spark, fixtures_dir):
+def test_downsample_reads_is_template_atomic(spark, gen_reads):
+    for src, _n in bam_inputs(gen_reads):
+        _check_downsample_reads_is_template_atomic(spark, src)
+
+
+def _check_downsample_reads_is_template_atomic(spark, src):
     from disq_spark.operators.genomics import downsample_reads
 
-    src = os.path.join(fixtures_dir, "1.bam")
     df, _h = read_bam(spark, src)
     kept = downsample_reads(df, 0.3)
     n_total, n_kept = df.count(), kept.count()
@@ -1692,6 +1717,7 @@ def _serial_pileup(rows, min_base_quality=0, exclude=0x4 | 0x100 | 0x200 | 0x400
     }
 
 
+@needs_reference
 def test_pileup_matches_serial_walk(spark, fixtures_dir):
     import os
 
@@ -1794,6 +1820,7 @@ def test_pileup_indels_basic(spark):
     assert c["indel_count"] == 2 and abs(c["indel_frac"] - round(2 / 3, 4)) < 1e-9
 
 
+@needs_reference
 def test_pileup_indels_matches_serial_walk(spark, fixtures_dir):
     """Differential: the one-event-per-I/D-op SQL walk vs an independent
     serial walk over the full 1.bam fixture."""
@@ -1964,6 +1991,7 @@ def test_call_snvs_thresholds_and_tiebreak(spark):
     }
 
 
+@needs_reference
 def test_call_snvs_differential_on_fixture(spark, fixtures_dir):
     """call_snvs over the real BAM fixture vs a plain-Python argmax over
     the serial pileup walk, with a synthetic all-A reference."""
@@ -2028,6 +2056,7 @@ def test_snvs_to_variants_schema_and_values(spark):
     assert hdr.samples == []
 
 
+@needs_reference
 def test_duplication_metrics_matches_serial_picard(spark, fixtures_dir):
     """duplication_metrics differential vs an independent serial
     implementation over 1.bam: same template/duplicate-key logic as the
@@ -2399,6 +2428,7 @@ def _serial_bqsr(recs, ref, min_reported_q=3):
     }
 
 
+@needs_reference
 def test_bqsr_table_matches_serial_walk(spark, fixtures_dir):
     import os
 
@@ -2470,6 +2500,7 @@ def test_bqsr_table_covariate_semantics(spark):
     assert t[(40, "q", "")] == (8, 1)
 
 
+@needs_reference
 def test_apply_bqsr_matches_serial(spark, fixtures_dir):
     """ApplyBQSR delta composition cross-checked base-by-base by an
     independent serial recalibration over the fixture reads."""
@@ -2613,6 +2644,7 @@ def test_genotype_concordance_multisample_join(spark):
     assert got[("HOM_VAR", "HET")] == (1, 0)
 
 
+@needs_reference
 def test_genotype_concordance_self_is_diagonal(spark, fixtures_dir):
     import os
 
@@ -2725,6 +2757,7 @@ def _serial_norm(recs):
     return out
 
 
+@needs_reference
 def test_normalize_matches_serial_on_gvcf(spark, fixtures_dir):
     import gzip
     import os
@@ -2861,10 +2894,15 @@ def test_left_align_passthrough_and_cap(spark, tmp_path):
     assert out[("C", "CGTCGT")] == (430, "CGT")
 
 
-def test_insert_size_metrics_matches_serial(spark, fixtures_dir):
+def test_insert_size_metrics_matches_serial(spark, gen_reads):
     """Histogram + summary cross-checked by an independent serial pass
     implementing Picard's collector (first-of-pair representative,
     same-contig mapped pairs, TLEN != 0, MAD-trimmed moments)."""
+    for src, _n in bam_inputs(gen_reads):
+        _check_insert_size_metrics_matches_serial(spark, src)
+
+
+def _check_insert_size_metrics_matches_serial(spark, src):
     import math
     import os
     from collections import Counter
@@ -2875,7 +2913,7 @@ def test_insert_size_metrics_matches_serial(spark, fixtures_dir):
     )
     from disq_spark.sources.bam_source import read_bam
 
-    df, _h = read_bam(spark, os.path.join(fixtures_dir, "1.bam"))
+    df, _h = read_bam(spark, src)
 
     by_orient = {}
     for r in df.collect():
@@ -2936,17 +2974,22 @@ def test_insert_size_metrics_matches_serial(spark, fixtures_dir):
         assert r.mode_insert_size == best
 
 
-def test_alignment_summary_metrics_matches_serial(spark, fixtures_dir):
+def test_alignment_summary_metrics_matches_serial(spark, gen_reads):
     """Per-category counters cross-checked by a serial Picard-style
     pass over the collected fixture reads (NM-tag substitution rate
     excludes indel bases; PAIR is the first+second rollup)."""
+    for src, _n in bam_inputs(gen_reads):
+        _check_alignment_summary_metrics_matches_serial(spark, src)
+
+
+def _check_alignment_summary_metrics_matches_serial(spark, src):
     import os
     import re
 
     from disq_spark.operators.genomics import alignment_summary_metrics
     from disq_spark.sources.bam_source import read_bam
 
-    df, _h = read_bam(spark, os.path.join(fixtures_dir, "1.bam"))
+    df, _h = read_bam(spark, src)
     agg = {}
 
     def bump(cat, **kw):
@@ -3021,6 +3064,7 @@ def test_alignment_summary_metrics_matches_serial(spark, fixtures_dir):
             assert abs(g.pct_chimeras - a["chim"] / a["in_pair"]) < 1e-12
 
 
+@needs_reference
 def test_merge_variant_sets_roundtrip(spark, fixtures_dir):
     """Splitting the 3-sample spec fixture into per-sample sets and
     merging back must reproduce every site, ALT list, and genotype
@@ -3129,6 +3173,7 @@ def test_hard_filter_gatk_semantics(spark):
     assert out[4] == ["OLD"]
 
 
+@needs_reference
 def test_mendelian_violations_matches_serial(spark, fixtures_dir):
     """Trio tally cross-checked against a serial allele-set check on
     the 3-sample spec fixture (treating NA00001 as child of the other
@@ -3182,17 +3227,21 @@ def test_mendelian_violations_matches_serial(spark, fixtures_dir):
     assert n_viol >= 1
 
 
-def test_wgs_metrics_matches_serial(spark, fixtures_dir):
+def test_wgs_metrics_matches_serial(spark, gen_reads):
     """Depth histogram statistics cross-checked by a serial per-position
     depth array over the fixture reads (Picard-style read filters)."""
+    for src, _n in bam_inputs(gen_reads):
+        _check_wgs_metrics_matches_serial(spark, src)
+
+
+def _check_wgs_metrics_matches_serial(spark, src):
     import math
     import os
 
     from disq_spark.operators.genomics import wgs_metrics
     from disq_spark.sources.bam_source import read_bam, read_bam_header
 
-    path = os.path.join(fixtures_dir, "1.bam")
-    df, header = read_bam(spark, path)
+    df, header = read_bam(spark, src)
     refs = header.sequences
     got = {r.metric: r.value for r in wgs_metrics(df, refs, coverage_cap=100).collect()}
 
@@ -3266,16 +3315,21 @@ def test_isec_variant_sets(spark):
     assert site[100] == "111"
 
 
-def test_quality_by_cycle_matches_serial(spark, fixtures_dir):
+def test_quality_by_cycle_matches_serial(spark, gen_reads):
     """Cycle orientation (reverse-strand flip, second-of-pair negation)
     and composition cross-checked serially on the fixture reads."""
+    for src, _n in bam_inputs(gen_reads):
+        _check_quality_by_cycle_matches_serial(spark, src)
+
+
+def _check_quality_by_cycle_matches_serial(spark, src):
     import os
     from collections import defaultdict
 
     from disq_spark.operators.genomics import quality_by_cycle
     from disq_spark.sources.bam_source import read_bam
 
-    df, _h = read_bam(spark, os.path.join(fixtures_dir, "1.bam"))
+    df, _h = read_bam(spark, src)
     agg = defaultdict(lambda: [0, 0, defaultdict(int)])
     COMP = str.maketrans("ACGTN", "TGCAN")
     for r in df.collect():
@@ -3311,6 +3365,7 @@ def test_quality_by_cycle_matches_serial(spark, fixtures_dir):
         )
 
 
+@needs_reference
 def test_gc_bias_metrics_matches_serial(spark, fixtures_dir):
     import os
     from collections import Counter
@@ -3487,6 +3542,7 @@ def test_interval_algebra_summary_one_pass(spark):
         ]
 
 
+@needs_reference
 def test_consensus_sequence_matches_serial(spark, fixtures_dir):
     import os
 
@@ -3586,6 +3642,7 @@ def test_liftover_matches_serial(spark):
     assert got == want
 
 
+@needs_reference
 def test_pairwise_ibs_matches_serial(spark, fixtures_dir):
     import os
     from itertools import combinations
@@ -3680,14 +3737,19 @@ def test_trim_reads_matches_serial(spark):
     assert out["r5"] == ("*", "*", True)
 
 
-def test_kmer_spectrum_matches_serial(spark, fixtures_dir):
+def test_kmer_spectrum_matches_serial(spark, gen_reads):
+    for src, _n in bam_inputs(gen_reads):
+        _check_kmer_spectrum_matches_serial(spark, src)
+
+
+def _check_kmer_spectrum_matches_serial(spark, src):
     import os
     from collections import Counter
 
     from disq_spark.operators.genomics import kmer_spectrum
     from disq_spark.sources.bam_source import read_bam
 
-    df, _h = read_bam(spark, os.path.join(fixtures_dir, "1.bam"))
+    df, _h = read_bam(spark, src)
     k = 15
     got = {r.mult: r.n_kmers for r in kmer_spectrum(df, k=k).collect()}
 
@@ -3827,6 +3889,7 @@ def test_roh_synthetic_semantics(spark):
     assert all(r.span_bp >= 50 for r in out3)
 
 
+@needs_reference
 def test_roh_matches_serial_on_hiseq(spark, fixtures_dir):
     """Independent gzip text parse of HiSeq.10000.vcf.bgz -> serial
     run-finding -> must equal the distributed operator exactly."""
@@ -4099,6 +4162,7 @@ def test_importance_resample_deterministic_and_weighted(spark):
     assert sorted(sel1) != sorted(sel3)            # seed changes the draw
 
 
+@needs_reference
 def test_estimate_contamination_matches_serial(spark, fixtures_dir):
     """Reduce the already-differentially-tested pileup over a fixed
     hom-alt site list serially; the operator's one-row output must
@@ -4155,6 +4219,7 @@ def test_estimate_contamination_matches_serial(spark, fixtures_dir):
     assert got.contamination_est > 0.02
 
 
+@needs_reference
 def test_sv_discordant_clusters_synthetic_and_serial(spark, fixtures_dir):
     """Engineered deletion/inversion/duplication/translocation pair
     sets must classify and cluster per spec; then the 1.bam fixture's
@@ -4289,6 +4354,7 @@ def test_sv_discordant_clusters_synthetic_and_serial(spark, fixtures_dir):
         assert ops == expect, f"window={window}"
 
 
+@needs_reference
 def test_region_coverage_matches_serial(spark, fixtures_dir):
     """Per-region count/total/breadth over 1.bam must equal a serial
     per-base tally on a region set spanning covered, boundary, and
@@ -4387,6 +4453,7 @@ def test_keep_best_representatives_string_ids(spark):
     assert best == {"d1": ("d2", 99, 3), "d4": ("d5", 7, 2)}
 
 
+@needs_reference
 def test_bam_to_fastq_rows_matches_serial(spark, fixtures_dir):
     """Round 1.bam into FASTQ rows; a serial revcomp over the collected
     reads must agree record-for-record, and a write/read round trip

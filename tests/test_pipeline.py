@@ -14,6 +14,7 @@ import random
 
 from pyspark.sql import functions as F
 
+from conftest import needs_reference
 from disq_spark.functions.intervals import Interval, overlaps
 from disq_spark.operators.genomics import coordinate_sort, interval_join, mark_duplicates
 from disq_spark.sinks.bam import write_bam
@@ -22,6 +23,7 @@ from disq_spark.sources.bam_source import read_bam
 from disq_spark.sources.variants import read_vcf
 
 
+@needs_reference
 def test_sort_index_query_pipeline(spark, fixtures_dir, tmp_path):
     src = os.path.join(fixtures_dir, "1-with-splitting-index.bam")
     df, header = read_bam(spark, src, split_size=200_000)
@@ -46,6 +48,7 @@ def test_sort_index_query_pipeline(spark, fixtures_dir, tmp_path):
     assert pruned.count() == brute.count() > 0
 
 
+@needs_reference
 def test_dedup_target_depth_pipeline(spark, fixtures_dir):
     src = os.path.join(fixtures_dir, "1-with-splitting-index.bam")
     df, header = read_bam(spark, src, split_size=300_000)
@@ -76,6 +79,7 @@ def test_dedup_target_depth_pipeline(spark, fixtures_dir):
     assert total == brute
 
 
+@needs_reference
 def test_cohort_vcf_pipeline(spark, fixtures_dir, tmp_path):
     from disq_spark.functions.vcf_typed import explode_genotypes
 

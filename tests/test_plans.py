@@ -238,17 +238,21 @@ def test_countmin_single_aggregate_shuffle(spark):
     assert plan.count("HashAggregate") == 2  # partial + final
 
 
-def test_coverage_bins_single_aggregate_shuffle(spark):
-    """Binned coverage: explode + one partial-agg groupBy — one exchange."""
-    import os
-
+def test_coverage_bins_single_aggregate_shuffle(spark, gen_reads):
+    """Binned coverage: explode + one partial-agg groupBy — one exchange.
+    The read is split into several partitions: a one-partition scan is
+    already SinglePartition, and Spark plans its groupBy with no
+    exchange at all."""
+    from conftest import bam_inputs
     from disq_spark.operators.genomics import coverage_bins
     from disq_spark.sources.bam_source import read_bam
 
-    df, _ = read_bam(spark, os.path.join("/root/reference/src/test/resources", "1.bam"))
-    plan = simple_plan_of(coverage_bins(df, bin_size=10_000))
-    assert plan.count("Exchange") == 1, plan
-    assert "Generate explode" in plan or "Generate" in plan
+    for src, _n in bam_inputs(gen_reads):
+        df, _ = read_bam(spark, src, split_size=100_000)
+        assert df.rdd.getNumPartitions() > 1
+        plan = simple_plan_of(coverage_bins(df, bin_size=10_000))
+        assert plan.count("Exchange") == 1, plan
+        assert "Generate explode" in plan or "Generate" in plan
 
 
 def test_bm25_broadcasts_dimension_sides(spark):

@@ -7,6 +7,7 @@ import os
 
 import pytest
 
+from conftest import fixture, needs_reference, upstream
 from disq_spark.sources.reads import read_sam
 from disq_spark.sources.variants import read_vcf
 
@@ -14,66 +15,70 @@ BAD_SAM = "broken\trecord\n"
 BAD_VCF = "chr1\tnotanint\t.\tA\tT\t.\t.\t.\n"
 
 
-@pytest.fixture()
-def sam_with_garbage(fixtures_dir, tmp_path):
-    src = os.path.join(fixtures_dir, "test.sam")
-    dst = str(tmp_path / "garbled.sam")
+def _garble(src, dst, header_mark, bad_line):
+    """Copy ``src`` to ``dst`` with ``bad_line`` spliced in after the
+    header; return the number of good records."""
     with open(src) as f:
         lines = f.readlines()
-    n_records = sum(1 for ln in lines if not ln.startswith("@"))
-    # splice a malformed record after the header
-    hdr_end = next(i for i, ln in enumerate(lines) if not ln.startswith("@"))
-    lines.insert(hdr_end, BAD_SAM)
+    n_records = sum(1 for ln in lines if not ln.startswith(header_mark))
+    hdr_end = next(i for i, ln in enumerate(lines) if not ln.startswith(header_mark))
+    lines.insert(hdr_end, bad_line)
     with open(dst, "w") as f:
         f.writelines(lines)
-    return dst, n_records
+    return n_records
+
+
+@pytest.fixture()
+def sam_with_garbage(gen_reads, tmp_path):
+    """(path, good records) of each SAM with a malformed record spliced
+    after its header: the generated SAM, and the upstream test.sam
+    where it exists."""
+    out = []
+    for i, src in enumerate([gen_reads["sam"]] + upstream(fixture("test.sam"))):
+        dst = str(tmp_path / f"garbled{i}.sam")
+        out.append((dst, _garble(src, dst, "@", BAD_SAM)))
+    return out
 
 
 def test_sam_strict_raises(spark, sam_with_garbage):
-    path, _ = sam_with_garbage
-    df, _h = read_sam(spark, path, mode="STRICT")
-    with pytest.raises(Exception, match="malformed SAM record"):
-        df.count()
+    for path, _ in sam_with_garbage:
+        df, _h = read_sam(spark, path, mode="STRICT")
+        with pytest.raises(Exception, match="malformed SAM record"):
+            df.count()
 
 
 def test_sam_silent_and_lenient_skip(spark, sam_with_garbage):
-    path, n_records = sam_with_garbage
-    for mode in ("SILENT", "LENIENT"):
-        df, _h = read_sam(spark, path, mode=mode)
+    for path, n_records in sam_with_garbage:
+        for mode in ("SILENT", "LENIENT"):
+            df, _h = read_sam(spark, path, mode=mode)
+            assert df.count() == n_records
+
+
+def test_vcf_strict_raises_silent_skips(spark, gen_variants, tmp_path):
+    for i, src in enumerate([gen_variants["small"]["vcf"]] + upstream(fixture("test.vcf"))):
+        dst = str(tmp_path / f"garbled{i}.vcf")
+        n_records = _garble(src, dst, "#", BAD_VCF)
+
+        df, _h = read_vcf(spark, dst, mode="STRICT")
+        with pytest.raises(Exception, match="malformed VCF record"):
+            df.count()
+        df, _h = read_vcf(spark, dst, mode="SILENT")
         assert df.count() == n_records
 
 
-def test_vcf_strict_raises_silent_skips(spark, fixtures_dir, tmp_path):
-    src = os.path.join(fixtures_dir, "test.vcf")
-    dst = str(tmp_path / "garbled.vcf")
-    with open(src) as f:
-        lines = f.readlines()
-    n_records = sum(1 for ln in lines if not ln.startswith("#"))
-    hdr_end = next(i for i, ln in enumerate(lines) if not ln.startswith("#"))
-    lines.insert(hdr_end, BAD_VCF)
-    with open(dst, "w") as f:
-        f.writelines(lines)
-
-    df, _h = read_vcf(spark, dst, mode="STRICT")
-    with pytest.raises(Exception, match="malformed VCF record"):
-        df.count()
-    df, _h = read_vcf(spark, dst, mode="SILENT")
-    assert df.count() == n_records
-
-
-def test_sam_interval_filter(spark, fixtures_dir):
+def test_sam_interval_filter(spark, gen_reads):
     """SAM brute-force interval filter (no index, SamSource.java:93-102)."""
     from disq_spark.functions.intervals import Interval, overlaps
 
-    path = os.path.join(fixtures_dir, "test.sam")
-    full, _ = read_sam(spark, path)
-    row = full.filter(full.start.isNotNull()).first()
-    ivs = [Interval(row.contig, row.start, row.start + 100)]
-    filtered, _ = read_sam(spark, path, intervals=ivs)
-    assert filtered.count() == full.filter(overlaps(ivs)).count() > 0
+    for path in [gen_reads["sam"]] + upstream(fixture("test.sam")):
+        full, _ = read_sam(spark, path)
+        row = full.filter(full.start.isNotNull()).first()
+        ivs = [Interval(row.contig, row.start, row.start + 100)]
+        filtered, _ = read_sam(spark, path, intervals=ivs)
+        assert filtered.count() == full.filter(overlaps(ivs)).count() > 0
 
 
-@pytest.mark.parametrize("source", ["fixture", "generated"])
+@pytest.mark.parametrize("source", [pytest.param("fixture", marks=needs_reference), "generated"])
 def test_guesser_matches_sbi_ground_truth(fixtures_dir, request, tmp_path, source):
     """Every granularity-1 .sbi offset must validate as a record start;
     offsets 1..8 bytes past a true start must not chain-validate

@@ -4,55 +4,65 @@
 import gzip
 import os
 
+import pytest
+
+from conftest import fixture, needs_reference, upstream
 from disq_spark.formats.tabix import chunks_for_interval, read_tbi, split_overlaps_intervals
 from disq_spark.functions.intervals import Interval, overlaps
 from disq_spark.sources.variants import read_vcf
 
 
-def _contig_of(fixtures_dir):
-    with gzip.open(os.path.join(fixtures_dir, "HiSeq.10000.vcf.bgz"), "rt") as f:
+def _vcfs(gen_variants):
+    """Each BGZF VCF (with .tbi) a test reads: the generated one, and
+    the upstream HiSeq.10000.vcf.bgz where it exists."""
+    return [gen_variants["bgz"]] + upstream(fixture("HiSeq.10000.vcf.bgz"))
+
+
+def _contig_of(path):
+    with gzip.open(path, "rt") as f:
         for line in f:
             if not line.startswith("#"):
                 return line.split("\t", 1)[0]
 
 
-def test_read_tbi(fixtures_dir):
-    idx = read_tbi(os.path.join(fixtures_dir, "HiSeq.10000.vcf.bgz.tbi"))
-    assert idx.names
-    contig = _contig_of(fixtures_dir)
-    assert contig in idx.names
-    chunks = chunks_for_interval(idx, contig, 1, 10_000_000)
-    assert chunks
-    assert chunks_for_interval(idx, "no_such_contig", 1, 100) == []
+def test_read_tbi(gen_variants):
+    for path in _vcfs(gen_variants):
+        idx = read_tbi(path + ".tbi")
+        assert idx.names
+        contig = _contig_of(path)
+        assert contig in idx.names
+        chunks = chunks_for_interval(idx, contig, 1, 10_000_000)
+        assert chunks
+        assert chunks_for_interval(idx, "no_such_contig", 1, 100) == []
 
 
-def test_pruned_read_equals_filtered_read(spark, fixtures_dir):
-    path = os.path.join(fixtures_dir, "HiSeq.10000.vcf.bgz")
-    contig = _contig_of(fixtures_dir)
-    ivs = [Interval(contig, 800_000, 900_000)]
+def test_pruned_read_equals_filtered_read(spark, gen_variants):
+    for path in _vcfs(gen_variants):
+        contig = _contig_of(path)
+        ivs = [Interval(contig, 800_000, 900_000)]
 
-    full, _ = read_vcf(spark, path, split_size=64 * 1024)
-    expect = full.filter(overlaps(ivs)).count()
+        full, _ = read_vcf(spark, path, split_size=64 * 1024)
+        expect = full.filter(overlaps(ivs)).count()
 
-    pruned, _ = read_vcf(spark, path, split_size=64 * 1024, intervals=ivs)
-    assert pruned.count() == expect
-    assert expect > 0
+        pruned, _ = read_vcf(spark, path, split_size=64 * 1024, intervals=ivs)
+        assert pruned.count() == expect
+        assert expect > 0
 
-    # pruning actually dropped splits: the planned partition count must be
-    # smaller than the unpruned plan for a narrow interval
-    assert pruned.rdd.getNumPartitions() < full.rdd.getNumPartitions()
+        # pruning actually dropped splits: the planned partition count must be
+        # smaller than the unpruned plan for a narrow interval
+        assert pruned.rdd.getNumPartitions() < full.rdd.getNumPartitions()
 
 
-def test_split_overlap_primitive(fixtures_dir):
-    path = os.path.join(fixtures_dir, "HiSeq.10000.vcf.bgz")
-    idx = read_tbi(path + ".tbi")
-    contig = _contig_of(fixtures_dir)
-    size = os.path.getsize(path)
-    triples = [(contig, 1, 5_000_000_000)]
-    # the whole file overlaps a whole-contig interval
-    assert split_overlaps_intervals(idx, 0, size, triples)
-    # a range past EOF cannot
-    assert not split_overlaps_intervals(idx, size + 10, size + 20, [(contig, 1, 2)])
+def test_split_overlap_primitive(gen_variants):
+    for path in _vcfs(gen_variants):
+        idx = read_tbi(path + ".tbi")
+        contig = _contig_of(path)
+        size = os.path.getsize(path)
+        triples = [(contig, 1, 5_000_000_000)]
+        # the whole file overlaps a whole-contig interval
+        assert split_overlaps_intervals(idx, 0, size, triples)
+        # a range past EOF cannot
+        assert not split_overlaps_intervals(idx, size + 10, size + 20, [(contig, 1, 2)])
 
 
 # ---------------------------------------------------------------------------
@@ -99,13 +109,16 @@ def _serial_tbi(path):
     return b.build()
 
 
-def test_written_tbi_matches_serial_build(spark, fixtures_dir, tmp_path):
+def test_written_tbi_matches_serial_build(spark, gen_variants, tmp_path):
+    for i, src in enumerate(_vcfs(gen_variants)):
+        _check_written_tbi(spark, src, str(tmp_path / f"out{i}.vcf.bgz"))
+
+
+def _check_written_tbi(spark, src, out):
     from disq_spark.formats.tabix import read_tbi as _read
     from disq_spark.sinks.variants import write_vcf
 
-    src = os.path.join(fixtures_dir, "HiSeq.10000.vcf.bgz")
     df, header = read_vcf(spark, src, split_size=64 * 1024)  # multi-partition
-    out = str(tmp_path / "out.vcf.bgz")
     write_vcf(df, header, out, write_tbi=True)
     assert os.path.exists(out + ".tbi")
 
@@ -127,6 +140,7 @@ def test_written_tbi_matches_serial_build(spark, fixtures_dir, tmp_path):
     assert merged.linear == [fill(lin) for lin in serial.linear]
 
 
+@needs_reference
 def test_build_tbi_bytes_match_tabix_fixture(spark, fixtures_dir, tmp_path):
     """Distributed .tbi construction over the htsjdk-shipped BGZF VCF
     reproduces the shipped tabix-built index BYTE-FOR-BYTE — raw file
@@ -150,45 +164,45 @@ def test_build_tbi_bytes_match_tabix_fixture(spark, fixtures_dir, tmp_path):
         assert mine == want, f"{name}: built .tbi differs from fixture"
 
 
-def test_build_tbi_split_invariant(spark, fixtures_dir, tmp_path):
+def test_build_tbi_split_invariant(spark, gen_variants, tmp_path):
     """The built index must not depend on the split plan: per-split
     fragments merged in file order == one-split serial scan."""
     import shutil
 
     from disq_spark.sources.variants import build_tbi
 
-    src = os.path.join(fixtures_dir, "HiSeq.10000.vcf.bgz")
-    a = str(tmp_path / "a.vcf.bgz")
-    b = str(tmp_path / "b.vcf.bgz")
-    shutil.copy(src, a)
-    shutil.copy(src, b)
-    out_a = build_tbi(spark, a, split_size=16 * 1024)  # ~26 splits
-    out_b = build_tbi(spark, b, split_size=1 << 30)  # single split
-    with open(out_a, "rb") as f:
-        bytes_a = f.read()
-    with open(out_b, "rb") as f:
-        bytes_b = f.read()
-    assert bytes_a == bytes_b
+    for i, src in enumerate(_vcfs(gen_variants)):
+        a = str(tmp_path / f"a{i}.vcf.bgz")
+        b = str(tmp_path / f"b{i}.vcf.bgz")
+        shutil.copy(src, a)
+        shutil.copy(src, b)
+        out_a = build_tbi(spark, a, split_size=16 * 1024)  # ~26 splits upstream
+        out_b = build_tbi(spark, b, split_size=1 << 30)  # single split
+        with open(out_a, "rb") as f:
+            bytes_a = f.read()
+        with open(out_b, "rb") as f:
+            bytes_b = f.read()
+        assert bytes_a == bytes_b
 
 
-def test_written_tbi_prunes_correctly(spark, fixtures_dir, tmp_path):
+def test_written_tbi_prunes_correctly(spark, gen_variants, tmp_path):
     from disq_spark.sinks.variants import write_vcf
 
-    src = os.path.join(fixtures_dir, "HiSeq.10000.vcf.bgz")
-    df, header = read_vcf(spark, src, split_size=64 * 1024)
-    out = str(tmp_path / "q.vcf.bgz")
-    write_vcf(df, header, out, write_tbi=True)
+    for i, src in enumerate(_vcfs(gen_variants)):
+        df, header = read_vcf(spark, src, split_size=64 * 1024)
+        out = str(tmp_path / f"q{i}.vcf.bgz")
+        write_vcf(df, header, out, write_tbi=True)
 
-    contig = _contig_of(fixtures_dir)
-    ivs = [Interval(contig, 800_000, 900_000)]
-    full, _ = read_vcf(spark, out, split_size=64 * 1024)
-    expect = sorted(
-        map(tuple, full.filter(overlaps(ivs)).select("contig", "start", "ref").collect())
-    )
-    pruned, _ = read_vcf(spark, out, split_size=64 * 1024, intervals=ivs)
-    got = sorted(map(tuple, pruned.select("contig", "start", "ref").collect()))
-    assert got == expect and len(got) > 0
-    assert pruned.rdd.getNumPartitions() < full.rdd.getNumPartitions()
+        contig = _contig_of(src)
+        ivs = [Interval(contig, 800_000, 900_000)]
+        full, _ = read_vcf(spark, out, split_size=64 * 1024)
+        expect = sorted(
+            map(tuple, full.filter(overlaps(ivs)).select("contig", "start", "ref").collect())
+        )
+        pruned, _ = read_vcf(spark, out, split_size=64 * 1024, intervals=ivs)
+        got = sorted(map(tuple, pruned.select("contig", "start", "ref").collect()))
+        assert got == expect and len(got) > 0
+        assert pruned.rdd.getNumPartitions() < full.rdd.getNumPartitions()
 
 
 def test_tbi_build_refuses_unsorted_input():
@@ -211,20 +225,19 @@ def test_tbi_build_refuses_unsorted_input():
         b2.add("20", 2000, 2010, 200, 300)
 
 
-def test_tbi_merge_refuses_globally_interleaved_parts(spark, fixtures_dir, tmp_path):
+def test_tbi_merge_refuses_globally_interleaved_parts(spark, planned_inputs, tmp_path):
     """Per-part-sorted but globally-interleaved VCF parts must be
-    refused at merge time (cross-part analog of the builder guard)."""
-    import os
-
-    import pytest
-
+    refused at merge time (cross-part analog of the builder guard).
+    The generated input holds one contig, so the contig-grouping guard
+    does not refuse first."""
     from disq_spark.sinks.variants import write_vcf
     from disq_spark.sources.variants import read_vcf
 
-    df, header = read_vcf(spark, os.path.join(fixtures_dir, "HiSeq.10000.vcf.bgz"))
-    bad = df.repartition(3).sortWithinPartitions("contig", "start")
-    with pytest.raises(Exception, match="globally coordinate-sorted"):
-        write_vcf(bad, header, str(tmp_path / "bad.vcf.bgz"), write_tbi=True)
+    for i, src in enumerate([planned_inputs["vcf"]] + upstream(fixture("HiSeq.10000.vcf.bgz"))):
+        df, header = read_vcf(spark, src)
+        bad = df.repartition(3).sortWithinPartitions("contig", "start")
+        with pytest.raises(Exception, match="globally coordinate-sorted"):
+            write_vcf(bad, header, str(tmp_path / f"bad{i}.vcf.bgz"), write_tbi=True)
 
 
 def test_tbi_cross_part_check_sees_interior_contigs(tmp_path):

@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import fixture, needs_reference, upstream
 from disq_spark.sinks.variants import write_vcf
 from disq_spark.sources.variants import read_header, read_vcf
 
@@ -19,31 +20,52 @@ def _direct_count(path):
         return sum(1 for ln in f if ln.strip() and not ln.startswith("#"))
 
 
+UPSTREAM_SAMPLES = ["NA00001", "NA00002", "NA00003"]  # test.vcf's samples
+
+# test.vcf's compressions and their generated stand-ins
+COMPRESSIONS = {"test.vcf": "vcf", "test.vcf.bgz": "bgz", "test.vcf.bgzf.gz": "bgzf_gz", "test.vcf.gz": "gz"}
+
+
+def _test_vcfs(gen_variants):
+    """The generated small plain VCF, and the upstream test.vcf where it
+    exists."""
+    return [gen_variants["small"]["vcf"]] + upstream(fixture("test.vcf"))
+
+
+def _hiseqs(gen_variants):
+    """The generated ~1 MB BGZF VCF, and the upstream HiSeq.10000.vcf.bgz
+    where it exists."""
+    return [gen_variants["bgz"]] + upstream(fixture("HiSeq.10000.vcf.bgz"))
+
+
 @pytest.mark.parametrize(
     "name", ["test.vcf", "test.vcf.bgz", "test.vcf.bgzf.gz", "test.vcf.gz"]
 )
-def test_read_all_compressions(spark, fixtures_dir, name):
-    path = os.path.join(fixtures_dir, name)
-    df, header = read_vcf(spark, path)
-    assert df.count() == _direct_count(path)
-    assert header.samples == ["NA00001", "NA00002", "NA00003"]
+def test_read_all_compressions(spark, gen_variants, name):
+    cases = [(gen_variants["small"][COMPRESSIONS[name]], gen_variants["samples"])]
+    cases += upstream((fixture(name), UPSTREAM_SAMPLES))
+    for path, samples in cases:
+        df, header = read_vcf(spark, path)
+        assert df.count() == _direct_count(path)
+        assert header.samples == samples
 
 
-def test_bgz_splits_parallelize(spark, fixtures_dir):
+def test_bgz_splits_parallelize(spark, gen_variants):
     """128 KB splits on a ~2 MB .bgz must give >= 4 partitions and the
     same records (HtsjdkVariantsRddTest.java:153-178 parity)."""
-    path = os.path.join(fixtures_dir, "HiSeq.10000.vcf.bgz")
-    df_whole, _ = read_vcf(spark, path)
-    df_split, _ = read_vcf(spark, path, split_size=128 * 1024)
-    assert df_split.rdd.getNumPartitions() >= 4
-    n = df_whole.count()
-    assert n == _direct_count(path)
-    assert df_split.count() == n
-    # value-level equality, not just counts
-    key = lambda d: sorted((r.contig, r.start, r.ref) for r in d.select("contig", "start", "ref").collect())
-    assert key(df_split) == key(df_whole)
+    for path in _hiseqs(gen_variants):
+        df_whole, _ = read_vcf(spark, path)
+        df_split, _ = read_vcf(spark, path, split_size=128 * 1024)
+        assert df_split.rdd.getNumPartitions() >= 4
+        n = df_whole.count()
+        assert n == _direct_count(path)
+        assert df_split.count() == n
+        # value-level equality, not just counts
+        key = lambda d: sorted((r.contig, r.start, r.ref) for r in d.select("contig", "start", "ref").collect())
+        assert key(df_split) == key(df_whole)
 
 
+@needs_reference
 def test_fields_parsed(spark, fixtures_dir):
     df, _ = read_vcf(spark, os.path.join(fixtures_dir, "test.vcf"))
     rows = {r.start: r for r in df.collect()}
@@ -59,6 +81,7 @@ def test_fields_parsed(spark, fixtures_dir):
     assert len(multi.alts) >= 2
 
 
+@needs_reference
 def test_gvcf_end_key(spark, fixtures_dir):
     df, _ = read_vcf(spark, os.path.join(fixtures_dir, "CEUTrio.20.21.gatk3.4.g.vcf.bgz"))
     # gVCF reference blocks: END > start + len(ref) - 1 for block rows
@@ -69,47 +92,50 @@ def test_gvcf_end_key(spark, fixtures_dir):
     )
 
 
-def test_empty_vcf(spark, fixtures_dir):
-    df, header = read_vcf(spark, os.path.join(fixtures_dir, "testEmpty.vcf"))
-    assert df.count() == 0
-    assert header.samples
+def test_empty_vcf(spark, gen_variants):
+    for path in [gen_variants["empty"]] + upstream(fixture("testEmpty.vcf")):
+        df, header = read_vcf(spark, path)
+        assert df.count() == 0
+        assert header.samples
 
 
 @pytest.mark.parametrize("target", ["out.vcf", "out.vcf.bgz", "out.vcf.gz"])
-def test_roundtrip_single_file(spark, fixtures_dir, tmp_path, target):
-    src = os.path.join(fixtures_dir, "test.vcf")
-    df, header = read_vcf(spark, src)
-    out = str(tmp_path / target)
-    write_vcf(df, header, out)
-    if target.endswith((".bgz", ".gz")):
-        from disq_spark.formats import bgzf
+def test_roundtrip_single_file(spark, gen_variants, tmp_path, target):
+    for i, src in enumerate(_test_vcfs(gen_variants)):
+        df, header = read_vcf(spark, src)
+        out = str(tmp_path / f"{i}-{target}")
+        write_vcf(df, header, out)
+        if target.endswith((".bgz", ".gz")):
+            from disq_spark.formats import bgzf
 
-        assert bgzf.is_bgzf(out)  # compressed single-file writes are BGZF
-    df2, header2 = read_vcf(spark, out)
-    assert header2.text == header.text
-    assert df2.count() == df.count()
-    key = lambda d: sorted(
-        (r.contig, r.start, r.end, r.ref, tuple(r.alts or ()), r.qual)
-        for r in d.select("contig", "start", "end", "ref", "alts", "qual").collect()
-    )
-    assert key(df2) == key(df)
-
-
-def test_roundtrip_sharded(spark, fixtures_dir, tmp_path):
-    src = os.path.join(fixtures_dir, "test.vcf")
-    df, header = read_vcf(spark, src)
-    out = str(tmp_path / "vcf_shards")
-    write_vcf(df.repartition(2), header, out, single_file=False)
-    df2, _ = read_vcf(spark, out)
-    assert df2.count() == df.count()
+            assert bgzf.is_bgzf(out)  # compressed single-file writes are BGZF
+        df2, header2 = read_vcf(spark, out)
+        assert header2.text == header.text
+        assert df2.count() == df.count()
+        key = lambda d: sorted(
+            (r.contig, r.start, r.end, r.ref, tuple(r.alts or ()), r.qual)
+            for r in d.select("contig", "start", "end", "ref", "alts", "qual").collect()
+        )
+        assert key(df2) == key(df)
 
 
-def test_header_roundtrip(fixtures_dir):
-    h = read_header(os.path.join(fixtures_dir, "test.vcf"))
-    assert h.text.startswith("##fileformat")
-    assert h.text.rstrip("\n").splitlines()[-1].startswith("#CHROM")
+def test_roundtrip_sharded(spark, gen_variants, tmp_path):
+    for i, src in enumerate(_test_vcfs(gen_variants)):
+        df, header = read_vcf(spark, src)
+        out = str(tmp_path / f"vcf_shards{i}")
+        write_vcf(df.repartition(2), header, out, single_file=False)
+        df2, _ = read_vcf(spark, out)
+        assert df2.count() == df.count()
 
 
+def test_header_roundtrip(gen_variants):
+    for path in _test_vcfs(gen_variants):
+        h = read_header(path)
+        assert h.text.startswith("##fileformat")
+        assert h.text.rstrip("\n").splitlines()[-1].startswith("#CHROM")
+
+
+@needs_reference
 def test_typed_info_and_genotypes(spark, fixtures_dir):
     """Header-declared ##INFO/##FORMAT types become Catalyst casts
     (typed projection over the stable map-based schema)."""
@@ -142,38 +168,38 @@ def test_typed_info_and_genotypes(spark, fixtures_dir):
     assert all(r.mean_dp is None or r.mean_dp >= 0 for r in agg)
 
 
-def test_bgz_split_partition_counts(spark, fixtures_dir):
+def test_bgz_split_partition_counts(spark, gen_variants):
     """Splittable BGZF: smaller splits -> more partitions, same rows
     (HtsjdkVariantsRddTest.java:161-178 parity)."""
     from disq_spark.sources.variants import read_vcf
 
-    path = os.path.join(fixtures_dir, "HiSeq.10000.vcf.bgz")
-    sizes = {}
-    counts = {}
-    for split in (128 * 1024, 64 * 1024, 32 * 1024):
-        df, _ = read_vcf(spark, path, split_size=split)
-        sizes[split] = df.rdd.getNumPartitions()
-        counts[split] = df.count()
-    assert len(set(counts.values())) == 1  # identical record sets
-    assert sizes[32 * 1024] > sizes[128 * 1024] >= 1
-    assert sizes[128 * 1024] >= 2  # the file is bigger than one split
+    for path in _hiseqs(gen_variants):
+        sizes = {}
+        counts = {}
+        for split in (128 * 1024, 64 * 1024, 32 * 1024):
+            df, _ = read_vcf(spark, path, split_size=split)
+            sizes[split] = df.rdd.getNumPartitions()
+            counts[split] = df.count()
+        assert len(set(counts.values())) == 1  # identical record sets
+        assert sizes[32 * 1024] > sizes[128 * 1024] >= 1
+        assert sizes[128 * 1024] >= 2  # the file is bigger than one split
 
 
-def test_genotype_pruned_parse(spark, fixtures_dir):
+def test_genotype_pruned_parse(spark, gen_variants):
     """columns= without 'genotypes' skips the sample-block parse: same
     variant-level values, NULL genotypes, for a multi-sample gVCF."""
     from disq_spark.sources.variants import read_vcf
 
-    path = os.path.join(fixtures_dir, "CEUTrio.20.21.gatk3.4.g.vcf.bgz")
-    full, _ = read_vcf(spark, path, split_size=256 * 1024)
-    lean, _ = read_vcf(
-        spark, path, split_size=256 * 1024, columns=["contig", "start", "ref", "qual"]
-    )
-    assert lean.count() == full.count()
-    assert lean.first().genotypes is None
-    a = sorted(map(tuple, full.select("contig", "start", "ref").collect()))
-    b = sorted(map(tuple, lean.select("contig", "start", "ref").collect()))
-    assert a == b
+    for path in [gen_variants["bgz"]] + upstream(fixture("CEUTrio.20.21.gatk3.4.g.vcf.bgz")):
+        full, _ = read_vcf(spark, path, split_size=256 * 1024)
+        lean, _ = read_vcf(
+            spark, path, split_size=256 * 1024, columns=["contig", "start", "ref", "qual"]
+        )
+        assert lean.count() == full.count()
+        assert lean.first().genotypes is None
+        a = sorted(map(tuple, full.select("contig", "start", "ref").collect()))
+        b = sorted(map(tuple, lean.select("contig", "start", "ref").collect()))
+        assert a == b
 
 
 def test_roundtrip_missing_qual(spark, tmp_path):
@@ -201,6 +227,7 @@ def test_roundtrip_missing_qual(spark, tmp_path):
     assert [q for _, q in got] == [50.5, None, 16357.98]
 
 
+@needs_reference
 def test_tribble_parse_gatk_fixture(fixtures_dir):
     """The reader must parse a real GATK-written interval-tree .idx
     byte-exactly (layout documented in formats/tribble.py)."""
@@ -231,6 +258,7 @@ def test_tribble_roundtrip(tmp_path):
     assert back.file_size == idx.file_size
 
 
+@needs_reference
 def test_tribble_idx_split_pruning(spark, fixtures_dir, tmp_path):
     """Plain VCF + .idx: interval planning must prune byte splits (zero
     for a miss region) while matching the brute-force filter exactly."""
