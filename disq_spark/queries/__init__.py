@@ -1,8 +1,9 @@
 """Gate-facing query registry.
 
-Each submodule contributes:
-- ``QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]]``
-- ``ORACLE: dict[str, str]`` — DuckDB-runnable ANSI SQL equivalents
+Each submodule contributes two ``registry.Registry`` maps, which refuse
+a name given twice (as does their union here):
+- ``QUERIES: name -> Callable[[SparkSession, str], DataFrame]``
+- ``ORACLE: name -> str`` — DuckDB-runnable ANSI SQL equivalents
   (omitted for non-SQL-expressible operators; the driver then records a
   rows-only check).
 
@@ -18,17 +19,14 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from disq_spark.queries import events, genomics, llm, relational, sampling, sketches
+from disq_spark.queries.registry import union
+
+_MODULES = (relational, events, llm, genomics, sketches, sampling)
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for mod in (relational, events, llm, genomics, sketches, sampling):
-        out.update(mod.QUERIES)
-    return out
+    return union(mod.QUERIES for mod in _MODULES)
 
 
 def all_oracles() -> dict[str, str]:
-    out: dict[str, str] = {}
-    for mod in (relational, events, llm, genomics, sketches, sampling):
-        out.update(mod.ORACLE)
-    return out
+    return union(mod.ORACLE for mod in _MODULES)

@@ -18,18 +18,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from disq_spark.queries.registry import Registry
 from disq_spark.queries.tables import load
 
-QUERIES = {}
-ORACLE = {}
+QUERIES = Registry()
+ORACLE = Registry()
 
 
-def _q(name):
-    def deco(fn):
-        QUERIES[name] = fn
-        return fn
-
-    return deco
+_q = QUERIES.register
 
 
 # ---------------------------------------------------------------------------

@@ -19,8 +19,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES = {}
-ORACLE: dict[str, str] = {}
+from disq_spark.queries.registry import Registry
+
+QUERIES = Registry()
+ORACLE = Registry()
 
 FIXTURES = "/root/reference/src/test/resources"
 # repo-local fixtures, derived from the module location so a checkout
@@ -30,12 +32,7 @@ REPO_FIXTURES = os.path.normpath(
 )
 
 
-def _q(name):
-    def deco(fn):
-        QUERIES[name] = fn
-        return fn
-
-    return deco
+_q = QUERIES.register
 
 
 def _have_fixtures() -> bool:
@@ -951,8 +948,8 @@ ORDER BY contig
 """
 
 
-@_q("genomics_kmer_spectrum")
-def genomics_kmer_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_q("genomics_reference_kmer_spectrum")
+def genomics_reference_kmer_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed k-mer spectrum over the reference windows: overlap =
     k-1 gives every boundary-spanning k-mer exactly one owner, so one
     explode + one partial-agg groupBy counts the whole genome. Top 10
@@ -977,7 +974,7 @@ def genomics_kmer_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["genomics_kmer_spectrum"] = """
+ORACLE["genomics_reference_kmer_spectrum"] = """
 SELECT kmer, CAST(n AS BIGINT) AS n
 FROM (VALUES ('TTATA', 158), ('TTAAT', 144), ('ATTAT', 143), ('AAAAA', 135),
              ('TAAAT', 134), ('TTTTA', 129), ('AAATT', 127), ('TATAA', 126),

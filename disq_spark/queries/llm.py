@@ -15,18 +15,14 @@ from pyspark.sql import functions as F
 from disq_spark.functions import text as TX
 from disq_spark.operators import dedup as DD
 from disq_spark.operators import similarity as SIM
+from disq_spark.queries.registry import Registry
 from disq_spark.queries.tables import load, table_count
 
-QUERIES = {}
-ORACLE = {}
+QUERIES = Registry()
+ORACLE = Registry()
 
 
-def _q(name):
-    def deco(fn):
-        QUERIES[name] = fn
-        return fn
-
-    return deco
+_q = QUERIES.register
 
 
 # SQL fragment shared by every oracle below: normalized text + tokens.

@@ -10,18 +10,14 @@ from pyspark.sql import functions as F
 from disq_spark.functions import text as TX
 from disq_spark.operators import sampling as SP
 from disq_spark.queries.llm import _TOKS
+from disq_spark.queries.registry import Registry
 from disq_spark.queries.tables import load
 
-QUERIES = {}
-ORACLE = {}
+QUERIES = Registry()
+ORACLE = Registry()
 
 
-def _q(name):
-    def deco(fn):
-        QUERIES[name] = fn
-        return fn
-
-    return deco
+_q = QUERIES.register
 
 
 # ---------------------------------------------------------------------------

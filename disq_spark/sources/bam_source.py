@@ -1,30 +1,35 @@
 """BAM -> reads DataFrame (the reference's flagship path, SURVEY.md §3.1).
 
-Driver-side planning (no Spark jobs, unlike the reference which runs
-planning as distributed jobs — with an index the plan is pure metadata):
+Planning is driver-side metadata (no Spark job, and no block inflated
+beyond the header):
 
 1. read header (+ sequence dictionary) from the first BGZF blocks
    (AbstractSamSource.java:54-71).
 2. with ``.sbi``: byte splits -> record-start virtual-offset chunks via
    the index, one flatMap-equivalent done driver-side
    (BamSource.java:99-119).
-3. without: byte splits realign to the next BGZF block boundary, then a
-   record-start guesser validates candidate offsets by checking ~10
-   consecutive records' field invariants (BamSource.java:120-139 +
-   BamRecordGuesser.java:60-226, READS_TO_CHECK=10, MAX_READ_SIZE cap).
+3. without: the byte splits themselves, as block-aligned virtual offsets
+   (``s << 16``; the file's first row starts at the header's end). Each
+   task finds its own first record, as Disq's ``mapPartitionsWithIndex``
+   guesser does (BamSource.java:120-139): its walk realigns to the next
+   BGZF block and takes the first offset that begins a chain of valid
+   records (BamRecordGuesser.java:60-226, READS_TO_CHECK=10,
+   MAX_READ_SIZE cap). The guesser is exact, so neighbouring tasks agree
+   on every boundary without talking to each other.
 
 Executors decode their virtual-offset span into column dicts that
 ``plan_frame`` hands to Spark as Arrow batches. Non-overlap invariant: a
 partition decodes exactly the records whose start virtual offset lies in
 [vStart, vEnd) (AbstractBinarySamSource.java:95-98 one-chunk-per-partition
-analog).
+analog), where a block-aligned vStart names the first record starting in
+that block or later.
 One record walk (``walk_records``) finds those records for the decode,
-the index builders and the guesser check. Every read of the file —
-that walk, the header read, the index-less guesser and the queryname
-snap — is a ``formats/bgzf.py::BlockReader``: the walk inflates the
-blocks from its chunk's start to the one holding its end, plus what a
-record straddling the end needs; the others inflate blocks only as far
-as their check reaches.
+the index builders and the guesser check, and applies the one boundary
+rule (the guess, and the queryname snap of ``pair_atomic``). Every read
+of the file — that walk and the header read — is a
+``formats/bgzf.py::BlockReader``: the walk inflates the blocks from its
+chunk's start to the one holding its end, plus what its guess, a record
+straddling the end or a name run past the end needs.
 
 ``build_sbi``/``build_bai`` index an existing BAM on the write path's
 index path: each planned chunk feeds its walked records to the BAM
@@ -77,6 +82,11 @@ def read_bam_header(path: str) -> tuple[SamHeader, list[tuple[str, int]], int]:
     return SamHeader(text=text), refs, voff
 
 
+# the 36 fixed bytes of a record: block_size, refID, pos, l_read_name,
+# mapq, bin, n_cigar_op, flag, l_seq, next_refID, next_pos, tlen
+_FIXED = _struct.Struct("<iiiBBHHHiiii")
+
+
 def _check_record(
     data: bytes, off: int, n_ref: int, ref_lens: list[int], check_bin: bool = True
 ) -> int | None:
@@ -84,135 +94,113 @@ def _check_record(
 
     Ports the field-invariant checks of BamRecordGuesser.java:105-226:
     bounded block_size, refID/pos in range, NUL-terminated name, valid
-    cigar operators, internal length arithmetic.
+    cigar operators, internal length arithmetic. Every check on the 36
+    fixed bytes runs before the record's length is trusted, so garbage
+    is rejected without inflating the megabytes its ``block_size`` may
+    claim; -1 means the fixed fields pass but ``data`` ends before the
+    record does. ``check_bin`` adds ``_bin_ok``.
     """
     if off + 36 > len(data):
         return -1  # insufficient data (not a failure)
-    block_size = _struct.unpack_from("<i", data, off)[0]
+    (block_size, ref_id, pos, l_read_name, _mapq, _bin, n_cigar, _flag, l_seq,
+     next_ref, next_pos, _tlen) = _FIXED.unpack_from(data, off)
     if block_size < 32 or block_size > 8 * 1024 * 1024:
         return None
-    base = off + 4
-    if base + block_size > len(data):
-        return -1
-    ref_id, pos = _struct.unpack_from("<ii", data, base)
-    if ref_id < -1 or ref_id >= n_ref:
+    if ref_id < -1 or ref_id >= n_ref or pos < -1 or (ref_id >= 0 and pos > ref_lens[ref_id]):
         return None
-    if pos < -1 or (ref_id >= 0 and pos > ref_lens[ref_id]):
+    if l_read_name == 0 or l_seq < 0:
         return None
-    l_read_name = data[base + 8]
-    if l_read_name == 0:
-        return None
-    n_cigar = _struct.unpack_from("<H", data, base + 12)[0]
-    l_seq = _struct.unpack_from("<i", data, base + 16)[0]
-    if l_seq < 0:
-        return None
-    next_ref, next_pos = _struct.unpack_from("<ii", data, base + 20)
     if next_ref < -1 or next_ref >= n_ref:
         return None
     if next_pos < -1 or (next_ref >= 0 and next_pos > ref_lens[next_ref]):
         return None
-    fixed = 32 + l_read_name + 4 * n_cigar + (l_seq + 1) // 2 + l_seq
-    if fixed > block_size:
+    if 32 + l_read_name + 4 * n_cigar + (l_seq + 1) // 2 + l_seq > block_size:
         return None
+    base = off + 4
+    if base + block_size > len(data):
+        return -1
     # NUL-terminated name exactly at l_read_name
     if data[base + 32 + l_read_name - 1] != 0:
         return None
     name_bytes = data[base + 32 : base + 32 + l_read_name - 1]
-    if b"\x00" in name_bytes:
+    if any(b < 0x21 or b > 0x7E for b in name_bytes):  # printable, no spaces or NUL
         return None
-    if any(b < 0x21 or b > 0x7E for b in name_bytes):  # printable, no spaces
+    cigar = _struct.unpack_from(f"<{n_cigar}I", data, base + 32 + l_read_name)
+    if any((c & 0xF) > 8 for c in cigar):
         return None
-    # cigar ops valid; accumulate reference length for the bin check
-    ref_len = 0
-    for i in range(n_cigar):
-        c = _struct.unpack_from("<I", data, base + 32 + l_read_name + 4 * i)[0]
-        op = c & 0xF
-        if op > 8:
-            return None
-        if op in (0, 2, 3, 7, 8):  # M D N = X consume reference
-            ref_len += c >> 4
-    # bin consistency (standard writers set bin = reg2bin of the span) —
-    # the extra discriminator that kills the false positives the
-    # reference's guesser was historically prone to. Some writers leave
-    # the field stale or 0, so callers can disable it (find_record_start
-    # retries without it rather than degrading to a single partition).
-    if check_bin and ref_id >= 0 and pos >= 0 and n_cigar > 0:
-        from disq_spark.formats.bam import _reg2bin
-
-        bin_field = _struct.unpack_from("<H", data, base + 10)[0]
-        if bin_field != _reg2bin(pos, pos + max(ref_len, 1)):
-            return None
+    if check_bin and not _bin_ok(data, off):
+        return None
     # qual bytes plausible: phred 0..93 or the 0xFF missing marker
     qoff = base + 32 + l_read_name + 4 * n_cigar + (l_seq + 1) // 2
     qual = data[qoff : qoff + min(l_seq, 64)]
     if qual and qual[0] != 0xFF and any(q > 93 for q in qual):
         return None
-    return off + 4 + block_size
+    return base + block_size
 
 
-def find_record_start(
-    r: bgzf.BlockReader, n_ref: int, ref_lens: list[int], search_limit: int = MAX_SEARCH_BYTES
-) -> int | None:
-    """First ``r.data`` offset that begins a run of READS_TO_CHECK valid
-    records (BamRecordGuesser.checkRecordStart semantics), inflating
-    blocks only as far as the candidates and their chains reach.
-
-    The bin-consistency discriminator assumes standard writers
-    (bin = reg2bin of the alignment span); writers that leave bin stale
-    or 0 would fail every candidate chain and collapse planning to one
-    partition. So: strict pass first, then a retry without the bin check
-    — false positives remain vanishingly unlikely because the other ~10
-    field invariants must hold for READS_TO_CHECK consecutive records.
-    """
-    for check_bin in (True, False):
-        cand = _scan_for_record_start(r, n_ref, ref_lens, search_limit, check_bin)
-        if cand is not None:
-            return cand
-    return None
+def _bin_ok(data: bytes, off: int) -> bool:
+    """The bin field of the whole record at ``off`` is reg2bin of its
+    alignment span, as standard writers set it — the extra
+    discriminator that kills the false positives the reference's
+    guesser was historically prone to. Unplaced records and records
+    without a cigar carry no span to check."""
+    _bs, ref_id, pos, l_read_name, _mapq, bin_field, n_cigar = _FIXED.unpack_from(data, off)[:7]
+    if ref_id < 0 or pos < 0 or n_cigar == 0:
+        return True
+    cigar = _struct.unpack_from(f"<{n_cigar}I", data, off + 36 + l_read_name)
+    ref_len = sum(c >> 4 for c in cigar if (c & 0xF) in (0, 2, 3, 7, 8))  # M D N = X
+    return bin_field == bamcodec._reg2bin(pos, pos + max(ref_len, 1))
 
 
-def _scan_for_record_start(
-    r: bgzf.BlockReader,
-    n_ref: int,
-    ref_lens: list[int],
-    search_limit: int,
-    check_bin: bool,
-) -> int | None:
+def _chain_ok(r: bgzf.BlockReader, off: int, n_ref: int, ref_lens: list[int]) -> bool:
+    """The one record-start rule (BamRecordGuesser.checkRecordStart), for
+    the guesser and its diagnostic alike: the records chained from
+    ``off`` pass every check for READS_TO_CHECK records, or for twice
+    that many when a bin is stale or 0 (some writers leave it so; the
+    other field invariants then carry the longer chain). Inflates
+    blocks as far as the chain reaches; a chain that runs into the end
+    of the file after at least one record passes."""
     data = r.data
-    cand = 0
-    while cand < search_limit and (cand < len(data) or r.next_block()):
-        off = cand
-        validated = 0
-        ok = True
-        while validated < READS_TO_CHECK:
-            nxt = _check_record(data, off, n_ref, ref_lens, check_bin)
-            while nxt == -1:
-                # candidate record overruns the inflated data: inflate the
-                # next block; at EOF a first record overrunning the file is
-                # bogus, but a chain that already validated >= 1 real
-                # record just hit the end of data — accept it
-                if not r.next_block():
-                    nxt = None if validated == 0 else -2
-                    break
-                nxt = _check_record(data, off, n_ref, ref_lens, check_bin)
-            if nxt is None:
-                ok = False
-                break
-            if nxt == -2:
-                break
-            validated += 1
-            off = nxt
-        if ok and validated > 0:
+    strict = True
+    for n in range(2 * READS_TO_CHECK):
+        if strict and n == READS_TO_CHECK:
+            return True
+        nxt = _check_record(data, off, n_ref, ref_lens, check_bin=False)
+        while nxt == -1 and r.next_block():
+            nxt = _check_record(data, off, n_ref, ref_lens, check_bin=False)
+        if nxt is None:
+            return False
+        if nxt == -1:
+            return n > 0
+        strict = strict and _bin_ok(data, off)
+        off = nxt
+    return True
+
+
+def _guess_record_start(path: str, r: bgzf.BlockReader, n_ref: int, ref_lens: list[int]) -> int | None:
+    """The first ``r.data`` offset that begins a record (``_chain_ok``),
+    scanning from the first block the reader holds; None when the file
+    ends first. A stretch of MAX_SEARCH_BYTES without one is corrupt
+    input: ValueError naming the path and the block's virtual offset."""
+    data = r.data
+    for cand in range(MAX_SEARCH_BYTES):
+        if cand >= len(data) and not r.next_block():
+            return None
+        if _chain_ok(r, cand, n_ref, ref_lens):
             return cand
-        cand += 1
-    return None
+    raise ValueError(
+        f"{path}: no BAM record starts within {MAX_SEARCH_BYTES} bytes"
+        f" of virtual offset {r.c_pos[0] << 16}"
+    )
 
 
 def plan_bam_chunks(
     path: str, split_size: int, refs: list[tuple[str, int]], first_voff: int
 ) -> list[tuple[int, int]]:
-    """[(vStart, vEnd)] per split. Uses .sbi when present; else the
-    block-realign + record-guess fallback, all driver-side."""
+    """[(vStart, vEnd)] per split. Uses .sbi when present; else the byte
+    splits as block-aligned virtual offsets, the first one starting at
+    ``first_voff`` — each task then finds its own first record
+    (``walk_records``). Reads no data block either way."""
     size = _dfs.getsize(path)
     sbi_path = path + ".sbi"
     chunks: list[tuple[int, int]] = []
@@ -225,27 +213,10 @@ def plan_bam_chunks(
                 chunks.append(c)
             start += split_size
         return chunks
-
-    n_ref = len(refs)
-    ref_lens = [l for _n, l in refs]
-    starts: list[int] = []
-    pos = 0
-    while pos < size:
-        if pos == 0:
-            starts.append(first_voff)
-        else:
-            with bgzf.BlockReader(path, pos) as r:
-                rec = find_record_start(r, n_ref, ref_lens)
-                if rec is not None:
-                    starts.append(r.virtual_offsets([rec])[0])
-        pos += split_size
-    # dedupe + pair into [vStart, vEnd)
-    starts = sorted(set(starts))
-    end_voff = size << 16
-    for i, s in enumerate(starts):
-        e = starts[i + 1] if i + 1 < len(starts) else end_voff
-        if s < e:
-            chunks.append((s, e))
+    for start in range(0, size, split_size):
+        v_start, v_end = max(start << 16, first_voff), min(start + split_size, size) << 16
+        if v_start < v_end:
+            chunks.append((v_start, v_end))
     return chunks
 
 
@@ -276,14 +247,17 @@ def decode_chunk_cols(
     with_qual: bool = True,
     with_tags: bool = True,
     raw_tags: bool = False,
+    pair_atomic: bool = False,
+    first_row: bool = False,
 ):
     """Column-dict variant of decode_chunk: a cheap offsets walk (one
     struct.unpack per record) followed by the numpy batch decoder — the
-    hot read path, whose dict ``plan_frame`` hands to Arrow as it is."""
-    walked = walk_records(path, v_start, v_end)
+    hot read path, whose dict ``plan_frame`` hands to Arrow as it is.
+    ``pair_atomic``/``first_row`` as in ``walk_records``."""
+    walked = walk_records(path, refs, v_start, v_end, pair_atomic, first_row)
     if walked is None:
         return None
-    r, rec_offs = walked
+    r, rec_offs, _stop = walked
     return bamcodec.decode_batch(
         r.data,
         rec_offs,
@@ -295,81 +269,90 @@ def decode_chunk_cols(
     )
 
 
-def walk_records(path: str, v_start: int, v_end: int) -> tuple[bgzf.BlockReader, list[int]] | None:
-    """The one BAM record walk: the block reader over the chunk and the
+def walk_records(
+    path: str,
+    refs: list[tuple[str, int]],
+    v_start: int,
+    v_end: int,
+    pair_atomic: bool = False,
+    first_row: bool = False,
+) -> tuple[bgzf.BlockReader, list[int], int] | None:
+    """The one BAM record walk: the block reader over the chunk, the
     ``r.data`` offsets of the whole records whose start virtual offset
-    lies in [v_start, v_end) (``r.virtual_offsets`` gives their virtual
-    offsets). Inflates the blocks from ``v_start``'s to the one holding
-    ``v_end``, plus those a record straddling the end needs. Serves the
-    decode, the index builders and the guesser check; None when
-    ``v_start`` is not a block of the file."""
-    c_start = v_start >> 16
+    lies in [v_start, v_end) and the offset where the walk stopped (the
+    next record's start, or the end of the data; ``r.virtual_offsets``
+    maps them). Serves the decode, the index builders and the guesser
+    check, so all of them share one boundary rule:
+
+    - a ``v_start`` with in-block offset 0 (a byte split's start) names
+      a block, not a record: the first block of the file at or after it,
+      and its first record is guessed (``_guess_record_start``). Any other
+      ``v_start`` is a record start from an index and is used as is.
+    - the walk stops at the first record at or after ``v_end``; for a
+      block-aligned ``v_end`` that is the first record of the first block
+      at or after it, the next split's guess.
+    - ``pair_atomic`` (queryname-grouped input): the chunk drops the name
+      run its first record opens, unless ``first_row`` (the file's first
+      chunk), and runs on past its stop through the name run the stop
+      record opens, so both chunks at a boundary move it to the same
+      record and no name spans two chunks.
+
+    Inflates the blocks from ``v_start``'s to the one holding ``v_end``,
+    plus those the guess, a record straddling the end or a name run past
+    it needs. None when ``v_start`` is not a block of the file."""
+    c_start, in_block = v_start >> 16, v_start & 0xFFFF
     # the range ends after the block holding v_end (before it, at offset 0)
     with bgzf.BlockReader(path, c_start, (v_end >> 16) + (v_end & 0xFFFF > 0)) as r:
         r.fill()
-        if r.c_pos[:1] != [c_start]:
+        if r.c_pos[:1] != [c_start] and (in_block or not r.c_pos):
             return None
-        data = r.data
-        off, end = v_start & 0xFFFF, r.buffer_offsets([v_end])[0]
+        end = r.buffer_offsets([v_end])[0]
+        off = in_block or _guess_record_start(path, r, len(refs), [l for _n, l in refs])
         rec_offs: list[int] = []
-        unpack = _struct.unpack_from
-        while off < end:
-            if off + 4 > len(data) or off + 4 + unpack("<i", data, off)[0] > len(data):
-                if r.next_block():
-                    continue
-                break  # truncated final record (file cut mid-block)
-            rec_offs.append(off)
-            off += 4 + unpack("<i", data, off)[0]
-    return r, rec_offs
+        if off is None:
+            return r, rec_offs, len(r.data)
+        if pair_atomic and not first_row:
+            off = _name_run_end(r, off)
+        if off >= end:
+            return r, rec_offs, off
+        off = _walk(r, off, end, rec_offs)
+        if pair_atomic:
+            off = _walk(r, off, _name_run_end(r, off), rec_offs)
+    return r, rec_offs, off
 
 
-def _advance_past_name_run(path: str, voff: int) -> int | None:
-    """First record-start voff at/after ``voff`` whose name differs from
-    the name at ``voff`` — the boundary snap that keeps a queryname group
-    inside one partition. Returns None at end-of-data."""
-    c_start = voff >> 16
-    with bgzf.BlockReader(path, c_start) as r:
-        if not r.next_block() or r.c_pos[0] != c_start:
-            return None
-        data, unpack = r.data, _struct.unpack_from
-        off = voff & 0xFFFF
-        first_name = None
-        while True:
-            while off + 36 > len(data) or off + 4 + unpack("<i", data, off)[0] > len(data):
-                if not r.next_block():
-                    return None
-            l_name = data[off + 4 + 8]
-            name = data[off + 4 + 32 : off + 4 + 32 + l_name - 1]
-            if first_name is None:
-                first_name = name
-            elif name != first_name:
-                return r.virtual_offsets([off])[0]
-            off += 4 + unpack("<i", data, off)[0]
+def _walk(r: bgzf.BlockReader, off: int, end: int, rec_offs: list[int]) -> int:
+    """Append the offsets of the whole records from ``off`` (a record
+    start) while they start before ``end``; return the offset after the
+    last one. Stops early at the end of the file or at a truncated final
+    record."""
+    data, unpack = r.data, _struct.unpack_from
+    while off < end:
+        if off + 4 > len(data) or off + 4 + unpack("<i", data, off)[0] > len(data):
+            if r.next_block():
+                continue
+            break  # truncated final record (file cut mid-block)
+        rec_offs.append(off)
+        off += 4 + unpack("<i", data, off)[0]
+    return off
 
 
-def adjust_chunks_for_queryname_groups(
-    path: str, chunks: list[tuple[int, int]]
-) -> list[tuple[int, int]]:
-    """Snap every chunk boundary forward past the name run it lands in,
-    so no queryname group spans two partitions — the pair-processing
-    guarantee the reference documents as unimplemented (README.md:39,
-    162-166). Requires queryname-grouped input (groups contiguous);
-    driver-side, reads a few KB per boundary."""
-    if len(chunks) <= 1:
-        return chunks
-    starts = [chunks[0][0]]
-    for vs, _ve in chunks[1:]:
-        snapped = _advance_past_name_run(path, vs)
-        if snapped is not None:
-            starts.append(snapped)
-    starts = sorted(set(starts))
-    end = chunks[-1][1]
-    out = []
-    for i, s in enumerate(starts):
-        e = starts[i + 1] if i + 1 < len(starts) else end
-        if s < e:
-            out.append((s, e))
-    return out
+def _name_run_end(r: bgzf.BlockReader, off: int) -> int:
+    """The offset after the run of whole records from ``off`` that share
+    the read name of the record at ``off`` (``off`` itself at the end of
+    the data)."""
+    data, unpack = r.data, _struct.unpack_from
+
+    def name_at(o: int) -> bytes | None:
+        while o + 36 > len(data) or o + 4 + unpack("<i", data, o)[0] > len(data):
+            if not r.next_block():
+                return None
+        return bytes(data[o + 36 : o + 35 + data[o + 12]])
+
+    first = name_at(off)
+    while first is not None and name_at(off) == first:
+        off += 4 + unpack("<i", data, off)[0]
+    return off
 
 
 def build_sbi(
@@ -377,8 +360,8 @@ def build_sbi(
 ) -> str:
     """Distributed .sbi construction for an existing (index-less) BAM —
     the BamRecordGuesserChecker.getSBIIndex pattern (:82-95) done as one
-    Spark job on the write path's index path: each guesser-planned chunk
-    is indexed like a written part (every ``granularity``-th record,
+    Spark job on the write path's index path: each chunk, whose tasks
+    find their first records with the guesser, is indexed like a written part (every ``granularity``-th record,
     phase restarting per chunk) and the fragments are streamed into
     ``path + '.sbi'`` in chunk order, so driver memory is one buffer
     whatever the record count. Subsequent reads plan from the index (no
@@ -417,30 +400,29 @@ def _build_index(spark: SparkSession, path: str, split_size: int, ext: str, gran
         raise ValueError("build_bai requires a coordinate-sorted BAM header")
     chunks = plan_bam_chunks(path, split_size, refs, first_voff)
     ref_index = {name: i for i, (name, _l) in enumerate(refs)}
-    # write-side parity: the file's final record ends at the end-of-data
-    # position (pre-EOF-block), like the write path's dangling-end patch
-    end_of_data = bgzf.data_end(path) << 16
 
     def index_chunk(p: str, v_start: int, v_end: int):
-        walked = walk_records(p, v_start, v_end)
+        walked = walk_records(p, refs, v_start, v_end)
         if walked is None:
             return 0, None
-        r, rec_offs = walked
-        voffs = r.virtual_offsets(rec_offs)
+        r, rec_offs, stop = walked
+        # the chunk ends where its walk stopped: the next chunk's first
+        # record, or for the file's final record the end of data before
+        # the EOF block, the end the write path gives it
+        voffs = r.virtual_offsets(rec_offs + [stop])
         index = bamsink.PartIndexer(ref_index, granularity, with_sbi, with_bai, "build_bai")
-        chunk_end = min(v_end, end_of_data)
         if with_bai:
             cols = bamcodec.decode_batch(
                 r.data, rec_offs, refs, with_seq=False, with_qual=False, with_tags=False
             )
             for fields in zip(
-                voffs, voffs[1:] + [chunk_end], cols["contig"], cols["start"], cols["end"], cols["flags"]
+                voffs, voffs[1:], cols["contig"], cols["start"], cols["end"], cols["flags"]
             ):
                 index.add(*fields)
         else:
-            for v in voffs:
+            for v in voffs[:-1]:
                 index.add(v, v)
-        return index.n, index.sidecars(chunk_end)
+        return index.n, index.sidecars(voffs[-1])
 
     return merge.build_index(
         spark, path, ext, [(path, vs, ve) for vs, ve in chunks], index_chunk,
@@ -484,6 +466,10 @@ def read_bam(
     ``pair_atomic``: for queryname-grouped input, snap partition
     boundaries so a read name's records never split across partitions —
     the guarantee the reference lists as unimplemented (README.md:39).
+    Each task moves its own ends past the name run they land in
+    (``walk_records``), so planning reads no data; the ``.bai`` then
+    prunes no partition, because a moved end can cross the records the
+    index places, and the residual filter alone applies ``intervals``.
     """
     if tags not in ("parsed", "raw"):
         raise ValueError(f"tags must be 'parsed' or 'raw', got {tags!r}")
@@ -538,21 +524,22 @@ def scan_bam(
     columns: list[str] | None = None,
     raw_tags: bool = False,
 ) -> Scan:
-    """The BAM scan: ``.sbi``/guesser chunk plan, pruned through the
-    ``.bai`` when ``intervals``/``traverse_unplaced_unmapped`` are set,
-    and a column-pruned decode of each virtual-offset chunk."""
+    """The BAM scan: ``.sbi`` or byte-split chunk plan, pruned through
+    the ``.bai`` when ``intervals``/``traverse_unplaced_unmapped`` are set
+    (and not ``pair_atomic``), and a column-pruned decode of each
+    virtual-offset chunk, whose task finds its own first record when the
+    plan gave a byte split."""
     paths = resolve_paths(path, BAM_EXTENSIONS)
     header, refs, first_voff = read_bam_header(paths[0])
     intervals = as_intervals(intervals)
+    prune = (intervals is not None or traverse_unplaced_unmapped) and not pair_atomic
 
     def plan() -> list[tuple[str, int, int]]:
         out: list[tuple[str, int, int]] = []
         for p in paths:
             _h, p_refs, p_voff = (header, refs, first_voff) if p == paths[0] else read_bam_header(p)
             p_chunks = plan_bam_chunks(p, split_size, p_refs, p_voff)
-            if pair_atomic:
-                p_chunks = adjust_chunks_for_queryname_groups(p, p_chunks)
-            if (intervals is not None or traverse_unplaced_unmapped) and _dfs.exists(p + ".bai"):
+            if prune and _dfs.exists(p + ".bai"):
                 p_chunks = _chunk_may_match(
                     p + ".bai", p_refs, p_chunks, intervals, traverse_unplaced_unmapped
                 )
@@ -564,9 +551,14 @@ def scan_bam(
     w_tags = columns is None or "tags" in columns or "read_group" in (columns or [])
 
     def decode(p: str, v_start: int, v_end: int) -> Iterator[dict]:
+        # a file's first chunk starts at its header's end
+        first_row = pair_atomic and v_start <= (
+            first_voff if p == paths[0] else read_bam_header(p)[2]
+        )
         cols = decode_chunk_cols(
             p, refs, v_start, v_end,
             with_seq=w_seq, with_qual=w_qual, with_tags=w_tags, raw_tags=raw_tags,
+            pair_atomic=pair_atomic, first_row=first_row,
         )
         if cols and cols["flags"]:
             yield cols
@@ -586,7 +578,8 @@ def check_record_guesser(
 
     Ground truth per partition is the sequential record walk (the same
     walk the decoder trusts); each task then re-judges every true start
-    with the chain guesser (a miss is a FALSE_NEGATIVE) and probes the
+    with the guesser's own chain rule, ``_chain_ok`` (a miss is a
+    FALSE_NEGATIVE), and probes the
     ``neighborhood`` byte offsets after each start, which must all fail
     (a pass is a FALSE_POSITIVE — the class of bug that corrupted
     Hadoop-BAM splits historically). Returns only disagreements
@@ -598,29 +591,17 @@ def check_record_guesser(
     n_ref = len(refs)
     ref_lens = [l for _n, l in refs]
 
-    def chain_ok(data: bytes, off: int) -> bool:
-        validated = 0
-        while validated < READS_TO_CHECK:
-            nxt = _check_record(data, off, n_ref, ref_lens)
-            if nxt is None:
-                return False
-            if nxt == -1:  # ran off the buffer: accept what we verified
-                return validated > 0
-            off = nxt
-            validated += 1
-        return True
-
     def scan(p, v_start, v_end):
-        walked = walk_records(p, v_start, v_end)
+        walked = walk_records(p, refs, v_start, v_end)
         if walked is None:
             return
-        r, rec_offs = walked
+        r, rec_offs, _stop = walked
         bad: list[tuple[int, str]] = []
         for off, voff in zip(rec_offs, r.virtual_offsets(rec_offs)):
-            if not chain_ok(r.data, off):
+            if not _chain_ok(r, off, n_ref, ref_lens):
                 bad.append((voff, "FALSE_NEGATIVE"))
             for d in range(1, neighborhood + 1):
-                if off + d + 36 <= len(r.data) and chain_ok(r.data, off + d):
+                if _chain_ok(r, off + d, n_ref, ref_lens):
                     bad.append((voff + d, "FALSE_POSITIVE"))
         if bad:
             yield dict(zip(("voff", "kind"), zip(*bad)))

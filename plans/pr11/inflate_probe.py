@@ -29,6 +29,7 @@ line per (mode, split) with the sha256 of the built index.
 from __future__ import annotations
 
 import argparse
+import collections
 import hashlib
 import json
 import os
@@ -119,8 +120,10 @@ def main() -> None:
             out = []
             for i, (key, start, end) in enumerate(self.plan_rows):
                 virtual = self.mode != "build_tbi"
-                for pdf in run_chunk(self.mode, self.split, i, key, start, end, self.fn, virtual):
-                    out.extend(pdf.itertuples(index=False, name="Row"))
+                # a column mapping: a pandas frame or a dict of lists
+                for cols in run_chunk(self.mode, self.split, i, key, start, end, self.fn, virtual):
+                    row = collections.namedtuple("Row", list(cols))
+                    out.extend(row(*vals) for vals in zip(*(cols[k] for k in cols)))
             return out
 
     current = {}

@@ -241,8 +241,6 @@ def test_queryname_pair_atomicity(spark, gen_reads, tmp_path):
 
 
 def _check_pair_atomic(spark, src, n_records, out):
-    from pyspark.sql import functions as SF
-
     df, header = read_bam(spark, src)
     by_name = df.orderBy("name", "flags")
     qn_header = type(header)(
@@ -252,28 +250,27 @@ def _check_pair_atomic(spark, src, n_records, out):
 
     for split in (50_000, 120_000):
         got, _ = read_bam(spark, out, split_size=split, pair_atomic=True)
-        spread = (
-            got.select("name", SF.spark_partition_id().alias("pid"))
-            .groupBy("name")
-            .agg(SF.countDistinct("pid").alias("np"))
-            .agg(SF.max("np"))
-            .collect()[0][0]
-        )
-        assert spread == 1, f"split={split}: a name group crossed partitions"
+        assert _name_spread(got) == 1, f"split={split}: a name group crossed partitions"
         assert got.count() == n_records
 
         # contrast: without the guarantee some group DOES split (so the
         # test would catch a no-op implementation)
         plain, _ = read_bam(spark, out, split_size=split)
         if plain.rdd.getNumPartitions() > 1:
-            spread0 = (
-                plain.select("name", SF.spark_partition_id().alias("pid"))
-                .groupBy("name")
-                .agg(SF.countDistinct("pid").alias("np"))
-                .agg(SF.max("np"))
-                .collect()[0][0]
-            )
-            assert spread0 >= 1
+            assert _name_spread(plain) >= 1
+
+
+def _name_spread(df) -> int:
+    """The most partitions any read name's records lie in."""
+    from pyspark.sql import functions as SF
+
+    return (
+        df.select("name", SF.spark_partition_id().alias("pid"))
+        .groupBy("name")
+        .agg(SF.countDistinct("pid").alias("np"))
+        .agg(SF.max("np"))
+        .collect()[0][0]
+    )
 
 
 def test_column_pruned_decode(spark, gen_reads):
@@ -293,53 +290,135 @@ def test_column_pruned_decode(spark, gen_reads):
 @pytest.mark.parametrize("source", [pytest.param("fixture", marks=needs_reference), "generated"])
 def test_guesser_handles_stale_bin_fields(fixtures_dir, tmp_path, request, source):
     """Writers that leave the BAM bin field stale/0 must not defeat split
-    planning: find_record_start falls back to a pass without the
-    bin-consistency check instead of finding no boundary at all."""
+    planning: the guesser accepts a longer chain without the bin check
+    instead of finding no boundary at all, and the record it finds is
+    the first true record start in the search block, without a scan
+    over many blocks."""
     import struct
 
     from disq_spark.formats import bgzf
     from disq_spark.formats.bam import parse_bam_header
-    from disq_spark.sources.bam_source import (
-        find_record_start,
-        read_bam_header,
-    )
+    from disq_spark.sources.bam_source import read_bam_header, walk_records
 
     if source == "fixture":
-        src = os.path.join(fixtures_dir, "1.bam")
+        src = os.path.join(fixtures_dir, "1-with-splitting-index.bam")
     else:
         src = request.getfixturevalue("planned_inputs")["bam"]
-    with open(src, "rb") as f:
-        raw = b"".join(bgzf.decompress_block(f, b.pos) for b in bgzf.scan_blocks(src))
-    _text, refs, header_end = parse_bam_header(raw)
+    # truth: every record start of the original, as data offsets, from
+    # the walks of its .sbi-planned chunks
+    _h, refs, voff = read_bam_header(src)
+    truth = []
+    with bgzf.BlockReader(src) as whole:
+        whole.fill()
+    for vs, ve in plan_bam_chunks(src, 100_000, refs, voff):
+        r, rec_offs, _stop = walk_records(src, refs, vs, ve)
+        truth.extend(whole.buffer_offsets(r.virtual_offsets(rec_offs)))
+    raw = bytes(whole.data)
+    _text, _refs, header_end = parse_bam_header(raw)
+    assert truth[0] == header_end and len(truth) > 100
 
     # zero every record's bin field (offset 14 into the length-prefixed record)
     data = bytearray(raw)
-    off = header_end
-    n_rec = 0
-    while off + 4 <= len(data):
-        block_size = struct.unpack_from("<i", data, off)[0]
+    for off in truth:
         struct.pack_into("<H", data, off + 14, 0)
-        off += 4 + block_size
-        n_rec += 1
-    assert n_rec > 100
-
     out = str(tmp_path / "stale_bin.bam")
     with open(out, "wb") as f:
         f.write(bgzf.compress_all(bytes(data)))
 
     _h, refs2, _v = read_bam_header(out)
-    ref_lens = [l for _n, l in refs2]
-    # start the search in the middle of the file, as a split planner would
+    # start the search in the middle of the file, as a split's task would
     blocks = list(bgzf.scan_blocks(out))
-    mid_block = blocks[len(blocks) // 2]
-    with bgzf.BlockReader(out, mid_block.pos) as r:
-        found = find_record_start(r, len(refs2), ref_lens)
-    assert found is not None
+    i = len(blocks) // 2
+    r, rec_offs, _stop = walk_records(out, refs2, blocks[i].pos << 16, blocks[i + 1].pos << 16)
+    assert rec_offs, "no record start found after the search block"
+    block_start = i * bgzf.MAX_PAYLOAD  # compress_all fills every block
+    assert block_start + rec_offs[0] == min(t for t in truth if t >= block_start)
+    assert len(r.c_pos) <= 3, f"the guess inflated {len(r.c_pos)} blocks"
 
-    # and the found offset really is a record boundary: its block_size
-    # walks to another valid record chain
-    bs = struct.unpack_from("<i", r.data, found)[0]
-    assert 32 <= bs < 1 << 20
+
+def test_walk_names_a_stretch_without_record_start(gen_reads, tmp_path, monkeypatch):
+    """A split whose block starts a stretch with no record start within
+    MAX_SEARCH_BYTES (corrupt input) fails with the path and the offset
+    instead of dropping the boundary."""
+    import random
+
+    from disq_spark.formats import bgzf
+    from disq_spark.sources import bam_source
+
+    src = gen_reads["bam_noindex"]
+    _h, refs, _v = bam_source.read_bam_header(src)
+    blocks = list(bgzf.scan_blocks(src))
+    with open(src, "rb") as f:
+        head = f.read(blocks[2].pos)
+    rng = random.Random(5)
+    junk = b"".join(bgzf.compress_block(rng.randbytes(60_000)) for _ in range(6))
+    out = str(tmp_path / "junk.bam")
+    with open(out, "wb") as f:
+        f.write(head + junk + bgzf.EOF_BLOCK)
+    monkeypatch.setattr(bam_source, "MAX_SEARCH_BYTES", 100_000)
+    v_start = blocks[2].pos << 16
+    with pytest.raises(ValueError, match=f"{out}: no BAM record starts .* virtual offset {v_start}"):
+        bam_source.walk_records(out, refs, v_start, os.path.getsize(out) << 16)
+
+
+@pytest.mark.parametrize("pair_atomic", [False, True], ids=["plain", "pair_atomic"])
+def test_index_less_plan_inflates_nothing(gen_reads, monkeypatch, pair_atomic):
+    """Planning an index-less BAM is byte arithmetic on the driver: each
+    task finds its own first record, so ``plan()`` inflates no block."""
+    from disq_spark.formats import bgzf
+    from disq_spark.sources.bam_source import scan_bam
+
+    scan = scan_bam(gen_reads["bam_noindex"], split_size=64 * 1024, pair_atomic=pair_atomic)
+    inflated = []
+    real = bgzf.inflate
+    monkeypatch.setattr(bgzf, "inflate", lambda block: inflated.append(len(block)) or real(block))
+    plan = scan.plan()
+    assert len(plan) > 5
+    assert inflated == []
+
+
+@pytest.fixture(scope="module")
+def sbi_and_index_less(spark, gen_reads, tmp_path_factory):
+    """(coordinate .sbi BAM, its index-less copy, queryname-grouped .sbi
+    BAM, its index-less copy)."""
+    import shutil
+
+    d = tmp_path_factory.mktemp("index_less")
+    df, header = read_bam(spark, gen_reads["bam"])
+    qname = str(d / "byname.bam")
+    qn_header = type(header)(text=header.text.replace("SO:coordinate", "SO:queryname"))
+    write_bam(df.orderBy("name", "flags"), qn_header, qname, write_sbi=True, sbi_granularity=1)
+    qname_noindex = str(d / "byname_noindex.bam")
+    shutil.copyfile(qname, qname_noindex)
+    return gen_reads["bam"], gen_reads["bam_noindex"], qname, qname_noindex
+
+
+@pytest.mark.parametrize("split", [4099, 50_000, 76_458, 1 << 20])
+def test_index_less_read_equals_sbi_read(spark, sbi_and_index_less, split):
+    """Without a .sbi, the tasks' own boundaries give the rows of the
+    .sbi plan, in order: coordinate-sorted, and queryname-grouped with
+    pair_atomic (no name across two partitions)."""
+    bam, bam_noindex, qname, qname_noindex = sbi_and_index_less
+    for indexed, bare, pair_atomic in ((bam, bam_noindex, False), (qname, qname_noindex, True)):
+        want = read_bam(spark, indexed, split_size=split, pair_atomic=pair_atomic)[0]
+        got = read_bam(spark, bare, split_size=split, pair_atomic=pair_atomic)[0]
+        assert got.collect() == want.collect()
+        if pair_atomic:
+            assert _name_spread(got) == 1
+
+
+def test_pair_atomic_sharded_directory(spark, gen_reads, tmp_path):
+    """pair_atomic over a directory of index-less queryname-grouped
+    shards: each shard's first chunk keeps its first name run, later
+    chunks move their ends, and the rows equal the plain read's."""
+    df, header = read_bam(spark, gen_reads["bam"])
+    qn_header = type(header)(text=header.text.replace("SO:coordinate", "SO:queryname"))
+    shards = str(tmp_path / "byname")
+    write_bam(df.repartitionByRange(3, "name").sortWithinPartitions("name", "flags"), qn_header, shards)
+    assert len([f for f in os.listdir(shards) if f.endswith(".bam")]) == 3
+    got = read_bam(spark, shards, split_size=4099, pair_atomic=True)[0]
+    assert got.collect() == read_bam(spark, shards, split_size=4099)[0].collect()
+    assert _name_spread(got) == 1
 
 
 @pytest.mark.parametrize("source", [pytest.param("fixture", marks=needs_reference), "generated"])

@@ -26,8 +26,11 @@ FASTQ = os.path.join(FIXTURES, "sample.fastq")
 
 @pytest.fixture(scope="module")
 def inputs(spark, planned_inputs, tmp_path_factory):
-    """planned_inputs plus SAM (and a CRLF copy), CRAM against
-    fixtures/ref.fa, an empty FASTQ and gzip/plain WARC segments."""
+    """planned_inputs plus a copy of its BAM with the .bai but no .sbi,
+    SAM (and a CRLF copy), CRAM against fixtures/ref.fa, an empty FASTQ
+    and gzip/plain WARC segments."""
+    import shutil
+
     from disq_spark.formats.gzi import open_indexed_reference
     from disq_spark.formats.warc import build_warc
     from disq_spark.headers import SamHeader
@@ -40,6 +43,9 @@ def inputs(spark, planned_inputs, tmp_path_factory):
     rng = random.Random(7)
 
     reads, header = read_bam(spark, planned_inputs["bam"])
+    bam_nosbi = str(d / "reads_nosbi.bam")
+    for ext in ("", ".bai"):
+        shutil.copyfile(planned_inputs["bam"] + ext, bam_nosbi + ext)
     sam = str(d / "reads.sam")
     write_sam(reads, header, sam)
     with open(sam, "rb") as f:
@@ -89,8 +95,8 @@ def inputs(spark, planned_inputs, tmp_path_factory):
             f.write(build_warc(recs, gzip_members=gz))
 
     return {
-        **planned_inputs, "sam": sam, "crlf_sam": str(d / "crlf.sam"), "cram": cram,
-        "empty_fastq": empty_fastq, "warc": str(warc_dir),
+        **planned_inputs, "bam_nosbi": bam_nosbi, "sam": sam, "crlf_sam": str(d / "crlf.sam"),
+        "cram": cram, "empty_fastq": empty_fastq, "warc": str(warc_dir),
     }
 
 
@@ -144,6 +150,10 @@ CASES = [
     ("bam", "bam", {"unplaced_unmapped": "true"}),
     ("bam", "bam", {"columns": "name,flags,contig,start,end"}),
     ("bam", "bam", {"intervals": "c2:1-500000"}),
+    # no .sbi: each task finds its first record; the .bai prunes byte splits
+    ("bam", "bam_nosbi", {}),
+    ("bam", "bam_nosbi", {"intervals": "c1:20001-45000"}),
+    ("bam", "bam_nosbi", {"intervals": "c1:1-10000,c1:100000-101000", "unplaced_unmapped": "true"}),
     ("sam", "sam", {}),
     ("sam", "sam", {"intervals": "c1:20001-45000"}),
     ("sam", "crlf_sam", {}),
