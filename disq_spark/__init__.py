@@ -7,7 +7,7 @@ Design (see SURVEY.md, SCALE.md, COVERAGE.md):
 - DataFrames everywhere; genomics formats surface as typed DataFrames.
 - Partition planning for splittable compressed formats happens driver-side
   (index-driven where indexes exist), decode happens in Arrow-batched
-  Python stages (``mapInArrow`` reads, ``mapInPandas`` writes), relational
+  Python stages (``mapInArrow`` reads and writes), relational
   work stays JVM-side in whole-stage codegen.
 - Single-file outputs use the reference's signature pattern (headerless
   part files + header + terminator + filesystem concat) with per-part

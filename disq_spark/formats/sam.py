@@ -3,8 +3,9 @@
 Replaces the reference's executor-side ``SAMLineParser`` decode
 (SamSource.java:61-104) and ``getSAMString`` encode (SamSink.java:53-74)
 with pandas-batch functions: the parse feeds the SAM scan's Arrow batches,
-the format runs under the sinks' ``mapInPandas`` — one batch per call, no
-per-row Python<->JVM crossings.
+the format runs on each Arrow batch of the sinks' ``mapInArrow`` (as a
+frame of its rows) — one batch per call, no per-row Python<->JVM
+crossings.
 
 SAM spec: 11 mandatory fields
   qname flag rname pos mapq cigar rnext pnext tlen seq qual [tags...]

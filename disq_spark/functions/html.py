@@ -171,22 +171,3 @@ def escape_text(col) -> Column:
     c = F.replace(col, F.lit("&"), F.lit("&amp;"))
     c = F.replace(c, F.lit("<"), F.lit("&lt;"))
     return F.replace(c, F.lit(">"), F.lit("&gt;"))
-
-
-# DuckDB fragments mirroring the named-entity/markup chain. The gates
-# don't use these (their oracles derive expected text from the RAW
-# source, the stronger check); numeric references have no DuckDB
-# fragment — mirroring the split+fold is possible (list_reduce) but
-# has no consumer.
-def strip_markup_sql(expr: str) -> str:
-    c = f"regexp_replace({expr}, '(?si)<(script|style)\\b[^>]*>.*?</(script|style)>', ' ', 'g')"
-    c = f"regexp_replace({c}, '(?s)<!--.*?-->', ' ', 'g')"
-    return f"regexp_replace({c}, '(?s)<[^>]*>', ' ', 'g')"
-
-
-def decode_entities_sql(expr: str) -> str:
-    c = expr
-    for ent, rep in _ENTITIES:
-        rep_sql = rep.replace("'", "''")
-        c = f"replace({c}, '{ent}', '{rep_sql}')"
-    return c

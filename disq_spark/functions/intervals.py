@@ -5,7 +5,10 @@ The reference's interval traversal (HtsjdkReadsTraversalParameters.java:
 103-158) becomes: (a) partition pruning in the source planner where an
 index exists, plus (b) the residual per-record overlap predicate below —
 which is all Spark needs for correctness; the index pruning is purely a
-physical optimization.
+physical optimization. The readers apply the residual inside their
+decode, to each Arrow batch (``interval_mask``); ``overlaps`` and
+``filter_intervals`` are the same predicate as a Column, for any
+DataFrame.
 
 Intervals are 1-based closed (contig, start, end), htsjdk-style.
 """
@@ -14,6 +17,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -110,20 +114,47 @@ def overlap_mask(
     """The rows of a decoded Arrow batch that ``filter_intervals`` keeps,
     as a boolean Arrow mask (``intervals`` alone: the rows ``overlaps``
     keeps). A null contig/start/end never overlaps, as in SQL."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+    return interval_mask(intervals, traverse_unplaced_unmapped)(batch)
 
-    start = batch.column("start")
-    keep = pa.repeat(False, batch.num_rows)
-    for iv in intervals or []:
-        hit = pc.and_(
-            pc.equal(batch.column("contig"), iv.contig),
-            pc.and_(pc.less_equal(start, iv.end), pc.greater_equal(batch.column("end"), iv.start)),
-        )
-        keep = pc.or_(keep, pc.fill_null(hit, False))
-    if traverse_unplaced_unmapped:
-        unmapped = pc.not_equal(pc.bit_wise_and(batch.column("flags"), FLAG_UNMAPPED), 0)
-        keep = pc.or_(keep, pc.and_(unmapped, pc.is_null(start)))
+
+def interval_mask(intervals: list[Interval] | None, traverse_unplaced_unmapped: bool = False):
+    """``overlap_mask`` as a one-argument ``keep(batch) -> mask``, with the
+    intervals merged once. Per contig, the record [start, end] overlaps a
+    merged (sorted, disjoint) interval exactly when the last interval
+    starting at or before ``end`` ends at or after ``start``: one
+    ``np.searchsorted`` per batch and contig, whatever the interval count
+    (the Column form, one OR per interval, overflows the JVM stack at
+    about 1,000)."""
+    by_contig: dict[str, tuple] = {}
+    for iv in merge_intervals(intervals or []):
+        by_contig.setdefault(iv.contig, ([], []))
+        by_contig[iv.contig][0].append(iv.start)
+        by_contig[iv.contig][1].append(iv.end)
+    tables = [(np.array(s, dtype=np.int64), np.array(e, dtype=np.int64)) for s, e in by_contig.values()]
+    names = list(by_contig)
+
+    def keep(batch):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        hit = np.zeros(batch.num_rows, dtype=bool)
+        start = batch.column("start")
+        if tables:
+            code = pc.fill_null(pc.index_in(batch.column("contig"), value_set=pa.array(names, pa.string())), -1)
+            code = code.to_numpy(zero_copy_only=False)
+            end = batch.column("end")
+            valid = pc.and_(pc.is_valid(start), pc.is_valid(end)).to_numpy(zero_copy_only=False)
+            s = pc.fill_null(start, 0).to_numpy(zero_copy_only=False)
+            e = pc.fill_null(end, 0).to_numpy(zero_copy_only=False)
+            for ci, (lo, hi) in enumerate(tables):
+                rows = np.flatnonzero(valid & (code == ci))
+                i = np.searchsorted(lo, e[rows], "right") - 1
+                hit[rows] = (i >= 0) & (hi[np.maximum(i, 0)] >= s[rows])
+        if traverse_unplaced_unmapped:
+            unmapped = pc.not_equal(pc.bit_wise_and(batch.column("flags"), FLAG_UNMAPPED), 0)
+            hit |= pc.and_(unmapped, pc.is_null(start)).to_numpy(zero_copy_only=False)
+        return pa.array(hit)
+
     return keep
 
 

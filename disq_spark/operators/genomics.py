@@ -9,10 +9,14 @@ capability upgrades over disq-bio/disq, which only does I/O):
   is kept only in bin max(floor(l.start/W), floor(r.start/W)).
   At 100 TB this is THE way to do reads-x-targets joins: shuffle is
   proportional to data + interval density, never O(n*m).
-- coordinate_sort: repartitionByRange on (contig rank, start) +
+- coordinate_sort: a range exchange on (contig rank, start) +
   sortWithinPartitions — a total order with no single-reducer
   bottleneck ("This library does not do any sorting" README.md:148 —
-  we do).
+  we do). A ``read_bam`` frame over ``.sbi``-indexed inputs takes its
+  range bounds from keys sampled at ``.sbi`` offsets on the driver and
+  routes each record in its own decode, so the sort decodes its input
+  once and runs no sampling job; any other frame uses
+  ``repartitionByRange``.
 - mark_duplicates: Picard MarkDuplicates semantics — per-library
   template keys built from each end's UNCLIPPED 5' coordinate + strand,
   pair-vs-pair competition on both ends, fragment demotion against
@@ -24,6 +28,7 @@ capability upgrades over disq-bio/disq, which only does I/O):
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -97,16 +102,137 @@ def interval_join(
 
 def coordinate_sort(df: DataFrame, header: SamHeader, num_partitions: int | None = None) -> DataFrame:
     """Total coordinate order (sequence-dictionary contig rank, start),
-    unplaced reads last — htsjdk coordinate sort semantics."""
-    order = header.contig_index()
-    mapping = F.create_map(*[F.lit(x) for kv in order.items() for x in kv])
-    rank = F.when(F.col("contig").isNull(), F.lit(2**31 - 1)).otherwise(mapping[F.col("contig")])
-    with_rank = df.withColumn("__rank", rank)
-    n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    unplaced reads last — htsjdk coordinate sort semantics: a null contig
+    sorts last, a contig the header lacks first, a null start first
+    within its contig.
+
+    Two paths, one order. A frame straight from ``read_bam`` over inputs
+    that all have a ``.sbi`` (and no interval filter) carries a scan with
+    a key sampler: the driver takes ``num_partitions - 1`` bounds from
+    the (rank, start) keys of about ``SORT_SAMPLES_PER_PARTITION`` records
+    per partition read at ``.sbi`` offsets, and the re-planned decode
+    emits each record's rank and target partition, so the sort runs no
+    sampling job and decodes its input once (``_sampled_sort``). Any
+    other frame (cached, filtered, index-less, not a scan) goes through
+    ``repartitionByRange``, whose RangePartitioner samples the child in
+    a job of its own."""
+    n = int(num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    scan = getattr(df, "_disq_scan", None)
+    if scan is not None and scan.sample_keys is not None and not df.is_cached:
+        return _sampled_sort(df.sparkSession, scan, header, n)
     return (
-        with_rank.repartitionByRange(int(n), "__rank", "start")
+        df.withColumn("__rank", _contig_rank(header))
+        .repartitionByRange(n, "__rank", "start")
         .sortWithinPartitions("__rank", "start")
         .drop("__rank")
+    )
+
+
+UNPLACED_RANK = 2**31 - 1  # the rank of a null contig: after every contig
+SORT_SAMPLES_PER_PARTITION = 20
+
+
+def _contig_rank(header: SamHeader):
+    """The contig's sequence-dictionary rank (null for a contig the
+    header lacks, ``UNPLACED_RANK`` for a null contig), through one map
+    built from two string literals (names joined on NUL, which no contig
+    name holds, and ranks joined on commas): a handful of py4j calls and
+    a literal the optimizer folds, whatever the dictionary's size — not
+    two ``F.lit`` calls per contig, nor a SQL text to parse."""
+    order = header.contig_index()
+    if order:
+        names = F.split(F.lit("\0".join(order)), "\0")
+        ranks = F.split(F.lit(",".join(map(str, order.values()))), ",").cast("array<int>")
+        rank = F.map_from_arrays(names, ranks)[F.col("contig")]
+    else:
+        rank = F.lit(None).cast("int")
+    return F.when(F.col("contig").isNull(), F.lit(UNPLACED_RANK)).otherwise(rank)
+
+
+def murmur3_int(values, seed: int = 42):
+    """Spark's ``Murmur3_x86_32.hashInt`` of each int32 in ``values`` (the
+    hash ``F.hash`` and ``HashPartitioning`` apply to an int column), as
+    int32."""
+    k = np.asarray(values).astype(np.int32).view(np.uint32)
+
+    def rotl(x, r):
+        return (x << np.uint32(r)) | (x >> np.uint32(32 - r))
+
+    k = rotl(k * np.uint32(0xCC9E2D51), 15) * np.uint32(0x1B873593)
+    h = rotl(np.uint32(seed) ^ k, 13) * np.uint32(5) + np.uint32(0xE6546B64)
+    h ^= np.uint32(4)
+    h ^= h >> np.uint32(16)
+    h *= np.uint32(0x85EBCA6B)
+    h ^= h >> np.uint32(13)
+    h *= np.uint32(0xC2B2AE35)
+    h ^= h >> np.uint32(16)
+    return h.view(np.int32)
+
+
+def partition_preimages(n: int):
+    """For each partition p < n, the least int k >= 0 whose Spark hash
+    lands in p: ``pmod(murmur3(k, 42), n) == p``, so ``repartition(n, k)``
+    sends a row keyed k to partition p."""
+    out = np.full(n, -1, dtype=np.int64)
+    lo, step = 0, max(1 << 16, 4 * n)
+    while (out < 0).any():
+        ks = np.arange(lo, lo + step, dtype=np.int64)
+        p = np.mod(murmur3_int(ks).astype(np.int64), n)
+        first = np.full(n, -1, dtype=np.int64)
+        first[p[::-1]] = ks[::-1]  # the least k per partition wins
+        out = np.where((out < 0) & (first >= 0), first, out)
+        lo += step
+    return out.astype(np.int32)
+
+
+def _sort_keys(order: dict, contigs, starts):
+    """(rank, key) of each record: its ``_contig_rank`` (None for a
+    contig the header lacks) and one int64 that orders as (rank, start)
+    does under Spark's ascending sort, nulls first."""
+    last = len(order) + 1
+    rank = [None if c is None else order.get(c) for c in contigs]
+    r = np.fromiter((last if c is None else (0 if k is None else k + 1)
+                     for c, k in zip(contigs, rank)), dtype=np.int64, count=len(rank))
+    s = np.fromiter((0 if v is None or v != v else int(v) + 1 for v in starts),
+                    dtype=np.int64, count=len(rank))
+    return rank, (r << 34) | s
+
+
+def _sampled_sort(spark, scan, header: SamHeader, n: int) -> DataFrame:
+    """``coordinate_sort`` of a scan with a key sampler: bounds from the
+    sampled keys' quantiles, a decode that adds ``__rank`` and ``__k``
+    (the partition ``np.searchsorted(bounds, key, "right")``, as the int
+    whose Spark hash lands there), then a hash exchange on ``__k`` and the
+    per-partition sort. With an explicit partition count AQE leaves the
+    exchange's partitions alone, so partition p holds bucket p."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from disq_spark.sources.plan import plan_frame
+
+    order = header.contig_index()
+    _r, sample = _sort_keys(order, *scan.sample_keys(SORT_SAMPLES_PER_PARTITION * n))
+    sample.sort()
+    bounds = sample[(np.arange(1, n) * len(sample)) // n] if len(sample) else sample[:0]
+    pre = partition_preimages(n)
+    decode = scan.decode
+
+    def keyed(key: str, start: int, end: int):
+        for cols in decode(key, start, end):
+            rank, k = _sort_keys(order, cols["contig"], cols["start"])
+            cols = dict(cols)
+            cols["__rank"] = [UNPLACED_RANK if c is None else r for c, r in zip(cols["contig"], rank)]
+            cols["__k"] = pa.array(pre[np.searchsorted(bounds, k, "right")])
+            yield cols
+
+    schema = T.StructType(
+        scan.schema.fields + [T.StructField("__rank", T.IntegerType()), T.StructField("__k", T.IntegerType())]
+    )
+    return (
+        plan_frame(spark, scan.plan(), keyed, schema)
+        .repartition(n, "__k")
+        .sortWithinPartitions("__rank", "start")
+        .drop("__rank", "__k")
     )
 
 

@@ -35,10 +35,6 @@ REPO_FIXTURES = os.path.normpath(
 _q = QUERIES.register
 
 
-def _have_fixtures() -> bool:
-    return os.path.isdir(FIXTURES)
-
-
 @_q("genomics_bam_flagstat")
 def genomics_bam_flagstat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """samtools-flagstat-style summary over the BAM source (scan, flag

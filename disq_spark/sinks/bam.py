@@ -30,7 +30,6 @@ import os
 from functools import partial
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from disq_spark.formats import bai as baimod
@@ -95,8 +94,7 @@ def _body(refs: list[tuple[str, int]], granularity: int, with_sbi: bool, with_ba
     ref_index = {name: i for i, (name, _l) in enumerate(refs)}
 
     def body(batches, out):
-        rows = (row for pdf in batches for row in pdf.to_dict("records"))
-        return _encode(rows, out, ref_index, granularity, with_sbi, with_bai)
+        return _encode(merge.batch_rows(batches), out, ref_index, granularity, with_sbi, with_bai)
 
     return body
 
@@ -160,6 +158,11 @@ class PartOrder:
         )
 
 
+def _missing(v) -> bool:
+    """None, or the NaN a pandas batch spells a null long as."""
+    return v is None or v != v
+
+
 class PartIndexer:
     """The per-record index feed of one BAM part, shared by the part
     encoder and ``build_sbi``/``build_bai``'s chunk scan: every
@@ -189,12 +192,12 @@ class PartIndexer:
         self.n += 1
         if self.bai is None:
             return
-        if contig is None or start is None or pd.isna(start):
+        if contig is None or _missing(start):
             self.bai.add(-1, -1, -1, 0, v_start, v_end, False)
             self.order.add(None)
             return
         pos0 = int(start) - 1
-        end0 = int(end) if end is not None and not pd.isna(end) else pos0 + 1
+        end0 = pos0 + 1 if _missing(end) else int(end)
         ref_id = self.ref_index[contig]
         self.order.add((ref_id, pos0))
         self.bai.add(

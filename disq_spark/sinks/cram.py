@@ -20,7 +20,6 @@ import gzip
 import io
 import itertools
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from disq_spark import fs as _dfs
@@ -34,10 +33,10 @@ from disq_spark.sinks.bam import PartOrder, _check_cross_part_order
 RECORDS_PER_CONTAINER = 10_000
 
 
-def _row_tuples(pdf: pd.DataFrame):
+def _row_tuples(batches):
     from disq_spark.formats.bam import _opt_int
 
-    for row in pdf.to_dict("records"):
+    for row in merge.batch_rows(batches):
         yield (
             row["name"],
             int(row["flags"]),
@@ -113,7 +112,7 @@ def _encode(batches, out, ref_index, reference_path, with_crai: bool = False):
         return ref.get(contig, s1, e1)
 
     order = PartOrder("CRAM write with a coordinate sort-order header")
-    tuples = (t for pdf in batches for t in _row_tuples(pdf))
+    tuples = _row_tuples(batches)
     n = offset = 0
     crai_rows = []
     while chunk := list(itertools.islice(tuples, RECORDS_PER_CONTAINER)):

@@ -28,10 +28,14 @@ def write_sam(
 
 
 def _encode(batches, out):
-    """The SAM part encoder: text lines to ``out``; no sidecars."""
+    """The SAM part encoder: text lines to ``out``, one ``format_sam_batch``
+    frame per Arrow batch; no sidecars."""
+    import pandas as pd
+
     n = 0
-    for pdf in batches:
-        if len(pdf):
+    for batch in batches:
+        if batch.num_rows:
+            pdf = pd.DataFrame(list(merge.batch_rows([batch])), columns=batch.schema.names)
             out.write("".join(line + "\n" for line in format_sam_batch(pdf)).encode("utf-8"))
-            n += len(pdf)
+            n += batch.num_rows
     return n, None

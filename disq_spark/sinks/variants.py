@@ -2,8 +2,10 @@
 the shared write path (sinks/merge.py).
 
 Re-expresses VcfSink.java:52-131 / VcfSinkMultiple.java:38-72. What is
-VCF's own: the part encoder (text lines, BGZF-compressed when the target
-is .bgz/.gz — VcfSink.java:66 — fed to the one ``PartIndexer`` when
+VCF's own: the part encoder (text lines built column by column from the
+partition's Arrow batches by ``formats/vcf.py::format_vcf_arrow``,
+BGZF-compressed when the target is .bgz/.gz — VcfSink.java:66 — fed to
+the one ``PartIndexer`` when
 indexing, which writes a hidden .tbi fragment and the ``.order``
 sidecar), the (compressed) header and BGZF terminator, the
 contig-grouped order rule and the .tbi merge (VcfSink.java:87-127).
@@ -23,13 +25,16 @@ from functools import partial
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from disq_spark.formats import bgzf
 from disq_spark.formats import tabix as tbimod
-from disq_spark.formats.vcf import format_vcf_batch
+from disq_spark.formats.vcf import format_vcf_arrow
 from disq_spark.headers import VcfHeader
+from disq_spark.schemas import VARIANTS_SCHEMA
 from disq_spark.sinks import merge
+from disq_spark.sources.plan import arrow_schema
 
 
 def _is_bgzf_target(path: str) -> bool:
@@ -142,34 +147,38 @@ def encode_vcf_part(
     compress: bool,
     with_tbi: bool,
 ) -> int:
-    """Write one headerless (optionally terminatorless-BGZF) VCF part,
-    plus a hidden .tbi fragment when indexing; returns the record count."""
+    """Write one headerless (optionally terminatorless-BGZF) VCF part from
+    pandas batches, plus a hidden .tbi fragment when indexing; returns the
+    record count. Each batch goes to Arrow with ``from_pandas``, as
+    ``to_batch`` does, and then through the sinks' encoder."""
+    schema = arrow_schema(VARIANTS_SCHEMA)
+    arrow = (pa.RecordBatch.from_pandas(pdf, schema=schema, preserve_index=False) for pdf in batches)
     return merge.stage_part(
-        part_path, lambda out: _encode(batches, out, samples, compress, with_tbi)
+        part_path, lambda out: _encode(arrow, out, samples, compress, with_tbi)
     )[1]
 
 
 def _encode(batches, out, samples: list[str], compress: bool = False, with_tbi: bool = False):
-    """The VCF part encoder: lines to ``out``; returns ``(n, sidecars)``."""
+    """The VCF part encoder: the lines ``format_vcf_arrow`` builds from
+    each Arrow batch, to ``out``; returns ``(n, sidecars)``."""
     n = 0
     index = PartIndexer() if with_tbi else None
     sink = bgzf.BgzfWriter(out, terminate=False) if compress else out
-    for pdf in batches:
-        if len(pdf) == 0:
+    for batch in batches:
+        if batch.num_rows == 0:
             continue
-        lines = format_vcf_batch(pdf, samples)
+        lines = format_vcf_arrow(batch, samples)
         if index is None:
-            payload = ("\n".join(lines) + "\n").encode("utf-8")
-            sink.write(payload)
+            sink.write(("\n".join(lines) + "\n").encode("utf-8"))
         else:
             # per-record virtual-offset tracking for the index
-            for line, contig, start, end in zip(
-                lines, pdf["contig"], pdf["start"], pdf["end"]
-            ):
+            cols = (batch.column(c).to_numpy(zero_copy_only=False).tolist()
+                    for c in ("contig", "start", "end"))
+            for line, contig, start, end in zip(lines, *cols):
                 v_start = sink.virtual_offset
                 sink.write(line.encode("utf-8") + b"\n")
-                index.add(contig, int(start), int(end), v_start, sink.virtual_offset)
-        n += len(pdf)
+                index.add(contig, start, end, v_start, sink.virtual_offset)
+        n += batch.num_rows
     if not compress:
         return n, None
     dangling = sink.virtual_offset

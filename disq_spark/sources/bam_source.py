@@ -42,14 +42,18 @@ from __future__ import annotations
 from disq_spark import fs as _dfs
 
 import struct as _struct
+from functools import partial
+from itertools import groupby
 from typing import Iterator
+
+import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 
 from disq_spark.formats import bam as bamcodec
 from disq_spark.formats import bgzf
 from disq_spark.formats import sbi as sbimod
-from disq_spark.functions.intervals import as_intervals, filter_intervals
+from disq_spark.functions.intervals import as_intervals, interval_mask
 from disq_spark.headers import SamHeader
 from disq_spark.schemas import READS_COLUMNS, READS_SCHEMA, READS_SCHEMA_RAW_TAGS
 from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, Scan, plan_frame, resolve_paths
@@ -457,8 +461,10 @@ def read_bam(
 
     ``intervals`` (``Interval``s or (contig, start, end) tuples) and
     ``traverse_unplaced_unmapped`` mirror the reference's
-    HtsjdkReadsTraversalParameters surface: a residual Column predicate
-    (always correct) plus .bai-driven partition pruning when the index
+    HtsjdkReadsTraversalParameters surface: a residual overlap filter
+    applied to each decoded batch (always correct;
+    ``functions.intervals.interval_mask``, the rows ``filter_intervals``
+    keeps) plus .bai-driven partition pruning when the index
     exists (AbstractBinarySamSource.java:111-158 — but unlike the
     reference we do not *require* an index, :112-116; index-less input
     degrades to filter-only).
@@ -477,10 +483,9 @@ def read_bam(
         path, split_size, intervals, traverse_unplaced_unmapped, pair_atomic, columns,
         raw_tags=(tags == "raw"),
     )
-    df, header = scan.frame(spark), scan.header
     if intervals is not None or traverse_unplaced_unmapped:
-        df = filter_intervals(df, intervals, traverse_unplaced_unmapped)
-    return df, header
+        scan = scan.filtered(interval_mask(intervals, traverse_unplaced_unmapped))
+    return scan.frame(spark), scan.header
 
 
 def _chunk_may_match(
@@ -564,7 +569,39 @@ def scan_bam(
             yield cols
 
     schema = READS_SCHEMA_RAW_TAGS if raw_tags else READS_SCHEMA
-    return Scan(schema, header, decode, plan)
+    sampler = None
+    if not prune and all(_dfs.exists(p + ".sbi") for p in paths):
+        sampler = partial(sample_sort_keys, paths, refs)
+    return Scan(schema, header, decode, plan, sampler)
+
+
+def sample_sort_keys(
+    paths: list[str], refs: list[tuple[str, int]], count: int
+) -> tuple[list, list]:
+    """(contigs, starts) of about ``count`` records at evenly spaced
+    ``.sbi`` offsets of ``paths``, as the decode spells them (an unplaced
+    record has no contig, a record without a position no start): the
+    bounds sample of ``coordinate_sort``, read on the driver from the 12
+    bytes after each sampled offset. Each sampled block is inflated once
+    (plus the next one when a record's first 12 bytes straddle it)."""
+    picks = [(p, v) for p in paths for v in sbimod.read_sbi(p + ".sbi").offsets[:-1]]
+    if len(picks) > count:
+        picks = [picks[i] for i in np.linspace(0, len(picks) - 1, count).round().astype(int)]
+    names = {p: [n for n, _l in (refs if p == paths[0] else read_bam_header(p)[1])]
+             for p in dict.fromkeys(p for p, _v in picks)}
+    contigs: list = []
+    starts: list = []
+    for (p, block), group in groupby(picks, key=lambda pv: (pv[0], pv[1] >> 16)):
+        with bgzf.BlockReader(p, block, block + 1) as r:
+            r.next_block()
+            for _p, v in group:
+                off = v & 0xFFFF
+                while off + 12 > len(r.data) and r.next_block():
+                    pass
+                ref_id, pos = _struct.unpack_from("<ii", r.data, off + 4)
+                contigs.append(names[p][ref_id] if ref_id >= 0 else None)
+                starts.append(pos + 1 if ref_id >= 0 and pos >= 0 else None)
+    return contigs, starts
 
 
 def check_record_guesser(

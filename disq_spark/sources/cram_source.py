@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from disq_spark.formats.cram import plan_cram_containers, read_crai
 from disq_spark.formats.cram_decode import decode_cram_range, read_cram_header
-from disq_spark.functions.intervals import as_intervals, filter_intervals
+from disq_spark.functions.intervals import as_intervals, interval_mask
 from disq_spark.headers import SamHeader
 from disq_spark.schemas import READS_COLUMNS, READS_SCHEMA
 from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, Scan, resolve_paths
@@ -100,10 +100,9 @@ def read_cram(
     scan = scan_cram(
         path, reference_path, split_size, intervals, traverse_unplaced_unmapped, missing_ref_as_n
     )
-    df = scan.frame(spark)
     if intervals is not None or traverse_unplaced_unmapped:
-        df = filter_intervals(df, intervals, traverse_unplaced_unmapped)
-    return df, scan.header
+        scan = scan.filtered(interval_mask(intervals, traverse_unplaced_unmapped))
+    return scan.frame(spark), scan.header
 
 
 def scan_cram(

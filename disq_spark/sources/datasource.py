@@ -15,14 +15,16 @@ reads headers only, and pyspark pickles the reader before it calls
 empty plan makes pyspark plan one ``None`` partition, read as nothing.
 ``read()`` yields the ``pyarrow.RecordBatch``es ``read_<fmt>`` builds
 (sources/plan.py::to_batch), filtered by the ``intervals`` /
-``unplaced_unmapped`` residual (functions/intervals.py::overlap_mask)
-and projected to the ``columns``. ``DataSourceReader.pushFilters`` would
+``unplaced_unmapped`` residual as ``read_<fmt>`` filters them
+(``Scan.filtered`` with functions/intervals.py::interval_mask) and
+projected to the ``columns``. ``DataSourceReader.pushFilters`` would
 need the default-off ``spark.sql.python.filterPushdown.enabled``, so
 intervals ride an option string.
 
 Writes: ``df.write.format("bam"/"vcf")`` maps onto the DataSource
 writer protocol like the reference's sink (BamSink.java:60-139) through
-one ``SinkWriter``: tasks run the same part staging as ``write_<fmt>``,
+one ``SinkWriter`` (a ``DataSourceArrowWriter``): tasks run the same
+part staging on the same Arrow batches as ``write_<fmt>``,
 and the driver's ``commit()`` runs the same single-file commit over the
 parts named in the commit messages, so task retries are safe. A format
 supplies only how to read its header from ``header_path``/``header_text``
@@ -32,20 +34,19 @@ and its sink.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import partial
 from typing import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceArrowWriter,
     DataSourceStreamReader,
-    DataSourceWriter,
     InputPartition,
     WriterCommitMessage,
 )
 
 from disq_spark import fs as _dfs
-from disq_spark.functions.intervals import overlap_mask, parse_intervals
+from disq_spark.functions.intervals import interval_mask, parse_intervals
 from disq_spark.sources.plan import arrow_schema, to_batch
 
 
@@ -58,40 +59,36 @@ class _Split(InputPartition):
     end: int
 
 
-def _arrow_batches(scan, part: _Split | None, keep=None, columns=None) -> Iterator:
+def _arrow_batches(scan, part: _Split | None, columns=None) -> Iterator:
     """``scan.decode``'s columns for ``part`` as Arrow batches (the
-    ``to_batch`` of ``plan_frame``), rows filtered by ``keep(batch) ->
-    mask`` and projected to ``columns``; empty batches are dropped."""
+    ``to_batch`` of ``plan_frame``), projected to ``columns``; empty
+    batches are dropped."""
     if part is None:
         return
     schema = arrow_schema(scan.schema)
     for cols in scan.decode(part.key, part.start, part.end):
         batch = to_batch(cols, schema)
-        if keep is not None:
-            batch = batch.filter(keep(batch))
         if batch.num_rows:
             yield batch if columns is None else batch.select(columns)
 
 
 class _ScanReader(DataSourceReader):
     """``format(<fmt>)`` over a ``Scan``: partitions are its plan rows,
-    ``read`` its decode as Arrow with an optional interval residual,
-    projected to the read schema's columns (all of them for ``None``)."""
+    ``read`` its decode as Arrow with an optional interval residual (the
+    ``Scan.filtered`` of the ``read_<fmt>`` functions), projected to the
+    read schema's columns (all of them for ``None``)."""
 
     def __init__(self, scan, schema, intervals=None, unplaced_unmapped: bool = False):
+        if intervals is not None or unplaced_unmapped:
+            scan = scan.filtered(interval_mask(intervals, unplaced_unmapped))
         self.scan = scan
         self.columns = None if schema is None else schema.fieldNames()
-        self.keep = None
-        if intervals is not None or unplaced_unmapped:
-            self.keep = partial(
-                overlap_mask, intervals=intervals, traverse_unplaced_unmapped=unplaced_unmapped
-            )
 
     def partitions(self) -> list[_Split]:
         return [_Split(*row) for row in self.scan.plan()]
 
     def read(self, part: _Split | None) -> Iterator:
-        return _arrow_batches(self.scan, part, self.keep, self.columns)
+        return _arrow_batches(self.scan, part, self.columns)
 
 
 def _split(options) -> dict:
@@ -178,7 +175,7 @@ class BamDataSource(_ScanSource):
             return read_sam_header(path)
 
         header = _write_header(self.options, "bam", lambda text: SamHeader(text=text), read_header)
-        return SinkWriter(self.options, overwrite, schema, header, single_file_sink)
+        return SinkWriter(self.options, overwrite, header, single_file_sink)
 
 
 def _write_header(options, fmt: str, parse, read):
@@ -206,19 +203,18 @@ class _PartCommit(WriterCommitMessage):
     n: int
 
 
-class SinkWriter(DataSourceWriter):
+class SinkWriter(DataSourceArrowWriter):
     """``df.write.format(<fmt>)`` for a single-file sink: the DataSource
     writer protocol over the same task body and commit as ``write_<fmt>``
-    (sinks/merge.py). ``sink(header, path, **options)`` returns the
+    (sinks/merge.py); tasks get the partition's Arrow batches, as the
+    ``mapInArrow`` of ``write_<fmt>`` does. ``sink(header, path, **options)`` returns the
     format's ``(body, commit)``; its keyword-only parameters are the
     write options (``write_*`` flags, integer otherwise). Tasks stage
     attempt-unique parts; ``commit()`` finalizes only the parts named in
     the successful tasks' messages, so retries are safe; ``abort()``
     removes the parts directory."""
 
-    BATCH = 4096
-
-    def __init__(self, options, overwrite: bool, schema, header, sink):
+    def __init__(self, options, overwrite: bool, header, sink):
         import inspect
 
         path = options.get("path")
@@ -231,28 +227,16 @@ class SinkWriter(DataSourceWriter):
             if k in params and params[k].kind is inspect.Parameter.KEYWORD_ONLY
         }
         self.body, self.finish = sink(header, path, **kwargs)
-        self.columns = schema.fieldNames()
         # an overwrite deletes the old target only in commit(), after the
         # order check passed
         self.parts_dir = path + ".parts"
         _dfs.makedirs(self.parts_dir)
 
-    def write(self, rows) -> _PartCommit:
-        import itertools
-
-        import pandas as pd
-
+    def write(self, iterator) -> _PartCommit:
         from disq_spark.sinks import merge
 
-        def batches():
-            # asDict keeps nested Rows (format_vcf_line reads genotypes by
-            # field name)
-            it = iter(rows)
-            while chunk := list(itertools.islice(it, self.BATCH)):
-                yield pd.DataFrame([r.asDict(recursive=False) for r in chunk], columns=self.columns)
-
         part, n = merge.stage_part(
-            merge.attempt_part_path(self.parts_dir), lambda out: self.body(batches(), out)
+            merge.attempt_part_path(self.parts_dir), lambda out: self.body(iterator, out)
         )
         return _PartCommit(part, n)
 
@@ -291,7 +275,7 @@ class VcfDataSource(_ScanSource):
         header = _write_header(
             self.options, "vcf", lambda text: VcfHeader.from_lines(text.splitlines()), read_header
         )
-        return SinkWriter(self.options, overwrite, schema, header, single_file_sink)
+        return SinkWriter(self.options, overwrite, header, single_file_sink)
 
 
 class SamDataSource(_ScanSource):

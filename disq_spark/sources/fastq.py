@@ -127,10 +127,10 @@ def write_fastq(df: DataFrame, path: str, single_file: bool | None = None) -> No
 def _encode(batches, out):
     """The FASTQ part encoder: 4-line records to ``out``; no sidecars."""
     n = 0
-    for pdf in batches:
-        cols = zip(pdf["name"], pdf["comment"], pdf["seq"], pdf["qual"])
-        out.write("".join(fq.format_record(*rec) + "\n" for rec in cols).encode("ascii"))
-        n += len(pdf)
+    for batch in batches:
+        recs = [(r["name"], r["comment"], r["seq"], r["qual"]) for r in merge.batch_rows([batch])]
+        out.write("".join(fq.format_record(*rec) + "\n" for rec in recs).encode("ascii"))
+        n += len(recs)
     return n, None
 
 

@@ -3,8 +3,8 @@
 Every format exposes one ``scan_<fmt>(path, ...) -> Scan``: the header,
 the output schema, a zero-argument ``plan()`` returning the
 ``(key, start, end)`` rows and a ``decode(key, start, end)`` yielding
-column mappings (a dict of lists, or a pandas frame from the SAM/VCF
-kernels). ``read_<fmt>`` turns it into a DataFrame with ``Scan.frame``;
+column mappings (a dict of lists or Arrow arrays, or a pandas frame from
+the SAM kernel). ``read_<fmt>`` turns it into a DataFrame with ``Scan.frame``;
 ``spark.read.format(<fmt>)`` (sources/datasource.py) serves the same
 scan through the Python DataSource API. Both hand each mapping to Spark
 as one ``pyarrow.RecordBatch`` built by ``to_batch``.
@@ -32,7 +32,7 @@ from disq_spark import fs as _dfs
 
 import glob
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Any, Callable, Iterable, Mapping, NamedTuple, Sequence
 
 import numpy as np
@@ -51,16 +51,41 @@ class Scan:
     """One format's read path. ``plan()`` runs on the driver (index reads
     and arithmetic, no Spark job); ``decode`` runs in the tasks and
     yields column mappings holding every field of ``schema`` (a
-    ``StructType``). Building a Scan reads headers only, so it is cheap
-    to pickle: the plan is never held by the Scan."""
+    ``StructType``) or Arrow batches already in its schema. Building a
+    Scan reads headers only, so it is cheap to pickle: the plan is never
+    held by the Scan."""
 
     schema: Any
     header: Any
     decode: Callable[[str, int, int], Iterable[Mapping]]
     plan: Callable[[], list[tuple[str, int, int]]]
+    # ``sample_keys(count) -> (contigs, starts)`` of about ``count`` records
+    # spread over the input, read from an index on the driver; None when
+    # the scan has no such index (operators/genomics.py::coordinate_sort)
+    sample_keys: Callable[[int], tuple[list, list]] | None = None
+
+    def filtered(self, keep: Callable) -> "Scan":
+        """This scan with a residual row filter in its decode: each
+        mapping goes to Arrow (``to_batch``) and keeps the rows of
+        ``keep(batch) -> mask``; empty batches are dropped."""
+        schema, decode = arrow_schema(self.schema), self.decode
+
+        def kept(key: str, start: int, end: int):
+            for cols in decode(key, start, end):
+                batch = to_batch(cols, schema)
+                batch = batch.filter(keep(batch))
+                if batch.num_rows:
+                    yield batch
+
+        return replace(self, decode=kept)
 
     def frame(self, spark):
-        return plan_frame(spark, self.plan(), self.decode, self.schema)
+        """The scan's DataFrame, carrying the scan as ``_disq_scan`` so an
+        operator can re-plan it (``coordinate_sort`` adds its sort keys to
+        the decode); any transformation of the frame drops it."""
+        df = plan_frame(spark, self.plan(), self.decode, self.schema)
+        df._disq_scan = self
+        return df
 
 
 def resolve_paths(path: str, extensions: tuple[str, ...]) -> list[str]:
@@ -156,16 +181,24 @@ def arrow_schema(schema):
 
 def to_batch(cols: Mapping, schema):
     """The one hand-off of decoded columns to Arrow: ``cols`` (a dict of
-    lists or a pandas frame) as a ``RecordBatch`` in the Arrow
-    ``schema``, one ``pa.array`` per field. ``from_pandas`` keeps the
-    null rules of pyspark's pandas converter: a NaN bound for a long or
-    double column is null, a ``None`` map is null and ``{}`` an empty
-    map."""
+    lists, numpy or ``pyarrow.Array`` columns, or a pandas frame) as a
+    ``RecordBatch`` in the Arrow ``schema``, one ``pa.array`` per field;
+    an Arrow column of the field's type passes through unchanged.
+    ``from_pandas`` keeps the null rules of pyspark's pandas converter: a
+    NaN bound for a long or double column is null, a ``None`` map is null
+    and ``{}`` an empty map."""
     import pyarrow as pa
 
-    return pa.RecordBatch.from_arrays(
-        [pa.array(cols[f.name], type=f.type, from_pandas=True) for f in schema], schema=schema
-    )
+    if isinstance(cols, pa.RecordBatch):
+        return cols
+
+    def column(f):
+        c = cols[f.name]
+        if isinstance(c, pa.Array) and c.type == f.type:
+            return c
+        return pa.array(c, type=f.type, from_pandas=True)
+
+    return pa.RecordBatch.from_arrays([column(f) for f in schema], schema=schema)
 
 
 def plan_frame(

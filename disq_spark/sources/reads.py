@@ -47,18 +47,18 @@ def read_sam(
 ) -> tuple[DataFrame, SamHeader]:
     """Load SAM (file, dir, or glob) as a reads DataFrame + header.
 
-    ``intervals``: brute-force residual overlap filter — SAM has no index,
+    ``intervals``: brute-force residual overlap filter on each decoded
+    batch — SAM has no index,
     matching the reference (TraversalOverlapDetector.java:34-59 applied at
     SamSource.java:93-102). ``mode``: STRICT/LENIENT/SILENT validation
     stringency (HtsjdkReadsRddStorage.java:85-88).
     """
     scan = scan_sam(path, mode=mode)
-    df, header = scan.frame(spark), scan.header
     if intervals is not None or traverse_unplaced_unmapped:
-        from disq_spark.functions.intervals import filter_intervals
+        from disq_spark.functions.intervals import interval_mask
 
-        df = filter_intervals(df, intervals, traverse_unplaced_unmapped)
-    return df, header
+        scan = scan.filtered(interval_mask(intervals, traverse_unplaced_unmapped))
+    return scan.frame(spark), scan.header
 
 
 def scan_sam(path: str, split_size: int = DEFAULT_SPLIT_SIZE, mode: str = "STRICT") -> Scan:

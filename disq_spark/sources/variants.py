@@ -40,12 +40,11 @@ import io
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from disq_spark.formats import bgzf
-from disq_spark.formats.vcf import parse_vcf_lines
-from disq_spark.functions.intervals import as_intervals, overlaps
+from disq_spark.formats.vcf import parse_vcf_arrow
+from disq_spark.functions.intervals import as_intervals, interval_mask
 from disq_spark.headers import VcfHeader
 from disq_spark.schemas import VARIANTS_SCHEMA
 from disq_spark.sources.plan import (
@@ -107,16 +106,15 @@ def read_vcf(
     When given, splits of .tbi-indexed BGZF files (or .idx-indexed plain
     files) that cannot contain an overlapping record are pruned at plan
     time (VcfSource.java:177-201 semantics) and a residual overlap
-    predicate is applied. Unlike the reference (which errors without an
+    filter is applied to each decoded batch. Unlike the reference (which errors without an
     index, VcfSource.java:184-187), index-less inputs degrade gracefully
     to filter-only.
     """
     with_gt = columns is None or "genotypes" in columns
     scan = scan_vcf(path, split_size, intervals, mode, with_gt)
-    df = scan.frame(spark)
     if intervals is not None:
-        df = df.filter(overlaps(intervals))
-    return df, scan.header
+        scan = scan.filtered(interval_mask(intervals))
+    return scan.frame(spark), scan.header
 
 
 def scan_vcf(
@@ -157,7 +155,7 @@ def scan_vcf(
             out.extend(p_ranges)
         return out
 
-    def decode(p: str, start: int, end: int) -> Iterator[pd.DataFrame]:
+    def decode(p: str, start: int, end: int) -> Iterator:
         if kinds[p] == "plain":
             lines = read_lines(p, start, end)
         elif kinds[p] == "gzip":
@@ -167,7 +165,7 @@ def scan_vcf(
             r, s, e = _owned_span(p, start, end)
             lines = split_lines(r.data[s:e])
         if lines:
-            yield parse_vcf_lines(pd.Series(lines, dtype="object"), samples, mode, with_genotypes)
+            yield parse_vcf_arrow(lines, samples, mode, with_genotypes)
 
     return Scan(VARIANTS_SCHEMA, header, decode, plan)
 

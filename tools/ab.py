@@ -5,13 +5,16 @@
 Each seed runs ``perfbench/run.py`` once in each checkout, alternating
 which goes first, so host drift hits both sides alike. Prints one JSON
 line per run (side, seed, wall, metrics) and, at the end, per metric the
-medians, the A quartile spread and how many pairs B won.
+medians, the A quartile spread, how many pairs B won and whether a claim
+that B is better on it holds: B wins at least 9 of every 10 pairs, and
+its median beats A's by more than A's interquartile range.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import math
 import statistics
 import subprocess
 import sys
@@ -63,9 +66,12 @@ def main() -> None:
         lower = better[m] == "lower"
         wins = sum((pb < pa) if lower else (pb > pa)
                    for pa, pb in ((p["A"][m], p["B"][m]) for p in pairs))
-        print(json.dumps({"metric": m, "A_median": statistics.median(a),
-                          "B_median": statistics.median(b), "A_iqr": q[2] - q[0],
-                          "B_wins": f"{wins}/{len(pairs)}"}), flush=True)
+        a_med, b_med, iqr = statistics.median(a), statistics.median(b), q[2] - q[0]
+        gap = a_med - b_med if lower else b_med - a_med
+        holds = wins >= math.ceil(0.9 * len(pairs)) and gap > iqr
+        print(json.dumps({"metric": m, "A_median": a_med, "B_median": b_med, "A_iqr": iqr,
+                          "B_wins": f"{wins}/{len(pairs)}",
+                          "claim": "holds" if holds else "fails"}), flush=True)
 
 
 if __name__ == "__main__":
